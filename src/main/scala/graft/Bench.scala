@@ -42,10 +42,8 @@ object Bench {
     }
     val selected = only.fold(SparkEntry.queries)(f =>
       SparkEntry.queries.filter { case (n, _) => f(n) })
-    // Cumulative JVM GC time — the per-query delta goes into the detail
-    // JSON so a full-run outlier (r3: a07 +3.7 s; r4: a23 +37.3 s, both
-    // ~1 s in isolation) shows WHERE the time went instead of reading as
-    // a plan regression.
+    // JVM-wide GC time (driver included): the per-query delta shows a
+    // full-run outlier as GC rather than as a plan regression
     val gcBeans = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala.toVector
@@ -55,13 +53,10 @@ object Bench {
     // n25/n39/s10/Clustering are the known allocators).
     def storageBytes(): Long =
       spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum
-    // Between timed runs, return the JVM to a clean slate: cached
-    // relations, lingering localCheckpoint RDD blocks (they live until
-    // RDD GC otherwise — accumulated across 196 runs they force
-    // eviction/GC storms on whoever runs next), and sink temp dirs.
-    // Runs OUTSIDE the timed window: it is harness hygiene, not query
-    // cost — a cluster job's blocks die with its job, they don't haunt
-    // the next 97 jobs in the same JVM.
+    // Between timed runs, outside the timed window, return the JVM to a
+    // clean slate: cached relations, localCheckpoint RDD blocks (they
+    // live until RDD GC and would force eviction/GC storms on whoever
+    // runs next) and sink temp dirs. A cluster job's blocks die with it.
     def cleanup(): Unit = {
       try {
         spark.catalog.clearCache()
@@ -72,29 +67,11 @@ object Bench {
         System.err.println(s"[bench] cleanup failed: ${e.getMessage}")
       }
     }
-    // batch task accounting of the min-time iteration (BenchTaskMetrics
-    // scaladoc): wall splits into executor compute vs scheduler/IO wait
-    // from the artifact alone — the batch twin of the stream_ms split.
-    BenchTaskMetrics.install(spark.sparkContext)
-    // optional deterministic query-order shuffle (seeded), for the
-    // one-off position-correlation experiment on judged-run spikes
-    // (VERDICT r13 "What's wrong" #3): unset = registry order, the
-    // order every prior history entry ran in.
-    val shuffleSeed = sys.env.get("SPARK_GRAFT_BENCH_SHUFFLE").map(_.toLong)
-    val ordered = shuffleSeed.fold(selected.toSeq)(seed =>
-      new scala.util.Random(seed).shuffle(selected.toSeq))
-    val failed = scala.collection.mutable.ListBuffer[String]()
-    val gcByQuery = scala.collection.mutable.LinkedHashMap[String, Long]()
-    val blkByQuery = scala.collection.mutable.LinkedHashMap[String, Long]()
-    val taskByQuery = scala.collection.mutable.LinkedHashMap[
-      String, BenchTaskMetrics.TaskTotals]()
-    // streaming drain accounting of the MIN-time iteration (the one the
-    // reported number comes from): per-query micro-batch counts and
-    // engine durations, so a spike splits into in-batch execution vs
-    // drain/scheduling wait from the artifact alone (StreamMetrics).
-    val streamByQuery = scala.collection.mutable.LinkedHashMap[
-      String, Seq[graft.streaming.StreamMetrics.StreamRun]]()
-    val results = ordered.map { case (name, fn) =>
+    // per query: the min-time iteration's QueryProfile (a wall spike
+    // splits into compute vs stall from the artifact alone), the GC ms
+    // summed over iterations and the peak block bytes
+    val profile = QueryProfile.of(spark)
+    val runs = selected.toSeq.map { case (name, fn) =>
       // a failed attempt must never become the reported min — record
       // successes only; a query with zero successes reports -1 and is
       // listed in "failed" (silent shrinking totals would misread as a
@@ -102,21 +79,17 @@ object Bench {
       var gcTotal = 0L
       var blkPeak = 0L
       val times = (1 to iters).flatMap { _ =>
-        graft.streaming.StreamMetrics.reset()
-        BenchTaskMetrics.reset()
         val g0 = gcMs()
-        val t0 = System.nanoTime()
         // noop sink, not count(): count lets Catalyst prune every
         // unreferenced projection (a map-only query would be timed as
         // a row count); noop materializes the full output row
         val r = try {
-          fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-          val dt = (System.nanoTime() - t0) / 1e9
+          val (_, p) = profile.measure(
+            fn(spark, sfDir).write.mode("overwrite").format("noop").save())
           gcTotal += gcMs() - g0
           blkPeak = math.max(blkPeak, storageBytes())
-          // snapshot BEFORE cleanup so harness-hygiene jobs never count
-          Some((dt, graft.streaming.StreamMetrics.snapshot(),
-            BenchTaskMetrics.snapshot()))
+          // profiled BEFORE cleanup so harness-hygiene jobs never count
+          Some(p)
         } catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           None
@@ -124,91 +97,74 @@ object Bench {
         cleanup()
         r
       }
-      gcByQuery(name) = gcTotal
-      blkByQuery(name) = blkPeak
-      if (times.isEmpty) { failed += name; name -> -1.0 }
-      else {
-        val best = times.minBy(_._1)
-        if (best._2.nonEmpty) streamByQuery(name) = best._2
-        taskByQuery(name) = best._3
-        name -> best._1
-      }
+      (name, times.minByOption(_.wallMs), gcTotal, blkPeak)
     }
+    val failed = runs.collect { case (name, None, _, _) => name }
+    val profByQuery = runs.collect { case (name, Some(p), _, _) => name -> p }
+    val results = runs.map { case (name, best, _, _) =>
+      name -> best.fold(-1.0)(_.wallMs / 1000.0) }
     // Per-query seconds rounded to ms: full detail goes to a file and to an
-    // EARLY stdout line. The FINAL stdout line stays short (<200 bytes) —
-    // the driver's tail capture truncated the ~3.3 KB single-line form in
-    // r01/r02 mid-queries-dict, leaving the bench gate unevaluable.
+    // EARLY stdout line. The FINAL stdout line stays short (<200 bytes):
+    // a tail capture of a multi-KB line truncates it.
     def ms(v: Double): Double = math.rint(v * 1000) / 1000
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + ms(v) }
-      .mkString("{", ",", "}")
+    def mb(b: Long, scale: Int): Double =
+      math.rint(b / 1048576.0 * scale) / scale
+    def obj(kvs: Iterable[(String, Any)]): String =
+      kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val qs = obj(results.map { case (k, v) => k -> ms(v) })
     val total = ms(results.collect { case (_, v) if v >= 0 => v }.sum)
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // escape ONLY at JSON interpolation — the raw path opens the file;
     // escaping the variable itself would write to a mangled filename
     def esc(s: String): String = s.replace("\\", "\\\\").replace("\"", "\\\"")
-    val gcJson = gcByQuery.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val blkJson = blkByQuery.map { case (k, v) =>
-      "\"" + k + "\":" + (math.rint(v / 1048576.0 * 10) / 10) }
-      .mkString("{", ",", "}")
-    // only queries that drained ≥1 stream appear; `streams` counts the
-    // drains in the min-time iteration (s10's replay = 2), trigger_ms
-    // sums the engine's own triggerExecution — wall − trigger_ms/1000
-    // is time spent OUTSIDE micro-batches (scheduling/drain wait)
-    val streamJson = streamByQuery.map { case (k, runs) =>
-      "\"" + k + "\":{\"streams\":" + runs.size +
-        ",\"batches\":" + runs.map(_.batches).sum +
-        ",\"addbatch_ms\":" + runs.map(_.addBatchMs).sum +
-        ",\"trigger_ms\":" + runs.map(_.triggerMs).sum +
-        ",\"max_trigger_ms\":" + runs.map(_.maxTriggerMs).max + "}"
-    }.mkString("{", ",", "}")
+    val gcJson = obj(runs.map { case (k, _, gc, _) => k -> gc })
+    val blkJson = obj(runs.map { case (k, _, _, blk) => k -> mb(blk, 10) })
+    // only queries that ran ≥1 stream appear; `streams` counts the
+    // streams started in the min-time iteration (s10's replay = 2),
+    // trigger_ms sums the engine's own triggerExecution — wall −
+    // trigger_ms/1000 is time spent OUTSIDE micro-batches
+    val streamJson = obj(profByQuery.collect {
+      case (k, p) if p.streams.nonEmpty =>
+        val runs = p.streams.values
+        k -> obj(Seq("streams" -> runs.size,
+          "batches" -> runs.map(_.batches).sum,
+          "addbatch_ms" -> runs.map(_.addBatchMs).sum,
+          "trigger_ms" -> runs.map(_.triggerMs).sum,
+          "max_trigger_ms" -> runs.map(_.maxTriggerMs).max))
+    })
     // batch attribution of the min-time iteration: task_ms = executor
     // compute (≤ cores × wall), sched_ms = task time outside compute —
     // a wall spike with historical task_ms is a stall, from the
-    // artifact alone (the StreamMetrics idea extended to batch)
-    val taskJson = taskByQuery.map { case (k, t) =>
-      "\"" + k + "\":{\"tasks\":" + t.tasks +
-        ",\"task_ms\":" + t.taskMs +
-        ",\"gc_task_ms\":" + t.gcMs +
-        ",\"sched_ms\":" + t.schedMs + "}"
-    }.mkString("{", ",", "}")
-    val shuffleJson = shuffleSeed.fold("")(s => s""","shuffle_seed":$s""")
+    // artifact alone; jobs/stages/bytes are the deterministic counters
+    val taskJson = obj(profByQuery.map { case (k, p) =>
+      k -> obj(Seq("tasks" -> p.tasks, "task_ms" -> p.taskMs,
+        "gc_task_ms" -> p.gcMs, "sched_ms" -> p.schedMs,
+        "jobs" -> p.jobs.size, "stages" -> p.stages,
+        "outside_ms" -> p.outsideMs, "cpu_ms" -> p.cpuMs,
+        "input_mb" -> mb(p.inputBytes, 100),
+        "shuffle_mb" -> mb(p.shuffleBytes, 100)))
+    })
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "BENCH_DETAIL.json")
-    // Ambient-spike auto-classification: a judged run lands in an
-    // uncontrolled co-tenant box, and its per-query spikes previously
-    // had to be attributed BY HAND against history. Compare this run's
-    // wall + task_ms to the rolling MIN across prior history entries
-    // with the SAME settings — sf AND pair_sample AND iters; a
-    // pair-sampled (or differently-iterated) run measures a different
-    // workload and must not poison the min (ADVICE r17; entries
-    // predating the pair_sample stamp are EXCLUDED — their setting is
-    // unverifiable and a stamped generation exists). Wall > 3× the
-    // rolling min with
-    // task_ms still in band (≤1.5×) means the executors were starved
-    // between tasks — "scheduler-ambient"; task_ms inflated too means
-    // the stall hit inside task execution (co-tenant CPU steal) —
-    // "in-task-stall". A scheduler-ambient spike that ALSO fired in
-    // the most recent matching run is reproducing, which weather
-    // shouldn't: it demotes to "ambient-unconfirmed" (suspect — e.g. a
-    // plan change adding jobs/drain waits that wall sees but task_ms
-    // doesn't) until a later run lands back near the min (ADVICE r17).
-    // Advisory instrument either way; a genuine compute regression
-    // shows up as task_ms inflation that reproduces across runs, which
-    // the rolling min never absorbs. The window is the LAST 30 matching
-    // entries, not all history: an unbounded min pins forever to walls
-    // from superseded implementations (n21's round-1 stub left a
-    // 0.115 s min that flagged every post-reimplementation ~0.9 s run
-    // for 80+ entries), so the min must reflect the current code era —
-    // 30 entries ≈ three rounds of runs, still spanning any turbulent
-    // stretch. Only flagged queries appear; first run at a setting ⇒
-    // empty.
+    val histPath = detailPath.stripSuffix(".json") + "_HISTORY.jsonl"
+    // Ambient-spike classification: compare this run's wall and task_ms
+    // to the rolling MIN over the last 30 history entries with the SAME
+    // sf, pair_sample and iters (a pair-sampled or differently-iterated
+    // run measures a different workload; entries without the
+    // pair_sample stamp are excluded, their setting unverifiable). The
+    // window is bounded so the min reflects the current code, not a
+    // superseded implementation. Wall > 3× the min with task_ms within
+    // 1.5× means executors were starved between tasks —
+    // "scheduler-ambient", demoted to "ambient-unconfirmed" when the
+    // last matching run spiked too (weather does not reproduce; a plan
+    // change adding jobs or drain waits does); task_ms inflated too is
+    // "in-task-stall". Advisory only: a compute regression shows as
+    // task_ms inflation that reproduces. Only flagged queries appear.
     val pairSample = SparkEntry.pairSampleKeep
     val histWindow = 30
     val ambientJson = try {
       import org.json4s._
       import org.json4s.jackson.JsonMethods
-      val histFile = new java.io.File(
-        detailPath.stripSuffix(".json") + "_HISTORY.jsonl")
+      val histFile = new java.io.File(histPath)
       // chronological matching entries: per-entry (query→wall, query→task_ms)
       val entries = scala.collection.mutable.ArrayBuffer[
         (Map[String, Double], Map[String, Long])]()
@@ -227,11 +183,8 @@ object Bench {
             case JString(s) => s == sfDir
             case _ => false
           }
-          // stamped entries only: pair_sample ABSENT means the entry
-          // predates the stamp, and its actual setting is unverifiable
-          // — one stamped generation exists (r17+), so pre-stamp
-          // entries are excluded rather than assumed full-input
-          // (ADVICE r17; JNull = stamped, explicitly unset)
+          // pair_sample ABSENT = unstamped entry, excluded; JNull =
+          // stamped, explicitly unset
           val pairOk = (j \ "pair_sample") match {
             case JNothing => false
             case JNull => pairSample.isEmpty
@@ -259,10 +212,10 @@ object Bench {
       val minWall = window.flatMap(_._1).groupMapReduce(_._1)(_._2)(math.min)
       val minTask = window.flatMap(_._2).groupMapReduce(_._1)(_._2)(math.min)
       val lastWall = window.flatMap(_._1).toMap // chronological: last wins
-      results.flatMap { case (name, wall) =>
+      obj(results.flatMap { case (name, wall) =>
         minWall.get(name).collect {
           case mw if wall >= 0 && mw > 0 && wall > 3 * mw =>
-            val tag = (taskByQuery.get(name).map(_.taskMs),
+            val tag = (profByQuery.toMap.get(name).map(_.taskMs),
                 minTask.get(name)) match {
               case (Some(ct), Some(mt)) if mt > 0 && ct <= 1.5 * mt =>
                 if (lastWall.get(name).exists(_ > 3 * mw))
@@ -271,27 +224,26 @@ object Bench {
               case (Some(ct), Some(mt)) if mt > 0 => "in-task-stall"
               case _ => "ambient-unattributed"
             }
-            "\"" + name + "\":\"" + tag + "\""
+            name -> ("\"" + tag + "\"")
         }
-      }.mkString("{", ",", "}")
+      })
     } catch { case e: Throwable =>
       System.err.println(s"[bench] ambient classification failed: ${e.getMessage}")
       "{}"
     }
     val pairSampleJson = pairSample.fold("null")(_.toString)
     val detail =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"gc_ms":$gcJson,"blk_mb":$blkJson,"stream":$streamJson,"task":$taskJson,"ambient":$ambientJson$shuffleJson,"sf":"${esc(sfDir)}","iters":$iters,"pair_sample":$pairSampleJson,"failed":$failedJson}"""
-    try {
-      val w = new java.io.PrintWriter(detailPath); try w.println(detail) finally w.close()
-    } catch { case e: Throwable => System.err.println(s"[bench] detail write failed: ${e.getMessage}") }
-    // append-only history next to the overwritten latest-run file: per-run
-    // detail survives across rounds, so a total-time drift can be localized
-    // to queries after the fact (r6 lost r5's detail to the overwrite)
-    try {
-      val histPath = detailPath.stripSuffix(".json") + "_HISTORY.jsonl"
-      val fw = new java.io.FileWriter(histPath, true)
-      try fw.write(detail + "\n") finally fw.close()
-    } catch { case e: Throwable => System.err.println(s"[bench] history append failed: ${e.getMessage}") }
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"gc_ms":$gcJson,"blk_mb":$blkJson,"stream":$streamJson,"task":$taskJson,"ambient":$ambientJson,"sf":"${esc(sfDir)}","iters":$iters,"pair_sample":$pairSampleJson,"failed":$failedJson}"""
+    // the latest run overwrites the detail file; the history next to it
+    // is append-only, so a total-time drift can be localized afterwards
+    Seq(detailPath -> false, histPath -> true).foreach { case (path, append) =>
+      try {
+        val w = new java.io.FileWriter(path, append)
+        try w.write(detail + "\n") finally w.close()
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] writing $path failed: ${e.getMessage}")
+      }
+    }
     // prefixed so a parser keying on a JSON line can only match the
     // short final line; full per-query JSON stays greppable + in file
     println(s"BENCH_QUERIES $detail")

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The library's SparkSession recipe — one place for every setting the
-  * engine depends on, used by Verify/Bench/Explain and recommended for
+  * engine depends on, used by Verify/Bench/Profile and recommended for
   * production callers (who would swap `local[n]` for their cluster
   * master and scale `shufflePartitions` to ~2-3× total executor cores).
   */
@@ -32,7 +32,7 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
 
-  /** Standard local session (Verify/Bench/Explain mains). */
+  /** Standard local session (Verify/Bench/Profile mains). */
   def local(cpus: String): SparkSession = {
     val s = builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     s.sparkContext.setLogLevel("WARN")

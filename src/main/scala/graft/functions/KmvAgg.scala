@@ -77,8 +77,8 @@ object KmvAgg extends Aggregator[Seq[Long], Array[Long], Seq[Long]] {
 
   /** The row-level partial sketch of a text column: the ≤K smallest
     * distinct 60-bit md5-prefix hashes of its w-shingle set, sorted
-    * ascending — THE single definition shared by n40/n42/s15 and
-    * SketchBench, so the cross-engine hash contract (the DuckDB twin
+    * ascending — THE single definition shared by n40/n42/s15, so the
+    * cross-engine hash contract (the DuckDB twin
     * `('0x' || substr(md5(s),1,15))::BIGINT`) has exactly one Spark
     * counterpart to drift from. */
   def partialSketch(text: Column, w: Int = 3): Column =

@@ -346,7 +346,7 @@ object Dedup {
     * df·(source-prefix occurrences) ≈ 0 for the hot tail. Extra cost:
     * one global df aggregation and one per-doc window sort, both
     * bounded by index size — the same trade as [[jaccardPairsPrefix]],
-    * measured on the SkewBench boilerplate fixture in SKEW.md.
+    * measured on the skewed boilerplate fixture in SKEW.md.
     *
     * Prefix length is computed in exact integer math:
     * ⌈num·n/den⌉ = (num·n + den − 1) div den — no float anywhere. */
@@ -411,8 +411,8 @@ object Dedup {
     * shingle equi-join materializes BEFORE aggregation — the direct
     * measure of skew blow-up (each shingle with document frequency df
     * contributes up to df·(df−1)/2 rows; one boilerplate shingle shared
-    * by every doc makes this quadratic in the corpus). SkewBench /
-    * SkewSpec use it to demonstrate the maxDf cap's effect without
+    * by every doc makes this quadratic in the corpus). SkewSpec
+    * uses it to demonstrate the maxDf cap's effect without
     * depending on flaky wall-clock assertions. */
   def jaccardJoinFanout(docs: DataFrame, id: String, text: String,
       w: Int = 3, threshold: Double = 0.55,
@@ -444,7 +444,7 @@ object Dedup {
     * this variant wins is a skewed df distribution (boilerplate
     * shingles with df in the thousands, Σdf² quadratic), where the
     * prefix bound removes exactly the explosive tail — MEASURED on the
-    * SkewBench boilerplate fixture at sf0.1: exact join 115.6 s /
+    * skewed boilerplate fixture at sf0.1: exact join 115.6 s /
     * 2.0×10⁸ joined rows vs prefix 13.7 s with the IDENTICAL 313-pair
     * result (SKEW.md) — the standard corpus shape at 100 TB. */
   def jaccardPairsPrefix(docs: DataFrame, id: String, text: String,
@@ -587,7 +587,7 @@ object Dedup {
       // convergence probe is counted in the SAME job (cutChanged): a
       // fixpoint's wall is made of driver rounds, so the former
       // separate probe action — one extra job per round — was the
-      // family's measured overhead (FixpointBench). cutChanged also
+      // family's measured overhead (BASELINE.md). cutChanged also
       // severs carried statistics like Iterate.cut: a plain
       // localCheckpoint's sizeInBytes estimate compounds through the
       // per-round self-join and stalls the driver in stats estimation

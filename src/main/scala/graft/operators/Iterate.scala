@@ -11,7 +11,7 @@ import org.apache.spark.sql.DataFrame
   * iterative algorithm those carried estimates COMPOUND: every round's
   * self-join multiplies sizeInBytes estimates, the next round
   * checkpoints that product as its leaf statistic, and the estimate
-  * grows as a power tower. MEASURED (BpeBench, round 9): BPE training
+  * grows as a power tower. MEASURED (BPE.md, round 9): BPE training
   * ran 0.6 s/iteration flat for 18 rounds, then per-iteration wall
   * grew 2.5–4× per round — a thread dump showed the driver 100% CPU in
   * `SizeInBytesOnlyStatsPlanVisitor` multiplying BigIntegers with tens

@@ -168,8 +168,8 @@ object IvfPq {
     *     per-(probe, cell) LUT rows — each candidate meets only the
     *     probes actually probing its cell, emitting Σ_p |cells_p∩data|
     *     scored rows (≈ nprobe/Cells · probes·N) instead of the
-    *     harness's probes × N cross-join fan-out. BenchUtil's
-    *     numOutputRows on the join node measures the reduction.
+    *     harness's probes × N cross-join fan-out. The join
+    *     node's numOutputRows measures the reduction (IvfPqSpec).
     *
     * Everything else — quantization grid, trained codebooks, ADC
     * left-fold, (adc DESC, vec_id) tiebreak, WindowGroupLimit top-k —

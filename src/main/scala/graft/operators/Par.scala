@@ -34,8 +34,11 @@ private[graft] object Par {
       // real shuffle jobs at inspection time, potentially re-executed by
       // the repartition below (ADVICE r21). An exchange-bearing frame
       // already has a shuffle sizing its downstream parallelism, so the
-      // floor is moot there anyway — return it unchanged.
-      val hasExchange = df.queryExecution.sparkPlan.exists {
+      // floor is moot there anyway — return it unchanged. `executedPlan`
+      // plans without executing and, unlike `sparkPlan`, holds the
+      // exchanges that joins and aggregates add (ADVICE r22).
+      val hasExchange = graft.QueryProfile.planNodes(
+          df.queryExecution.executedPlan).exists {
         case _: org.apache.spark.sql.execution.exchange.Exchange => true
         case _ => false
       }
@@ -62,11 +65,16 @@ private[graft] object Par {
     }, "graft-par2")
     t.setDaemon(true)
     t.start()
-    val aRes = a
-    t.join()
-    bRes match {
-      case Right(v) => (aRes, v)
-      case Left(e) => throw e
+    // the helper never outlives the call, whichever thunk fails
+    val aRes = try Right(a) catch { case e: Throwable => Left(e) }
+      finally t.join()
+    (aRes, bRes) match {
+      case (Right(x), Right(y)) => (x, y)
+      case (Left(ea), Left(eb)) =>
+        if (eb ne ea) ea.addSuppressed(eb)
+        throw ea
+      case (Left(e), _) => throw e
+      case (_, Left(e)) => throw e
     }
   }
 }

@@ -126,16 +126,6 @@ object StreamQueries {
     finally graft.TempDirs.deleteRecursively(dir)
   }
 
-  /** Await a bounded drain, then record its micro-batch durations into
-    * [[StreamMetrics]] — every stream the library starts reports the
-    * engine's own progress accounting, so a bench artifact can split
-    * streaming wall time into in-batch execution vs drain/scheduling
-    * wait (the judged-run spike attribution, StreamMetrics scaladoc). */
-  private def drain(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    q.awaitTermination()
-    StreamMetrics.record(q)
-  }
-
   /** Run a streaming frame to completion into a memory sink, return the
     * result table. AvailableNow processes all available input then stops. */
   def runToTable(spark: SparkSession, df: DataFrame, mode: String): DataFrame =
@@ -147,7 +137,7 @@ object StreamQueries {
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow())
           .start()
-        drain(q)
+        q.awaitTermination()
         spark.table(name)
       }
     }
@@ -480,7 +470,7 @@ object StreamQueries {
         batch.write.mode("append").parquet(s"$out/data")
       }
       .start()
-    drain(q)
+    q.awaitTermination()
     spark.read.parquet(s"$out/data")
   } }
 
@@ -513,7 +503,7 @@ object StreamQueries {
         ()
       }
       .start()
-    drain(q)
+    q.awaitTermination()
     def sinkCount(name: String): DataFrame =
       spark.read.parquet(s"$out/$name")
         .agg(count(lit(1)).as("n_rows")).withColumn("sink", lit(name))
@@ -589,7 +579,7 @@ object StreamQueries {
         .trigger(Trigger.AvailableNow())
         .foreachBatch(mergeBatch _)
         .start()
-      drain(q)
+      q.awaitTermination()
     } }
     runOnce()
     runOnce() // forced replay: a fresh checkpoint reprocesses ALL input
@@ -702,7 +692,7 @@ object StreamQueries {
           afterBatch(batchId)
         }
         .start()
-      drain(q)
+      q.awaitTermination()
       spark.read.parquet(s"$out/data")
     } }
 
@@ -1062,7 +1052,7 @@ object StreamQueries {
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow())
           .start()
-        drain(q)
+        q.awaitTermination()
       }
     }
     IvfPq.serveFromStore(spark, idxDir, codebooks, k = 10)
@@ -1250,7 +1240,7 @@ object StreamQueries {
         .trigger(Trigger.AvailableNow())
         .foreachBatch(appendBatch _)
         .start()
-      drain(q)
+      q.awaitTermination()
     }
     checkpoint match {
       case Some(ckpt) => run(ckpt)

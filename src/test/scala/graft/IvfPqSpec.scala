@@ -152,11 +152,11 @@ class IvfPqSpec extends AnyFunSuite {
     val df = IvfPq.ivfPqServe(emb, k)
     // collect(), not a sink write: a write builds its OWN
     // QueryExecution, leaving df.queryExecution's metrics untouched
-    // (the SkewBench note) — the inspected plan must be the executed one
+    // — the inspected plan must be the executed one
     assert(df.collect().nonEmpty)
     val plan = df.queryExecution.executedPlan
     val n = emb.count()
-    val joinRows = BenchUtil.metricMaxWhere(plan, "numOutputRows")(p =>
+    val joinRows = QueryProfile.metricMaxWhere(plan, "numOutputRows")(p =>
       p.nodeName.contains("BroadcastHashJoin"))
     assert(joinRows > 0, "cell equi-join not found in the executed plan")
     assert(joinRows < Similarity.Probes * n,
@@ -209,7 +209,7 @@ class IvfPqSpec extends AnyFunSuite {
     val index = spark.read.parquet(dir)
     def scanFiles(df: org.apache.spark.sql.DataFrame): Long = {
       assert(df.collect() != null)
-      BenchUtil.metricMaxWhere(df.queryExecution.executedPlan, "numFiles")(
+      QueryProfile.metricMaxWhere(df.queryExecution.executedPlan, "numFiles")(
         _.nodeName.contains("Scan"))
     }
     val allFiles = scanFiles(index)

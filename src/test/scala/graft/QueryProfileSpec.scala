@@ -1,0 +1,47 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** [[QueryProfile]]: one instance per session, and a window reports the
+  * jobs, tasks and micro-batches that ran inside it — complete without
+  * sleeping, because the window drains the listener bus. */
+class QueryProfileSpec extends AnyFunSuite {
+  private lazy val spark = SparkTestSession.spark
+  private val sf = "/root/testdata/sf0.001"
+
+  test("installs once per session") {
+    val p = QueryProfile.of(spark)
+    assert(QueryProfile.of(spark) eq p)
+    assert(spark.streams.listListeners().count(_.isInstanceOf[QueryProfile]) == 1)
+  }
+
+  test("a batch action's jobs and tasks land inside its window") {
+    val (n, p) = QueryProfile.of(spark).measure(
+      spark.range(0, 1000, 1, 3).selectExpr("id % 7 AS k").distinct().count())
+    assert(n == 7)
+    assert(p.jobs.nonEmpty && p.stages >= p.jobs.size)
+    // three range partitions map-side, at least one reduce task
+    assert(p.tasks >= 4)
+    assert(p.shuffleBytes > 0)
+    assert(p.jobMs <= p.wallMs && p.outsideMs == p.wallMs - p.jobMs)
+    // nothing ran outside the window, so nothing is counted there
+    val (_, idle) = QueryProfile.of(spark).measure(())
+    assert(idle.jobs.isEmpty && idle.tasks == 0)
+  }
+
+  test("a drained stream reports its micro-batches") {
+    val (_, p) = QueryProfile.of(spark).measure(
+      graft.streaming.StreamQueries.eventCounts(spark, sf).collect())
+    assert(p.streams.size == 1)
+    val s = p.streams.values.head
+    assert(s.batches >= 1 && s.triggerMs >= s.addBatchMs)
+    assert(s.maxTriggerMs <= s.triggerMs)
+  }
+
+  test("windows do not nest") {
+    val prof = QueryProfile.of(spark)
+    intercept[IllegalArgumentException](prof.measure(prof.measure(())))
+    // the failed inner call left the outer window closed
+    assert(prof.measure(1)._1 == 1)
+  }
+}

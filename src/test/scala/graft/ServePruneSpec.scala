@@ -34,19 +34,9 @@ class ServePruneSpec extends AnyFunSuite {
     try body finally spark.conf.unset(SnapshotStore.ServePruneConfKey)
   }
 
-  private def bytesRead(body: => Unit): Long = {
-    val n = new java.util.concurrent.atomic.AtomicLong(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          n.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-    }
-    spark.sparkContext.addSparkListener(l)
-    try { body; Thread.sleep(1500) }
-    finally spark.sparkContext.removeSparkListener(l)
-    n.get()
-  }
+  /** Input bytes every task read while `body` ran. */
+  private def bytesRead(body: => Unit): Long =
+    QueryProfile.of(spark).measure(body)._2.inputBytes
 
   test("pruned serveNearDup == unpruned (hits, misses, multi-append)") {
     val d = docs()

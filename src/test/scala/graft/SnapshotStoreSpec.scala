@@ -512,21 +512,8 @@ class SnapshotStoreSpec extends AnyFunSuite {
     // committed component, so commit bytes grew with the store.
     // (The STAGE anti-join still reads the committed digest/fp
     // components by design — stage is measured out of scope here.)
-    def bytesRead(body: => Unit): Long = {
-      val n = new java.util.concurrent.atomic.AtomicLong(0)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null)
-            n.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-      }
-      spark.sparkContext.addSparkListener(l)
-      // the public API has no listener-bus drain; task-end events for
-      // the synchronous jobs inside `body` land within the post-sleep
-      try { body; Thread.sleep(1500) }
-      finally spark.sparkContext.removeSparkListener(l)
-      n.get()
-    }
+    def bytesRead(body: => Unit): Long =
+      QueryProfile.of(spark).measure(body)._2.inputBytes
     def freshDoc(i: Long) =
       Seq((i, "x", s"novel $i alpha ${i * 31} beta ${i * 17} gamma"))
         .toDF("doc_id", "source", "text")
@@ -562,19 +549,8 @@ class SnapshotStoreSpec extends AnyFunSuite {
     // bytes (sketch pass + candidate writes). Before r21 the staging
     // anti-join's build side unioned EVERY committed digest/fp
     // component, so stage bytes grew with the store.
-    def bytesRead(body: => Unit): Long = {
-      val n = new java.util.concurrent.atomic.AtomicLong(0)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null)
-            n.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-      }
-      spark.sparkContext.addSparkListener(l)
-      try { body; Thread.sleep(1500) }
-      finally spark.sparkContext.removeSparkListener(l)
-      n.get()
-    }
+    def bytesRead(body: => Unit): Long =
+      QueryProfile.of(spark).measure(body)._2.inputBytes
     def freshDoc(i: Long) =
       Seq((i, "x", s"novel $i alpha ${i * 31} beta ${i * 17} gamma"))
         .toDF("doc_id", "source", "text")
