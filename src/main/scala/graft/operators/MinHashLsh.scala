@@ -180,47 +180,4 @@ object MinHashLsh {
       .groupBy(col("a_id"), col("b_id"))
       .agg(max(col("jaccard")).as("jaccard"))
   }
-
-  // -- the SPLIT probe shape [[SnapshotStore.serveNearDup]]'s sketch
-  //    pruning composes (guide §2.3: move keys, not payloads): the
-  //    arriving shingle sets materialize ONCE (never replicated through
-  //    the per-band explode — probeIndex's inline `banded` carries
-  //    b_set b times, which is fine fused in one stage but ruinous to
-  //    materialize), the lean (b_id, band, key) frame feeds both the
-  //    sketch probe and the band join, and b_set re-attaches by the
-  //    unique b_id — so the result is row-identical to probeIndex's:
-  //    same candidate multiset (same band-key equi-join), same exact
-  //    verification values (b_set joined by its unique key). --
-
-  /** The arriving docs' shingle sets: (b_id, b_set). */
-  private[operators] def arrivingSets(arriving: DataFrame, id: String,
-      text: String): DataFrame =
-    arriving
-      .select(col(id).as("b_id"), Text.shingleSet(col(text)).as("b_set"))
-      .where(size(col("b_set")) > 0)
-
-  /** The per-row band keys of an arriving sets frame, WITHOUT the
-    * shingle arrays: (b_id, band, key). */
-  private[operators] def bandKeysOf(setsB: DataFrame, k: Int,
-      r: Int): DataFrame =
-    setsB
-      .withColumn("sig", signature(col("b_set"), k))
-      .select(col("b_id"), explode(bandKeysFromSig(col("sig"), k, r)).as("bk"))
-      .select(col("b_id"), col("bk.band").as("band"), col("bk.key").as("key"))
-
-  /** [[probeIndex]]'s join+verify over the split arriving frames —
-    * row-identical output (see the block comment above). */
-  private[operators] def probeSplit(bandsA: DataFrame, setsA: DataFrame,
-      bandKeys: DataFrame, setsB: DataFrame, threshold: Double): DataFrame =
-    bandKeys
-      .join(bandsA, Seq("band", "key"))
-      .select(col("did").as("a_id"), col("b_id"))
-      .join(setsB, Seq("b_id"))
-      .join(setsA.select(col("did").as("a_id"), col("sset").as("a_set")),
-        Seq("a_id"))
-      .select(col("a_id"), col("b_id"),
-        jaccard(col("a_set"), col("b_set")).as("jaccard"))
-      .where(col("jaccard") >= threshold)
-      .groupBy(col("a_id"), col("b_id"))
-      .agg(max(col("jaccard")).as("jaccard"))
 }

@@ -40,11 +40,16 @@ import graft.functions.Text
   *                             not just its indexes.
   *   appends/<id>/.summary/    audit-pruning sidecar: `baseline` (the
   *                             manifest ids the staging anti-joins ran
-  *                             against) and `did.bloom` (a Bloom
-  *                             filter over the append's sets∪docs doc
-  *                             ids) — lets [[commit]]'s audit scan
-  *                             racers and Bloom-hit appends only,
-  *                             instead of the whole store per commit.
+  *                             against), `did.bloom` (a Bloom filter
+  *                             over the append's sets∪docs doc ids),
+  *                             `digest.bloom` and `fp.bloom` (the same
+  *                             over its digest and fingerprint deltas)
+  *                             and `did.hits` (the baseline appends
+  *                             whose did sketch hit at stage time) —
+  *                             lets [[stage]]'s anti-joins and
+  *                             [[commit]]'s audit scan racers and
+  *                             Bloom-hit appends only, instead of the
+  *                             whole store per append.
   *
   * CRASH ATOMICITY — the Publish.scala write-audit-publish discipline
   * at append granularity: [[stage]] writes all component deltas under
@@ -145,9 +150,7 @@ import graft.functions.Text
   * legacy staging) pay a sketch-test job, and only possible hits are
   * scan-confirmed. Serving is stateless equi-joins against
   * (multi-path) file scans — no corpus-sized state, no broadcast
-  * assumption anywhere; a corpus-sized serve probe can additionally
-  * pre-filter the store side with a probe-key Bloom (guide §3.2) when
-  * the store dwarfs the arriving batch. */
+  * assumption anywhere. */
 object SnapshotStore {
 
   private def hfs(spark: SparkSession, p: HPath) =
@@ -414,20 +417,9 @@ object SnapshotStore {
   private val SummaryDir = ".summary"
 
   /** Sidecar file per sketch family: `did` = sets∪docs doc ids, `dig` =
-    * digest delta keys, `fp` = fingerprint delta keys, `band` = the
-    * append's LSH (band, key) pairs tagged `band|key` — the serve-probe
-    * pruning key ([[serveNearDup]]): an arriving doc can only near-dup
-    * a stored doc whose append shares one of its band keys. */
+    * digest delta keys, `fp` = fingerprint delta keys. */
   private val FamFile = Map(
-    "did" -> "did.bloom", "dig" -> "digest.bloom", "fp" -> "fp.bloom",
-    "band" -> "band.bloom")
-
-  /** The tagged band-sketch key — ONE encoding shared by the sidecar
-    * build (stage/compact) and the serve probe, so a stored (band, key)
-    * equal to an arriving one always hits (no false negatives; a rare
-    * cross-band string collision only adds a spurious scanned append). */
-  private def bandSketchKey(band: Column, key: Column): Column =
-    concat(band.cast("string"), lit("|"), key)
+    "did" -> "did.bloom", "dig" -> "digest.bloom", "fp" -> "fp.bloom")
 
   /** The single-column digest/fp component schemas — known statically,
     * so their reads always pass an explicit schema (skips the parquet
@@ -438,14 +430,6 @@ object SnapshotStore {
   private val FpSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("fp",
       org.apache.spark.sql.types.StringType)))
-  /** The (band, key) projection of the bands component — static (the
-    * [[MinHashLsh.banded]] kernel types them), so band-sketch scans
-    * prune to these two columns and skip schema inference. */
-  private val BandKeySchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("band",
-      org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("key",
-      org.apache.spark.sql.types.StringType)))
 
   /** The component dirs whose presence makes a family auditable for an
     * append that has NO sketch (the conservative must-scan fallback). */
@@ -455,7 +439,6 @@ object SnapshotStore {
       hasParquet(spark, s"$dir/appends/$id/$c"))
     case "dig" => hasParquet(spark, s"$dir/appends/$id/digests")
     case "fp" => hasParquet(spark, s"$dir/appends/$id/fps")
-    case "band" => hasParquet(spark, s"$dir/appends/$id/bands")
   }
 
   private def writeBaseline(spark: SparkSession, base: String,
@@ -583,81 +566,6 @@ object SnapshotStore {
     }
   }
 
-  /** Conf: committed-component bytes at which a serve probe starts
-    * paying ONE aggregation pass over the ARRIVING batch to sketch-test
-    * it against every append's sidecar and scan only the hit appends
-    * (guide §3.2 — the store side of the join is pre-filtered before
-    * any scan/exchange, by FILE PRUNING rather than a per-row filter).
-    * The default (64 MiB) is far above any fixture store — the bench's
-    * serve plans are byte-identical — and far below one production
-    * crawl increment, where the accumulated store dwarfs an arriving
-    * probe batch and the pass over the batch is the cheap side by
-    * construction. Set to 0 to force pruning on (the equality/metrics
-    * specs do), or negative to disable outright. */
-  val ServePruneConfKey = "graft.store.servePruneMinBytes"
-  val DefaultServePruneMinBytes: Long = 64L * 1024 * 1024
-  private def servePruneMinBytes(spark: SparkSession): Long =
-    spark.conf.getOption(ServePruneConfKey).map(_.toLong)
-      .getOrElse(DefaultServePruneMinBytes)
-
-  /** JVM cache of per-(dir, id, comp) committed parquet byte totals —
-    * the serve-prune gate's input. Sound for the same reason as the
-    * sketch cache (append dirs are immutable once committed; gc
-    * invalidates reclaimed ids); without it every serve probe of a
-    * keyed stream re-lists O(appends) directories per micro-batch. */
-  private val BytesCacheCap = 8192
-  private val bytesCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, String, String),
-        java.lang.Long](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, String),
-            java.lang.Long]): Boolean = size > BytesCacheCap
-    })
-  private def invalidateBytes(dir: String, ids: Seq[String]): Unit = {
-    val gone = ids.toSet
-    bytesCache.synchronized {
-      bytesCache.keySet.removeIf(k => k._1 == dir && gone(k._2))
-    }
-  }
-  /** Total parquet bytes of `ids`' `comp` dirs — driver metadata only,
-    * cached per committed append. */
-  private def componentBytes(spark: SparkSession, dir: String,
-      ids: Seq[String], comp: String): Long =
-    ids.map { id =>
-      val key = (dir, id, comp)
-      val hit = bytesCache.get(key)
-      if (hit != null) hit.longValue()
-      else {
-        val p = new HPath(s"$dir/appends/$id/$comp")
-        val fs = hfs(spark, p)
-        val n =
-          if (!fs.exists(p)) 0L
-          else fs.listStatus(p).toSeq
-            .filter(_.getPath.getName.endsWith(".parquet"))
-            .map(_.getLen).sum
-        bytesCache.put(key, java.lang.Long.valueOf(n))
-        n
-      }
-    }.sum
-
-  /** The build-buffer width for sketch aggregation (folded down to
-    * ~16 bits/key before persisting). Conf-tunable for production
-    * increment sizes ([[StoreSketch.CapConfKey]]), validated against
-    * the Int-indexed position math's envelope (VERDICT r21 #2: a conf
-    * ≥ 32 used to allocate a wrongly-sized words array and die with
-    * ArrayIndexOutOfBounds inside tasks instead of failing fast). */
-  private def capLog2(spark: SparkSession): Int = {
-    val cap = spark.conf.getOption(StoreSketch.CapConfKey).map(_.toInt)
-      .getOrElse(StoreSketch.DefaultCapBitsLog2)
-    require(cap >= StoreSketch.MinBitsLog2 &&
-        cap <= StoreSketch.MaxBitsLog2,
-      s"${StoreSketch.CapConfKey}=$cap out of range " +
-        s"[${StoreSketch.MinBitsLog2}, ${StoreSketch.MaxBitsLog2}]: the " +
-        "sketch position math is Int-indexed, so widths past 2^31 bits " +
-        "are not supported")
-    cap
-  }
-
   /** Per-family result of [[sketchJob]]: the built sketch (when
     * requested and the family had any input), the input key count, and
     * the committed appends whose sketch HIT at least one key. */
@@ -672,12 +580,11 @@ object SnapshotStore {
       var remaining: Int) extends Serializable
 
   /** One [[sketchJob]] input: a family, the parquet paths carrying its
-    * keys, the key EXPRESSION over those columns (a plain column for
-    * did/dig/fp; the band family's tagged `band|key` concat), and
-    * (when the caller knows it) the read schema — an explicit schema
-    * prunes the scan to the key columns AND skips the parquet
-    * schema-inference job a plain `spark.read.parquet` launches
-    * (measured: 3 × ~60 ms + driver gaps per stage at fixture scale). */
+    * keys, the key column, and (when the caller knows it) the read
+    * schema — an explicit schema prunes the scan to the key columns
+    * AND skips the parquet schema-inference job a plain
+    * `spark.read.parquet` launches (measured: 3 × ~60 ms + driver gaps
+    * per stage at fixture scale). */
   private final case class SketchPart(fam: String, paths: Seq[String],
       key: Column, keySchema: Option[org.apache.spark.sql.types.StructType])
 
@@ -697,7 +604,7 @@ object SnapshotStore {
   private def sketchJob(spark: SparkSession,
       parts: Seq[SketchPart],
       fams: Map[String, Seq[(String, StoreSketch)]],
-      buildSketch: Boolean, cap: Int): Map[String, SketchResult] = {
+      buildSketch: Boolean): Map[String, SketchResult] = {
     val live = parts.filter(_.paths.nonEmpty)
     val needed = live.filter(p =>
       buildSketch || fams.getOrElse(p.fam, Nil).nonEmpty)
@@ -712,17 +619,18 @@ object SnapshotStore {
         .select(lit(p.fam).as("fam"), p.key.cast("string").as("k"))
         .as[(String, String)]
     }.reduce(_ union _)
-    empty ++ sketchAgg(spark, ds, fams, buildSketch, cap)
+    empty ++ sketchAgg(spark, ds, fams, buildSketch)
   }
 
-  /** The aggregation half of [[sketchJob]], shared with the serve
-    * probes' hit tests ([[serveNearDup]]/[[serveDelta]]): ONE treeAggregate over a
-    * (family, key) dataset that builds cap-width sketches (when asked)
-    * and tests every key against the supplied committed sketches. */
+  /** The aggregation half of [[sketchJob]]: ONE treeAggregate over a
+    * (family, key) dataset that builds sketches at the fixed
+    * [[StoreSketch.DefaultCapBitsLog2]] build width (when asked) and
+    * tests every key against the supplied committed sketches. */
   private def sketchAgg(spark: SparkSession,
       ds: org.apache.spark.sql.Dataset[(String, String)],
       fams: Map[String, Seq[(String, StoreSketch)]],
-      buildSketch: Boolean, cap: Int): Map[String, SketchResult] = {
+      buildSketch: Boolean): Map[String, SketchResult] = {
+    val cap = StoreSketch.DefaultCapBitsLog2
     val famsBc = spark.sparkContext.broadcast(fams)
     val wordsLen = 1 << (cap - 6)
     def newBuf(fam: String): SketchBuf = {
@@ -904,16 +812,9 @@ object SnapshotStore {
       SketchPart("dig", Seq(s"$base/digests").filter(hasParquet(spark, _)),
         col("h"), Some(DigestSchema)),
       SketchPart("fp", Seq(s"$base/fps").filter(hasParquet(spark, _)),
-        col("fp"), Some(FpSchema)),
-      // band sketch: the serve-probe pruning sidecar (nothing tests
-      // against it at stage time — bands have no disjointness
-      // invariant; it exists so [[serveNearDup]] can skip whole appends
-      // whose bands share no key with an arriving batch)
-      SketchPart("band", Seq(s"$base/bands").filter(hasParquet(spark, _)),
-        bandSketchKey(col("band"), col("key")), Some(BandKeySchema)))
+        col("fp"), Some(FpSchema)))
     val res = sketchJob(spark, parts,
-      fams.map { case (f, (sk, _)) => f -> sk },
-      buildSketch = true, capLog2(spark))
+      fams.map { case (f, (sk, _)) => f -> sk }, buildSketch = true)
     // digest/fp delta: anti-join ONLY the bloom-hit (or sketch-less)
     // appends — a committed row equal to a staged row always hits its
     // append's sketch (no false negatives), so the pruned anti-join's
@@ -931,7 +832,7 @@ object SnapshotStore {
     writeBaseline(spark, base, pinned)
     writeDidHits(spark, base,
       (res("did").hitIds ++ fams("did")._2).toSeq.sorted)
-    Seq("did", "dig", "fp", "band").foreach { f =>
+    FamFile.keys.foreach { f =>
       res(f).sketch.foreach(sk =>
         writeSketchFile(spark, s"$base/$SummaryDir/${FamFile(f)}", sk))
     }
@@ -1099,7 +1000,7 @@ object SnapshotStore {
           stagedDidComps.map(c =>
             SketchPart("did", Seq(s"$base/$c"), col("did"), None)),
         Map("dig" -> digFams._1, "fp" -> fpFams._1, "did" -> didFams._1),
-        buildSketch = false, capLog2(spark))
+        buildSketch = false)
       val digScan = res("dig").hitIds ++ digFams._2
       val fpScan = res("fp").hitIds ++ fpFams._2
       val didScanSet = res("did").hitIds ++ didFams._2 ++
@@ -1280,11 +1181,9 @@ object SnapshotStore {
       SketchPart("dig", Seq(s"$base/digests").filter(hasParquet(spark, _)),
         col("h"), Some(DigestSchema)),
       SketchPart("fp", Seq(s"$base/fps").filter(hasParquet(spark, _)),
-        col("fp"), Some(FpSchema)),
-      SketchPart("band", Seq(s"$base/bands").filter(hasParquet(spark, _)),
-        bandSketchKey(col("band"), col("key")), Some(BandKeySchema))),
-      Map.empty, buildSketch = true, capLog2(spark))
-    Seq("did", "dig", "fp", "band").foreach { f =>
+        col("fp"), Some(FpSchema))),
+      Map.empty, buildSketch = true)
+    FamFile.keys.foreach { f =>
       skRes(f).sketch.foreach(sk =>
         writeSketchFile(spark, s"$base/$SummaryDir/${FamFile(f)}", sk))
     }
@@ -1469,10 +1368,9 @@ object SnapshotStore {
       val deleted = candidates.filter(p => !live(p.getName))
         .map { p => fs.delete(p, true); p.getName }
       // a reclaimed id may be recycled (tombstone-retention trim +
-      // appendAs replay) — its cached sketches and byte totals must die
-      // with its dir (schemas were invalidated above)
+      // appendAs replay) — its cached sketches must die with its dir
+      // (schemas were invalidated above)
       invalidateSketches(dir, deleted)
-      invalidateBytes(dir, deleted)
       deleted
     }
   }
@@ -1495,135 +1393,30 @@ object SnapshotStore {
   def docs(spark: SparkSession, dir: String): DataFrame =
     readComponent(spark, dir, "docs")
 
-  // ------------------------------------------------------------------
-  // SERVE-PROBE SKETCH PRUNING (guide §3.2; VERDICT r21 top ask) — the
-  // last O(store)-per-batch scan: both serve joins are equi-joins of a
-  // (usually small) arriving batch against the full committed
-  // components. When the committed bytes pass the conf gate, ONE
-  // aggregation pass over the ARRIVING side tests its join keys
-  // against every append's sidecar sketch and the component scans are
-  // pruned to the HIT appends (plus sketch-less legacy appends — the
-  // conservative must-scan fallback). Soundness is the sketches'
-  // no-false-negative guarantee: a committed row whose key equals an
-  // arriving key always hits its own append's sketch, so every
-  // join-participating row survives the pruning and the join output is
-  // row-identical; a false positive only adds a scanned append.
-  // Disjoint probe batches — the common crawl case — scan NOTHING of
-  // the store. At fixture scale the gate never fires and the serve
-  // plans are byte-identical to r21's.
-  // ------------------------------------------------------------------
-
-  /** The serve-pruned component scan: `comp` restricted to `ids`; an
-    * empty id set yields the EMPTY frame under the component's schema
-    * (static for digests/fps; the cached inferred schema otherwise,
-    * resolved over the FULL snapshot's paths). */
-  private def componentOf(spark: SparkSession, s: Snapshot, comp: String,
-      ids: Seq[String]): DataFrame = {
-    val paths = componentPaths(spark, s.dir, ids, comp)
-    val schema =
-      if (comp == "digests") DigestSchema
-      else if (comp == "fps") FpSchema
-      else cachedComponentSchema(spark, s.dir, comp,
-        componentPaths(spark, s.dir, s.ids, comp))
-    if (paths.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(paths: _*)
-  }
-
   /** Near-dup delta of `arriving` docs against the STORED snapshot
     * index — [[MinHashLsh.probeIndex]] over the store's file scans;
     * row-equal to the inline [[MinHashLsh.snapshotNearDupPairs]] on
     * the same corpora (SnapshotStoreSpec). bands+sets come from ONE
-    * pinned [[Snapshot]], never two manifest resolutions.
-    *
-    * Above the [[ServePruneConfKey]] byte gate (batch probes only —
-    * a stream-static arriving frame cannot host the probe pass), the
-    * arriving batch BANDS ONCE (localCheckpoint — bounded by the batch,
-    * reused by the probe pass and the join), its band keys sketch-test
-    * every append's `band.bloom`, and bands+sets scan ONLY hit appends:
-    * a candidate pair needs an equal (band, key), which always hits its
-    * append's sketch, and the candidate's sets row lives in the SAME
-    * append as its bands row (both derive from the one staged snapshot;
-    * compaction rewrites components together), so pruning both
-    * components to the hit set loses no pair. */
+    * pinned [[Snapshot]], never two manifest resolutions. The same
+    * plan serves batch and streaming `arriving` frames. */
   def serveNearDup(spark: SparkSession, dir: String, arriving: DataFrame,
       id: String = "doc_id", text: String = "text",
       k: Int = 32, r: Int = 2, threshold: Double = 0.8): DataFrame = {
     val s = snapshot(spark, dir)
-    val minBytes = servePruneMinBytes(spark)
-    def full() = MinHashLsh.probeIndex(s.bands(spark), s.sets(spark),
+    MinHashLsh.probeIndex(s.bands(spark), s.sets(spark),
       arriving, id, text, k, r, threshold)
-    if (arriving.isStreaming || minBytes < 0) return full()
-    if (componentBytes(spark, s.dir, s.ids, "bands") +
-        componentBytes(spark, s.dir, s.ids, "sets") < minBytes)
-      return full()
-    val (bandSk, bandScanless) = famSketches(spark, s.dir, s.ids, "band")
-    if (bandSk.isEmpty) return full() // pre-band-sidecar store: nothing prunable
-    // split materialization (guide §2.3 — keys, not payloads): the
-    // shingle arrays checkpoint ONCE (never through the 16-way band
-    // explode, which would replicate every array per band row), the
-    // lean (b_id, band, key) frame checkpoints separately and feeds
-    // both the sketch probe and the band join
-    val setsB = MinHashLsh.arrivingSets(arriving, id, text).localCheckpoint()
-    val bandKeys = MinHashLsh.bandKeysOf(setsB, k, r).localCheckpoint()
-    import spark.implicits._
-    val keys = bandKeys.select(lit("band").as("fam"),
-      bandSketchKey(col("band"), col("key")).as("k")).as[(String, String)]
-    val res = sketchAgg(spark, keys, Map("band" -> bandSk),
-      buildSketch = false, capLog2(spark))
-    val hit = res.get("band").map(_.hitIds).getOrElse(Set.empty) ++
-      bandScanless
-    val ids = s.ids.filter(hit)
-    MinHashLsh.probeSplit(componentOf(spark, s, "bands", ids),
-      componentOf(spark, s, "sets", ids), bandKeys, setsB, threshold)
   }
 
   /** Snapshot-delta classification of `b` against the STORED digest
     * indexes — [[Dedup.applySnapshotDelta]] over the store's file
     * scans; row-equal to the inline [[Dedup.snapshotDelta]].
-    * digests+fps come from ONE pinned [[Snapshot]].
-    *
-    * Above the [[ServePruneConfKey]] byte gate (batch probes only),
-    * one pass over `b` computes its md5/fingerprint join keys and
-    * sketch-tests them against every append's digest/fp sidecars;
-    * the digests/fps scans are pruned to hit appends — a committed
-    * digest equal to an arriving one always hits its append's sketch,
-    * so the LEFT joins see every matching row and the classification
-    * is row-identical. */
+    * digests+fps come from ONE pinned [[Snapshot]]. */
   def serveDelta(spark: SparkSession, dir: String, b: DataFrame,
       text: Column, src: Column): DataFrame = {
     val s = snapshot(spark, dir)
-    val (dig, fp) = serveDigestIndexes(spark, s, b, text)
     Dedup.applySnapshotDelta(b,
-      dig.withColumn("in_a", lit(1L)),
-      fp.withColumn("fp_in_a", lit(1L)),
+      s.digests(spark).withColumn("in_a", lit(1L)),
+      s.fps(spark).withColumn("fp_in_a", lit(1L)),
       text, src)
-  }
-
-  private def serveDigestIndexes(spark: SparkSession, s: Snapshot,
-      b: DataFrame, text: Column): (DataFrame, DataFrame) = {
-    val minBytes = servePruneMinBytes(spark)
-    def full() = (s.digests(spark), s.fps(spark))
-    if (b.isStreaming || minBytes < 0) return full()
-    if (componentBytes(spark, s.dir, s.ids, "digests") +
-        componentBytes(spark, s.dir, s.ids, "fps") < minBytes)
-      return full()
-    val (digSk, digScanless) = famSketches(spark, s.dir, s.ids, "dig")
-    val (fpSk, fpScanless) = famSketches(spark, s.dir, s.ids, "fp")
-    if (digSk.isEmpty && fpSk.isEmpty) return full()
-    import spark.implicits._
-    val keys = b.select(lit("dig").as("fam"), md5(text).as("k"))
-      .union(b.select(lit("fp").as("fam"),
-        Text.fingerprint(text).as("k")))
-      .as[(String, String)]
-    val res = sketchAgg(spark, keys, Map("dig" -> digSk, "fp" -> fpSk),
-      buildSketch = false, capLog2(spark))
-    val digHit = res.get("dig").map(_.hitIds).getOrElse(Set.empty) ++
-      digScanless
-    val fpHit = res.get("fp").map(_.hitIds).getOrElse(Set.empty) ++
-      fpScanless
-    (componentOf(spark, s, "digests", s.ids.filter(digHit)),
-      componentOf(spark, s, "fps", s.ids.filter(fpHit)))
   }
 }

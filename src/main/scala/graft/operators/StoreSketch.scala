@@ -64,20 +64,16 @@ private[graft] object StoreSketch {
     * positions; at the ~16 bits/key the persisted fold targets, k=6
     * gives fpp ≈ 4e-3 (a confirming-scan rate, never a verdict). */
   val K = 6
-  /** Persisted-sidecar floor (1 Kib = 128 B) and the build-buffer cap:
-    * the aggregation buffer is 2^cap bits per (family × task); the
-    * default 2^22 (512 KiB) sizes ~260k keys at 16 bits/key — beyond
-    * it the sketch saturates gracefully (more confirming scans).
-    * `graft.store.sketchCapBitsLog2` raises it for production
-    * increments (e.g. 2^30 = 128 MiB covers ~6.7e7 keys/append). */
+  /** Persisted-sidecar floor (1 Kib = 128 B) and the fixed build
+    * width every sidecar sketch is aggregated at: the buffer is 2^22
+    * bits (512 KiB) per (family × task) and sizes ~260k keys at 16
+    * bits/key — beyond it the sketch saturates gracefully (more
+    * confirming scans, never a wrong verdict). */
   val MinBitsLog2 = 10
   val DefaultCapBitsLog2 = 22
   /** Hard width ceiling (2^31 bits = 256 MiB): the Int-indexed position
-    * math's envelope — [[SnapshotStore]] validates the conf against it
-    * so a misconfigured "production increment" width is rejected with a
-    * message instead of failing tasks with ArrayIndexOutOfBounds. */
+    * math's envelope. */
   val MaxBitsLog2 = 31
-  val CapConfKey = "graft.store.sketchCapBitsLog2"
   /** Serialized header: magic, version, bitsLog2, word count. */
   private val Magic = 0x47534b31 // "GSK1"
 

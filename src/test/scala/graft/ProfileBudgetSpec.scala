@@ -23,6 +23,9 @@ class ProfileBudgetSpec extends AnyFunSuite {
   private val budgets = Seq(
     "s42_stream_crawl_increment" -> (107, 108),
     "n95_compacted_replay_serve" -> (34, 34),
+    "n93_compacted_store_serve" -> (34, 34),
+    "s38_store_snapshot_neardup" -> (14, 15),
+    "s39_store_snapshot_delta" -> (12, 13),
     "n76_ivfpq_ann" -> (55, 55),
     "n90_snapshot_chain_delta" -> (21, 21))
 

@@ -295,6 +295,75 @@ class SnapshotStoreSpec extends AnyFunSuite {
     assert(rows(served) == rows(inline))
   }
 
+  test("zero-hit serve probes classify all-new and return no near-dup pairs") {
+    import spark.implicits._
+    val d = docs(sf)
+    val dir = TempDirs.create("snapstore-zero-hit")
+    SnapshotStore.append(spark, dir, d.where(col("doc_id") % 4 === 0))
+    SnapshotStore.append(spark, dir, d.where(col("doc_id") % 4 === 2))
+    val novel = Seq((900001L, "x", "zz yy xx ww vv uu novel"),
+      (900002L, "x", "qq rr ss tt different entirely"))
+      .toDF("doc_id", "source", "text")
+    val delta = SnapshotStore.serveDelta(
+      spark, dir, novel, col("text"), col("source")).collect()
+    assert(delta.length == 1)
+    val r = delta.head
+    assert(r.getAs[Long]("n_docs") == 2 && r.getAs[Long]("n_new") == 2)
+    assert(SnapshotStore.serveNearDup(spark, dir, novel).collect().isEmpty)
+  }
+
+  test("an unreadable sketch sidecar degrades to scan, never a crash (ADVICE r21)") {
+    import spark.implicits._
+    val dir = TempDirs.create("snapstore-garbage-sidecar")
+    val a = Seq((0L, "x", "aa bb cc dd ee ff gg hh"))
+      .toDF("doc_id", "source", "text")
+    SnapshotStore.append(spark, dir, a)
+    val aid = SnapshotStore.committedIds(spark, dir).head
+    // overwrite every sidecar sketch with bytes no parser accepts (an
+    // r20-era Spark BloomFilter file is one such foreign format)
+    val sumDir = new java.io.File(s"$dir/appends/$aid/.summary")
+    sumDir.listFiles().filter(_.getName.endsWith(".bloom")).foreach { f =>
+      val w = new java.io.FileOutputStream(f)
+      try w.write("not a sketch".getBytes("UTF-8")) finally w.close()
+    }
+    // a LATER stage/commit against this store must fall back to the
+    // unpruned scan (r21 threw from StoreSketch.read's require) ...
+    val b = Seq((1L, "x", "ii jj kk ll mm nn oo pp"))
+      .toDF("doc_id", "source", "text")
+    SnapshotStore.append(spark, dir, b)
+    assert(SnapshotStore.committedIds(spark, dir).size == 2)
+    // ... and a duplicate still gets REJECTED through the fallback scan
+    val dup = Seq((0L, "x", "qq rr ss tt uu vv ww xx"))
+      .toDF("doc_id", "source", "text")
+    val e = intercept[IllegalStateException] {
+      SnapshotStore.append(spark, dir, dup)
+    }
+    assert(e.getMessage.contains("rejected"))
+  }
+
+  test("gcOrphans invalidates the dir's cached component schemas (ADVICE r21)") {
+    import spark.implicits._
+    val dir = TempDirs.create("serveprune-schema")
+    val a = Seq((0L, "en", "aa bb cc dd ee", 7))
+      .toDF("doc_id", "lang", "text", "extra")
+    SnapshotStore.append(spark, dir, a, persistDocs = true)
+    assert(SnapshotStore.docs(spark, dir).columns.contains("extra"))
+    // destroy the store and recreate one at the SAME path with a
+    // DIFFERENT docs schema; the gc between them must drop the cached
+    // StructType so the new store is re-inferred, not served stale
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) f.listFiles().foreach(rm)
+      f.delete(); ()
+    }
+    rm(new java.io.File(dir))
+    SnapshotStore.gcOrphans(spark, dir)
+    val b = Seq((1L, "en", "ff gg hh ii jj"))
+      .toDF("doc_id", "lang", "text")
+    SnapshotStore.append(spark, dir, b, persistDocs = true)
+    val cols = SnapshotStore.docs(spark, dir).columns.toSeq
+    assert(!cols.contains("extra") && cols.contains("text"))
+  }
+
   private def allComponents(dir: String): Seq[Seq[String]] =
     Seq(SnapshotStore.sets(spark, dir), SnapshotStore.bands(spark, dir),
       SnapshotStore.digests(spark, dir), SnapshotStore.fps(spark, dir))
@@ -598,6 +667,11 @@ class SnapshotStoreSpec extends AnyFunSuite {
     assert(hs.nonEmpty && hs.forall(dig.mightContain))
     val fpsK = spark.read.parquet(s"$base/fps").collect().map(_.getString(0))
     assert(fpsK.nonEmpty && fpsK.forall(fp.mightContain))
+    // the sidecar set is a format: a new file here is a deliberate
+    // on-disk change (dot-files are the local filesystem's checksums)
+    assert(new java.io.File(s"$base/.summary").list()
+      .filterNot(_.startsWith(".")).toSet ==
+      Set("baseline", "did.hits", "did.bloom", "digest.bloom", "fp.bloom"))
   }
 
   test("compact equality audit detects a corrupted rewrite (r21 one-job form)") {

@@ -63,6 +63,25 @@ class StoreSketchSpec extends AnyFunSuite {
     assert(back.words.toSeq == sk.words.toSeq)
   }
 
+  test("sketch width envelope: 2^31 math is Int-safe") {
+    // the widest supported table: positions stay non-negative Ints end
+    // to end (a 2^31-bit words array, added and probed without AIOOBE)
+    val words = new Array[Long](1 << (31 - 6))
+    val keys = (0 until 1000).map(i => s"boundary-key-$i")
+    keys.foreach { k =>
+      val (h1, h2) = StoreSketch.hash2(k)
+      StoreSketch.addHashed(words, 31, h1, h2)
+    }
+    val sk = new StoreSketch(31, words)
+    assert(keys.forall(sk.mightContain)) // no false negatives
+    // and it folds to a small sidecar bit-identically to a small build
+    val folded = sk.fold(12)
+    assert(keys.forall(folded.mightContain))
+    assert(intercept[IllegalArgumentException] {
+      new StoreSketch(32, new Array[Long](1))
+    }.getMessage.contains("out of range"))
+  }
+
   test("optimal width targets 64 bits/key within [floor, cap]") {
     assert(StoreSketch.optimalBitsLog2(1, 22) == StoreSketch.MinBitsLog2)
     assert(StoreSketch.optimalBitsLog2(3000, 22) == 18) // 2^18 >= 64*3000
