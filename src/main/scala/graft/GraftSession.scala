@@ -32,6 +32,19 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
 
+  /** Scoped session-conf override: `key` is `value` while `body` runs,
+    * then its prior value is restored, or the key unset, even on
+    * failure. */
+  private[graft] def withConf[T](spark: SparkSession, key: String,
+      value: String)(body: => T): T = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   /** Standard local session (Verify/Bench/Profile mains). */
   def local(cpus: String): SparkSession = {
     val s = builder(s"local[$cpus]", cpus.toInt).getOrCreate()

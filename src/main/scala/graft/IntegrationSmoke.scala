@@ -58,7 +58,7 @@ object IntegrationSmoke {
       case Some(servers) =>
         // live form of s08: real topic -> normalize -> enrich -> sinks
         val enriched = Pipeline.enrich(spark,
-          Kafka.source(spark, servers, Kafka.Neeq).drop("srcType"),
+          Kafka.source(spark, servers, Kafka.Neeq),
           RuleClassifier.rulesDim(spark))
         val ckpt = TempDirs.create("graft-smoke-ckpt")
         val q = enriched.writeStream

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{Ids, Rules, SimHash, Text}
 import graft.operators.{Clustering, Dedup, MinHashLsh, Multimodal, Pipeline, RuleClassifier, Sharding, Similarity}
-import graft.sources.Tables
+import graft.sources.{Kafka, Tables}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -2697,8 +2697,8 @@ object SparkEntry {
     "p15_pipeline_two_topics" -> (((s: SparkSession, d: String) => {
       val docs = Tables.documents(s, d)
       val rules = RuleClassifier.rulesDim(s)
-      Pipeline.announcements(s, docs, rules, Pipeline.neeq)
-        .unionAll(Pipeline.announcements(s, docs, rules, Pipeline.aShare))
+      Pipeline.announcements(s, docs, rules, Kafka.Neeq)
+        .unionAll(Pipeline.announcements(s, docs, rules, Kafka.AShare))
     }, Some(s"""SELECT * FROM (${pipelineSql("新三板公告")})
       UNION ALL SELECT * FROM (${pipelineSql("A股公告")})"""))),
 

@@ -61,7 +61,7 @@ object TempDirs {
     deleteRecursively(p)
   }
 
-  /** Best-effort recursive delete (shared with withTempCheckpoint — a
+  /** Best-effort recursive delete (shared with StreamQueries.drain — a
     * cleanup IOException must never mask the result being returned). */
   private[graft] def deleteRecursively(dir: Path): Unit =
     try {

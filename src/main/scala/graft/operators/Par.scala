@@ -52,29 +52,39 @@ private[graft] object Par {
       }
     }
 
-  /** Run two INDEPENDENT driver-side actions concurrently — guide §2.6
-    * (Spark schedules concurrent jobs FIFO and back-fills the first
-    * job's task tail with the second's): the s40/s42 setup pays two
-    * eager localCheckpoints of the store's digest indexes back to back,
-    * each a small job plus scheduling floor; overlapping them halves
-    * that serial floor and at corpus scale overlaps two store scans. */
-  def par2[A, B](a: => A, b: => B): (A, B) = {
-    @volatile var bRes: Either[Throwable, B] = null
-    val t = new Thread(() => {
-      bRes = try Right(b) catch { case e: Throwable => Left(e) }
-    }, "graft-par2")
-    t.setDaemon(true)
-    t.start()
-    // the helper never outlives the call, whichever thunk fails
-    val aRes = try Right(a) catch { case e: Throwable => Left(e) }
-      finally t.join()
-    (aRes, bRes) match {
-      case (Right(x), Right(y)) => (x, y)
-      case (Left(ea), Left(eb)) =>
-        if (eb ne ea) ea.addSuppressed(eb)
-        throw ea
-      case (Left(e), _) => throw e
-      case (_, Left(e)) => throw e
+  /** Run INDEPENDENT driver-side tasks concurrently — guide §2.6
+    * (Spark schedules concurrent jobs FIFO and back-fills one job's
+    * task tail with the next's): a store stage's component writes, a
+    * compaction's rewrites. The first task runs on the caller, every
+    * other on its own daemon thread. All are joined before anything is
+    * thrown, so no helper outlives the call; then the first failure in
+    * task order propagates with the later ones attached as suppressed. */
+  def all(tasks: Seq[() => Unit]): Unit = {
+    val errs = new Array[Throwable](tasks.size)
+    def run(i: Int): Unit =
+      try tasks(i)() catch { case e: Throwable => errs(i) = e }
+    val helpers = tasks.indices.drop(1).map { i =>
+      val t = new Thread(() => run(i), "graft-par")
+      t.setDaemon(true)
+      t.start()
+      t
     }
+    if (tasks.nonEmpty) run(0)
+    helpers.foreach(_.join())
+    errs.find(_ != null).foreach { first =>
+      errs.foreach(e => if (e != null && (e ne first)) first.addSuppressed(e))
+      throw first
+    }
+  }
+
+  /** [[all]] over two thunks that return values: the s40/s42 setup
+    * pays two eager localCheckpoints of the store's digest indexes, each
+    * a small job plus scheduling floor; overlapping them halves that
+    * serial floor and at corpus scale overlaps two store scans. */
+  def par2[A, B](a: => A, b: => B): (A, B) = {
+    var ra: Option[A] = None
+    var rb: Option[B] = None
+    all(Seq(() => ra = Some(a), () => rb = Some(b)))
+    (ra.get, rb.get)
   }
 }

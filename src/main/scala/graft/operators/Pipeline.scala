@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Ids, Rules}
+import graft.sources.Kafka
 
 /** The full reference pipeline as one declarative plan (SURVEY §3):
   *
@@ -21,11 +22,6 @@ import graft.functions.{Ids, Rules}
   * `source` = company short name (SURVEY/FIXTURES §B mapping).
   */
 object Pipeline {
-
-  /** Per-topic config (quirk Q7: one pipeline, two configs). */
-  final case class Config(srcType: String, webname: String)
-  val neeq: Config = Config("新三板公告", "巨潮资讯网")
-  val aShare: Config = Config("A股公告", "巨潮资讯网")
 
   // ---- fixture dimensions (shared shape between Spark and oracle SQL) ----
 
@@ -78,8 +74,10 @@ object Pipeline {
   }
 
   /** documents → canonical announcement-event schema (O4 normalize;
-    * FIXTURES §A1). pubTime is synthesized deterministically from doc_id. */
-  def normalize(docs: DataFrame): DataFrame =
+    * FIXTURES §A1), as `topic`'s events (quirk Q7: one pipeline, one
+    * [[Kafka.TopicConfig]] per topic — its `srcType` labels the rows).
+    * pubTime is synthesized deterministically from doc_id. */
+  def normalize(docs: DataFrame, topic: Kafka.TopicConfig): DataFrame =
     docs.select(
       col("doc_id"),
       col("source").as("cmpShortName"),
@@ -87,22 +85,25 @@ object Pipeline {
       col("text").as("title"),
       date_format(timestamp_seconds(lit(1704067200L) + col("doc_id")),
         "yyyy-MM-dd HH:mm:ss").as("pubTime"),
-      concat(lit("http://doc/"), col("doc_id").cast("string")).as("srcUrl"))
+      concat(lit("http://doc/"), col("doc_id").cast("string")).as("srcUrl"),
+      lit(topic.srcType).as("srcType"))
 
   /** Full chain: normalize → enrich (name + industry dims) → classify →
     * assemble the wide announcement record (O19-O22 subset). */
   def announcements(spark: SparkSession, docs: DataFrame,
-      rules: DataFrame, config: Config = neeq): DataFrame =
-    enrich(spark, normalize(docs), rules, config)
+      rules: DataFrame, topic: Kafka.TopicConfig = Kafka.Neeq): DataFrame =
+    enrich(spark, normalize(docs, topic), rules)
 
   /** The chain from CANONICAL events onward — the entry point for a real
     * Kafka topic, whose [[graft.sources.Kafka.normalize]] already emits
-    * this schema (cmpShortName, cmpCode, title, pubTime, srcUrl).
+    * this schema (cmpShortName, cmpCode, title, pubTime, srcUrl,
+    * srcType); `srcType` passes through, so each row keeps its topic's
+    * label.
     * [[announcements]] is normalize∘enrich over the documents fixture;
     * IntegrationSmoke is Kafka.source∘enrich over a live topic — same
     * plan either way. */
   def enrich(spark: SparkSession, events: DataFrame,
-      rules: DataFrame, config: Config = neeq): DataFrame = {
+      rules: DataFrame): DataFrame = {
     val names = nameDim(spark)
     val indPivot = industryPivot(industryDim(spark))
 
@@ -139,7 +140,7 @@ object Pipeline {
         col("eventCode"), col("eventName"),
         col("emoScore"), Rules.emoLabel(col("emoScore")).as("emoLabel"),
         col("impScore"), Rules.impLabel(col("impScore")).as("impLabel"),
-        lit(config.webname).as("webname"), lit(config.srcType).as("srcType"),
+        lit("巨潮资讯网").as("webname"), col("srcType"),
         col("srcUrl"), col("pubTime"), col("title"))
   }
 }

@@ -17,8 +17,8 @@ import graft.functions.Text
   * Layout under `dir/` (all plain parquet):
   *   MANIFEST.v{N}             manifest version N: committed append
   *                             ids, one per line, in commit order,
-  *                             followed by `#tombstone <id>` lines for
-  *                             ids compacted away (see TOMBSTONES).
+  *                             followed by `#tombstone@<v> <id>` lines
+  *                             for ids compacted away (see TOMBSTONES).
   *                             The CURRENT state is the highest N
   *                             (readers resolve ONLY through it — the
   *                             file layout is the contract, not who
@@ -49,7 +49,9 @@ import graft.functions.Text
   *                             lets [[stage]]'s anti-joins and
   *                             [[commit]]'s audit scan racers and
   *                             Bloom-hit appends only, instead of the
-  *                             whole store per append.
+  *                             whole store per append. An absent
+  *                             or unreadable sketch reads as
+  *                             [[StoreSketch.AllHit]].
   *
   * CRASH ATOMICITY — the Publish.scala write-audit-publish discipline
   * at append granularity: [[stage]] writes all component deltas under
@@ -96,7 +98,7 @@ import graft.functions.Text
   * reclaims them.
   *
   * TOMBSTONES (the replay guard [[appendAs]] needs): [[compact]]
-  * records every id it supersedes as a `#tombstone <id>` manifest line,
+  * records every id it supersedes as a `#tombstone@<v> <id>` manifest line,
   * carried forward by every later publish. A REPLAYED keyed append
   * ([[appendAs]] — s42's per-micro-batch (increment, batch-id) key)
   * whose id was compacted out of the manifest therefore still
@@ -107,8 +109,7 @@ import graft.functions.Text
   * NOT recommended purely for snapshot-pinning hygiene, but it no
   * longer corrupts the store on replay). Tombstones are one manifest
   * line per ever-compacted id — bytes, not data — each stamped with
-  * the manifest version that created it (`#tombstone@<v> <id>`; legacy
-  * unversioned lines parse as version 0); [[gcOrphans]]'s
+  * the manifest version `<v>` that created it; [[gcOrphans]]'s
   * `tombstoneRetention` drops tombstones older than a configured
   * version horizon, since a replay can only reach back as far as a
   * streaming checkpoint exists.
@@ -139,32 +140,30 @@ import graft.functions.Text
   * writes), one aggregation pass over the staged bytes that builds
   * the `.summary` sketches and tests every staged key against the
   * pinned appends' sketches, and an anti-join that scans ONLY the
-  * sketch-hit (or sketch-less legacy) appends — disjoint snapshots,
-  * the common crawl case, never scan the committed store at all
-  * (before r21 the staging anti-join's build side was the WHOLE
-  * committed component per append). COMMIT is O(delta) and jobless in
+  * sketch-hit appends — disjoint snapshots, the common crawl case,
+  * never scan the committed store at all (before r21 the staging
+  * anti-join's build side was the WHOLE committed component per
+  * append). COMMIT is O(delta) and jobless in
   * the no-race case: digest/fp conflicts are checked only against
   * sketch-hit appends committed after the staging's recorded baseline
   * (`.summary/baseline`), and the doc-id contract's baseline half is
-  * the stage-recorded `.summary/did.hits` verdict — only racers (or a
-  * legacy staging) pay a sketch-test job, and only possible hits are
-  * scan-confirmed. Serving is stateless equi-joins against
-  * (multi-path) file scans — no corpus-sized state, no broadcast
-  * assumption anywhere. */
+  * the stage-recorded `.summary/did.hits` verdict — only racers pay a
+  * sketch-test job, and only possible hits are scan-confirmed.
+  * Serving is stateless equi-joins against (multi-path) file scans —
+  * no corpus-sized state, no broadcast assumption anywhere. */
 object SnapshotStore {
 
   private def hfs(spark: SparkSession, p: HPath) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private val ManifestRe = """MANIFEST\.v(\d+)""".r
-  private val TombstoneRe = """#tombstone (.+)""".r
-  private val TombstoneVRe = """#tombstone@(\d+) (.+)""".r
+  private val TombstoneLine = """#tombstone@(\d+) (.+)""".r
 
   /** Append ids are manifest LINES and path components — free text
     * within those constraints, validated at staging time (ADVICE r19:
-    * an id starting with `#` would commit, then silently vanish from
-    * [[Manifest.ids]] on the next read as a tombstone/comment line,
-    * orphaning its committed rows; newlines would corrupt the
+    * an id starting with `#` would commit, then read back as a
+    * tombstone or make every later manifest read throw, orphaning its
+    * committed rows; newlines would corrupt the
     * manifest; path separators would nest the staging dir outside
     * [[gcOrphans]]'s listing). */
   private[graft] def requireValidId(aid: String): Unit =
@@ -204,36 +203,51 @@ object SnapshotStore {
   /** One parsed manifest version: committed ids in commit order plus
     * the tombstoned (compacted-away) ids every publish carries
     * forward, each mapped to the manifest version that CREATED it
-    * (`#tombstone@<v> <id>` lines; legacy unversioned `#tombstone
-    * <id>` lines parse as version 0 — the oldest possible, first to
-    * age out under a retention horizon). (version 0, empty, empty)
-    * before the first commit. */
+    * (`#tombstone@<v> <id>` lines). (version 0, empty, empty) before
+    * the first commit. */
   final case class Manifest(version: Long, ids: Seq[String],
       tombstones: Map[String, Long])
 
+  /** The one line-file format — `MANIFEST.v*`, `.summary/baseline`
+    * and `.summary/did.hits`: UTF-8, one entry per line (valid ids
+    * never contain newlines — [[requireValidId]]), blank lines
+    * ignored. */
+  private def readLines(spark: SparkSession, p: HPath): Vector[String] = {
+    val in = hfs(spark, p).open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8")
+      .getLines().map(_.trim).filter(_.nonEmpty).toVector
+    finally in.close()
+  }
+
+  private def writeLines(spark: SparkSession, p: HPath,
+      lines: Seq[String]): Unit = {
+    val out = hfs(spark, p).create(p, true)
+    try out.write(lines.map(_ + "\n").mkString.getBytes("UTF-8"))
+    finally out.close()
+  }
+
   /** Parse the CURRENT manifest — the highest MANIFEST.v{N} present.
-    * Readers resolve ONLY its ids. */
+    * Readers resolve ONLY its ids. A line is an id or a
+    * `#tombstone@<v> <id>`; any other `#` line throws, naming the file
+    * — a manifest this code did not write is never read silently. */
   private[graft] def currentManifest(spark: SparkSession,
       dir: String): Manifest = {
     val d = new HPath(dir)
     val fs = hfs(spark, d)
-    if (!fs.exists(d)) Manifest(0L, Seq.empty, Map.empty)
-    else {
-      val versions = fs.listStatus(d).toSeq.map(_.getPath.getName)
+    val versions =
+      if (!fs.exists(d)) Seq.empty
+      else fs.listStatus(d).toSeq.map(_.getPath.getName)
         .collect { case ManifestRe(n) => n.toLong }
-      if (versions.isEmpty) Manifest(0L, Seq.empty, Map.empty)
-      else {
-        val v = versions.max
-        val in = fs.open(new HPath(s"$dir/MANIFEST.v$v"))
-        val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-          .getLines().map(_.trim).filter(_.nonEmpty).toVector
-        finally in.close()
-        Manifest(v, lines.filterNot(_.startsWith("#")),
-          lines.collect {
-            case TombstoneVRe(tv, id) => id -> tv.toLong
-            case TombstoneRe(id) => id -> 0L
-          }.toMap)
-      }
+    if (versions.isEmpty) Manifest(0L, Seq.empty, Map.empty)
+    else {
+      val v = versions.max
+      val p = new HPath(s"$dir/MANIFEST.v$v")
+      val (marked, ids) = readLines(spark, p).partition(_.startsWith("#"))
+      Manifest(v, ids, marked.map {
+        case TombstoneLine(tv, id) => id -> tv.toLong
+        case line => throw new IllegalStateException(
+          s"SnapshotStore manifest $p has an unrecognized line '$line'")
+      }.toMap)
     }
   }
 
@@ -401,17 +415,17 @@ object SnapshotStore {
   //                 adds false positives, never misses);
   //   fp.bloom      same for the fingerprint delta;
   //   did.hits      the baseline appends whose did sketch HIT a staged
-  //                 did (plus sketch-less baseline appends) — recorded
-  //                 at stage time so the no-race commit scan-confirms
-  //                 exactly these and launches ZERO jobs when empty.
+  //                 did — recorded at stage time so the no-race commit
+  //                 scan-confirms exactly these and launches ZERO jobs
+  //                 when empty.
   // All sketches are built in ONE aggregation pass over the staged
   // BYTES (audit the bytes, not the producing plan), which in the same
   // pass tests every key against the pinned appends' sketches — the
   // r20 layout paid a count job + a bloom job per append and a
   // sketch-test job per commit. Bloom false positives cost a
-  // confirming scan, never a wrong verdict; a MISSING sidecar (or a
-  // missing did.hits) falls back to the unpruned scan for that append
-  // — conservative, identical detection power.
+  // confirming scan, never a wrong verdict. An absent or unreadable
+  // sketch reads as [[StoreSketch.AllHit]] — no second code path;
+  // [[commit]] refuses a staging without baseline or did.hits.
   // ------------------------------------------------------------------
 
   private val SummaryDir = ".summary"
@@ -431,95 +445,40 @@ object SnapshotStore {
     org.apache.spark.sql.types.StructField("fp",
       org.apache.spark.sql.types.StringType)))
 
-  /** The component dirs whose presence makes a family auditable for an
-    * append that has NO sketch (the conservative must-scan fallback). */
-  private def famComponentPresent(spark: SparkSession, dir: String,
-      id: String, fam: String): Boolean = fam match {
-    case "did" => Seq("sets", "docs").exists(c =>
-      hasParquet(spark, s"$dir/appends/$id/$c"))
-    case "dig" => hasParquet(spark, s"$dir/appends/$id/digests")
-    case "fp" => hasParquet(spark, s"$dir/appends/$id/fps")
-  }
+  /** A staging's `.summary` line files: `baseline` (line 1 the pinned
+    * manifest version, then its ids) and `did.hits` (an EMPTY file is
+    * a valid "no possible hit" verdict). */
+  private def summaryFile(base: String, name: String): HPath =
+    new HPath(s"$base/$SummaryDir/$name")
 
-  private def writeBaseline(spark: SparkSession, base: String,
-      pinned: Snapshot): Unit = {
-    val p = new HPath(s"$base/$SummaryDir/baseline")
-    val out = hfs(spark, p).create(p, true)
-    try out.write((pinned.version.toString +: pinned.ids)
-      .mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  /** The staged append's recorded anti-join baseline ids — None for a
-    * pre-summary staging (audit falls back to all committed ids). */
-  private def readBaseline(spark: SparkSession,
-      base: String): Option[Seq[String]] = {
-    val p = new HPath(s"$base/$SummaryDir/baseline")
-    val fs = hfs(spark, p)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().map(_.trim).filter(_.nonEmpty).toVector
-      finally in.close()
-      Some(lines.drop(1)) // line 1 = pinned version
+  private def writeSketches(spark: SparkSession, base: String,
+      sketches: Map[String, StoreSketch]): Unit =
+    sketches.foreach { case (f, sk) =>
+      val p = new HPath(s"$base/$SummaryDir/${FamFile(f)}")
+      val out = hfs(spark, p).create(p, true)
+      try StoreSketch.write(out, sk) finally out.close()
     }
-  }
 
-  /** Stage-recorded did-audit hit list (`did.hits`): the baseline
-    * appends the commit must scan-confirm for a shared doc id. An
-    * EMPTY file is a valid "no possible hit" verdict; an ABSENT file
-    * (legacy staging) makes the commit fall back to testing every
-    * committed append's sketch. Ids are one per line (valid ids never
-    * contain newlines — [[requireValidId]]). */
-  private def writeDidHits(spark: SparkSession, base: String,
-      ids: Seq[String]): Unit = {
-    val p = new HPath(s"$base/$SummaryDir/did.hits")
-    val out = hfs(spark, p).create(p, true)
-    try out.write(ids.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  private def readDidHits(spark: SparkSession,
-      base: String): Option[Seq[String]] = {
-    val p = new HPath(s"$base/$SummaryDir/did.hits")
-    val fs = hfs(spark, p)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().map(_.trim).filter(_.nonEmpty).toVector)
-      finally in.close()
-    }
-  }
-
-  private def writeSketchFile(spark: SparkSession, path: String,
-      sk: StoreSketch): Unit = {
-    val p = new HPath(path)
-    val out = hfs(spark, p).create(p, true)
-    try StoreSketch.write(out, sk) finally out.close()
-  }
-
+  /** An append's family sketch; absent (an append whose family had no
+    * keys) reads as [[StoreSketch.AllHit]]. */
   private def readSketchFile(spark: SparkSession,
-      path: String): Option[StoreSketch] = {
+      path: String): StoreSketch = {
     val p = new HPath(path)
     val fs = hfs(spark, p)
-    if (!fs.exists(p)) None
+    if (!fs.exists(p)) StoreSketch.AllHit
     else {
-      // an unreadable/foreign sidecar (an r20-era Spark-BloomFilter
-      // file, a torn write, a future format) degrades to "no sketch:
-      // scan this append" — the same conservative must-scan fallback a
-      // MISSING sidecar takes; it must never crash the stage/commit
-      // that touches a store with legacy appends (ADVICE r21)
+      // an unreadable/foreign sidecar (a torn write, a future format)
+      // reads as all-hit too: it must never crash the stage/commit that
+      // touches the store (ADVICE r21)
       try {
         val in = fs.open(p)
-        try Some(StoreSketch.read(in)) finally in.close()
+        try StoreSketch.read(in) finally in.close()
       } catch {
         case scala.util.control.NonFatal(e) =>
           System.err.println(
             s"[SnapshotStore] unreadable sketch sidecar $path " +
-              s"(${e.getMessage}) — falling back to unpruned scan")
-          None
+              s"(${e.getMessage}) — reading it as all-hit")
+          StoreSketch.AllHit
       }
     }
   }
@@ -530,8 +489,8 @@ object SnapshotStore {
     * recycled id can never serve a stale sketch — ADVICE r20).
     * Without it, a keyed stream (s42) re-reads every committed sketch
     * on every micro-batch — O(batches × appends) sidecar reads instead
-    * of O(appends). Absence (a legacy pre-summary append) is cached
-    * too: it can never become present after commit. Bounded by LRU
+    * of O(appends). An all-hit load is cached too: a committed
+    * sidecar can never appear or change. Bounded by LRU
     * eviction (VERDICT r20 #2 — the r20 cache cleared WHOLESALE past
     * 256 entries, thrashing exactly on the hot path it served): a
     * store held past the cap re-reads only its least-recently-used
@@ -539,13 +498,13 @@ object SnapshotStore {
   private val SketchCacheCap = 4096
   private val sketchCache = java.util.Collections.synchronizedMap(
     new java.util.LinkedHashMap[(String, String, String),
-        Option[StoreSketch]](64, 0.75f, true) {
+        StoreSketch](64, 0.75f, true) {
       override def removeEldestEntry(
           e: java.util.Map.Entry[(String, String, String),
-            Option[StoreSketch]]): Boolean = size > SketchCacheCap
+            StoreSketch]): Boolean = size > SketchCacheCap
     })
   private def cachedSketch(spark: SparkSession, dir: String, id: String,
-      fam: String): Option[StoreSketch] = {
+      fam: String): StoreSketch = {
     val key = (dir, id, fam)
     val hit = sketchCache.get(key)
     if (hit != null) hit
@@ -566,11 +525,14 @@ object SnapshotStore {
     }
   }
 
-  /** Per-family result of [[sketchJob]]: the built sketch (when
-    * requested and the family had any input), the input key count, and
-    * the committed appends whose sketch HIT at least one key. */
-  private final case class SketchResult(sketch: Option[StoreSketch],
-      count: Long, hitIds: Set[String])
+  /** What one [[sketchJob]] pass yields per family: the committed
+    * appends whose sketch HIT at least one key, and (when requested)
+    * the sketch built over the family's keys — none for a family with
+    * no keys, whose sidecar then stays absent. */
+  private final case class SketchResult(hits: Map[String, Set[String]],
+      sketches: Map[String, StoreSketch]) {
+    def hitIds(fam: String): Set[String] = hits.getOrElse(fam, Set.empty)
+  }
 
   /** Mutable per-family aggregation buffer: the (optional) cap-width
     * sketch words, one hit flag per tested committed sketch, and the
@@ -604,13 +566,11 @@ object SnapshotStore {
   private def sketchJob(spark: SparkSession,
       parts: Seq[SketchPart],
       fams: Map[String, Seq[(String, StoreSketch)]],
-      buildSketch: Boolean): Map[String, SketchResult] = {
+      buildSketch: Boolean): SketchResult = {
     val live = parts.filter(_.paths.nonEmpty)
     val needed = live.filter(p =>
       buildSketch || fams.getOrElse(p.fam, Nil).nonEmpty)
-    val empty = parts.map(_.fam).distinct
-      .map(_ -> SketchResult(None, 0L, Set.empty[String])).toMap
-    if (needed.isEmpty) return empty
+    if (needed.isEmpty) return SketchResult(Map.empty, Map.empty)
     import spark.implicits._
     val ds = needed.map { p =>
       val reader = spark.read
@@ -619,7 +579,7 @@ object SnapshotStore {
         .select(lit(p.fam).as("fam"), p.key.cast("string").as("k"))
         .as[(String, String)]
     }.reduce(_ union _)
-    empty ++ sketchAgg(spark, ds, fams, buildSketch)
+    sketchAgg(spark, ds, fams, buildSketch)
   }
 
   /** The aggregation half of [[sketchJob]]: ONE treeAggregate over a
@@ -629,7 +589,7 @@ object SnapshotStore {
   private def sketchAgg(spark: SparkSession,
       ds: org.apache.spark.sql.Dataset[(String, String)],
       fams: Map[String, Seq[(String, StoreSketch)]],
-      buildSketch: Boolean): Map[String, SketchResult] = {
+      buildSketch: Boolean): SketchResult = {
     val cap = StoreSketch.DefaultCapBitsLog2
     val famsBc = spark.sparkContext.broadcast(fams)
     val wordsLen = 1 << (cap - 6)
@@ -688,56 +648,23 @@ object SnapshotStore {
       scala.collection.mutable.HashMap.empty[String, SketchBuf])(
       seqOp, combOp, depth)
     famsBc.destroy()
-    agg.map { case (fam, buf) =>
-      val sk = if (buf.words == null) None else Some(
-        new StoreSketch(cap, buf.words)
-          .fold(StoreSketch.optimalBitsLog2(buf.count, cap)))
-      val hits = fams.getOrElse(fam, Nil).iterator.zipWithIndex
-        .collect { case ((id, _), i) if buf.flags(i) => id }.toSet
-      fam -> SketchResult(sk, buf.count, hits)
-    }.toMap
+    SketchResult(
+      agg.map { case (fam, buf) =>
+        fam -> fams.getOrElse(fam, Nil).iterator.zipWithIndex
+          .collect { case ((id, _), i) if buf.flags(i) => id }.toSet
+      }.toMap,
+      agg.collect { case (fam, buf) if buf.words != null =>
+        fam -> new StoreSketch(cap, buf.words)
+          .fold(StoreSketch.optimalBitsLog2(buf.count, cap))
+      }.toMap)
   }
 
-  /** Split `ids` into (testable sketches, must-scan ids) for a family:
-    * an id with a sidecar sketch is bloom-testable; one without (a
-    * legacy append) must be scanned IF it has auditable bytes for the
-    * family. */
+  /** Per family, the (appendId, sketch) pairs of `ids` — the
+    * committed side every stage/commit sketch test runs against. */
   private def famSketches(spark: SparkSession, dir: String,
-      ids: Seq[String], fam: String)
-      : (Seq[(String, StoreSketch)], Seq[String]) = {
-    val loaded = ids.map(id => id -> cachedSketch(spark, dir, id, fam))
-    (loaded.collect { case (id, Some(sk)) => (id, sk) },
-      loaded.collect { case (id, None) => id }
-        .filter(famComponentPresent(spark, dir, _, fam)))
-  }
-
-  /** Shared driver-side pool for INDEPENDENT staging writes — Spark
-    * happily runs concurrent jobs in one application (guide §2.6), so
-    * the 3–4 component writes of a stage (and a compact's rewrites)
-    * overlap instead of serializing their scheduling + commit floors.
-    * Failure semantics match a crash mid-staging: every task settles,
-    * the first error propagates, and the partial dir is recovered by
-    * its `.INFLIGHT` marker aging out. */
-  private lazy val stagingPool = java.util.concurrent.Executors
-    .newFixedThreadPool(4,
-      (r: Runnable) => {
-        val t = new Thread(r, "graft-store-staging")
-        t.setDaemon(true)
-        t
-      })
-  private def inParallel(tasks: Seq[() => Unit]): Unit =
-    if (tasks.size <= 1) tasks.foreach(_.apply())
-    else {
-      val futs = tasks.map(t => stagingPool.submit(
-        new java.util.concurrent.Callable[Unit] { def call(): Unit = t() }))
-      val errs = futs.flatMap(f =>
-        try { f.get(); None }
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            Some(e.getCause)
-        })
-      errs.headOption.foreach(e => throw e)
-    }
+      ids: Seq[String]): Map[String, Seq[(String, StoreSketch)]] =
+    FamFile.keys.map(f =>
+      f -> ids.map(id => id -> cachedSketch(spark, dir, id, f))).toMap
 
   /** STAGE one snapshot's index rows: every component delta is written
     * under `appends/<id>/`, which no reader resolves until [[commit]]
@@ -770,13 +697,15 @@ object SnapshotStore {
       .select(col(id).as("did"), Text.shingleSet(col(text)).as("sset"))
       .where(size(col("sset")) > 0)
     // the component writes are INDEPENDENT Spark jobs — overlap them
-    // (guide §2.6) instead of serializing 4 scheduling+commit floors.
+    // (guide §2.6) instead of serializing 4 scheduling+commit floors; a
+    // failed write leaves the staging as a crash would (its .INFLIGHT
+    // marker ages out and gcOrphans reclaims it).
     // digests/fps stage their full distinct CANDIDATE rows with no
     // anti-join; the sketch pass below proves which committed appends
     // could share a key, and only a hit triggers the delta rewrite —
     // the no-hit stage (disjoint snapshots, the common crawl case)
     // never scans the committed store at all.
-    inParallel(Seq(
+    Par.all(Seq(
       () => {
         setsDf.write.mode("error").parquet(s"$base/sets")
         // bands derive from the WRITTEN sets bytes: the shingle kernel
@@ -799,8 +728,6 @@ object SnapshotStore {
     // ONE aggregation pass over the staged BYTES (audit the bytes, not
     // the producing plan): builds did/digest/fp sidecar sketches AND
     // tests every staged key against the pinned appends' sketches
-    val fams = Seq("did", "dig", "fp").map(f =>
-      f -> famSketches(spark, dir, pinned.ids, f)).toMap
     val didSchema = Some(org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("did",
         setsDf.schema("did").dataType))))
@@ -813,36 +740,32 @@ object SnapshotStore {
         col("h"), Some(DigestSchema)),
       SketchPart("fp", Seq(s"$base/fps").filter(hasParquet(spark, _)),
         col("fp"), Some(FpSchema)))
-    val res = sketchJob(spark, parts,
-      fams.map { case (f, (sk, _)) => f -> sk }, buildSketch = true)
-    // digest/fp delta: anti-join ONLY the bloom-hit (or sketch-less)
-    // appends — a committed row equal to a staged row always hits its
-    // append's sketch (no false negatives), so the pruned anti-join's
-    // output is row-identical to the r20 full-store anti-join. The two
-    // rewrites touch disjoint components — overlap them (guide §2.6)
-    inParallel(Seq(
-      () => rewriteDelta(spark, pinned, base, "digests",
-        res("dig").hitIds ++ fams("dig")._2),
-      () => rewriteDelta(spark, pinned, base, "fps",
-        res("fp").hitIds ++ fams("fp")._2)))
+    val res = sketchJob(spark, parts, famSketches(spark, dir, pinned.ids),
+      buildSketch = true)
+    // digest/fp delta: anti-join ONLY the bloom-hit appends — a
+    // committed row equal to a staged row always hits its append's
+    // sketch (no false negatives), so the pruned anti-join's output is
+    // row-identical to the r20 full-store anti-join. The two rewrites
+    // touch disjoint components — overlap them (guide §2.6)
+    Par.all(Seq(
+      () => rewriteDelta(spark, pinned, base, "digests", res.hitIds("dig")),
+      () => rewriteDelta(spark, pinned, base, "fps", res.hitIds("fp"))))
     // audit-summary sidecar: the baseline (prunes the commit's
     // digest/fp audit to post-baseline racers), the did-audit hit list
     // (prunes the commit's scan-confirm to exactly these appends), and
     // the sketches future stagings and commits will test against
-    writeBaseline(spark, base, pinned)
-    writeDidHits(spark, base,
-      (res("did").hitIds ++ fams("did")._2).toSeq.sorted)
-    FamFile.keys.foreach { f =>
-      res(f).sketch.foreach(sk =>
-        writeSketchFile(spark, s"$base/$SummaryDir/${FamFile(f)}", sk))
-    }
+    writeLines(spark, summaryFile(base, "baseline"),
+      pinned.version.toString +: pinned.ids)
+    writeLines(spark, summaryFile(base, "did.hits"),
+      res.hitIds("did").toSeq.sorted)
+    writeSketches(spark, base, res.sketches)
     aid
   }
 
   /** Rewrite a staged digest/fp candidate component to its committed
-    * delta, anti-joining ONLY `scanIds` (the sketch-hit and sketch-less
-    * appends) — preserves the one-row-per-distinct-value invariant,
-    * making append == rebuild, while the no-hit case keeps the direct
+    * delta, anti-joining ONLY `scanIds` (the sketch-hit appends) —
+    * preserves the one-row-per-distinct-value invariant, making
+    * append == rebuild, while the no-hit case keeps the direct
     * candidate write untouched. The rewrite lands in a dot-temp and
     * swaps in (staging is invisible until commit, so the swap races
     * nothing). The persisted sketch covers the PRE-rewrite candidate
@@ -870,27 +793,38 @@ object SnapshotStore {
   /** Atomically publish `ids` (+ carried `tombstones`) as manifest
     * version `version` — CREATE-IF-ABSENT: the content is written to a
     * uuid'd dot-temp (invisible to [[currentManifest]]'s pattern) and
-    * renamed WITHOUT overwrite, so exactly one writer can claim a
-    * given version. Returns false when a racer already claimed it —
-    * the caller re-reads the new state and retries. */
+    * renamed WITHOUT overwrite (hard-linked on a local filesystem), so
+    * exactly one writer can claim a given version. Returns false when
+    * a racer already claimed it — the caller re-reads the new state and
+    * retries. */
   private[graft] def publishOnce(spark: SparkSession, dir: String,
       ids: Seq[String], tombstones: Map[String, Long],
       version: Long): Boolean = {
     val mf = new HPath(s"$dir/MANIFEST.v$version")
     val fs = hfs(spark, mf)
     val tmp = new HPath(s"$dir/.MANIFEST.tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    val lines = ids ++ tombstones.toSeq.sortBy(t => (t._2, t._1))
-      .map { case (t, v) => s"#tombstone@$v $t" }
-    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
+    writeLines(spark, tmp, ids ++ tombstones.toSeq.sortBy(t => (t._2, t._1))
+      .map { case (t, v) => s"#tombstone@$v $t" })
     try {
-      FileContext.getFileContext(fs.getUri,
-          spark.sparkContext.hadoopConfiguration)
-        .rename(tmp, mf) // no Rename.OVERWRITE: fails if the version exists
+      fs match {
+        // the local filesystem's no-overwrite rename is check-then-
+        // rename (two racers can both "win", losing an append) and its
+        // checksum layer renames the .crc separately (a reader can see
+        // one writer's bytes under another's checksum); link(2) creates
+        // the name atomically or fails, and the link carries no .crc
+        case local: org.apache.hadoop.fs.LocalFileSystem =>
+          java.nio.file.Files.createLink(local.pathToFile(mf).toPath,
+            local.pathToFile(tmp).toPath)
+          fs.delete(tmp, false)
+        case _ =>
+          FileContext.getFileContext(fs.getUri,
+              spark.sparkContext.hadoopConfiguration)
+            .rename(tmp, mf) // no Rename.OVERWRITE: fails if the version exists
+      }
       true
     } catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
+      case _: org.apache.hadoop.fs.FileAlreadyExistsException |
+          _: java.nio.file.FileAlreadyExistsException =>
         fs.delete(tmp, false); false
       case e: java.io.IOException if fs.exists(mf) =>
         // some FileContext implementations surface the existing
@@ -939,6 +873,14 @@ object SnapshotStore {
       require(fs.exists(new HPath(base)),
         s"SnapshotStore commit of $aid at $dir: no staged directory " +
           "(never staged, or GC'd) — refusing to publish a dangling id")
+      // [[stageAs]] writes both audit summaries before it returns; a
+      // staging without them was not written by it (or is torn)
+      val Seq(baseline, didHits) = Seq("baseline", "did.hits").map { f =>
+        val p = summaryFile(base, f)
+        require(fs.exists(p), s"SnapshotStore commit of $aid at $dir: " +
+          s"staging lacks $p — refusing to publish; manifest untouched")
+        readLines(spark, p)
+      }
       // a live commit keeps refreshing its staging dir's age, so
       // gcOrphans' grace rule protects a long audit/publish too (not
       // just the staging writes — the review's long-commit hazard)
@@ -967,48 +909,26 @@ object SnapshotStore {
       // of that test ran at STAGE time over the same staged bytes and
       // its verdict is the recorded `did.hits` list, so the commit
       // launches a sketch-test job ONLY for racers (none in the
-      // no-race case: the common commit runs ZERO jobs). A legacy
-      // staging without `did.hits` falls back to testing every
-      // committed sketch; a sketch-less committed append falls back to
-      // an unconditional scan. False positives cost a confirming scan,
-      // never a verdict.
-      val baseline = readBaseline(spark, base).map(_.toSet)
-      val racerIds = baseline match {
-        case Some(b) => m.ids.filterNot(b)
-        case None => m.ids
-      }
-      val stagedDig = hasParquet(spark, s"$base/digests")
-      val stagedFp = hasParquet(spark, s"$base/fps")
+      // no-race case: the common commit runs ZERO jobs). False
+      // positives cost a confirming scan, never a verdict.
+      val racerIds = m.ids.filterNot(baseline.drop(1).toSet)
       val stagedDidComps = Seq("sets", "docs")
         .filter(c => hasParquet(spark, s"$base/$c"))
-      val didRecorded = readDidHits(spark, base)
-      val didTestIds =
-        if (stagedDidComps.isEmpty) Seq.empty
-        else if (didRecorded.isDefined) racerIds
-        else m.ids
-      val digFams = if (stagedDig) famSketches(spark, dir, racerIds, "dig")
-        else (Nil, Nil)
-      val fpFams = if (stagedFp) famSketches(spark, dir, racerIds, "fp")
-        else (Nil, Nil)
-      val didFams = famSketches(spark, dir, didTestIds, "did")
+      // a family with no staged part runs no test (sketchJob skips it)
       val res = sketchJob(spark,
         Seq(
-          SketchPart("dig", Seq(s"$base/digests").filter(_ => stagedDig),
+          SketchPart("dig", Seq(s"$base/digests").filter(hasParquet(spark, _)),
             col("h"), Some(DigestSchema)),
-          SketchPart("fp", Seq(s"$base/fps").filter(_ => stagedFp),
+          SketchPart("fp", Seq(s"$base/fps").filter(hasParquet(spark, _)),
             col("fp"), Some(FpSchema))) ++
           stagedDidComps.map(c =>
             SketchPart("did", Seq(s"$base/$c"), col("did"), None)),
-        Map("dig" -> digFams._1, "fp" -> fpFams._1, "did" -> didFams._1),
-        buildSketch = false)
-      val digScan = res("dig").hitIds ++ digFams._2
-      val fpScan = res("fp").hitIds ++ fpFams._2
-      val didScanSet = res("did").hitIds ++ didFams._2 ++
-        didRecorded.getOrElse(Nil).filter(m.ids.contains)
-      val didScanIds = m.ids.filter(didScanSet)
+        famSketches(spark, dir, racerIds), buildSketch = false)
+      val didScanIds = m.ids.filter(res.hitIds("did") ++ didHits)
       // full-row components: key = component-tagged whole row,
-      // committed side restricted to sketch-hit (or sketch-less) racers
-      val rowParts = Seq(("digests", digScan), ("fps", fpScan))
+      // committed side restricted to sketch-hit racers
+      val rowParts = Seq(("digests", res.hitIds("dig")),
+          ("fps", res.hitIds("fp")))
         .flatMap { case (comp, scan) =>
           if (!hasParquet(spark, s"$base/$comp") || scan.isEmpty) None
           else {
@@ -1156,7 +1076,7 @@ object SnapshotStore {
     // own inference jobs
     val srcSchemas = new java.util.concurrent.ConcurrentHashMap[
       String, org.apache.spark.sql.types.StructType]()
-    inParallel(Components.flatMap { c =>
+    Par.all(Components.flatMap { c =>
       val ps = srcPaths(c)
       if (ps.isEmpty) None
       else Some(() => {
@@ -1171,8 +1091,8 @@ object SnapshotStore {
     // the compacted append carries its own did/digest/fp sketches (one
     // aggregation pass over the rewritten bytes — same order as the
     // rewrite itself): without them, every future commit's did audit
-    // and every future staging's anti-join would fall back to scanning
-    // the corpus-sized compacted components
+    // and every future staging's anti-join would read them as all-hit
+    // and scan the corpus-sized compacted components
     val skRes = sketchJob(spark, Seq(
       SketchPart("did", Seq(s"$base/sets").filter(hasParquet(spark, _)),
         col("did"), didField("sets")),
@@ -1183,10 +1103,7 @@ object SnapshotStore {
       SketchPart("fp", Seq(s"$base/fps").filter(hasParquet(spark, _)),
         col("fp"), Some(FpSchema))),
       Map.empty, buildSketch = true)
-    FamFile.keys.foreach { f =>
-      skRes(f).sketch.foreach(sk =>
-        writeSketchFile(spark, s"$base/$SummaryDir/${FamFile(f)}", sk))
-    }
+    writeSketches(spark, base, skRes.sketches)
     touchInflight(spark, base) // audit may outlast the staging writes
     auditCompactEquality(spark, base, srcPaths,
       c => compSchema(c)).foreach { comp =>
@@ -1312,8 +1229,7 @@ object SnapshotStore {
     // tombstone retention (opt-in): drop tombstones created more than
     // `tombstoneRetention` manifest versions ago — the documented
     // checkpoint-retention license (a replay can only reach back as
-    // far as a checkpoint exists; legacy unversioned tombstones parse
-    // as version 0 and age out first). Published as a normal manifest
+    // far as a checkpoint exists). Published as a normal manifest
     // version through the optimistic loop, so it never races a commit.
     tombstoneRetention.foreach { keep =>
       require(keep > 0, "tombstoneRetention must be positive")

@@ -74,6 +74,11 @@ private[graft] object StoreSketch {
   /** Hard width ceiling (2^31 bits = 256 MiB): the Int-indexed position
     * math's envelope. */
   val MaxBitsLog2 = 31
+  /** The all-ones filter: every key "might be contained". A Bloom
+    * filter may always answer "maybe" (no false negatives either way),
+    * so an append whose sidecar is absent or unreadable loads as this
+    * and is scanned whenever the staged side has a key to test. */
+  val AllHit: StoreSketch = new StoreSketch(6, Array(-1L))
   /** Serialized header: magic, version, bitsLog2, word count. */
   private val Magic = 0x47534b31 // "GSK1"
 

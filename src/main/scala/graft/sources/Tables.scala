@@ -567,12 +567,11 @@ object Tables {
       s"compactEvents cannot overwrite its own input path $srcDir")
     val bytes = dataFiles(s, s"$srcDir/events.parquet").map(_.getLen).sum
     val parts = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    val key = "spark.sql.parquet.outputTimestampType"
-    val prev = s.conf.get(key)
-    s.conf.set(key, "TIMESTAMP_MICROS")
-    try events(s, srcDir).repartition(parts)
-      .write.mode("overwrite").parquet(s"$dstDir/events.parquet")
-    finally s.conf.set(key, prev)
+    graft.GraftSession.withConf(s,
+        "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS") {
+      events(s, srcDir).repartition(parts)
+        .write.mode("overwrite").parquet(s"$dstDir/events.parquet")
+    }
   }
 
   def documents(s: SparkSession, d: String): DataFrame =

@@ -3,9 +3,9 @@ package graft.streaming
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming queries over the fixture tables (SURVEY §2 O1-O3,
@@ -95,52 +95,54 @@ object StreamQueries {
     Tables.canonicalEvents(src)
   }
 
-  /** Scoped shuffle-partition override while a bounded streaming query
-    * drains: stateful operators allocate one state-store instance per
-    * shuffle partition PER MICRO-BATCH (provider init, delta file,
-    * snapshot bookkeeping) — at harness scale that fixed cost dominates,
-    * so bounded drains run with fewer partitions (8→4 in r8: strictly
-    * fewer state-store instances per batch; measured s07 1.69→1.52 s,
-    * s11 2.64→2.29 s, s09/s10 flat — small but one-directional, since
-    * data parallelism is irrelevant at bounded-drain batch sizes).
-    * Restores the previous
-    * value even on failure; a real deployment sizes this to keep
-    * per-partition state in executor memory instead. */
-  private def withStreamPartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prev)
-  }
-
-  /** Bounded-drain checkpoint dir, deleted after the query terminates —
-    * a per-invocation temp checkpoint that outlives its query is pure
-    * disk leak (a bench round starts dozens of queries). Long-running
-    * production queries keep a STABLE checkpoint path instead; deletion
-    * is only correct because AvailableNow drains to completion. */
-  private def withTempCheckpoint[T](body: String => T): T = {
-    val dir = Files.createTempDirectory("graft-ckpt")
-    // guarded shared helper: a cleanup IOException (e.g. a state-store
-    // thread still holding a file) must not mask body's result
-    try body(dir.toString)
-    finally graft.TempDirs.deleteRecursively(dir)
+  /** The one stream lifecycle every bounded query here runs: start
+    * `df` in output `mode` under `sink`'s writer settings with
+    * `Trigger.AvailableNow` (process all available input, then stop)
+    * and block until it terminates.
+    *
+    * Shuffle partitions are 4 while it drains: stateful operators
+    * allocate one state-store instance per shuffle partition PER
+    * MICRO-BATCH (provider init, delta file, snapshot bookkeeping) — at
+    * harness scale that fixed cost dominates, so bounded drains run
+    * with fewer partitions (8→4 in r8: measured s07 1.69→1.52 s, s11
+    * 2.64→2.29 s, s09/s10 flat — data parallelism is irrelevant at
+    * bounded-drain batch sizes); a real deployment sizes this to keep
+    * per-partition state in executor memory instead.
+    *
+    * `checkpoint`: a STABLE path makes the query resumable across
+    * sessions; None = a temp checkpoint deleted after the query
+    * terminates — one that outlives its query is pure disk leak (a
+    * bench round starts dozens of queries), and deletion is only
+    * correct because AvailableNow drains to completion. */
+  private[graft] def drain(df: DataFrame, mode: String = "append",
+      checkpoint: Option[String] = None)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit = {
+    def run(ckpt: String): Unit =
+      sink(df.writeStream.outputMode(mode)
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()))
+        .start().awaitTermination()
+    graft.GraftSession.withConf(df.sparkSession,
+        "spark.sql.shuffle.partitions", "4") {
+      checkpoint match {
+        case Some(ckpt) => run(ckpt)
+        case None =>
+          val tmp = Files.createTempDirectory("graft-ckpt")
+          // a cleanup IOException (e.g. a state-store thread still
+          // holding a file) must not mask the query's own failure
+          try run(tmp.toString)
+          finally graft.TempDirs.deleteRecursively(tmp)
+      }
+    }
   }
 
   /** Run a streaming frame to completion into a memory sink, return the
-    * result table. AvailableNow processes all available input then stops. */
-  def runToTable(spark: SparkSession, df: DataFrame, mode: String): DataFrame =
-    withStreamPartitions(spark, 4) {
-      withTempCheckpoint { ckpt =>
-        val name = s"graft_stream_${nameCounter.incrementAndGet()}"
-        val q = df.writeStream
-          .format("memory").queryName(name).outputMode(mode)
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        spark.table(name)
-      }
-    }
+    * result table. */
+  def runToTable(spark: SparkSession, df: DataFrame, mode: String): DataFrame = {
+    val name = s"graft_stream_${nameCounter.incrementAndGet()}"
+    drain(df, mode)(_.format("memory").queryName(name))
+    spark.table(name)
+  }
 
   /** O27 as a streaming aggregation: running per-type counts. */
   def eventCounts(spark: SparkSession, dir: String): DataFrame =
@@ -456,23 +458,17 @@ object StreamQueries {
     * back, so the oracle verifies what was actually WRITTEN. Cross-
     * batch dedup is the streaming state's job, so content is
     * deterministic under any micro-batching. */
-  def sinkDedupToDir(spark: SparkSession, dir: String): DataFrame =
-    withStreamPartitions(spark, 4) { withTempCheckpoint { ckpt =>
+  def sinkDedupToDir(spark: SparkSession, dir: String): DataFrame = {
     val out = graft.TempDirs.create("graft-sink")
-    val q = eventsStream(spark, dir)
-      .select(col("user_id"), col("event_type"))
-      .dropDuplicates("user_id", "event_type")
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    drain(eventsStream(spark, dir)
+        .select(col("user_id"), col("event_type"))
+        .dropDuplicates("user_id", "event_type")) {
+      _.foreachBatch { (batch: DataFrame, _: Long) =>
         batch.write.mode("append").parquet(s"$out/data")
       }
-      .start()
-    q.awaitTermination()
+    }
     spark.read.parquet(s"$out/data")
-  } }
+  }
 
   /** The reference's sink FAN-OUT (O23+O24+O25: every matched row goes
     * to two MySQL tables and one Mongo collection — kafka_s.py:510,554,
@@ -481,17 +477,13 @@ object StreamQueries {
     * not three times. The query result reads the sinks back and
     * reports per-sink row counts, so the oracle verifies every sink
     * received every row. */
-  def streamFanout(spark: SparkSession, dir: String): DataFrame =
-    withStreamPartitions(spark, 4) { withTempCheckpoint { ckpt =>
+  def streamFanout(spark: SparkSession, dir: String): DataFrame = {
     val out = graft.TempDirs.create("graft-fanout")
     val announcements = graft.operators.Pipeline.announcements(spark,
       documentsStream(spark, dir),
       graft.operators.RuleClassifier.rulesDim(spark))
-    val q = announcements.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    drain(announcements) {
+      _.foreachBatch { (batch: DataFrame, _: Long) =>
         batch.persist()
         // sink 1: announcement table (33-col analog, kafka_s.py:477-509)
         batch.drop("onlyId").write.mode("append").parquet(s"$out/gao")
@@ -502,14 +494,13 @@ object StreamQueries {
         batch.unpersist()
         ()
       }
-      .start()
-    q.awaitTermination()
+    }
     def sinkCount(name: String): DataFrame =
       spark.read.parquet(s"$out/$name")
         .agg(count(lit(1)).as("n_rows")).withColumn("sink", lit(name))
         .select(col("sink"), col("n_rows"))
     sinkCount("gao").unionAll(sinkCount("yuqing")).unionAll(sinkCount("mongo"))
-    } }
+  }
 
   /** Idempotent keyed-UPSERT sink — the true semantics of the
     * reference's key-deduped doc store (unique-key insert with the
@@ -571,16 +562,9 @@ object StreamQueries {
       AtomicBucketStore.writeGeneration(merged, cur, touched)
       ()
     }
-    def runOnce(): Unit = withStreamPartitions(spark, 4) { withTempCheckpoint { ckpt =>
-      val q = eventsStream(spark, dir)
-        .select(col("event_id"), col("user_id"), col("event_type"))
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch(mergeBatch _)
-        .start()
-      q.awaitTermination()
-    } }
+    def runOnce(): Unit = drain(eventsStream(spark, dir)
+      .select(col("event_id"), col("user_id"), col("event_type")))(
+      _.foreachBatch(mergeBatch _))
     runOnce()
     runOnce() // forced replay: a fresh checkpoint reprocesses ALL input
     graft.sinks.AtomicBucketStore.readAll(spark, cur)
@@ -673,28 +657,22 @@ object StreamQueries {
       streamSchema: StructType,
       dimPath: String,
       joinKey: String,
-      afterBatch: Long => Unit = _ => ()): DataFrame =
-    withStreamPartitions(spark, 4) { withTempCheckpoint { ckpt =>
-      val out = graft.TempDirs.create("graft-dim-refresh")
-      val q = spark.readStream.schema(streamSchema)
+      afterBatch: Long => Unit = _ => ()): DataFrame = {
+    val out = graft.TempDirs.create("graft-dim-refresh")
+    drain(spark.readStream.schema(streamSchema)
         .option("maxFilesPerTrigger", 1) // one file per micro-batch
-        .parquet(streamDir)
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val s = batch.sparkSession
-          val dim = s.read.parquet(dimPath) // fresh listing AND content
-          batch.join(broadcast(dim), Seq(joinKey), "left")
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(s"$out/data")
-          afterBatch(batchId)
-        }
-        .start()
-      q.awaitTermination()
-      spark.read.parquet(s"$out/data")
-    } }
+        .parquet(streamDir)) {
+      _.foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val s = batch.sparkSession
+        val dim = s.read.parquet(dimPath) // fresh listing AND content
+        batch.join(broadcast(dim), Seq(joinKey), "left")
+          .withColumn("batch_id", lit(batchId))
+          .write.mode("append").parquet(s"$out/data")
+        afterBatch(batchId)
+      }
+    }
+    spark.read.parquet(s"$out/data")
+  }
 
   /** Watermark-bounded streaming dedup (s16):
     * `dropDuplicatesWithinWatermark` evicts a key's dedup state once
@@ -714,16 +692,6 @@ object StreamQueries {
         .dropDuplicatesWithinWatermark("user_id", "event_type")
         .select(col("user_id"), col("event_type")),
       "append")
-
-  /** Scoped session-conf override (restores prior value or unsets). */
-  private def withConf[T](spark: SparkSession, key: String, value: String)(body: => T): T = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
 
   /** s17 emission: cumulative per-user census after each micro-batch. */
   final case class TypeCensus(user_id: Long, n_types: Long, n_events: Long)
@@ -745,7 +713,7 @@ object StreamQueries {
   def streamTypeCensus(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.OutputMode
-    val emitted = withConf(spark,
+    val emitted = graft.GraftSession.withConf(spark,
       "spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val ev = eventsStream(spark, dir)
@@ -1044,17 +1012,7 @@ object StreamQueries {
     val (codebooks, _) = Pq.train(graft.sources.Tables.embeddings(spark, dir))
     val enc = IvfPq.encodeAgainst(embeddingsStream(spark, dir), codebooks)
     val idxDir = graft.TempDirs.create("graft-ivf-sindex")
-    withStreamPartitions(spark, 4) {
-      withTempCheckpoint { ckpt =>
-        val q = enc.writeStream.format("parquet")
-          .partitionBy("cell")
-          .option("path", idxDir)
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-    }
+    drain(enc)(_.format("parquet").partitionBy("cell").option("path", idxDir))
     IvfPq.serveFromStore(spark, idxDir, codebooks, k = 10)
   }
 
@@ -1234,18 +1192,7 @@ object StreamQueries {
           persistDocs = true)
       ()
     }
-    def run(ckpt: String): Unit = withStreamPartitions(spark, 4) {
-      val q = survivors.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch(appendBatch _)
-        .start()
-      q.awaitTermination()
-    }
-    checkpoint match {
-      case Some(ckpt) => run(ckpt)
-      case None => withTempCheckpoint(run)
-    }
+    drain(survivors, checkpoint = checkpoint)(_.foreachBatch(appendBatch _))
   }
 
   def streamCurationServe(spark: SparkSession, docsStream: DataFrame,

@@ -45,6 +45,19 @@ class KafkaSpec extends AnyFunSuite {
     assert(r.getAs[String]("srcType") == "A股公告")
   }
 
+  test("an A-share event keeps its topic's srcType through Pipeline.enrich") {
+    val values = Seq(
+      """{"o": {"stock_name": "src1", "stock_code": "600002",
+            "title": "spark streaming engine", "etl_time": "2024-03-04 05:06:07",
+            "url": "http://x/3"}}"""
+    ).toDF("value")
+    val out = graft.operators.Pipeline.enrich(spark,
+      Kafka.normalize(Kafka.AShare)(values),
+      graft.operators.RuleClassifier.rulesDim(spark)).collect()
+    assert(out.nonEmpty, "the title matches fixture rule 4 ('spark')")
+    assert(out.map(_.getAs[String]("srcType")).toSet == Set("A股公告"))
+  }
+
   test("Kafka.source reaches connector resolution (fails finding kafka, not before)") {
     // no spark-sql-kafka jar in the sandbox; resolution failure proves
     // the builder wiring is live (same proof shape as JdbcSpec/MongoSpec)

@@ -4,8 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Par
 
-/** [[Par]]'s two driver-side helpers: `spread` inspects a frame without
-  * executing it, and `par2` never leaves its helper thread behind. */
+/** [[Par]]'s driver-side helpers: `spread` inspects a frame without
+  * executing it, and `all`/`par2` never leave a helper thread behind. */
 class ParSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -40,6 +40,19 @@ class ParSpec extends AnyFunSuite {
     assert(e.getMessage == "a failed")
     assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("b failed"))
     assert(helper != null && !helper.isAlive)
+  }
+
+  test("all: a failure surfaces only after every sibling task has finished") {
+    @volatile var slowDone = false
+    val e = intercept[IllegalStateException] {
+      Par.all(Seq(
+        () => throw new IllegalStateException("first failed"),
+        () => { Thread.sleep(300); slowDone = true },
+        () => throw new IllegalArgumentException("third failed")))
+    }
+    assert(slowDone, "all threw before its slower sibling finished")
+    assert(e.getMessage == "first failed")
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("third failed"))
   }
 
   test("par2 returns both results") {

@@ -27,7 +27,10 @@ class ProfileBudgetSpec extends AnyFunSuite {
     "s38_store_snapshot_neardup" -> (14, 15),
     "s39_store_snapshot_delta" -> (12, 13),
     "n76_ivfpq_ann" -> (55, 55),
-    "n90_snapshot_chain_delta" -> (21, 21))
+    "n90_snapshot_chain_delta" -> (21, 21),
+    "s40_stream_snapshot_curation" -> (46, 46),
+    "s09_stream_fanout" -> (16, 16),
+    "s10_stream_upsert" -> (15, 15))
 
   budgets.foreach { case (q, (maxJobs, maxStages)) =>
     test(s"$q stays within its job and stage budget") {

@@ -173,6 +173,28 @@ class SnapshotStoreSpec extends AnyFunSuite {
     assert(dig.count() == 3 && dig.count() == dig.distinct().count())
   }
 
+  test("publishOnce: exactly one of many racing writers claims a version") {
+    // create-if-absent is the whole optimistic-concurrency protocol: a
+    // second "winner" would overwrite the first's manifest and lose its
+    // append, and a torn publish would leave a manifest no reader parses
+    val dir = TempDirs.create("snapstore-publish-race")
+    (1 to 300).foreach { v =>
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val won = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val threads = (0 until 8).map { w =>
+        new Thread(() => {
+          start.await()
+          if (SnapshotStore.publishOnce(spark, dir, Seq(s"v$v-w$w"),
+              Map.empty, v.toLong)) won.add(s"v$v-w$w")
+          ()
+        })
+      }
+      threads.foreach(_.start()); start.countDown(); threads.foreach(_.join())
+      assert(won.size == 1, s"version $v claimed by $won")
+      assert(SnapshotStore.currentManifest(spark, dir).ids == Seq(won.peek))
+    }
+  }
+
   test("re-committing an already-committed id is a no-op, never destructive") {
     import spark.implicits._
     // ADVICE r17: a crash-after-publish retry used to re-audit, see the
@@ -707,8 +729,8 @@ class SnapshotStoreSpec extends AnyFunSuite {
     // fails to roundtrip through publishOnce -> currentManifest either
     // orphans committed rows (id lost) or re-appends on replay
     // (tombstone lost). Exercise the valid-id space the r20 validation
-    // admits — free text incl. interior spaces, '@', unicode — plus
-    // legacy UNVERSIONED tombstone lines written by a pre-r20 store.
+    // admits — free text incl. interior spaces, '@', unicode — and
+    // refuse any `#` line that is not a versioned tombstone.
     val ids = Seq("append-d1-b0", "dump 2024 01", "a@b@7", "Ünïcodé-ид",
       "x" * 64, "trailing-at @5") // '@5' inside an ID line is literal
     val tombs = Map("compacted-old" -> 3L, "w eird @t" -> 12L)
@@ -722,13 +744,34 @@ class SnapshotStoreSpec extends AnyFunSuite {
     val m2 = SnapshotStore.currentManifest(spark, dir)
     assert(m2.ids == ids :+ "next" &&
       m2.tombstones == tombs + ("late" -> 2L))
-    // legacy unversioned tombstone lines parse as version 0
+    // an unversioned tombstone line is not a format this store writes:
+    // the read throws, naming the file and the line
     val legacy = new java.io.FileWriter(s"$dir/MANIFEST.v3")
-    legacy.write("id-a\n#tombstone legacy-id with spaces\n")
+    legacy.write("id-a\n#tombstone legacy-id\n")
     legacy.close()
-    val m3 = SnapshotStore.currentManifest(spark, dir)
-    assert(m3.ids == Seq("id-a") &&
-      m3.tombstones == Map("legacy-id with spaces" -> 0L))
+    val e = intercept[IllegalStateException] {
+      SnapshotStore.currentManifest(spark, dir)
+    }
+    assert(e.getMessage.contains("MANIFEST.v3") &&
+      e.getMessage.contains("#tombstone legacy-id"))
+  }
+
+  test("commit refuses a staging without its baseline or did.hits summary") {
+    import spark.implicits._
+    val dir = TempDirs.create("snapstore-no-summary")
+    SnapshotStore.append(spark, dir,
+      Seq((0L, "x", "aa bb cc dd ee")).toDF("doc_id", "source", "text"))
+    val before = SnapshotStore.committedIds(spark, dir)
+    Seq("baseline", "did.hits").zipWithIndex.foreach { case (f, i) =>
+      val aid = SnapshotStore.stageAs(spark, dir, s"staged-$i",
+        Seq((i + 1L, "x", s"ff gg hh ii $i")).toDF("doc_id", "source", "text"))
+      assert(new java.io.File(s"$dir/appends/$aid/.summary/$f").delete())
+      val e = intercept[IllegalArgumentException] {
+        SnapshotStore.commit(spark, dir, aid)
+      }
+      assert(e.getMessage.contains(s".summary/$f"), e.getMessage)
+      assert(SnapshotStore.committedIds(spark, dir) == before)
+    }
   }
 
   test("persistDocs stores the corpus increment; append==rebuild; compact keeps it") {
