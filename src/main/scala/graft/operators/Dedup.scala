@@ -184,6 +184,22 @@ object Dedup {
         expr("n_dupes * 1000000L div n_sampled").as("dup_rate_ppm"))
   }
 
+  /** `spread` floors the shingle kernel's parallelism ([[Par.spread]])
+    * — opt-in per caller: the single-reference exact-join paths win
+    * (the kernel is their dominant cost and runs once); the PREFIX
+    * variant references the sized/inverted frames from several
+    * subtrees, where the added exchange re-evaluates per subtree and
+    * measured net-negative at fixture scale (kept unspread). */
+  private def sizedSets(docs: DataFrame, id: String, text: String, w: Int,
+      spread: Boolean = false): DataFrame =
+    (if (spread) Par.spread(docs) else docs)
+      .select(col(id).as("did"), Text.shingleSet(col(text), w).as("sset"))
+      .select(col("did"), col("sset"), size(col("sset")).as("n"))
+      .where(col("n") > 0)
+
+  private def invertedIndex(sized: DataFrame): DataFrame =
+    sized.select(col("did"), col("n"), explode(col("sset")).as("sh"))
+
   /** Exact n-gram Jaccard near-dup pairs via an inverted-index
     * similarity join (the MapReduce set-similarity-join of Vernica et
     * al., SIGMOD'10) — NO pairwise set comparison anywhere:
@@ -199,69 +215,30 @@ object Dedup {
     *     list_intersect/list_union form).
     *
     * Scale: cost is Σ_shingle df² joined rows — bounded here (fixture
-    * max df = 25); at 100 TB add PPJoin prefix filtering (index only
-    * each doc's first |S|−⌈t·|S|⌉+1 shingles in global frequency order
-    * — measured 505k→350k candidates at sf0.1) and let AQE skew-join
-    * split residual hot shingles. The old blocked all-pairs self-join
-    * (block × block cross product) was 221 s at sf0.1; this is the
-    * shape that survives a 1000-executor scale-up. */
-  /** `maxDf`: optional hot-shingle cap for the 100 TB regime — drop
-    * shingles occurring in more than maxDf documents from the INDEX
-    * (boilerplate n-grams that generate df² candidate pairs while
-    * carrying almost no similarity signal). None (default) = exact
-    * join, matching the oracle; Some(cap) trades recall on pairs whose
-    * overlap is exclusively boilerplate for a hard bound on join
-    * fan-out (the standard ssjoin mitigation next to AQE skew-join
-    * splitting and PPJoin prefix ordering). NOTE the bias direction:
-    * capped shingles are dropped from the intersection count while
-    * a_n/b_n keep full set sizes, so emitted jaccard values are LOWER
-    * BOUNDS of the true similarity, and pairs near the threshold may be
-    * dropped — not just "recall loss" on all-boilerplate pairs. */
-  /** `spread` floors the shingle kernel's parallelism ([[Par.spread]])
-    * — opt-in per caller: the single-reference exact-join paths win
-    * (the kernel is their dominant cost and runs once); the PREFIX
-    * variants reference the sized/inverted frames from several
-    * subtrees, where the added exchange re-evaluates per subtree and
-    * measured net-negative at fixture scale (kept unspread). */
-  private def sizedSets(docs: DataFrame, id: String, text: String, w: Int,
-      spread: Boolean = false): DataFrame =
-    (if (spread) Par.spread(docs) else docs)
-      .select(col(id).as("did"), Text.shingleSet(col(text), w).as("sset"))
-      .select(col("did"), col("sset"), size(col("sset")).as("n"))
-      .where(col("n") > 0)
-
-  private def invertedIndex(sized: DataFrame, maxDf: Option[Int]): DataFrame = {
-    val invAll = sized.select(col("did"), col("n"), explode(col("sset")).as("sh"))
-    maxDf match {
-      case None => invAll
-      case Some(cap) =>
-        val hot = invAll.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-          .where(col("df") > cap).select(col("sh"))
-        invAll.join(broadcast(hot), Seq("sh"), "left_anti")
-    }
-  }
-
-  /** The one wide shuffle: self-equi-join on the shingle with the
-    * length filter pushed into the join condition. Pre-aggregation, so
-    * its row count IS the operator's join fan-out (Σ_shingle df-pairs
-    * surviving the length filter) — the quantity skew blows up. */
-  private def candidateJoin(inv: DataFrame, threshold: Double): DataFrame = {
+    * max df = 25). A PPJoin prefix-filtered variant (index only each
+    * doc's first |S|−⌈t·|S|⌉+1 shingles in global frequency order) was
+    * MEASURED at sf0.1: candidates 505k → ~350k, but steady-state time
+    * 2.4 s → 3.4 s — the extra df aggregation and per-doc window sort
+    * do not amortize on a benign df distribution, so n02 runs this
+    * exact join and AQE skew-join splits residual hot shingles (the
+    * skewed-corpus numbers are in SKEW.md). The old blocked all-pairs
+    * self-join (block × block cross product) was 221 s at sf0.1; this
+    * is the shape that survives a 1000-executor scale-up. */
+  def jaccardPairs(docs: DataFrame, id: String, text: String,
+      w: Int = 3, threshold: Double = 0.55): DataFrame = {
+    val inv = invertedIndex(sizedSets(docs, id, text, w, spread = true))
     val a = inv.as("a")
     val b = inv.as("b")
-    // eps guards float rounding at the exact boundary (e.g. 20*0.55>11):
-    // a looser candidate set is harmless — the exact filter below decides.
+    // the one wide shuffle: self-equi-join on the shingle with the
+    // length filter pushed into the join condition. eps guards float
+    // rounding at the exact boundary (e.g. 20*0.55>11): a looser
+    // candidate set is harmless — the exact filter below decides.
     val eps = 1e-9
-    a.join(b,
-      col("a.sh") === col("b.sh") && col("a.did") < col("b.did") &&
-        col("a.n") >= col("b.n") * threshold - eps &&
-        col("b.n") >= col("a.n") * threshold - eps)
-  }
-
-  def jaccardPairs(docs: DataFrame, id: String, text: String,
-      w: Int = 3, threshold: Double = 0.55,
-      maxDf: Option[Int] = None): DataFrame = {
-    val inv = invertedIndex(sizedSets(docs, id, text, w, spread = true), maxDf)
-    val counted = candidateJoin(inv, threshold)
+    val counted = a
+      .join(b,
+        col("a.sh") === col("b.sh") && col("a.did") < col("b.did") &&
+          col("a.n") >= col("b.n") * threshold - eps &&
+          col("b.n") >= col("a.n") * threshold - eps)
       .groupBy(col("a.did").as("a_id"), col("b.did").as("b_id"),
         col("a.n").as("a_n"), col("b.n").as("b_n"))
       .agg(count(lit(1)).as("inter"))
@@ -284,20 +261,13 @@ object Dedup {
     * (inter·10 ≥ n_src·9 for 0.9) — no float at all. `minSet` drops
     * sub-w·minSet-token fragments whose containment is trivially 1.
     *
-    * Skew: size-ratio pruning being unavailable does NOT leave the
-    * join unprotectable — hot-GRAM mitigation still applies, exactly
-    * as for jaccard. `maxDf` drops shingles with document frequency
-    * above the cap from the index; capped shingles leave the
-    * intersection count while `a_n` keeps the full set size, so every
-    * emitted containment is a LOWER BOUND of the true C(A→B) and
-    * near-threshold pairs whose overlap is mostly boilerplate drop
-    * (same bias direction as [[jaccardPairs]]' cap — SkewSpec pins
-    * it; SKEW.md measures the fan-out collapse). For the exact-result
-    * alternative under skew see [[containmentPairsPrefix]]. */
+    * Skew: size-ratio pruning being unavailable leaves the hot-gram
+    * df² term unbounded here; the exact-result alternative under skew
+    * is [[containmentPairsPrefix]] (SKEW.md measures both). */
   def containmentPairs(docs: DataFrame, id: String, text: String,
       w: Int = 3, num: Int = 9, den: Int = 10,
-      minSet: Int = 5, maxDf: Option[Int] = None): DataFrame = {
-    val inv = invertedIndex(sizedSets(docs, id, text, w, spread = true), maxDf)
+      minSet: Int = 5): DataFrame = {
+    val inv = invertedIndex(sizedSets(docs, id, text, w, spread = true))
     val a = inv.as("a")
     val b = inv.as("b")
     // join each unordered pair ONCE (did <) — |A∩B| is direction-free,
@@ -345,8 +315,8 @@ object Dedup {
     * with frequency df drops from df² (full×full) to
     * df·(source-prefix occurrences) ≈ 0 for the hot tail. Extra cost:
     * one global df aggregation and one per-doc window sort, both
-    * bounded by index size — the same trade as [[jaccardPairsPrefix]],
-    * measured on the skewed boilerplate fixture in SKEW.md.
+    * bounded by index size — the PPJoin trade, measured on the skewed
+    * boilerplate fixture in SKEW.md.
     *
     * Prefix length is computed in exact integer math:
     * ⌈num·n/den⌉ = (num·n + den − 1) div den — no float anywhere. */
@@ -366,7 +336,7 @@ object Dedup {
     // the repartition's exchange + 32-way micro-tasks cost more than
     // the single-task kernel it parallelizes at this operator's scale.
     val sized = sizedSets(docs, id, text, w).localCheckpoint()
-    val inv = sized.select(col("did"), col("n"), explode(col("sset")).as("sh"))
+    val inv = invertedIndex(sized)
     val freq = inv.groupBy(col("sh")).agg(count(lit(1)).as("df"))
     // n − ⌈t·n⌉ + 1 rarest shingles, integer-exact
     val prefixLen =
@@ -392,95 +362,6 @@ object Dedup {
           .as("inter"),
         col("a_n"))
       .where(col("a_n") >= minSet && col("inter") * den >= col("a_n") * num)
-  }
-
-  /** Diagnostic twin of [[containmentPairs]] — the pre-aggregation
-    * joined-row count of the shingle equi-join (see
-    * [[jaccardJoinFanout]]); SkewSpec asserts the maxDf cap collapses
-    * it on the boilerplate fixture. */
-  def containmentJoinFanout(docs: DataFrame, id: String, text: String,
-      w: Int = 3, maxDf: Option[Int] = None): Long = {
-    val inv = invertedIndex(sizedSets(docs, id, text, w), maxDf)
-    inv.as("a")
-      .join(inv.as("b"),
-        col("a.sh") === col("b.sh") && col("a.did") < col("b.did"))
-      .count()
-  }
-
-  /** Diagnostic twin of [[jaccardPairs]]: the number of rows the
-    * shingle equi-join materializes BEFORE aggregation — the direct
-    * measure of skew blow-up (each shingle with document frequency df
-    * contributes up to df·(df−1)/2 rows; one boilerplate shingle shared
-    * by every doc makes this quadratic in the corpus). SkewSpec
-    * uses it to demonstrate the maxDf cap's effect without
-    * depending on flaky wall-clock assertions. */
-  def jaccardJoinFanout(docs: DataFrame, id: String, text: String,
-      w: Int = 3, threshold: Double = 0.55,
-      maxDf: Option[Int] = None): Long =
-    candidateJoin(invertedIndex(sizedSets(docs, id, text, w), maxDf), threshold)
-      .count()
-
-  /** PPJoin-style prefix-filtered variant of [[jaccardPairs]] — same
-    * exact result, fewer candidates.
-    *
-    * Prefix-filter theorem (Chaudhuri et al. ICDE'06; Xiao et al.
-    * WWW'08): order every shingle by a GLOBAL total order (document
-    * frequency ascending, then lexicographic — rarest first); if
-    * J(A,B) ≥ t, the first |A| − ⌈t·|A|⌉ + 1 shingles of A and the
-    * first |B| − ⌈t·|B|⌉ + 1 of B must share at least one shingle. So
-    * only the PREFIX of each doc enters the inverted index (~1−t of
-    * each set at the threshold), cutting the Σdf² join fan-out on
-    * exactly the most frequent — most explosive — shingles. Candidates
-    * then verify against the FULL sets (`array_intersect` on the two
-    * shingle arrays; same int/int division as the count-based form, so
-    * jaccard doubles are bit-identical and the oracle is unchanged).
-    *
-    * Extra cost vs [[jaccardPairs]]: a global df aggregation plus a
-    * per-doc window sort to take the prefix — both shuffles bounded by
-    * the index size. MEASURED at sf0.1 (5k docs, benign df
-    * distribution): candidates drop 505k → ~350k but steady-state time
-    * goes 2.4 s → 3.4 s — the 30% candidate cut does not amortize the
-    * extra shuffles, so n02 stays on [[jaccardPairs]]. The regime where
-    * this variant wins is a skewed df distribution (boilerplate
-    * shingles with df in the thousands, Σdf² quadratic), where the
-    * prefix bound removes exactly the explosive tail — MEASURED on the
-    * skewed boilerplate fixture at sf0.1: exact join 115.6 s /
-    * 2.0×10⁸ joined rows vs prefix 13.7 s with the IDENTICAL 313-pair
-    * result (SKEW.md) — the standard corpus shape at 100 TB. */
-  def jaccardPairsPrefix(docs: DataFrame, id: String, text: String,
-      w: Int = 3, threshold: Double = 0.55): DataFrame = {
-    val sized = sizedSets(docs, id, text, w)
-    val inv = sized.select(col("did"), col("n"), explode(col("sset")).as("sh"))
-    val freq = inv.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-    // eps INSIDE ceil keeps the prefix from shrinking when t·n lands a
-    // hair above an integer in doubles (shorter prefix = unsound)
-    val eps = 1e-9
-    val prefixLen = (col("n") - ceil(col("n") * threshold - eps) + 1).cast("int")
-    val rn = row_number().over(
-      Window.partitionBy(col("did")).orderBy(col("df").asc, col("sh").asc))
-    val prefix = inv.join(freq, "sh")
-      .withColumn("rn", rn)
-      .where(col("rn") <= prefixLen)
-      .select(col("did"), col("n"), col("sh"))
-    val a = prefix.as("a")
-    val b = prefix.as("b")
-    val candidates = a.join(b,
-        col("a.sh") === col("b.sh") && col("a.did") < col("b.did") &&
-          col("a.n") >= col("b.n") * threshold - eps &&
-          col("b.n") >= col("a.n") * threshold - eps)
-      .select(col("a.did").as("a_id"), col("b.did").as("b_id"))
-      .distinct()
-    val verify = candidates
-      .join(sized.select(col("did").as("a_id"), col("sset").as("a_sset"),
-        col("n").as("a_n")), "a_id")
-      .join(sized.select(col("did").as("b_id"), col("sset").as("b_sset"),
-        col("n").as("b_n")), "b_id")
-      .withColumn("inter", size(array_intersect(col("a_sset"), col("b_sset"))))
-    verify
-      .select(col("a_id"), col("b_id"),
-        (col("inter").cast("double") / (col("a_n") + col("b_n") - col("inter")))
-          .as("jaccard"))
-      .where(col("jaccard") >= threshold)
   }
 
   /** Benchmark decontamination: corpus documents sharing at least

@@ -19,22 +19,17 @@ import org.apache.spark.sql.types._
   * user" is indistinguishable from "unset".
   */
 object Tables {
-  /** Every fixture table reads under a FORCED widened union schema
-    * derived from per-file footers ([[widenedSchema]]) instead of
-    * whatever single footer Spark's no-merge inference happens to
-    * sample. On a single-generation path the forced schema equals the
-    * inferred one — byte-identical plans, pushdown intact. On a
-    * multi-generation path inference's pick is ORDER-DEPENDENT: if it
-    * samples the narrow generation (float embedding, int32 id), the
-    * wide generation's files fail mid-scan; sample the wide one and
-    * everything reads. The widened schema makes the outcome
-    * deterministic — always the widest member of each column's family,
-    * which Spark 4's vectorized reader serves from every narrower
-    * sibling (type-widening reads), with cross-family conflicts
-    * failing loudly at plan time naming the files. */
+  /** Every fixture table reads under the ONE footer schema all of its
+    * data files share ([[schemaOf]]), forced instead of re-inferred. A
+    * path is one producer generation: drift between fixture drops is
+    * whole-path, and is absorbed by the `canonical` casts below (value
+    * widths) and the events ts probe (encoding). A path whose files
+    * disagree — a directory accumulated across producer generations —
+    * fails at plan time naming the files, never an order-dependent
+    * mid-scan failure or a silent narrow. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    spark.read.schema(widenedSchema(spark, path)).parquet(path)
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
   }
 
   /** Pin the named columns to their canonical engine types regardless of
@@ -116,9 +111,9 @@ object Tables {
       val n = f.getPath.getName
       !n.startsWith("_") && !n.startsWith(".")
     // name-sorted: listStatus order is filesystem-dependent, and the
-    // widened schema's field order ("first file") plus any probe that
-    // folds over files must not change when a different filesystem
-    // enumerates the same directory differently
+    // probes that fold over files (schema agreement, unit votes) and
+    // the messages naming them must not change when a different
+    // filesystem enumerates the same directory differently
     }).sortBy(_.getPath.getName)
   }
 
@@ -141,11 +136,9 @@ object Tables {
     path + "#" + signature(dataFiles(s, path))
 
   /** Per-FILE footer schemas of a parquet path: (file name, schema)
-    * for every data file, not one sampled/merged footer. One directory
-    * accumulated across producer generations can mix physical widths
-    * and encodings (at 100 TB you never control every writer's upgrade
-    * schedule); a single-footer probe would describe whichever file
-    * the listing returned first and silently misdescribe the rest.
+    * for every data file, not one sampled footer — a single-footer
+    * probe would describe whichever file the listing returned first
+    * and could not see that another file disagrees with it.
     * Cached by content signature; cost is one driver-side footer read
     * per file, paid once per distinct fixture state. Footer opens are
     * independent driver-side IO, probed on a bounded pool — a 100 TB
@@ -156,8 +149,7 @@ object Tables {
   private val fileSchemaCache = new java.util.concurrent.ConcurrentHashMap[
     String, Seq[(String, StructType)]]()
 
-  /** Run `f` over `items` on a bounded pool (≤16 driver threads) —
-    * the shared shape of every per-file footer probe. */
+  /** Run `f` over `items` on a bounded pool (≤16 driver threads). */
   private def probePar[A, B](items: Seq[A])(f: A => B): Seq[B] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -181,96 +173,24 @@ object Tables {
   def clearCaches(): Unit = {
     epochUnitCache.clear()
     fileSchemaCache.clear()
-    mixedUnitsCache.clear()
   }
 
-  /** Widest common type of two footer types, or None when they cross
-    * families. Widening stays within what Spark 4's vectorized parquet
-    * reader serves as a WIDENING read from the narrower file —
-    * integer chain, float→double, binary/string — so a widened forced
-    * schema never asks a scan for a lossy narrow. Arrays/structs
-    * recurse; everything else (decimal precision drift, date vs
-    * timestamp, int vs float) must match exactly or the caller fails
-    * loudly: a silent lossy pick is the r9 wrong-answer mode. */
-  private val intChain = Seq(ByteType, ShortType, IntegerType, LongType)
-  private[graft] def widenType(a: DataType, b: DataType): Option[DataType] =
-    (a, b) match {
-      case _ if a == b => Some(a)
-      case _ if intChain.contains(a) && intChain.contains(b) =>
-        Some(intChain(math.max(intChain.indexOf(a), intChain.indexOf(b))))
-      case (FloatType, DoubleType) | (DoubleType, FloatType) =>
-        Some(DoubleType)
-      case (StringType, BinaryType) | (BinaryType, StringType) =>
-        Some(StringType)
-      case (ArrayType(ea, _), ArrayType(eb, _)) =>
-        widenType(ea, eb).map(e => ArrayType(e, containsNull = true))
-      case (StructType(fa), StructType(fb)) =>
-        val bByName = fb.map(f => f.name -> f.dataType).toMap
-        val merged = fa.map { f =>
-          bByName.get(f.name).fold(Option(f.dataType))(widenType(f.dataType, _))
-            .map(t => StructField(f.name, t, nullable = true))
-        }
-        val extras = fb.filterNot(f => fa.exists(_.name == f.name))
-          .map(f => Some(f.copy(nullable = true)))
-        if ((merged ++ extras).forall(_.isDefined))
-          Some(StructType((merged ++ extras).map(_.get)))
-        else None
-      case _ => None
+  /** The footer schema every data file of `path` shares. Throws at plan
+    * time when the path has no data files, or when its files disagree
+    * (naming each distinct schema with its files): rewrite the path as
+    * one generation or split it. */
+  def schemaOf(s: SparkSession, path: String): StructType =
+    fileSchemas(s, path).groupBy(_._2).toSeq match {
+      case Seq((schema, _)) => schema
+      case Seq() => throw new IllegalStateException(
+        s"$path holds no parquet data files")
+      case groups => throw new IllegalStateException(
+        s"data files of $path disagree on schema: " +
+          groups.map { case (sch, fs) =>
+            s"${sch.simpleString}=[${fs.map(_._1).sorted.mkString(",")}]" }
+            .sorted.mkString("; ") +
+          " — one path is one producer generation; rewrite or split it")
     }
-
-  /** The widened UNION schema across a path's per-file footers: field
-    * order from the first file (later generations' new columns append;
-    * files missing a column read it as null), each column widened to
-    * its family's widest member, `pinned` columns taking the given
-    * type untouched (the events ts machinery handles those
-    * separately). Cross-family conflicts fail loudly at PLAN time
-    * naming the column, the types and the files that carry them —
-    * never an order-dependent mid-scan failure, never a silent narrow. */
-  def widenedSchema(s: SparkSession, path: String,
-      pinned: Map[String, DataType] = Map.empty): StructType = {
-    val perFile = fileSchemas(s, path)
-    val ordered = perFile.flatMap(_._2.fieldNames).distinct
-    StructType(ordered.map { name =>
-      pinned.get(name) match {
-        case Some(t) => StructField(name, t, nullable = true)
-        case None =>
-          val types = perFile.flatMap { case (_, sch) =>
-            sch.find(_.name == name).map(_.dataType) }.distinct
-          val widened = types.reduceLeft[DataType] { (x, y) =>
-            widenType(x, y).getOrElse(throw new IllegalStateException(
-              s"$path: column `$name` crosses type families across " +
-                "generations: " +
-                perFile.flatMap { case (f, sch) =>
-                  sch.find(_.name == name).map(fd => s"$f=${fd.dataType}") }
-                  .mkString(", ") +
-                " — no lossless widening exists; rewrite the offending " +
-                "generation or split paths"))
-          }
-          StructField(name, widened, nullable = true)
-      }
-    })
-  }
-
-  def eventsTsEncodings(s: SparkSession, d: String): Seq[(String, DataType)] = {
-    ensureNanosAsLong(s) // must precede the probes: NANOS footers throw without it
-    fileSchemas(s, s"$d/events.parquet").map { case (name, sch) =>
-      name -> sch("ts").dataType }
-  }
-
-  /** The SINGLE ts encoding of an events path. Throws loudly — naming
-    * the files per encoding — when the path mixes generations; callers
-    * that can handle the mixed case ([[events]], eventsStream) branch
-    * on [[eventsTsEncodings]] before calling this. */
-  def eventsTsType(s: SparkSession, d: String): DataType = {
-    val encs = eventsTsEncodings(s, d)
-    val distinct = encs.map(_._2).distinct
-    if (distinct.size != 1) throw new IllegalStateException(
-      s"events at $d/events.parquet mixes ts encodings across files: " +
-        encs.groupBy(_._2).map { case (t, fs) =>
-          s"$t=[${fs.map(_._1).sorted.mkString(",")}]" }.mkString("; ") +
-        " — this caller requires one encoding per path")
-    distinct.head
-  }
 
   /** Epoch unit of a RAW int64 ts column, inferred by magnitude: a bare
     * INT64 carries no unit annotation, and assuming one is the r9
@@ -279,9 +199,8 @@ object Tables {
     * separated by ~10³ per unit, so for any era in 1973–2200 the unit
     * is unambiguous from a single non-zero value:
     *   seconds ~1e9 · millis ~1e12 · micros ~1e15 · nanos ~1e18.
-    * Probes ≤4096 non-zero rows ONCE per path (first row group of one
-    * file even on a 100 TB table; cached like the footer probe) and
-    * fails LOUDLY when nothing non-zero exists to infer from. */
+    * Probes ≤4096 non-zero rows ONCE per file (first row group even of
+    * a large file; cached like the footer probe). */
   private val epochUnitCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
@@ -293,11 +212,11 @@ object Tables {
     else if (v >= 1e8.toLong) Some("s")
     else None
 
-  /** None = the path holds NO non-zero ts at all (the where-then-limit
+  /** None = the file holds NO non-zero ts at all (the where-then-limit
     * sample exhausts the data before limiting, so an empty sample is
     * proof, not sampling luck). Such data is unit-INDEPENDENT — every
-    * divisor maps 0→0 and null→null — which is why per-file callers may
-    * resolve it from sibling evidence instead of failing. */
+    * divisor maps 0→0 and null→null — so the file abstains from the
+    * path's unit vote ([[epochUnit]]). */
   private def epochUnitOpt(s: SparkSession, path: String): Option[String] = {
     // "none" sentinel rather than null: CHM.computeIfAbsent records no
     // entry for null, which would re-run the probe job on every call
@@ -326,24 +245,35 @@ object Tables {
     if (u == "none") None else Some(u)
   }
 
-  private def epochUnit(s: SparkSession, path: String): String =
-    epochUnitOpt(s, path).getOrElse(throw new IllegalStateException(
-      s"cannot infer epoch unit of raw INT64 events.ts at $path " +
-        "(no non-zero sampled value): refusing to guess a divisor " +
-        "(the silent-1970-collapse mode)"))
+  /** The ONE epoch unit of a raw-INT64 events path. Every file is
+    * probed on its own: two raw-INT64 generations of different units
+    * (a nanos file beside a micros file) are footer-indistinguishable,
+    * and a whole-path sample can exhaust its limit inside the first
+    * file and silently rescale the second (the r9 collapse hiding
+    * inside one logical type). Files with no non-zero ts abstain; a
+    * disagreement, or no file to infer from, fails loudly. */
+  private def epochUnit(s: SparkSession, path: String): String = {
+    val votes = dataFiles(s, path).flatMap(f =>
+      epochUnitOpt(s, f.getPath.toString).map(f.getPath.getName -> _))
+    votes.map(_._2).distinct match {
+      case Seq(u) => u
+      case Seq() => throw new IllegalStateException(
+        s"cannot infer epoch unit of raw INT64 events.ts at $path " +
+          "(no non-zero sampled value): refusing to guess a divisor " +
+          "(the silent-1970-collapse mode)")
+      case _ => throw new IllegalStateException(
+        s"raw INT64 events.ts files at $path disagree on epoch unit: " +
+          votes.map { case (f, u) => s"$f=$u" }.mkString(", ") +
+          " — one path is one producer generation; rewrite or split it")
+    }
+  }
 
-  /** Normalize the probed ts encoding to a session-TZ TimestampType (µs)
-    * column. All supported encodings converge here so every downstream
-    * plan (windows, sessionization, stream-stream joins, date_format
-    * oracles) sees one canonical type:
-    *  - LongType: raw epoch int64 (TIMESTAMP(NANOS) under the legacy
-    *    conf, or an unannotated INT64 column) — unit INFERRED per
-    *    [[epochUnit]], converted with integer ops only (`div`/`*`,
-    *    never `/`: ns-since-epoch exceeds double's 2^53 mantissa);
-    *  - TimestampNTZType: naive micros; cast interprets the wall clock
-    *    in the session TZ (UTC per GraftSession), matching how the
-    *    TZ-naive DuckDB oracle reads the same file;
-    *  - TimestampType: already instant-typed micros — pass through.
+  /** The post-scan ts column of a raw-INT64 events path: a session-TZ
+    * TimestampType (µs) from the path's inferred [[epochUnit]],
+    * converted with integer ops only (`div`/`*`, never `/`:
+    * ns-since-epoch exceeds double's 2^53 mantissa). Raw INT64 is
+    * TIMESTAMP(NANOS) under the legacy conf or an unannotated INT64
+    * column; the micros encodings never come here (see [[eventsRead]]).
     * Anything else fails LOUDLY at plan time: an unknown encoding must
     * never reach the silent-wrong-answer mode r9 hit on the stream path. */
   def normalizedTs(s: SparkSession, path: String, dt: DataType): Column = dt match {
@@ -360,219 +290,67 @@ object Tables {
       case "ms" => timestamp_micros(col("ts") * 1000L)
       case _    => timestamp_micros(col("ts") * 1000000L)
     }
-    case TimestampNTZType   => col("ts").cast(TimestampType)
-    case TimestampType      => col("ts")
     case other => throw new IllegalStateException(
       s"events.ts has unsupported parquet encoding $other; expected INT64 " +
         "epoch, TIMESTAMP_NTZ(micros) or TIMESTAMP(micros) — " +
-        "extend Tables.normalizedTs for the new fixture encoding")
+        "extend Tables.eventsRead for the new fixture encoding")
   }
 
-  /** For TIMESTAMP(micros) files — NTZ or instant — events reads with a
-    * REQUESTED schema that declares ts as TimestampType instead of
-    * casting after the scan: the parquet reader fills LTZ vectors from
-    * the same int64 micros either way, but a post-scan cast would turn
-    * ts into a derived column and block predicate pushdown + row-group
-    * stats pruning on it. The change-detection probe (p10: `count(*)
-    * WHERE ts >= last-check`) is exactly the query that must prune at
-    * 100 TB — `PushedFilters: [GreaterThanOrEqual(ts,...)]` is pinned in
-    * PlanSpec. Reading naive micros as instant micros equals
-    * `cast(ntz AS timestamp)` ONLY under the UTC session this library
-    * pins (see the SESSION REQUIREMENT note above). */
-  /** Per-file epoch unit map of a MIXED-encoding events path: raw
-    * INT64 files get a magnitude-inferred unit ([[epochUnit]] per
-    * file); annotated micros files (NTZ or instant) read RAW as micros
-    * under a forced INT64 schema, so their unit is "us". Any file with
-    * an encoding outside the supported set fails loudly BY NAME — a
-    * mixed directory must never silently merge (the multi-generation
-    * variant of the r9 lesson). */
-  /** PHYSICAL parquet type of a file's ts column ("INT64", "INT96",
-    * ...). The Spark footer probe reports only the logical type, and
-    * TimestampType can sit over either physical encoding; the mixed
-    * reader's forced raw-INT64 read is only sound over INT64. One
-    * driver-side footer open per file, mixed branch only. */
-  private def tsPhysical(s: SparkSession, file: String): String = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(file), s.sessionState.newHadoopConf())
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      val schema = r.getFooter.getFileMetaData.getSchema
-      schema.getType(schema.getFieldIndex("ts"))
-        .asPrimitiveType().getPrimitiveTypeName.name()
-    } finally r.close()
-  }
-
-  /** Cached by content signature like the other probes: the per-file
-    * unit map is consulted on EVERY events read of a raw-INT64-bearing
-    * path (batch and stream), and its INT96 physical probe re-opens
-    * footers — once per distinct fixture state is enough. */
-  private val mixedUnitsCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Map[String, String]]()
-
-  private def mixedUnits(s: SparkSession, path: String,
-      encs: Seq[(String, DataType)]): Map[String, String] =
-    mixedUnitsCache.computeIfAbsent(cacheKey(s, path),
-      _ => mixedUnitsUncached(s, path, encs))
-
-  private def mixedUnitsUncached(s: SparkSession, path: String,
-      encs: Seq[(String, DataType)]): Map[String, String] = {
-    val bad = encs.filter { case (_, dt) =>
-      dt != LongType && dt != TimestampNTZType && dt != TimestampType }
-    if (bad.nonEmpty) throw new IllegalStateException(
-      s"events at $path: file(s) " +
-        bad.map { case (n, t) => s"$n ($t)" }.mkString(", ") +
-        " carry an unsupported parquet encoding — expected INT64 epoch, " +
-        "TIMESTAMP_NTZ(micros) or TIMESTAMP(micros) per file")
-    val annotated = encs.filter(_._2 != LongType).map(_._1)
-    val int96 = probePar(annotated)(name =>
-      name -> tsPhysical(s, s"$path/$name"))
-      .collect { case (name, "INT96") => name }
-    if (int96.nonEmpty) throw new IllegalStateException(
-      s"events at $path mixes ts encodings and file(s) " +
-        int96.sorted.mkString(", ") +
-        " store timestamps as legacy parquet INT96, which cannot join a " +
-        "per-file raw-INT64 normalization — rewrite those files with " +
-        "outputTimestampType=TIMESTAMP_MICROS or split generations into " +
-        "separate paths")
-    val probed = encs.map {
-      case (name, LongType) => name -> epochUnitOpt(s, s"$path/$name")
-      case (name, _) => name -> Some("us") // annotated INT64 micros, read raw
-    }
-    // a file with NO non-zero ts cannot self-infer — but it is also
-    // unit-INDEPENDENT (0→0, null→null under every divisor), so it may
-    // inherit the unit its inferable raw-INT64 siblings agree on; with
-    // no inferable sibling at all the whole-table loud contract applies
-    // (an events table with zero real instants is a broken fixture,
-    // not a unit question)
-    val siblingUnits = probed.collect {
-      case (n, Some(u)) if encs.toMap.apply(n) == LongType => u
-    }.distinct
-    probed.map {
-      case (name, Some(u)) => name -> u
-      case (name, None) => siblingUnits match {
-        case Seq(u) => name -> u
-        case _ => throw new IllegalStateException(
-          s"cannot infer epoch unit of raw INT64 events.ts in " +
-            s"$path/$name (no non-zero sampled value) and sibling files " +
-            s"give ${if (siblingUnits.isEmpty) "no" else "conflicting"} " +
-            "unit evidence: refusing to guess a divisor " +
-            "(the silent-1970-collapse mode)")
-      }
-    }.toMap
-  }
-
-  /** (forced read schema with ts as raw INT64, file→unit map) for a
-    * mixed-encoding events path — shared by the batch reader and
-    * `StreamQueries.eventsStream` so both generations-mixed reads
-    * normalize IDENTICALLY (batch/stream parity by construction, as in
-    * the single-encoding design). Every supported encoding is
-    * physically INT64, so forcing LongType reads each file's raw
-    * value; non-ts fields take the per-file widened union schema, so a
-    * value-column width drift riding along with the ts drift still
-    * reads (or fails loudly at plan time naming files). */
-  private[graft] def mixedReadPlan(
-      s: SparkSession, d: String): (StructType, Map[String, String]) = {
-    val path = s"$d/events.parquet"
-    val units = mixedUnits(s, path, eventsTsEncodings(s, d))
-    (widenedSchema(s, path, pinned = Map("ts" -> LongType)), units)
-  }
-
-  /** Normalize the raw-INT64 ts of a mixed-generation read to micros
-    * instants, choosing the divisor PER ROW from the probed per-file
-    * unit map via `_metadata.file_name`. Integer ops only (floor
-    * semantics as in [[normalizedTs]]); a file that appears at scan
-    * time but was never probed raises instead of yielding nulls. */
-  private[graft] def normalizeMixedTs(
-      df: DataFrame, units: Map[String, String]): DataFrame = {
-    val unitMap = map(
-      units.toSeq.flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*)
-    df.withColumn("__ts_file", col("_metadata.file_name"))
-      .withColumn("__ts_unit", element_at(unitMap, col("__ts_file")))
-      .withColumn("ts", timestamp_micros(expr(
-        """CASE __ts_unit
-             WHEN 'ns' THEN (ts - pmod(ts, 1000L)) div 1000L
-             WHEN 'us' THEN ts
-             WHEN 'ms' THEN ts * 1000L
-             WHEN 's'  THEN ts * 1000000L
-             ELSE cast(raise_error(concat(
-               'events file not covered by the ts probe: ',
-               coalesce(__ts_file, '?'))) as bigint)
-           END""")))
-      .drop("__ts_unit", "__ts_file")
-  }
-
-  /** Canonical value-column types of the events table — shared by the
-    * batch reader and eventsStream so a width/decimal drift in a
-    * non-ts column can never diverge batch from stream (ADVICE r10:
-    * the "divergence impossible" claim previously held only for ts). */
-  private[graft] def canonicalEvents(df: DataFrame): DataFrame =
+  /** Canonical value-column types of the events table — applied by
+    * [[eventsRead]] for batch and stream alike, so a width/decimal drift
+    * in a non-ts column can never diverge batch from stream. */
+  private def canonicalEvents(df: DataFrame): DataFrame =
     canonical(df,
       "event_id" -> "long", "user_id" -> "long", "value" -> "double",
       "event_type" -> "string", "props" -> "string")
 
-  def events(s: SparkSession, d: String): DataFrame = {
+  /** The one events read plan, shared by [[events]] (batch) and
+    * `StreamQueries.eventsStream` so both normalize identically. `load`
+    * opens the path under the schema given. The path has ONE ts
+    * encoding (a path mixing them fails naming the files per encoding)
+    * and one [[schemaOf]]; its ts becomes a session-TZ TimestampType:
+    *  - TIMESTAMP(micros), NTZ or instant: read under a forced schema
+    *    declaring ts TimestampType instead of casting after the scan.
+    *    The parquet reader fills LTZ vectors from the same int64 micros
+    *    either way, but a post-scan cast would make ts a derived column
+    *    and block predicate pushdown and row-group pruning on it — the
+    *    change-detection probe (p10, `PushedFilters:
+    *    [GreaterThanOrEqual(ts,...)]` pinned in PlanSpec) must prune.
+    *    Naive micros read as instant micros equal `cast(ntz AS
+    *    timestamp)` ONLY under the UTC session this library pins (see
+    *    the SESSION REQUIREMENT note above);
+    *  - raw INT64: normalized after the scan by [[normalizedTs]]. A
+    *    stream outlives its probe, so a file that appears at scan time
+    *    but was never probed raises by name instead of being read
+    *    under the frozen unit (the r9 collapse arriving mid-stream);
+    *    restart the query to re-probe and admit it. */
+  private[graft] def eventsRead(s: SparkSession, d: String)(
+      load: StructType => DataFrame): DataFrame = {
     val path = s"$d/events.parquet"
-    val encs = eventsTsEncodings(s, d)
-    val types = encs.map(_._2).distinct
-    val read = if (types == Seq(TimestampNTZType) || types == Seq(TimestampType)) {
-      // all-micros path: ts stays a scan attribute, pushdown preserved
-      val forced = widenedSchema(s, path, pinned = Map("ts" -> TimestampType))
-      s.read.schema(forced).parquet(path)
-    } else {
-      // any raw-INT64 generation present (single-type, mixed, or
-      // unsupported → mixedUnits throws naming files): read ts raw and
-      // normalize per file via the probed unit map, EXACTLY like
-      // eventsStream. Per-file even when every footer agrees on
-      // LongType: a bare INT64 carries no unit annotation, so two
-      // raw-INT64 generations of DIFFERENT units (a nanos file beside
-      // a micros file) are footer-indistinguishable — a whole-path
-      // magnitude probe can exhaust its 4096-row sample inside the
-      // first file and silently rescale the second (the r9 collapse
-      // hiding inside one logical type). Only per-file unit probes see
-      // it. ts becomes a derived column on this branch, so row-group
-      // pruning on it is lost — the price of raw-INT64 generations;
-      // [[compactEvents]] restores the pushdown-preserving layout.
-      val (forced, units) = mixedReadPlan(s, d)
-      normalizeMixedTs(s.read.schema(forced).parquet(path), units)
+    ensureNanosAsLong(s) // must precede the probes: NANOS footers throw without it
+    val encs = fileSchemas(s, path).map { case (f, sch) => f -> sch("ts").dataType }
+    if (encs.map(_._2).distinct.size > 1) throw new IllegalStateException(
+      s"events at $path mixes ts encodings across files: " +
+        encs.groupBy(_._2).map { case (t, fs) =>
+          s"$t=[${fs.map(_._1).sorted.mkString(",")}]" }.toSeq.sorted.mkString("; ") +
+        " — one path is one producer generation; rewrite or split it")
+    val schema = schemaOf(s, path)
+    val read = schema("ts").dataType match {
+      case TimestampNTZType | TimestampType =>
+        load(StructType(schema.map(f =>
+          if (f.name == "ts") f.copy(dataType = TimestampType) else f)))
+      case dt =>
+        val ts = normalizedTs(s, path, dt)
+        val file = col("_metadata.file_name")
+        load(schema).withColumn("ts", when(file.isin(encs.map(_._1): _*), ts)
+          .otherwise(raise_error(
+            concat(lit("events file not covered by the ts probe: "), file))))
     }
     canonicalEvents(read)
   }
-  /** Rewrite a (possibly multi-generation) events path into the
-    * canonical single-encoding layout: ts as parquet TIMESTAMP(micros)
-    * INSTANT — physically INT64 with usable row-group min/max stats,
-    * never legacy INT96 — and value columns at canonical engine types.
-    * This is the remedy the mixed-generation read path's scaladoc and
-    * error text name ("compact or split generations"): after the
-    * rewrite, [[events]] / `StreamQueries.eventsStream` on `dstDir`
-    * take the pushdown-preserving single-encoding branch again, so the
-    * one documented cost of a mixed directory (ts becomes a derived
-    * column, row-group pruning on it is lost) is recovered.
-    *
-    * Reads through [[events]], so every probe, per-file unit
-    * normalization and loud-failure contract applies to the input.
-    * Output file count is sized from input bytes (`ceil(bytes /
-    * targetFileBytes)`) via one round-robin repartition — at 100 TB
-    * this is the periodic compaction job a multi-writer ingest needs
-    * against small-file accumulation anyway (p26's operator twin),
-    * and the per-row normalization CASE parallelizes across it.
-    *
-    * `spark.sql.parquet.outputTimestampType` has no per-write option
-    * (verified against Spark's `ParquetOptions`), so it is set and
-    * restored around the write; run compaction from its own session
-    * when a shared driver has concurrent parquet writers. */
-  def compactEvents(s: SparkSession, srcDir: String, dstDir: String,
-      targetFileBytes: Long = 512L << 20): Unit = {
-    require(new org.apache.hadoop.fs.Path(srcDir) !=
-      new org.apache.hadoop.fs.Path(dstDir),
-      s"compactEvents cannot overwrite its own input path $srcDir")
-    val bytes = dataFiles(s, s"$srcDir/events.parquet").map(_.getLen).sum
-    val parts = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    graft.GraftSession.withConf(s,
-        "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS") {
-      events(s, srcDir).repartition(parts)
-        .write.mode("overwrite").parquet(s"$dstDir/events.parquet")
-    }
-  }
+
+  def events(s: SparkSession, d: String): DataFrame =
+    eventsRead(s, d)(schema => s.read.schema(schema).parquet(s"$d/events.parquet"))
 
   def documents(s: SparkSession, d: String): DataFrame =
     canonical(table(s, d, "documents"),

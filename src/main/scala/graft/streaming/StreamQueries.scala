@@ -28,72 +28,18 @@ object StreamQueries {
 
   private val nameCounter = new AtomicInteger(0)
 
-  /** Events stream schema with the ts physical type PROBED from the
-    * batch footer (`Tables.eventsTsType`), never declared statically.
-    * This is the silent-corruption guard from r9: a user-supplied
-    * schema bypasses parquet's logical-type check, so a static
-    * `LongType` over TIMESTAMP(micros) silently read micros as nanos
-    * and collapsed every event into January 1970 (s02/s07/s11 returned
-    * wrong ROWS, not errors). Deriving the stream schema from the same
-    * probe the batch reader uses makes batch/stream divergence
-    * impossible, and `Tables.normalizedTs` throws loudly on any
-    * encoding neither reader understands. */
-  def eventsSchema(spark: SparkSession, dir: String): StructType = {
-    // FULL schema footer-derived, not just ts (ADVICE r10: a static
-    // LongType/DoubleType for the value columns would fail the stream
-    // on an int32/decimal width drift that the batch reader tolerates).
-    // ts: micros encodings (NTZ or instant) are requested directly as
-    // TimestampType — same int64 micros in the vectors, but ts stays a
-    // source attribute (no post-scan cast), mirroring Tables.events'
-    // pushdown-preserving batch read; nanos-as-long keeps LongType and
-    // is floored after the scan. Unsupported encodings throw here via
-    // normalizedTs before any query is built.
-    val probed = graft.sources.Tables.eventsTsType(spark, dir)
-    val tsField = probed match {
-      case TimestampNTZType | TimestampType => TimestampType
-      case dt =>
-        // validation only: throws on encodings neither reader supports
-        graft.sources.Tables.normalizedTs(spark, s"$dir/events.parquet", dt)
-        dt
-    }
-    graft.sources.Tables.widenedSchema(spark, s"$dir/events.parquet",
-      pinned = Map("ts" -> tsField))
-  }
-
   /** Streaming events source (file-based stand-in for the Kafka topic).
-    * Batch/stream parity by construction under every supported fixture
-    * encoding — single-generation AND mixed-generation directories: the
-    * schema, the per-file unit map and the canonical value casts all
-    * come from the same `Tables` probes the batch reader uses. */
-  def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.Tables
-    // The file stream source requires a directory (or glob) path; `[e]`
-    // makes the single-file path a glob whose base is the sf directory.
-    val glob = s"$dir/[e]vents.parquet"
-    val types = Tables.eventsTsEncodings(spark, dir).map(_._2).distinct
-    val src = if (types.size == 1 &&
-        (types.head == TimestampNTZType || types.head == TimestampType)) {
-      // all-micros path: forced TimestampType schema, ts stays a source
-      // attribute. A file of any OTHER encoding arriving mid-stream
-      // fails the scan loudly (parquet type-convert error) — no silent
-      // mode on this branch.
-      spark.readStream.schema(eventsSchema(spark, dir)).parquet(glob)
-    } else {
-      // any raw-INT64 generation present (single-unit or mixed): read
-      // ts raw and normalize per file via the probed unit map, exactly
-      // as the batch mixed reader. This branch deliberately uses the
-      // map even when every probed file shares one unit: a stream
-      // outlives its probe, and a later-arriving file under a frozen
-      // GLOBAL divisor would be silently rescaled if its encoding
-      // differed (the r9 collapse arriving mid-stream) — per-file
-      // lookup instead raises loudly on any file the probe never saw;
-      // restart the query to re-probe and admit it.
-      val (forced, units) = Tables.mixedReadPlan(spark, dir)
-      Tables.normalizeMixedTs(
-        spark.readStream.schema(forced).parquet(glob), units)
-    }
-    Tables.canonicalEvents(src)
-  }
+    * Batch/stream parity by construction: the schema, the ts
+    * normalization and the canonical value casts are the batch
+    * reader's own read plan (`Tables.eventsRead`) — never a hand-declared
+    * stream schema, which bypasses parquet's logical-type check (the r9
+    * mode: a static LongType over TIMESTAMP(micros) collapsed every
+    * event into January 1970). The file stream source requires a
+    * directory (or glob) path; `[e]` makes the single-file path a glob
+    * whose base is the sf directory. */
+  def eventsStream(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.Tables.eventsRead(spark, dir)(schema =>
+      spark.readStream.schema(schema).parquet(s"$dir/[e]vents.parquet"))
 
   /** The one stream lifecycle every bounded query here runs: start
     * `df` in output `mode` under `sink`'s writer settings with
@@ -213,26 +159,26 @@ object StreamQueries {
   }
 
   /** Streaming documents source (file stand-in for the announcements
-    * topic; same glob trick as eventsStream). Stream schema is
-    * footer-derived like eventsStream — a static user schema over
-    * parquet bypasses logical-type checks and is one fixture
+    * topic; same glob trick as eventsStream). Stream schema is the
+    * path's one footer schema (`Tables.schemaOf`) — a static user
+    * schema over parquet bypasses logical-type checks and is one fixture
     * regeneration away from silent misreads (the r9 events lesson);
     * the explicit casts then pin the canonical downstream types, so
     * an int32/int64 width drift in the fixture cannot change oracle
     * aggregate types. */
   def documentsStream(spark: SparkSession, dir: String): DataFrame =
     spark.readStream
-      .schema(graft.sources.Tables.widenedSchema(spark, s"$dir/documents.parquet"))
+      .schema(graft.sources.Tables.schemaOf(spark, s"$dir/documents.parquet"))
       .parquet(s"$dir/[d]ocuments.parquet")
       .select(col("doc_id").cast("long"), col("text").cast("string"),
         col("lang").cast("string"), col("source").cast("string"),
         col("n_chars").cast("long"))
 
   /** Streaming embeddings source (file stand-in, like the others;
-    * footer-derived schema per documentsStream). */
+    * footer schema per documentsStream). */
   def embeddingsStream(spark: SparkSession, dir: String): DataFrame =
     spark.readStream
-      .schema(graft.sources.Tables.widenedSchema(spark, s"$dir/embeddings.parquet"))
+      .schema(graft.sources.Tables.schemaOf(spark, s"$dir/embeddings.parquet"))
       .parquet(s"$dir/[e]mbeddings.parquet")
       .select(col("vec_id").cast("long"), col("embedding").cast("array<float>"))
 

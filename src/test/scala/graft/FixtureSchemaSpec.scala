@@ -28,7 +28,10 @@ import graft.streaming.StreamQueries
   *      probe, so batch/stream parity holds under every encoding — the
   *      silent-corruption guard;
   *   3. an encoding neither reader understands fails LOUDLY at plan
-  *      time, never the silent wrong-answer mode.
+  *      time, never the silent wrong-answer mode;
+  *   4. a path is one producer generation: files that disagree on
+  *      schema, ts encoding or epoch unit fail at plan time naming the
+  *      files, batch and stream.
   */
 class FixtureSchemaSpec extends AnyFunSuite {
 
@@ -236,45 +239,30 @@ class FixtureSchemaSpec extends AnyFunSuite {
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .coalesce(1).write.mode("overwrite").parquet(s"$d/events.parquet")
 
-  test("a directory mixing ts generations normalizes per file — batch AND stream, never silent merge") {
-    // two drift shapes: raw INT64 nanos alongside annotated NTZ micros
-    // (the r9 pair), and raw INT64 millis alongside instant micros
-    // (covers the multiplier path; sub-milli events 3-4 live in the
-    // micros generation, so full precision survives)
+  /** The failure message of `f`, which must throw at plan time. */
+  private def planFailure(f: => Any): String =
+    intercept[IllegalStateException](f).getMessage
+
+  test("a directory mixing ts generations fails loudly at plan time naming the files, batch and stream") {
+    // the r9 pair (raw INT64 nanos beside annotated NTZ micros), raw
+    // millis beside instant micros, a legacy INT96 generation and an
+    // unsupported string-ts generation: one path must carry one ts
+    // encoding, whatever the second one is
     val combos = Seq(
       ("nanos+ntz", genNanos _, genNtz _),
-      ("millis+instant", genMillis _, genInstant _))
+      ("millis+instant", genMillis _, genInstant _),
+      ("nanos+int96", genNanos _, genInstant96 _),
+      ("nanos+string", genNanos _, genStringTs _))
     for ((name, old, neu) <- combos) {
       val dir = TempDirs.create(s"fixture-mixed-$name")
       writeTwoGenerations(dir, old, neu)
-      val df = Tables.events(spark, dir)
-      assert(df.schema("ts").dataType === TimestampType, name)
-      assert(batchRows(dir) === expected, s"batch, $name")
-      assert(streamRows(dir) === expected, s"stream, $name")
+      for (msg <- Seq(planFailure(Tables.events(spark, dir)),
+          planFailure(StreamQueries.eventsStream(spark, dir)))) {
+        assert(msg.contains("mixes ts encodings"), s"$name: $msg")
+        assert(msg.contains("gen-a-0.parquet") && msg.contains("gen-b-0.parquet"),
+          s"$name must name both files: $msg")
+      }
     }
-  }
-
-  test("a mixed directory with a legacy INT96 generation fails loudly naming the file") {
-    // INT96 has no raw-INT64 read, so it cannot join a per-file
-    // normalization — the reader must say so BY NAME, not throw a
-    // mid-scan type mismatch from deep inside the parquet reader
-    val dir = TempDirs.create("fixture-mixed-int96")
-    writeTwoGenerations(dir, genNanos _, genInstant96 _)
-    val e = intercept[IllegalStateException](Tables.events(spark, dir))
-    assert(e.getMessage.contains("INT96"), e.getMessage)
-    assert(e.getMessage.contains("gen-b-0.parquet"), e.getMessage)
-  }
-
-  test("a mixed directory with an unsupported generation fails loudly NAMING the file, batch and stream") {
-    val dir = TempDirs.create("fixture-mixed-bad")
-    writeTwoGenerations(dir, genNanos _, genStringTs _)
-    val eBatch = intercept[IllegalStateException](Tables.events(spark, dir))
-    assert(eBatch.getMessage.contains("unsupported"))
-    assert(eBatch.getMessage.contains("gen-b-0.parquet"),
-      s"must name the offending file: ${eBatch.getMessage}")
-    val eStream =
-      intercept[IllegalStateException](StreamQueries.eventsStream(spark, dir))
-    assert(eStream.getMessage.contains("gen-b-0.parquet"))
   }
 
   test("probe caches invalidate when a fixture path is regenerated in place (warm-JVM safety)") {
@@ -292,143 +280,103 @@ class FixtureSchemaSpec extends AnyFunSuite {
     assert(streamRows(dir) === expected, "stale stream schema after regen")
   }
 
-  test("two raw-INT64 generations of DIFFERENT units normalize per file — the footer-invisible drift") {
+  test("raw-INT64 files of different units fail loudly naming both files") {
     // both files' footers say plain INT64; only magnitude tells nanos
-    // from micros. The nanos generation carries >4096 non-zero rows, so
-    // a whole-path sample can exhaust its limit inside it, infer "ns",
-    // and silently divide the micros generation's instants by 1000 —
-    // the r9 collapse hiding inside ONE logical type. Per-file unit
-    // probes are the only detection; this pins batch AND stream on it.
+    // from micros. The nanos file carries >4096 non-zero rows, so a
+    // whole-path sample could exhaust its limit inside it, infer "ns",
+    // and silently divide the micros file's instants by 1000 — the r9
+    // collapse hiding inside ONE logical type. Per-file unit probes
+    // see it and refuse, batch and stream.
     val base = 1700000000000000L // 2023-11-14T22:13:20 in micros
     val nanosRows = (0 until 5000).map(i =>
       (1000L + i, (base + i) * 1000L, 1L, "view", 1.0, "{}"))
-    val microsRows = logical.map { case (id, us, u, t, v, p) => (id, us, u, t, v, p) }
     val a = TempDirs.create("fixture-unit-gen-a")
     val b = TempDirs.create("fixture-unit-gen-b")
     nanosRows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .coalesce(1).write.mode("overwrite").parquet(s"$a/events.parquet")
-    microsRows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    logical.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .coalesce(1).write.mode("overwrite").parquet(s"$b/events.parquet")
     val dir = TempDirs.create("fixture-unit-mixed")
     val tgt = java.nio.file.Paths.get(dir, "events.parquet")
     copyParts(s"$a/events.parquet", tgt, "gen-a")
     copyParts(s"$b/events.parquet", tgt, "gen-b")
-    val want = nanosRows.map(r => (r._1, fmtMicros(r._2 / 1000L))).toSet ++
-      logical.map { case (id, us, _, _, _, _) => (id, fmtMicros(us)) }.toSet
-    assert(batchRows(dir) === want)
-    assert(streamRows(dir) === want)
+    for (msg <- Seq(planFailure(Tables.events(spark, dir)),
+        planFailure(StreamQueries.eventsStream(spark, dir)))) {
+      assert(msg.contains("disagree on epoch unit"), msg)
+      assert(msg.contains("gen-a-0.parquet=ns") && msg.contains("gen-b-0.parquet=us"), msg)
+    }
   }
 
-  test("a documents dir mixing BINARY and UTF8 generations reads deterministically, batch and stream") {
-    // no-merge schema inference samples ONE footer, so which generation
-    // wins is listing-order luck; the widened forced schema makes the
-    // outcome deterministic (string) regardless of file order
-    val a = TempDirs.create("fixture-docs-gen-a")
-    val b = TempDirs.create("fixture-docs-gen-b")
-    Seq((1L, "hello".getBytes("UTF-8"), "en", "web", 5L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .coalesce(1).write.mode("overwrite").parquet(s"$a/documents.parquet")
-    Seq((2L, "bonjour", "fr", "web", 7L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .coalesce(1).write.mode("overwrite").parquet(s"$b/documents.parquet")
-    val dir = TempDirs.create("fixture-docs-mixed")
-    val tgt = java.nio.file.Paths.get(dir, "documents.parquet")
-    copyParts(s"$a/documents.parquet", tgt, "gen-a")
-    copyParts(s"$b/documents.parquet", tgt, "gen-b")
-    val want = Set((1L, "hello"), (2L, "bonjour"))
-    assert(Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-      .as[(Long, String)].collect().toSet === want)
-    assert(StreamQueries.runToTable(spark,
-      StreamQueries.documentsStream(spark, dir), "append")
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)].collect().toSet === want)
+  /** Two single-file generations of `table` merged into one
+    * `$dir/$table.parquet` directory as gen-a-0 / gen-b-0. */
+  private def twoGenerationTable(table: String, genA: DataFrame,
+      genB: DataFrame): String = {
+    val dir = TempDirs.create(s"fixture-$table-mixed")
+    val tgt = java.nio.file.Paths.get(dir, s"$table.parquet")
+    for ((gen, df) <- Seq("gen-a" -> genA, "gen-b" -> genB)) {
+      val src = TempDirs.create(s"fixture-$table-$gen")
+      df.coalesce(1).write.mode("overwrite").parquet(s"$src/$table.parquet")
+      copyParts(s"$src/$table.parquet", tgt, gen)
+    }
+    dir
   }
 
-  test("an embeddings dir mixing float and double generations widens to double at the scan") {
-    // the hazard: inference sampling the FLOAT footer would make the
-    // double file fail mid-scan (no narrowing read); the widened schema
-    // always requests double, which the reader serves from both
-    val a = TempDirs.create("fixture-emb-gen-a")
-    val b = TempDirs.create("fixture-emb-gen-b")
-    Seq((1L, Seq(1.5, 2.5))).toDF("vec_id", "embedding")
-      .coalesce(1).write.mode("overwrite").parquet(s"$a/embeddings.parquet")
-    Seq((2L, Seq(3.5f, 4.5f))).toDF("vec_id", "embedding")
-      .coalesce(1).write.mode("overwrite").parquet(s"$b/embeddings.parquet")
-    val dir = TempDirs.create("fixture-emb-mixed")
-    val tgt = java.nio.file.Paths.get(dir, "embeddings.parquet")
-    copyParts(s"$a/embeddings.parquet", tgt, "gen-a")
-    copyParts(s"$b/embeddings.parquet", tgt, "gen-b")
-    val want = Set((1L, Seq(1.5, 2.5)), (2L, Seq(3.5, 4.5)))
-    assert(Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .as[(Long, Seq[Double])].collect().toSet === want)
-    assert(StreamQueries.runToTable(spark,
-      StreamQueries.embeddingsStream(spark, dir), "append")
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .as[(Long, Seq[Double])].collect().toSet === want)
+  test("data files that disagree on schema fail loudly naming the files") {
+    // BINARY vs UTF8 text, float vs double embeddings, string vs LONG
+    // text (cross-family), and a generation that ADDS a column: no-merge
+    // inference would sample one footer (listing-order luck), so each
+    // must be refused at plan time by name, batch and stream
+    val docs = Seq[(String, DataFrame, DataFrame)](
+      ("binary+utf8",
+        Seq((1L, "hello".getBytes("UTF-8"), "en", "web", 5L))
+          .toDF("doc_id", "text", "lang", "source", "n_chars"),
+        Seq((2L, "bonjour", "fr", "web", 7L))
+          .toDF("doc_id", "text", "lang", "source", "n_chars")),
+      ("cross-family",
+        Seq((1L, "hello", "en", "web", 5L))
+          .toDF("doc_id", "text", "lang", "source", "n_chars"),
+        Seq((2L, 42L, "fr", "web", 7L))
+          .toDF("doc_id", "text", "lang", "source", "n_chars")))
+    val embs = Seq[(String, DataFrame, DataFrame)](
+      ("double+float",
+        Seq((1L, Seq(1.5, 2.5))).toDF("vec_id", "embedding"),
+        Seq((2L, Seq(3.5f, 4.5f))).toDF("vec_id", "embedding")),
+      ("added-column",
+        Seq((1L, Seq(1.5f, 2.5f))).toDF("vec_id", "embedding"),
+        Seq((2L, Seq(3.5f, 4.5f), "web")).toDF("vec_id", "embedding", "origin")))
+    val reads =
+      docs.map { case (n, a, b) => (n, twoGenerationTable("documents", a, b)) }
+        .flatMap { case (n, d) => Seq(
+          n -> (() => Tables.documents(spark, d)),
+          n -> (() => StreamQueries.documentsStream(spark, d))) } ++
+      embs.map { case (n, a, b) => (n, twoGenerationTable("embeddings", a, b)) }
+        .flatMap { case (n, d) => Seq(
+          n -> (() => Tables.embeddings(spark, d)),
+          n -> (() => StreamQueries.embeddingsStream(spark, d))) }
+    for ((name, read) <- reads) {
+      val msg = planFailure(read())
+      assert(msg.contains("disagree on schema"), s"$name: $msg")
+      assert(msg.contains("gen-a-0.parquet") && msg.contains("gen-b-0.parquet"),
+        s"$name must name both files: $msg")
+    }
   }
 
-  test("a cross-family generation mix fails loudly at plan time naming the files") {
-    // string text in one generation, LONG text in the other: no
-    // lossless widening exists — must refuse BY NAME at plan time,
-    // never an order-dependent mid-scan convert error
-    val a = TempDirs.create("fixture-docs-fam-a")
-    val b = TempDirs.create("fixture-docs-fam-b")
-    Seq((1L, "hello", "en", "web", 5L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .coalesce(1).write.mode("overwrite").parquet(s"$a/documents.parquet")
-    Seq((2L, 42L, "fr", "web", 7L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .coalesce(1).write.mode("overwrite").parquet(s"$b/documents.parquet")
-    val dir = TempDirs.create("fixture-docs-fam-mixed")
-    val tgt = java.nio.file.Paths.get(dir, "documents.parquet")
-    copyParts(s"$a/documents.parquet", tgt, "gen-a")
-    copyParts(s"$b/documents.parquet", tgt, "gen-b")
-    val e = intercept[IllegalStateException](Tables.documents(spark, dir))
-    assert(e.getMessage.contains("`text`"), e.getMessage)
-    assert(e.getMessage.contains("gen-a-0.parquet") &&
-      e.getMessage.contains("gen-b-0.parquet"), e.getMessage)
-  }
-
-  test("a generation that ADDS a column appends it; older files read it as null") {
-    val a = TempDirs.create("fixture-emb-add-a")
-    val b = TempDirs.create("fixture-emb-add-b")
-    Seq((1L, Seq(1.5f, 2.5f))).toDF("vec_id", "embedding")
-      .coalesce(1).write.mode("overwrite").parquet(s"$a/embeddings.parquet")
-    Seq((2L, Seq(3.5f, 4.5f), "web")).toDF("vec_id", "embedding", "origin")
-      .coalesce(1).write.mode("overwrite").parquet(s"$b/embeddings.parquet")
-    val dir = TempDirs.create("fixture-emb-add-mixed")
-    val tgt = java.nio.file.Paths.get(dir, "embeddings.parquet")
-    copyParts(s"$a/embeddings.parquet", tgt, "gen-a")
-    copyParts(s"$b/embeddings.parquet", tgt, "gen-b")
-    val rows = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("origin"))
-      .as[(Long, Option[String])].collect().toSet
-    assert(rows === Set((1L, None), (2L, Some("web"))))
-  }
-
-  test("compactEvents rewrites a mixed directory to one encoding; ts pushdown re-engages") {
-    val src = TempDirs.create("fixture-compact-src")
-    writeTwoGenerations(src, genNanos _, genNtz _)
-    val dst = TempDirs.create("fixture-compact-dst")
-    val prevConf = spark.conf.get("spark.sql.parquet.outputTimestampType")
-    Tables.compactEvents(spark, src, dst)
-    // same instants, batch AND stream, through the normal readers
-    assert(batchRows(dst) === expected)
-    assert(streamRows(dst) === expected)
-    // single generation of instant-typed micros — the probe sees ONE
-    // encoding, so the pushdown-preserving branch engages (eventsTsType
-    // throws on any mixed path, its success IS the single-encoding pin)
-    assert(Tables.eventsTsType(spark, dst) === TimestampType)
-    // physically INT64 (never legacy INT96: no usable row-group stats),
-    // and the change-probe's ts filter reaches the scan again
-    val p = Tables.events(spark, dst)
-      .where(col("ts") >= "2023-11-14")
-      .queryExecution.executedPlan.toString
-    assert(p.contains("GreaterThanOrEqual(ts"), p)
-    assert(p.contains("PushedFilters"), p)
-    // and the session's writer conf was restored
-    assert(spark.conf.get("spark.sql.parquet.outputTimestampType") === prevConf)
+  test("a path with no parquet data files fails naming the path") {
+    val dir = TempDirs.create("fixture-empty")
+    for (t <- Seq("documents", "embeddings", "events")) {
+      val p = java.nio.file.Paths.get(dir, s"$t.parquet")
+      java.nio.file.Files.createDirectories(p)
+      java.nio.file.Files.createFile(p.resolve("_SUCCESS"))
+    }
+    for (read <- Seq[() => DataFrame](
+        () => Tables.documents(spark, dir),
+        () => StreamQueries.documentsStream(spark, dir),
+        () => Tables.embeddings(spark, dir),
+        () => Tables.events(spark, dir),
+        () => StreamQueries.eventsStream(spark, dir))) {
+      val msg = planFailure(read())
+      assert(msg.contains("no parquet data files") && msg.contains(dir), msg)
+    }
   }
 
   test("raw INT64 whose sampled extremes imply different units fails loudly (mixed-unit/near-epoch)") {
@@ -484,20 +432,6 @@ class FixtureSchemaSpec extends AnyFunSuite {
       if (q.isActive) q.stop()
       TempDirs.deleteRecursively(ckpt)
     }
-  }
-
-  test("an unprobed generation arriving MID-STREAM fails loudly naming the file (mixed directory)") {
-    val dir = TempDirs.create("fixture-midstream-mixed")
-    writeTwoGenerations(dir, genNanos _, genNtz _)
-    val msg = midStreamDrift(dir) {
-      val genC = TempDirs.create("gen-c")
-      genMillis(genC, logical.map { case (id, us, u, t, v, p) =>
-        (id + 10, us, u, t, v, p) })
-      copyParts(s"$genC/events.parquet",
-        java.nio.file.Paths.get(dir, "events.parquet"), "gen-c")
-    }
-    assert(msg.contains("not covered by the ts probe"), msg)
-    assert(msg.contains("gen-c-0.parquet"), msg)
   }
 
   test("an NTZ file arriving mid-stream over a raw-nanos table fails loudly — the r9 silent mode, closed mid-stream") {

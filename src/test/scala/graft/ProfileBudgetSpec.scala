@@ -30,7 +30,13 @@ class ProfileBudgetSpec extends AnyFunSuite {
     "n90_snapshot_chain_delta" -> (21, 21),
     "s40_stream_snapshot_curation" -> (46, 46),
     "s09_stream_fanout" -> (16, 16),
-    "s10_stream_upsert" -> (15, 15))
+    "s10_stream_upsert" -> (15, 15),
+    // the events reader (batch with ts pushdown, and stream) and the two
+    // shingle-join shapes: maxima over three cold runs
+    "p10_refresh_probe" -> (3, 3),
+    "s02_stream_window" -> (3, 4),
+    "n02_dedup_jaccard" -> (5, 5),
+    "n63_containment_prefix" -> (9, 9))
 
   budgets.foreach { case (q, (maxJobs, maxStages)) =>
     test(s"$q stays within its job and stage budget") {

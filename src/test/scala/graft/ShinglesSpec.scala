@@ -200,28 +200,6 @@ class ShinglesSpec extends AnyFunSuite {
     assert(cross >= 0.0 && cross < 1.0)
   }
 
-  test("property: prefix-filtered jaccard join == plain inverted-index join") {
-    val rnd = new scala.util.Random(7)
-    val vocab = Vector("w1", "w2", "w3", "w4", "w5", "w6", "w7", "w8")
-    // bases + near-identical mutations (one token appended/changed) so the
-    // 0.55 threshold is actually exercised, over a small vocab so shingles
-    // repeat across docs and the prefix filter has something to prune
-    val docs = (1L to 60L).flatMap { i =>
-      val base = Seq.fill(6 + rnd.nextInt(12))(vocab(rnd.nextInt(vocab.length)))
-      val mut =
-        if (rnd.nextBoolean()) base :+ vocab(rnd.nextInt(vocab.length))
-        else base.updated(rnd.nextInt(base.length), vocab(rnd.nextInt(vocab.length)))
-      Seq((i * 2, base.mkString(" ")), (i * 2 + 1, mut.mkString(" ")))
-    }.toDF("doc_id", "text")
-    def asMap(df: org.apache.spark.sql.DataFrame) =
-      df.as[(Long, Long, Double)].collect().toMap1
-    // small vocab → heavy shingle reuse → the prefix filter actually prunes
-    val plain = asMap(Dedup.jaccardPairs(docs, "doc_id", "text", threshold = 0.55))
-    val pref = asMap(Dedup.jaccardPairsPrefix(docs, "doc_id", "text", threshold = 0.55))
-    assert(pref == plain)
-    assert(plain.nonEmpty)
-  }
-
   test("connectedComponents: transitive chain collapses to one survivor per component") {
     // chain 1–2–…–9 (diameter 8 forces multi-round propagation) + pair (20,21)
     val pairs = ((1L to 8L).map(i => (i, i + 1)) :+ (20L, 21L)).toDF("a_id", "b_id")

@@ -6,25 +6,16 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Dedup
 
-/** Skew mitigation contract for the n-gram similarity join (VERDICT r7
-  * #3). The fixture is the pathological corpus shape: a boilerplate
-  * passage shared by EVERY document, whose shingles each contribute
-  * O(n²) rows to the inverted-index equi-join.
+/** Skew contract for the n-gram containment join (VERDICT r7 #3). The
+  * fixture is the pathological corpus shape: a boilerplate passage
+  * shared by EVERY document, whose shingles each contribute O(n²) rows
+  * to the inverted-index equi-join.
   *
-  * What is pinned:
-  *  - the maxDf cap collapses the join fan-out (the measurable skew
-  *    fact, independent of wall clock);
-  *  - the capped result is a SUBSET of the exact result with LOWER
-  *    jaccard values — the documented lower-bound bias direction of
-  *    Dedup.jaccardPairs' scaladoc, including a near-threshold pair
-  *    that the cap drops;
-  *  - a genuine near-dup pair (content overlap, not boilerplate)
-  *    survives the cap;
-  *  - the PPJoin prefix variant stays EXACT on the skewed corpus.
+  * What is pinned: the prefix-filtered containment variant (the
+  * skew-proof candidate generator n63 runs) stays EXACT on the skewed
+  * corpus, at a low threshold and at the n46 default operating point.
   */
 class SkewSpec extends AnyFunSuite {
-
-  private val T = 0.4
 
   // 30 filler docs with disjoint content + two engineered pairs, all
   // carrying the same 12-token boilerplate suffix (df = n_docs on every
@@ -41,60 +32,13 @@ class SkewSpec extends AnyFunSuite {
       (100L, ((0 until 58).map(t => s"n$t") ++ Seq("xx", "xy")).mkString(" ")),
       (101L, ((0 until 58).map(t => s"n$t") ++ Seq("zz", "zy")).mkString(" ")))
     // near-threshold pair: overlap is MOSTLY boilerplate — 8 shared
-    // content tokens then divergent tails, so the exact join finds it
-    // but the capped join (intersection stripped of hot shingles) drops it
+    // content tokens then divergent tails
     val boilerish = Seq(
       (200L, ((0 until 8).map(t => s"s$t") ++ Seq("p1", "p2")).mkString(" ")),
       (201L, ((0 until 8).map(t => s"s$t") ++ Seq("q1", "q2")).mkString(" ")))
     (filler ++ near ++ boilerish).toDF("doc_id", "text")
       .select($"doc_id", concat_ws(" ", $"text", lit(boiler)).as("text"))
   }
-
-  private def pairsOf(df: DataFrame): Map[(Long, Long), Double] =
-    df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-
-  test("maxDf cap collapses the boilerplate join fan-out") {
-    val uncapped = Dedup.jaccardJoinFanout(skewDocs, "doc_id", "text", threshold = T)
-    val capped = Dedup.jaccardJoinFanout(skewDocs, "doc_id", "text", threshold = T,
-      maxDf = Some(10))
-    // 10+ boilerplate shingles × C(34,2) pairs ⇒ thousands of joined
-    // rows; the cap must remove that entire quadratic term
-    assert(uncapped > 4000, s"fixture not skewed enough: fanout=$uncapped")
-    assert(capped < uncapped / 10,
-      s"cap did not collapse fan-out: $capped vs $uncapped")
-  }
-
-  test("capped result ⊆ exact result, jaccard values are lower bounds, " +
-      "true near-dups survive, boilerplate-only pairs drop") {
-    val exact = pairsOf(Dedup.jaccardPairs(skewDocs, "doc_id", "text", threshold = T))
-    val capped = pairsOf(Dedup.jaccardPairs(skewDocs, "doc_id", "text", threshold = T,
-      maxDf = Some(10)))
-    // subset: the cap can only DROP pairs, never invent them
-    assert(capped.keySet.subsetOf(exact.keySet),
-      s"capped emitted pairs absent from exact: ${capped.keySet -- exact.keySet}")
-    // bias direction: capped shingles leave the intersection but not the
-    // set sizes, so every reported jaccard can only go down
-    capped.foreach { case (k, j) =>
-      assert(j <= exact(k) + 1e-12, s"capped jaccard above exact for $k")
-    }
-    // the pair whose similarity is real content survives the cap...
-    assert(capped.contains((100L, 101L)), s"true near-dup lost: $capped")
-    // ...and the pair that only LOOKS similar because of boilerplate is
-    // exactly what the cap trades away (the documented recall loss)
-    assert(exact.contains((200L, 201L)), s"fixture broken: $exact")
-    assert(!capped.contains((200L, 201L)),
-      "boilerplate-overlap pair unexpectedly survived the cap")
-  }
-
-  test("PPJoin prefix variant stays exact on the skewed corpus") {
-    val exact = pairsOf(Dedup.jaccardPairs(skewDocs, "doc_id", "text", threshold = T))
-    val prefix = pairsOf(Dedup.jaccardPairsPrefix(skewDocs, "doc_id", "text",
-      threshold = T))
-    assert(prefix == exact, s"prefix drifted from exact:\n$prefix\nvs\n$exact")
-  }
-
-  // ---- containment (n46) — VERDICT r8 #1: the same boilerplate shape
-  // must be mitigable on the DIRECTED join too ----
 
   private def contOf(df: DataFrame): Map[(Long, Long), (Long, Int)] =
     df.collect().map(r =>
@@ -104,40 +48,6 @@ class SkewSpec extends AnyFunSuite {
   // this fixture (every doc shares the 10 boilerplate shingles)
   private val CN = 1
   private val CD = 4
-
-  test("maxDf cap collapses the containment join fan-out") {
-    val uncapped = Dedup.containmentJoinFanout(skewDocs, "doc_id", "text")
-    val capped = Dedup.containmentJoinFanout(skewDocs, "doc_id", "text",
-      maxDf = Some(10))
-    assert(uncapped > 4000, s"fixture not skewed enough: fanout=$uncapped")
-    assert(capped < uncapped / 10,
-      s"cap did not collapse containment fan-out: $capped vs $uncapped")
-  }
-
-  test("capped containment ⊆ exact with lower-bound inter; content pairs " +
-      "survive, boilerplate-only pairs drop") {
-    val exact = contOf(Dedup.containmentPairs(skewDocs, "doc_id", "text",
-      num = CN, den = CD))
-    val capped = contOf(Dedup.containmentPairs(skewDocs, "doc_id", "text",
-      num = CN, den = CD, maxDf = Some(10)))
-    assert(capped.keySet.subsetOf(exact.keySet),
-      s"capped emitted pairs absent from exact: ${capped.keySet -- exact.keySet}")
-    capped.foreach { case (k, (inter, an)) =>
-      val (exInter, exAn) = exact(k)
-      assert(an == exAn, s"a_n drifted under cap for $k")
-      assert(inter <= exInter, s"capped inter above exact for $k")
-    }
-    // real content overlap (58 shared tokens) survives the cap in both
-    // directions; a pair whose qualifying overlap is boilerplate drops
-    assert(capped.contains((100L, 101L)) && capped.contains((101L, 100L)),
-      s"true near-dup containment lost: ${capped.keySet}")
-    val boilerOnly = exact.keySet.filter { case (a, b) =>
-      a < 30 && b < 30 // filler docs share ONLY the boilerplate suffix
-    }
-    assert(boilerOnly.nonEmpty, s"fixture broken: no boilerplate-only pairs")
-    assert(boilerOnly.forall(!capped.contains(_)),
-      "boilerplate-only containment pair unexpectedly survived the cap")
-  }
 
   test("containment prefix variant stays exact on the skewed corpus") {
     val exact = contOf(Dedup.containmentPairs(skewDocs, "doc_id", "text",
