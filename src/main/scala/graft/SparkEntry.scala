@@ -2586,9 +2586,10 @@ object SparkEntry {
     // Write-audit-publish (operators/Publish scaladoc): a good
     // snapshot publishes; a subsequent BAD snapshot (nulled keys)
     // fails its audit and never becomes visible — the query returns
-    // what a consumer reads through CURRENT after both attempts, which
-    // the oracle checks equals the good snapshot exactly. PublishSpec
-    // pins the crash-before-rename and pointer-swap cases.
+    // what a consumer reads through the latest manifest version after
+    // both attempts, which the oracle checks equals the good snapshot
+    // exactly. PublishSpec pins the crash-before-claim, swap, racing
+    // publisher and GC cases.
     "p29_write_audit_publish" -> (((s: SparkSession, d: String) => {
       import graft.operators.Publish
       val root = TempDirs.create("graft_wap")

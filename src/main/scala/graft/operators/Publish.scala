@@ -1,76 +1,67 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.ManifestLog
 
 /** Write-audit-publish (WAP) — the deployment pattern for datasets
   * that downstream jobs consume: new data is STAGED to a fresh
   * directory, AUDITED as it exists on disk (re-read — the audit sees
   * exactly the bytes a consumer would, not the producing plan), and
-  * only then PUBLISHED by atomically renaming a one-line CURRENT
-  * pointer file over the previous one — the same rename-is-commit core
-  * as [[graft.sinks.AtomicBucketStore]], at whole-snapshot
-  * granularity. A failed audit deletes the stage and leaves CURRENT
-  * untouched; a crash at ANY point before the rename leaves the old
-  * snapshot fully visible. Readers resolve through CURRENT only and
-  * never list data directories, so an in-flight writer is invisible.
+  * only then PUBLISHED by claiming the next version of a one-line
+  * manifest naming it — [[graft.ManifestLog]], the commit primitive
+  * [[SnapshotStore]] and [[graft.sinks.AtomicBucketStore]] share. A
+  * failed audit deletes the stage; a crash before the claim leaves the
+  * old snapshot visible. Readers resolve through the latest version
+  * only. Racing publishers each claim their own version (a whole-
+  * snapshot replace needs no rebase); the highest wins.
   *
-  * This is what the lakehouse formats call WAP / branch-and-commit;
-  * the minimal file-layout form here carries the same guarantee for a
-  * plain parquet directory tree. */
+  * GC trails by one publish: two versions are kept, so the replaced
+  * snapshot outlives its commit for a reader still scanning it (ADVICE
+  * r8). A `snap-*` no retained version names — a crashed or
+  * still-auditing writer's stage — goes only past
+  * [[graft.ManifestLog.GraceMs]]. This is the lakehouse formats' WAP /
+  * branch-and-commit in its minimal file-layout form. */
 object Publish {
 
-  private val Pointer = "CURRENT"
-
   /** The live snapshot (None before the first successful publish). */
-  def readCurrent(spark: SparkSession, root: String): Option[DataFrame] = {
-    val p = Paths.get(root, Pointer)
-    if (!Files.exists(p)) None
-    else Some(spark.read.parquet(s"$root/${Files.readString(p).trim}"))
-  }
+  def readCurrent(spark: SparkSession, root: String): Option[DataFrame] =
+    ManifestLog.latest(spark, root)._2.headOption
+      .map(snap => spark.read.parquet(s"$root/$snap"))
 
   /** Stage `df`, audit the STAGED data, publish on a clean audit.
     * `audit` returns None to accept or Some(reason) to reject.
     * Returns Right(snapshot dir) on publish, Left(reason) on a
-    * rejected audit (stage deleted, CURRENT untouched). */
+    * rejected audit (stage deleted, nothing claimed). */
   def writeAuditPublish(spark: SparkSession, df: DataFrame, root: String,
       audit: DataFrame => Option[String]): Either[String, String] = {
-    Files.createDirectories(Paths.get(root))
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val snap = s"snap-${java.util.UUID.randomUUID()}"
     df.write.mode("error").parquet(s"$root/$snap")
     audit(spark.read.parquet(s"$root/$snap")) match {
       case Some(reason) =>
-        graft.TempDirs.deleteRecursively(Paths.get(root, snap))
+        fs.delete(new Path(root, snap), true)
         Left(reason)
       case None =>
-        // the snapshot being REPLACED stays on disk one more generation:
-        // a reader that resolved CURRENT just before this commit is
-        // still mid-scan on its files, so deleting it in the commit
-        // path would yank parquet bytes out from under a concurrent
-        // read (ADVICE r8). GC therefore trails by one publish — only
-        // grandparent snapshots (two commits stale) are deleted, the
-        // same bounded-retention trade lakehouse snapshot expiry makes:
-        // a reader must finish within one full publish cycle.
-        val prevPtr = Paths.get(root, Pointer)
-        val prev =
-          if (Files.exists(prevPtr)) Some(Files.readString(prevPtr).trim)
-          else None
-        val tmp = Paths.get(root, Pointer + ".tmp")
-        Files.writeString(tmp, snap)
-        Files.move(tmp, prevPtr,
-          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-        // best-effort GC of snapshots ≥2 generations stale; a crash
-        // here leaves an orphan directory, never corruption
-        val live = Set(snap) ++ prev
-        val s = Files.list(Paths.get(root))
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala
-            .filter(p => p.getFileName.toString.startsWith("snap-") &&
-              !live(p.getFileName.toString))
-            .foreach(p => graft.TempDirs.deleteRecursively(p))
-        } finally s.close()
+        @annotation.tailrec def publish(): Seq[String] = {
+          val (v, prev) = ManifestLog.latest(spark, root)
+          if (ManifestLog.claim(spark, root, v + 1, Seq(snap))) prev else publish()
+        }
+        val prev = publish()
+        // best-effort GC; a crash here leaves an orphan, never corruption
+        ManifestLog.trim(spark, root, 2, ManifestLog.GraceMs)
+          .foreach(s => fs.delete(new Path(root, s), true))
+        // the two kept versions may name snapshots older than the grace
+        // age; a stage no version names yet may be a racer's in audit
+        val live = Set(snap) ++ prev ++ ManifestLog.latest(spark, root)._2
+        val now = System.currentTimeMillis()
+        fs.listStatus(new Path(root))
+          .filter(st => st.getPath.getName.startsWith("snap-") &&
+            !live(st.getPath.getName) &&
+            now - st.getModificationTime >= ManifestLog.GraceMs)
+          .foreach(st => fs.delete(st.getPath, true))
         Right(snap)
     }
   }

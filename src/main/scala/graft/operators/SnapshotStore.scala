@@ -5,6 +5,8 @@ import org.apache.hadoop.fs.{FileContext, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ManifestLog
+import graft.ManifestLog.{readLines, writeLines}
 import graft.functions.Text
 
 /** The MATERIALIZED cross-snapshot dedup index store — the artifact
@@ -53,9 +55,9 @@ import graft.functions.Text
   *                             or unreadable sketch reads as
   *                             [[StoreSketch.AllHit]].
   *
-  * CRASH ATOMICITY — the Publish.scala write-audit-publish discipline
-  * at append granularity: [[stage]] writes all component deltas under
-  * a fresh `appends/<id>/` directory that no reader resolves (readers
+  * CRASH ATOMICITY — write-audit-publish at append granularity over
+  * [[graft.ManifestLog]], the commit primitive [[Publish]] uses per
+  * snapshot: [[stage]] writes all component deltas under a fresh `appends/<id>/` directory that no reader resolves (readers
   * union only manifest-listed appends), [[commit]] AUDITS the staged
   * bytes as they exist on disk (the distinct-digest invariant: staged
   * digest/fp deltas must be disjoint from the committed store —
@@ -75,12 +77,10 @@ import graft.functions.Text
   * OPTIMISTIC CONCURRENCY (the versioned-manifest protocol every real
   * manifest-based table format uses): a commit never overwrites the
   * manifest. It reads the current version N, audits against exactly
-  * that state, and publishes MANIFEST.v{N+1} with a CREATE-IF-ABSENT
-  * rename ([[publishOnce]] — atomic on HDFS; an object-store
-  * deployment swaps in its conditional put, the same trade [[Publish]]
-  * documents). Only one writer can claim a given version, so a commit
-  * that lands is provably derived from the state it audited against; a
-  * losing racer's rename fails, and it RETRIES — re-reads the new
+  * that state, and claims MANIFEST.v{N+1} create-if-absent
+  * ([[publishOnce]] → [[graft.ManifestLog.claim]]), so a commit that
+  * lands is provably derived from the state it audited against; a
+  * losing racer's claim fails, and it RETRIES — re-reads the new
   * state, re-checks idempotence, re-audits its staged bytes against
   * the winner's rows — so two racing non-overlapping appends BOTH
   * commit (no lost append id), while a racing append whose staged
@@ -156,7 +156,6 @@ object SnapshotStore {
   private def hfs(spark: SparkSession, p: HPath) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private val ManifestRe = """MANIFEST\.v(\d+)""".r
   private val TombstoneLine = """#tombstone@(\d+) (.+)""".r
 
   /** Append ids are manifest LINES and path components — free text
@@ -170,7 +169,7 @@ object SnapshotStore {
     require(aid.nonEmpty && aid.trim == aid &&
       !aid.startsWith("#") && !aid.startsWith(".") &&
       !aid.exists(c => c == '\n' || c == '\r' || c == '/' || c == '\\') &&
-      !ManifestRe.pattern.matcher(aid).matches(),
+      !ManifestLog.VersionName.pattern.matcher(aid).matches(),
       s"SnapshotStore append id '$aid' is invalid: ids must be non-empty " +
         "and trimmed, must not start with '#' or '.', must not contain " +
         "newlines or path separators, and must not match the " +
@@ -189,12 +188,6 @@ object SnapshotStore {
     hfs(spark, m).create(m, true).close()
   }
 
-  /** Grace age for marked (in-flight) staging dirs — [[gcOrphans]]
-    * refuses to sweep a younger marked dir, so a sweep racing a live
-    * [[stage]] can no longer eat it (VERDICT r18 #2a). A crashed stage
-    * is reclaimed once its marker ages past this. */
-  val DefaultGcGraceMs: Long = 15L * 60 * 1000
-
   /** Manifest versions kept by [[gcOrphans]]'s history trim — the
     * retention floor a pinned reader (or a replayed keyed append
     * resolving tombstones) can rely on. */
@@ -208,47 +201,20 @@ object SnapshotStore {
   final case class Manifest(version: Long, ids: Seq[String],
       tombstones: Map[String, Long])
 
-  /** The one line-file format — `MANIFEST.v*`, `.summary/baseline`
-    * and `.summary/did.hits`: UTF-8, one entry per line (valid ids
-    * never contain newlines — [[requireValidId]]), blank lines
-    * ignored. */
-  private def readLines(spark: SparkSession, p: HPath): Vector[String] = {
-    val in = hfs(spark, p).open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().map(_.trim).filter(_.nonEmpty).toVector
-    finally in.close()
-  }
-
-  private def writeLines(spark: SparkSession, p: HPath,
-      lines: Seq[String]): Unit = {
-    val out = hfs(spark, p).create(p, true)
-    try out.write(lines.map(_ + "\n").mkString.getBytes("UTF-8"))
-    finally out.close()
-  }
-
   /** Parse the CURRENT manifest — the highest MANIFEST.v{N} present.
     * Readers resolve ONLY its ids. A line is an id or a
     * `#tombstone@<v> <id>`; any other `#` line throws, naming the file
     * — a manifest this code did not write is never read silently. */
   private[graft] def currentManifest(spark: SparkSession,
       dir: String): Manifest = {
-    val d = new HPath(dir)
-    val fs = hfs(spark, d)
-    val versions =
-      if (!fs.exists(d)) Seq.empty
-      else fs.listStatus(d).toSeq.map(_.getPath.getName)
-        .collect { case ManifestRe(n) => n.toLong }
-    if (versions.isEmpty) Manifest(0L, Seq.empty, Map.empty)
-    else {
-      val v = versions.max
-      val p = new HPath(s"$dir/MANIFEST.v$v")
-      val (marked, ids) = readLines(spark, p).partition(_.startsWith("#"))
-      Manifest(v, ids, marked.map {
-        case TombstoneLine(tv, id) => id -> tv.toLong
-        case line => throw new IllegalStateException(
-          s"SnapshotStore manifest $p has an unrecognized line '$line'")
-      }.toMap)
-    }
+    val (v, lines) = ManifestLog.latest(spark, dir)
+    val (marked, ids) = lines.partition(_.startsWith("#"))
+    Manifest(v, ids, marked.map {
+      case TombstoneLine(tv, id) => id -> tv.toLong
+      case line => throw new IllegalStateException(
+        s"SnapshotStore manifest $dir/MANIFEST.v$v has an unrecognized " +
+          s"line '$line'")
+    }.toMap)
   }
 
   /** Committed append ids, in commit order (empty before the first
@@ -790,48 +756,15 @@ object SnapshotStore {
       }
     }
 
-  /** Atomically publish `ids` (+ carried `tombstones`) as manifest
-    * version `version` — CREATE-IF-ABSENT: the content is written to a
-    * uuid'd dot-temp (invisible to [[currentManifest]]'s pattern) and
-    * renamed WITHOUT overwrite (hard-linked on a local filesystem), so
-    * exactly one writer can claim a given version. Returns false when
-    * a racer already claimed it — the caller re-reads the new state and
-    * retries. */
+  /** Claim manifest version `version` with `ids` (+ carried
+    * `tombstones`); false when a racer already claimed it — the caller
+    * re-reads the new state and retries. */
   private[graft] def publishOnce(spark: SparkSession, dir: String,
       ids: Seq[String], tombstones: Map[String, Long],
-      version: Long): Boolean = {
-    val mf = new HPath(s"$dir/MANIFEST.v$version")
-    val fs = hfs(spark, mf)
-    val tmp = new HPath(s"$dir/.MANIFEST.tmp-${java.util.UUID.randomUUID()}")
-    writeLines(spark, tmp, ids ++ tombstones.toSeq.sortBy(t => (t._2, t._1))
-      .map { case (t, v) => s"#tombstone@$v $t" })
-    try {
-      fs match {
-        // the local filesystem's no-overwrite rename is check-then-
-        // rename (two racers can both "win", losing an append) and its
-        // checksum layer renames the .crc separately (a reader can see
-        // one writer's bytes under another's checksum); link(2) creates
-        // the name atomically or fails, and the link carries no .crc
-        case local: org.apache.hadoop.fs.LocalFileSystem =>
-          java.nio.file.Files.createLink(local.pathToFile(mf).toPath,
-            local.pathToFile(tmp).toPath)
-          fs.delete(tmp, false)
-        case _ =>
-          FileContext.getFileContext(fs.getUri,
-              spark.sparkContext.hadoopConfiguration)
-            .rename(tmp, mf) // no Rename.OVERWRITE: fails if the version exists
-      }
-      true
-    } catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-          _: java.nio.file.FileAlreadyExistsException =>
-        fs.delete(tmp, false); false
-      case e: java.io.IOException if fs.exists(mf) =>
-        // some FileContext implementations surface the existing
-        // destination as a plain IOException — same lost race
-        fs.delete(tmp, false); false
-    }
-  }
+      version: Long): Boolean =
+    ManifestLog.claim(spark, dir, version,
+      ids ++ tombstones.toSeq.sortBy(t => (t._2, t._1))
+        .map { case (t, v) => s"#tombstone@$v $t" })
 
   /** AUDIT the staged append as it exists on disk, then atomically
     * publish it into the next manifest version. The audit re-reads the
@@ -1204,13 +1137,11 @@ object SnapshotStore {
     *    FileNotFoundException rather than the stale-snapshot error
     *    (superseded unmarked dirs are reclaimed without grace — the
     *    no-GC-under-live-pinned-readers cadence is what closes this).
-    * Manifest HISTORY is trimmed too: versions below
-    * current − `keepManifests` are deleted (the retention floor for
-    * pinned readers), so the dir listing stays flat over thousands of
-    * commits instead of accumulating one file per commit forever.
-    * Torn publish temporaries are swept under the same grace rule —
-    * a young `.MANIFEST.tmp-*` may belong to a publish between its
-    * write and its rename. `tombstoneRetention = Some(k)` additionally
+    * Manifest HISTORY is trimmed too ([[graft.ManifestLog.trim]]: the
+    * newest `keepManifests` versions stay — the retention floor for
+    * pinned readers — and torn claim temporaries past `graceMs` go), so
+    * the dir listing stays flat over thousands of commits.
+    * `tombstoneRetention = Some(k)` additionally
     * drops tombstones created more than k manifest versions ago
     * (publishing a trimmed manifest version) — the scaladoc'd
     * checkpoint-retention license, now a mechanism: size k so version
@@ -1220,7 +1151,7 @@ object SnapshotStore {
     * horizon would let [[appendAs]] re-append. Returns the deleted
     * append ids. */
   def gcOrphans(spark: SparkSession, dir: String,
-      graceMs: Long = DefaultGcGraceMs,
+      graceMs: Long = ManifestLog.GraceMs,
       keepManifests: Int = DefaultKeepManifests,
       tombstoneRetention: Option[Long] = None): Seq[String] = {
     val root = new HPath(s"$dir/appends")
@@ -1241,21 +1172,7 @@ object SnapshotStore {
         else done = publishOnce(spark, dir, m.ids, kept, m.version + 1)
       }
     }
-    if (fs.exists(new HPath(dir))) {
-      fs.listStatus(new HPath(dir)).toSeq
-        .filter(st => st.getPath.getName.startsWith(".MANIFEST.tmp-") &&
-          now - st.getModificationTime >= graceMs)
-        .foreach(st => fs.delete(st.getPath, false))
-      val versions = fs.listStatus(new HPath(dir)).toSeq.map(_.getPath)
-        .flatMap(p => p.getName match {
-          case ManifestRe(n) => Some(n.toLong -> p); case _ => None
-        })
-      if (versions.nonEmpty) {
-        val cur = versions.map(_._1).max
-        versions.filter(_._1 <= cur - math.max(1, keepManifests))
-          .foreach { case (_, p) => fs.delete(p, false) }
-      }
-    }
+    ManifestLog.trim(spark, dir, keepManifests, graceMs)
     // the dir's cached component schemas die on every sweep — cheap
     // (one re-inference later), and it covers the store-deleted-and-
     // recreated-at-the-same-path case even when `appends/` itself is

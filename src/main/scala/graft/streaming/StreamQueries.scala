@@ -460,14 +460,12 @@ object StreamQueries {
     *
     * Durability: the sink is an [[graft.sinks.AtomicBucketStore]] —
     * each micro-batch writes its merged buckets to a FRESH generation
-    * directory and commits with a single atomic manifest rename, so a
-    * crash at ANY point leaves the previous fully-consistent bucket set
-    * visible (the crash-simulation spec in AtomicBucketStoreSpec proves
-    * it). This replaces the earlier dynamic-partition overwrite, which
-    * deleted live files before the new ones were durable — the
-    * VERDICT r5–r7 "half-written bucket" carry-over. It is the minimal
-    * file-layout transactional core of what Delta/Iceberg or the DB's
-    * own MERGE would provide in production.
+    * and commits by claiming the next manifest version
+    * ([[graft.ManifestLog.claim]]), so a crash at ANY point leaves the
+    * previous fully-consistent bucket set visible; replaced buckets are
+    * deleted one commit later. It is the minimal file-layout
+    * transactional core of what Delta/Iceberg or the DB's own MERGE
+    * would provide in production.
     *
     * Scale contract: the sink is hash-partitioned into `UpsertBuckets`
     * key-hash buckets and each micro-batch rewrites ONLY the buckets
@@ -492,20 +490,19 @@ object StreamQueries {
         .localCheckpoint(true) // computed once: bucket probe + merge input
       val touched = batchAgg.select(col("bucket")).distinct()
         .collect().map(_.getLong(0)).toSeq // bounded: <= UpsertBuckets ids
-      // manifest-pruned read: only the touched buckets' current gen dirs.
+      // manifest-pruned read: only the touched buckets' current gen dirs,
+      // resolved by the store at the version this write commits over.
       // The partition column is not recoverable from a bucket=K read
-      // root, so it is recomputed from the keys — exact, pure hash.
-      val existing = AtomicBucketStore.bucketPaths(cur, touched) match {
-        case Seq() => None
-        case paths => Some(s.read.parquet(paths: _*).withColumn("bucket", bucketOf))
-      }
-      val merged = existing.fold(batchAgg)(_.unionByName(batchAgg)
+      // root, so it is recomputed from the keys — exact, pure hash. The
+      // generation write never touches the directories it reads from
+      // (GC trails the commit), so no pre-write materialization.
+      AtomicBucketStore.writeGeneration(s, cur, touched) {
+        case Seq() => batchAgg
+        case paths => s.read.parquet(paths: _*).withColumn("bucket", bucketOf)
+          .unionByName(batchAgg)
           .groupBy(col("user_id"), col("event_type"), col("bucket"))
-          .agg(min(col("first_event_id")).as("first_event_id")))
-      // no pre-write materialization needed: the generation write never
-      // touches the directories it reads from (old gens stay live until
-      // the post-commit GC), so read-input deletion can't race the write
-      AtomicBucketStore.writeGeneration(merged, cur, touched)
+          .agg(min(col("first_event_id")).as("first_event_id"))
+      }
       ()
     }
     def runOnce(): Unit = drain(eventsStream(spark, dir)

@@ -488,32 +488,41 @@ class PlanSpec extends AnyFunSuite {
     // contract under the extra ADC ranking: per-task partial top-k
     // before every exchange, probe LUT broadcast, never a cartesian.
     // Since r21 the final plan's branches start from the CHECKPOINTED
-    // nprobe=2 candidate set (one scoring pass instead of five), so
-    // the fan-out contract is asserted on the scoring subtree itself —
-    // rebuilt here through the same public kernels ivfPqRecall chains.
-    val p = plan("n76_ivfpq_ann")
+    // nprobe=2 candidate set, so the scoring fan-out runs while the
+    // query is constructed: the fan-out contract is asserted on the
+    // plans that construction executes — every join pairing corpus
+    // vectors with probes (its output carries vec_id and probe_id).
+    // Auto-broadcast is off, so only the query's own broadcast hint can
+    // make the fan-out a BroadcastNestedLoopJoin.
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val executed = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = executed.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.getOption(key)
+    spark.listenerManager.register(listener)
+    spark.conf.set(key, "-1")
+    val p = try {
+      val p = plan("n76_ivfpq_ann")
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+      p
+    } finally {
+      spark.listenerManager.unregister(listener)
+      prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
     assert(p.contains("WindowGroupLimit"), p)
     assert(!p.contains("CartesianProduct"), p)
-    import graft.operators.{IvfPq, Pq, Similarity}
-    import org.apache.spark.sql.functions.{broadcast, col}
-    val prepared = Pq.prepareKeeping(
-      graft.sources.Tables.embeddings(spark, sf),
-      col("embedding").cast("array<double>").as("v"))
-    val (codebooks, _) = Pq.trainPrepared(prepared)
-    val encoded = Pq.assignAll(prepared, codebooks)
-      .withColumn("cell", Similarity.ivfCell(col("v")))
-    val lut = Pq.probeLut(
-      Pq.prepareKeeping(IvfPq.probeFrame(spark),
-        col("embedding").as("pvec"), col("pcell"), col("pcell2"))
-        .withColumnRenamed("vec_id", "probe_id"),
-      codebooks)
-    val scored = encoded.crossJoin(broadcast(lut))
-      .select(col("probe_id"), col("vec_id"), col("cell"),
-        Similarity.cosine(col("v"), col("pvec")).as("cos"),
-        Pq.adcScore.as("adc"))
-    val sp = scored.queryExecution.executedPlan.toString
-    assert(sp.contains("BroadcastNestedLoopJoin"), sp)
-    assert(!sp.contains("CartesianProduct"), sp)
+    val fanOut = executed.asScala.toSeq
+      .flatMap(qe => QueryProfile.planNodes(qe.executedPlan))
+      .filter(n => Set("vec_id", "probe_id").subsetOf(n.output.map(_.name).toSet))
+    val shown = executed.asScala.map(_.executedPlan.toString).mkString("\n")
+    assert(fanOut.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]), shown)
+    assert(!fanOut.exists(_.isInstanceOf[CartesianProductExec]), shown)
   }
 
   test("segment dedup computes 'first' as an aggregate — no window sort " +

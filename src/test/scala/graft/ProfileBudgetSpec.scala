@@ -36,7 +36,10 @@ class ProfileBudgetSpec extends AnyFunSuite {
     "p10_refresh_probe" -> (3, 3),
     "s02_stream_window" -> (3, 4),
     "n02_dedup_jaccard" -> (5, 5),
-    "n63_containment_prefix" -> (9, 9))
+    "n63_containment_prefix" -> (9, 9),
+    // write-audit-publish over the versioned manifest: the maximum over
+    // three cold runs
+    "p29_write_audit_publish" -> (12, 12))
 
   budgets.foreach { case (q, (maxJobs, maxStages)) =>
     test(s"$q stays within its job and stage budget") {

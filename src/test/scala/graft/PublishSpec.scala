@@ -7,9 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Publish
 
-/** WAP contract (p29): a rejected audit or a crash before the pointer
-  * rename never changes what readers see; a successful publish swaps
-  * the whole snapshot atomically.
+/** WAP contract (p29): a rejected audit or a crash before the manifest
+  * claim never changes what readers see; a successful publish swaps
+  * the whole snapshot atomically; racing publishers each claim their
+  * own version; GC never removes a young stage no version references.
   */
 class PublishSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -82,5 +83,39 @@ class PublishSpec extends AnyFunSuite {
     // one more publish: s1 is now two generations stale and is GC'd
     val Right(s3) = Publish.writeAuditPublish(spark, Seq(3).toDF("v"), root, noAudit)
     assert(snaps() == Set(s2, s3), snaps().toString)
+  }
+
+  test("a young staged snapshot no version references survives two publishes") {
+    val root = TempDirs.create("graft-wap-inflight")
+    // another writer's stage, written and still being audited
+    Seq(7).toDF("v").write.parquet(s"$root/snap-inflight")
+    assert(Publish.writeAuditPublish(spark, Seq(1).toDF("v"), root, noAudit).isRight)
+    assert(Publish.writeAuditPublish(spark, Seq(2).toDF("v"), root, noAudit).isRight)
+    assert(Files.exists(Paths.get(root, "snap-inflight")),
+      "GC removed a young stage that may still be auditing")
+    assert(Publish.readCurrent(spark, root).get.as[Int].collect()
+      .sameElements(Array(2)))
+  }
+
+  test("racing publishers: every publish lands on its own version") {
+    val root = TempDirs.create("graft-wap-race")
+    val writers = 4
+    val rounds = 10
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(writers)
+    val results = try {
+      (0 until writers).map { w =>
+        pool.submit(() => (0 until rounds).map { r =>
+          Publish.writeAuditPublish(spark, Seq(w * 100 + r).toDF("v"), root, noAudit)
+        })
+      }.flatMap(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
+    } finally pool.shutdown()
+    assert(results.forall(_.isRight), results.filter(_.isLeft).toString)
+    assert(results.distinct.size == writers * rounds)
+    // one claimed version per publish: none shared, none skipped
+    assert(ManifestLog.latest(spark, root)._1 == writers * rounds)
+    val published = (for (w <- 0 until writers; r <- 0 until rounds)
+      yield w * 100 + r).toSet
+    val current = Publish.readCurrent(spark, root).get.as[Int].collect()
+    assert(current.length == 1 && published(current.head), current.toSeq.toString)
   }
 }
