@@ -26,31 +26,44 @@ final class QueryProfile private (sc: SparkContext)
     extends StreamingQueryListener {
   import QueryProfile._
 
-  // the open window's totals (None between windows), and every running
-  // job: start, description, started inside the window
+  // the open window's totals (None between windows); every running job
+  // so far (its end not yet known) and whether it started inside the
+  // window; each listed stage's owner, the first running job that
+  // listed it (later jobs skip it)
   private var acc: Option[Profile] = None
-  private val running = mutable.HashMap.empty[Int, (Long, String, Boolean)]
+  private val running = mutable.HashMap.empty[Int, (Job, Boolean)]
+  private val owner = mutable.HashMap.empty[Int, Int]
 
   private def update(f: Profile => Profile): Unit = synchronized { acc = acc.map(f) }
 
   private val scheduler = new SparkListener {
     override def onJobStart(e: SparkListenerJobStart): Unit =
       QueryProfile.this.synchronized {
-        running(e.jobId) = (e.time, Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .orElse(e.stageInfos.headOption.map(_.name)).getOrElse(""),
+        val props = Option(e.properties)
+        def prop(key: String) = props.flatMap(p => Option(p.getProperty(key)))
+        running(e.jobId) = (Job(e.jobId, e.time, e.time,
+          prop("spark.job.description")
+            .orElse(e.stageInfos.headOption.map(_.name)).getOrElse(""),
+          0, prop("spark.job.tags").exists(_.contains(BroadcastTag))),
           acc.nonEmpty)
+        e.stageIds.foreach(owner.getOrElseUpdate(_, e.jobId))
       }
     override def onJobEnd(e: SparkListenerJobEnd): Unit =
       QueryProfile.this.synchronized {
-        running.remove(e.jobId).foreach { case (t, desc, inWindow) =>
+        owner.filterInPlace((_, j) => j != e.jobId)
+        running.remove(e.jobId).foreach { case (j, inWindow) =>
           if (inWindow)
-            update(p => p.copy(jobs = p.jobs :+ Job(e.jobId, t, e.time, desc)))
+            update(p => p.copy(jobs = p.jobs :+ j.copy(endMs = e.time)))
         }
         QueryProfile.this.notifyAll()
       }
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-      update(p => p.copy(stages = p.stages + 1))
+      QueryProfile.this.synchronized {
+        owner.get(e.stageInfo.stageId).flatMap(running.get).foreach {
+          case (j, w) => running(j.id) = (j.copy(stages = j.stages + 1), w)
+        }
+        update(p => p.copy(stages = p.stages + 1))
+      }
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
       val m = e.taskMetrics
       val i = e.taskInfo
@@ -132,9 +145,15 @@ final class QueryProfile private (sc: SparkContext)
 
 object QueryProfile {
 
-  /** One finished job: id, driver-clock start and end (epoch ms), and its
-    * description (the first stage's call site when none is set). */
-  final case class Job(id: Int, startMs: Long, endMs: Long, desc: String)
+  /** One finished job: id, driver-clock start and end (epoch ms), its
+    * description (the first stage's call site when none is set), the
+    * stages it completed (stages it skipped are another job's) and
+    * whether it is a broadcast exchange's build job. */
+  final case class Job(id: Int, startMs: Long, endMs: Long, desc: String,
+      stages: Int, broadcast: Boolean)
+
+  /** The job tag Spark's broadcast exchanges put on their build jobs. */
+  private val BroadcastTag = "broadcast exchange"
 
   /** One stream's micro-batches: batches that moved rows, and summed and
     * max engine durations. Wall minus triggerMs is time spent outside

@@ -571,7 +571,7 @@ object SparkEntry {
           CAST(len(list_intersect(a.sset, b.sset)) AS DOUBLE)
             / len(list_distinct(list_concat(a.sset, b.sset))) AS jaccard
         FROM s a JOIN s b ON a.doc_id % 2 = 0 AND b.doc_id % 2 = 1)
-      SELECT * FROM pairs WHERE jaccard >= 0.8"""
+      SELECT * FROM pairs WHERE jaccard >= ${MinHashLsh.Threshold}"""
 
   /** Shared oracle for the Gopher composite quality gate: n66 (batch
     * explode+agg form) and s24 (stateless streaming HOF form) emit the
@@ -640,7 +640,7 @@ object SparkEntry {
       losers$x AS (SELECT DISTINCT b.doc_id AS loser
                  FROM s3$x a JOIN s3$x b ON a.doc_id < b.doc_id
                  WHERE CAST(len(list_intersect(a.sset, b.sset)) AS DOUBLE)
-                     / len(list_distinct(list_concat(a.sset, b.sset))) >= 0.8),
+                     / len(list_distinct(list_concat(a.sset, b.sset))) >= ${MinHashLsh.Threshold}),
       f3$x AS (SELECT f2$x.*,
                (pass2 AND doc_id NOT IN (SELECT loser FROM losers$x)) AS pass3
              FROM f2$x),
@@ -830,7 +830,7 @@ object SparkEntry {
           CAST(len(list_intersect(a.sset, b.sset)) AS DOUBLE)
             / len(list_distinct(list_concat(a.sset, b.sset))) AS jaccard
         FROM s a JOIN s b ON a.doc_id % 3 < 2 AND b.doc_id % 3 = 2)
-      SELECT * FROM pairs WHERE jaccard >= 0.8"""
+      SELECT * FROM pairs WHERE jaccard >= ${MinHashLsh.Threshold}"""
 
   private lazy val curationPipelineSql: String = {
     val stageRows = graft.operators.Curation.Stages.map { case (nm, f) =>
@@ -2900,7 +2900,7 @@ object SparkEntry {
     // robust to fixture change, not just true on today's fixtures
     // (ADVICE r01). Lower-threshold exact detection = n02.
     "n03_dedup_minhash_lsh" -> (((s: SparkSession, d: String) => {
-      MinHashLsh.nearDupPairs(pairDocs(s, d), "doc_id", "text")
+      MinHashLsh.nearDupPairs(pairDocs(s, d))
     }, Some(s"""
       WITH s AS (
         SELECT doc_id, $ssetSql AS sset
@@ -2910,7 +2910,7 @@ object SparkEntry {
           CAST(len(list_intersect(a.sset, b.sset)) AS DOUBLE)
             / len(list_distinct(list_concat(a.sset, b.sset))) AS jaccard
         FROM s a JOIN s b ON a.doc_id < b.doc_id)
-      SELECT * FROM pairs WHERE jaccard >= 0.8"""))),
+      SELECT * FROM pairs WHERE jaccard >= ${MinHashLsh.Threshold}"""))),
 
     // Cross-snapshot NEAR-dup delta — n84's near-duplicate completion
     // and n03's incremental-crawl shape: which NEW-snapshot docs
@@ -2925,7 +2925,7 @@ object SparkEntry {
       val docs = pairDocs(s, d)
       MinHashLsh.snapshotNearDupPairs(
         docs.where(col("doc_id") % 2 === 0),
-        docs.where(col("doc_id") % 2 === 1), "doc_id", "text")
+        docs.where(col("doc_id") % 2 === 1))
     }, Some(snapshotNearDupOracleSql))),
 
     // n85's streaming twin and the production ingest shape: the old
@@ -3780,8 +3780,7 @@ object SparkEntry {
     "n61_dedup_keep_best" -> (((s: SparkSession, d: String) => {
       val docs = pairDocs(s, d)
         .select(col("doc_id"), Text.tokenCountWs(col("text")).cast("long").as("n_toks"))
-      val pairs = MinHashLsh.nearDupPairs(pairDocs(s, d), "doc_id", "text",
-        threshold = 0.8)
+      val pairs = MinHashLsh.nearDupPairs(pairDocs(s, d))
       val labels = Dedup.connectedComponents(pairs)
       val win = Window.partitionBy(col("comp"))
         .orderBy(col("n_toks").desc, col("doc_id").asc)
@@ -3800,7 +3799,7 @@ object SparkEntry {
         SELECT a.doc_id AS a_id, b.doc_id AS b_id
         FROM s a JOIN s b ON a.doc_id < b.doc_id
         WHERE CAST(len(list_intersect(a.sset, b.sset)) AS DOUBLE)
-            / len(list_distinct(list_concat(a.sset, b.sset))) >= 0.8),
+            / len(list_distinct(list_concat(a.sset, b.sset))) >= ${MinHashLsh.Threshold}),
       edges AS (
         SELECT a_id AS src, b_id AS dst FROM pairs
         UNION ALL SELECT b_id, a_id FROM pairs),
@@ -4915,8 +4914,8 @@ object SparkEntry {
       val kept = Dedup.applySnapshotPolicy(
         docs.where(col("doc_id") % 2 === 1), aMd5, aFp, col("text"))
         .localCheckpoint()
-      val losers = MinHashLsh.snapshotNearDupPairs(
-        oldSnap, kept, "doc_id", "text").select(col("b_id"))
+      val losers = MinHashLsh.snapshotNearDupPairs(oldSnap, kept)
+        .select(col("b_id"))
       kept.join(losers, kept("doc_id") === losers("b_id"), "left_anti")
         .select(col("doc_id"), col("source"), col("lang"))
     }, Some(s"""
@@ -4938,7 +4937,7 @@ object SparkEntry {
              FROM (SELECT doc_id, $toksSql AS toks FROM bk)),
       nd AS (SELECT b.doc_id AS b_id FROM sa a JOIN sb b
              ON CAST(len(list_intersect(a.sset, b.sset)) AS DOUBLE)
-                / len(list_distinct(list_concat(a.sset, b.sset))) >= 0.8)
+                / len(list_distinct(list_concat(a.sset, b.sset))) >= ${MinHashLsh.Threshold})
       SELECT doc_id, source, lang FROM bk
       WHERE doc_id NOT IN (SELECT b_id FROM nd)"""))),
 
@@ -5174,7 +5173,7 @@ object SparkEntry {
     // composing the sketch path into curation, at the sketch's cost.
     "n16_dedup_apply" -> (((s: SparkSession, d: String) => {
       val docs = pairDocs(s, d)
-      val losers = MinHashLsh.nearDupPairs(docs, "doc_id", "text", threshold = 0.8)
+      val losers = MinHashLsh.nearDupPairs(docs)
         .select(col("b_id"))
       docs.join(losers, docs("doc_id") === losers("b_id"), "left_anti")
         .select(col("doc_id"), col("lang"))
@@ -5188,7 +5187,7 @@ object SparkEntry {
             / len(list_distinct(list_concat(a.sset, b.sset))) AS jaccard
         FROM s a JOIN s b ON a.doc_id < b.doc_id)
       SELECT doc_id, lang FROM $docsT
-      WHERE doc_id NOT IN (SELECT b_id FROM pairs WHERE jaccard >= 0.8)"""))),
+      WHERE doc_id NOT IN (SELECT b_id FROM pairs WHERE jaccard >= ${MinHashLsh.Threshold})"""))),
 
     // Union-find dedup apply — the production semantics n16's greedy
     // pass approximates: connected components over the near-dup pairs
@@ -5199,7 +5198,7 @@ object SparkEntry {
     // closure (min reachable id == component min, edges symmetric).
     "n25_dedup_components" -> (((s: SparkSession, d: String) => {
       val docs = pairDocs(s, d)
-      val pairs = MinHashLsh.nearDupPairs(docs, "doc_id", "text", threshold = 0.8)
+      val pairs = MinHashLsh.nearDupPairs(docs)
       val labels = Dedup.connectedComponents(pairs)
       val losers = labels.where(col("comp") =!= col("id"))
         .select(col("id").as("loser"))
@@ -5214,7 +5213,7 @@ object SparkEntry {
         SELECT a.doc_id AS a_id, b.doc_id AS b_id
         FROM s a JOIN s b ON a.doc_id < b.doc_id
         WHERE CAST(len(list_intersect(a.sset, b.sset)) AS DOUBLE)
-            / len(list_distinct(list_concat(a.sset, b.sset))) >= 0.8),
+            / len(list_distinct(list_concat(a.sset, b.sset))) >= ${MinHashLsh.Threshold}),
       edges AS (
         SELECT a_id AS src, b_id AS dst FROM pairs
         UNION ALL SELECT b_id, a_id FROM pairs),
@@ -5649,7 +5648,7 @@ object SparkEntry {
           CAST(len(list_intersect(a.sset, b.sset)) AS DOUBLE)
             / len(list_distinct(list_concat(a.sset, b.sset))) AS jaccard
         FROM s a JOIN s b ON a.doc_id < b.doc_id)
-      SELECT * FROM pairs WHERE jaccard >= 0.8"""))),
+      SELECT * FROM pairs WHERE jaccard >= ${MinHashLsh.Threshold}"""))),
 
     // CMS maintained AS streaming state (StreamQueries.streamCmsSketch
     // scaladoc): the drained d×w counter table equals the batch sketch

@@ -195,8 +195,7 @@ object Curation {
     // n03's banded LSH pairs (S-curve ≈ 1 at t=0.8, so the pair set
     // equals brute force), n16's greedy drop-b policy
     val losers = mat(MinHashLsh.nearDupPairs(
-        b2.where(col("pass2")).select(col("doc_id"), col("text")),
-        "doc_id", "text", threshold = 0.8)
+        b2.where(col("pass2")).select(col("doc_id"), col("text")))
       .select(col("b_id").as("loser_id")).distinct(), "losers")
     val b3 = withPass3(b2, losers)
     val segs = Dedup.segmentsOf(b3.where(col("pass3")), k = 8)

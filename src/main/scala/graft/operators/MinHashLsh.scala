@@ -13,15 +13,8 @@ import graft.functions.Text
   * candidate generation is an equi-join on (band, key) — the only
   * shuffle, partitioned by band key, no global cross join. Candidates
   * are then verified with exact Jaccard, so precision is 1.0 and recall
-  * is the LSH S-curve: P(detect) = 1-(1-j^r)^b.
-  *
-  * Parameter choice (r=2, b=16, verify threshold 0.8): the verify
-  * threshold sits where the S-curve is ≈1, so the LSH output EQUALS the
-  * exact-Jaccard answer rather than approximating it — miss probability
-  * is (1-j²)^16 ≤ 0.36^16 ≈ 8e-8 at j=0.8 and ≈3e-12 at j=0.9. (The
-  * r01 configuration verified at t=0.55 where the r=2 S-curve dips to
-  * ~0.94 per pair — correct on the fixtures, fragile to fixture change.)
-  * Exact detection at lower thresholds is Dedup.jaccardPairs's job.
+  * is the LSH S-curve: P(detect) = 1-(1-j^r)^b. Every near-dup input
+  * is a `(doc_id, text)` frame, banded at the one operating point below.
   *
   * Hash = xxhash64(seed, shingle) with the numeric min as the sketch
   * component — deterministic, an order of magnitude cheaper per byte
@@ -30,6 +23,25 @@ import graft.functions.Text
   * to.
   */
 object MinHashLsh {
+
+  /** The operating point (k=32, r=2, so b=16 bands, verify threshold
+    * 0.8): the threshold sits where the S-curve is ≈1, so the LSH output
+    * EQUALS the exact-Jaccard answer rather than approximating it — miss
+    * probability is (1-j²)^16 ≤ 0.36^16 ≈ 8e-8 at j=0.8 and ≈3e-12 at
+    * j=0.9 (ShinglesSpec pins the premise). The r01 configuration
+    * verified at t=0.55, where the r=2 S-curve dips to ~0.94 per pair —
+    * correct on the fixtures, fragile to fixture change. Exact detection
+    * at lower thresholds is Dedup.jaccardPairs's job. The store's stored
+    * bands and its served probes share this banding by construction. */
+  val K = 32
+  val R = 2
+  val Threshold = 0.8
+
+  /** `(did, sset)` of a `(doc_id, text)` frame, empty sets dropped
+    * (they would band-collide globally). */
+  private[graft] def setsOf(docs: DataFrame): DataFrame = docs
+    .select(col("doc_id").as("did"), Text.shingleSet(col("text")).as("sset"))
+    .where(size(col("sset")) > 0)
 
   /** k-component MinHash signature of a shingle-set column (native
     * XXH64 kernel — one pass over the set for all k seeds). */
@@ -42,26 +54,20 @@ object MinHashLsh {
     * paths cannot drift. Carrying the shingle arrays through the b-way
     * explode would copy every set b times; candidates re-join the sets
     * later instead. */
-  def banded(sets: DataFrame, k: Int, r: Int): DataFrame = {
-    require(k % r == 0, "k must be a multiple of band width r")
+  def banded(sets: DataFrame): DataFrame =
     sets
-      .withColumn("sig", signature(col("sset"), k))
-      .select(col("did"),
-        explode(bandKeysFromSig(col("sig"), k, r)).as("bk"))
+      .withColumn("sig", signature(col("sset"), K))
+      .select(col("did"), explode(bandKeysFromSig(col("sig"))).as("bk"))
       .select(col("did"), col("bk.band"), col("bk.key"))
-  }
 
   /** The (band, key) array of a materialized signature column — ONE
     * shared kernel for every banding consumer (batch join, s19 bucket
     * state, s37's per-row stream banding), so the paths cannot drift. */
-  private[graft] def bandKeysFromSig(sig: Column, k: Int, r: Int): Column = {
-    require(k % r == 0, "k must be a multiple of band width r")
-    val b = k / r
-    array((0 until b).map(bi => struct(
+  private[graft] def bandKeysFromSig(sig: Column): Column =
+    array((0 until K / R).map(bi => struct(
       lit(bi).as("band"),
-      concat_ws("|", transform(slice(sig, bi * r + 1, r),
+      concat_ws("|", transform(slice(sig, bi * R + 1, R),
         _.cast("string"))).as("key"))): _*)
-  }
 
   /** Exact Jaccard of two shingle-set columns — the one formula every
     * verifier (batch, s19, s37) applies. */
@@ -72,7 +78,7 @@ object MinHashLsh {
     * against the sets frame — precision 1.0 regardless of how the
     * candidates were generated (batch band join or streaming bucket
     * state). */
-  def verify(candidates: DataFrame, sets: DataFrame, threshold: Double): DataFrame = {
+  def verify(candidates: DataFrame, sets: DataFrame): DataFrame = {
     val jac = jaccard(col("a_set"), col("b_set"))
     candidates
       .join(sets.select(col("did"), col("sset").as("a_set")), col("a_id") === col("did"))
@@ -80,25 +86,21 @@ object MinHashLsh {
       .join(sets.select(col("did"), col("sset").as("b_set")), col("b_id") === col("did"))
       .drop("did")
       .select(col("a_id"), col("b_id"), jac.as("jaccard"))
-      .where(col("jaccard") >= threshold)
+      .where(col("jaccard") >= Threshold)
   }
 
   /** Near-dup pairs: LSH candidates (any equal band) verified with exact
-    * Jaccard >= threshold. Output: a_id, b_id, jaccard. */
-  def nearDupPairs(docs: DataFrame, id: String, text: String,
-      k: Int = 32, r: Int = 2, threshold: Double = 0.8): DataFrame = {
+    * Jaccard >= [[Threshold]]. Output: a_id, b_id, jaccard. */
+  def nearDupPairs(docs: DataFrame): DataFrame = {
     // persisted: referenced by the banding pass AND both candidate
     // back-joins — without it the parquet scan + shingle kernel run 3×
     // per query (only identical exchanges get plan-level reuse). Tiny
     // at harness scale (the cache lives until session end); a 100 TB
     // deployment would persist to disk with an explicit unpersist, or
     // accept recompute.
-    val sets = docs
-      .select(col(id).as("did"), Text.shingleSet(col(text)).as("sset"))
-      .where(size(col("sset")) > 0) // empty sets would band-collide globally
-      .persist()
+    val sets = setsOf(docs).persist()
 
-    val bd = banded(sets, k, r)
+    val bd = banded(sets)
     val a = bd.as("a")
     val bb = bd.as("b")
     val candidates = a.join(bb,
@@ -107,7 +109,7 @@ object MinHashLsh {
       .select(col("a.did").as("a_id"), col("b.did").as("b_id"))
       .dropDuplicates("a_id", "b_id")
 
-    verify(candidates, sets, threshold)
+    verify(candidates, sets)
   }
 
   /** Cross-snapshot NEAR-dup delta — [[nearDupPairs]]'s incremental-
@@ -124,12 +126,7 @@ object MinHashLsh {
     * verification (precision 1.0) runs against the union of the two
     * sets frames; ids must be distinct across snapshots. Output:
     * (a_id old doc, b_id new doc, jaccard). */
-  def snapshotNearDupPairs(a: DataFrame, b: DataFrame, id: String,
-      text: String, k: Int = 32, r: Int = 2,
-      threshold: Double = 0.8): DataFrame = {
-    def setsOf(df: DataFrame) = df
-      .select(col(id).as("did"), Text.shingleSet(col(text)).as("sset"))
-      .where(size(col("sset")) > 0)
+  def snapshotNearDupPairs(a: DataFrame, b: DataFrame): DataFrame = {
     // persisted for the same 3-reference reason as nearDupPairs, and
     // with the same lifecycle caveat: the entries live until session
     // end (the bench clears caches between queries; a long-lived
@@ -137,12 +134,12 @@ object MinHashLsh {
     // materializing, or persist to disk — same trade as nearDupPairs)
     val setsA = setsOf(a).persist()
     val setsB = setsOf(b).persist()
-    val candidates = banded(setsA, k, r).as("a")
-      .join(banded(setsB, k, r).as("b"),
+    val candidates = banded(setsA).as("a")
+      .join(banded(setsB).as("b"),
         col("a.band") === col("b.band") && col("a.key") === col("b.key"))
       .select(col("a.did").as("a_id"), col("b.did").as("b_id"))
       .dropDuplicates("a_id", "b_id")
-    verify(candidates, setsA.union(setsB), threshold)
+    verify(candidates, setsA.union(setsB))
   }
 
   /** Probe a previous snapshot's (bands, sets) index with arriving
@@ -158,15 +155,13 @@ object MinHashLsh {
     * [[snapshotNearDupPairs]] on the same corpora: the bands are the
     * same kernel, so the candidate set matches, and both verify
     * exactly. */
-  def probeIndex(bandsA: DataFrame, setsA: DataFrame, arriving: DataFrame,
-      id: String = "doc_id", text: String = "text",
-      k: Int = 32, r: Int = 2, threshold: Double = 0.8): DataFrame = {
-    val banded = arriving
-      .select(col(id).as("b_id"), Text.shingleSet(col(text)).as("b_set"))
-      .where(size(col("b_set")) > 0)
-      .withColumn("sig", signature(col("b_set"), k))
+  def probeIndex(bandsA: DataFrame, setsA: DataFrame,
+      arriving: DataFrame): DataFrame = {
+    val banded = setsOf(arriving)
+      .select(col("did").as("b_id"), col("sset").as("b_set"))
+      .withColumn("sig", signature(col("b_set"), K))
       .select(col("b_id"), col("b_set"),
-        explode(bandKeysFromSig(col("sig"), k, r)).as("bk"))
+        explode(bandKeysFromSig(col("sig"))).as("bk"))
       .select(col("b_id"), col("b_set"),
         col("bk.band").as("band"), col("bk.key").as("key"))
     banded
@@ -176,7 +171,7 @@ object MinHashLsh {
         Seq("a_id"))
       .select(col("a_id"), col("b_id"),
         jaccard(col("a_set"), col("b_set")).as("jaccard"))
-      .where(col("jaccard") >= threshold)
+      .where(col("jaccard") >= Threshold)
       .groupBy(col("a_id"), col("b_id"))
       .agg(max(col("jaccard")).as("jaccard"))
   }

@@ -77,9 +77,9 @@ private[graft] object Par {
     }
   }
 
-  /** [[all]] over two thunks that return values: the s40/s42 setup
-    * pays two eager localCheckpoints of the store's digest indexes, each
-    * a small job plus scheduling floor; overlapping them halves that
+  /** [[all]] over two thunks that return values: the s40 setup pays
+    * two eager localCheckpoints of the store's digest indexes, each a
+    * small job plus scheduling floor; overlapping them halves that
     * serial floor and at corpus scale overlaps two store scans. */
   def par2[A, B](a: => A, b: => B): (A, B) = {
     var ra: Option[A] = None

@@ -32,6 +32,8 @@ import graft.functions.Text
   *                             dir younger than its grace age.
   *   appends/<id>/sets/        (did, sset)      one row per doc
   *   appends/<id>/bands/       (did, band, key) the LSH banding index
+  *                             at MinHashLsh.K/R, the banding
+  *                             [[serveNearDup]] probes with
   *   appends/<id>/digests/     (h)              DISTINCT exact md5 DELTA
   *   appends/<id>/fps/         (fp)             DISTINCT fingerprint DELTA
   *   appends/<id>/docs/        (did, lang, text) the CURATED CORPUS
@@ -632,23 +634,21 @@ object SnapshotStore {
     FamFile.keys.map(f =>
       f -> ids.map(id => id -> cachedSketch(spark, dir, id, f))).toMap
 
-  /** STAGE one snapshot's index rows: every component delta is written
-    * under `appends/<id>/`, which no reader resolves until [[commit]]
-    * publishes the id. Doc ids must be distinct across appended
-    * snapshots (caller contract, as in
+  /** STAGE one `(doc_id, text)` snapshot's index rows: every component
+    * delta is written under `appends/<id>/`, which no reader resolves
+    * until [[commit]] publishes the id. Doc ids must be distinct
+    * across appended snapshots (caller contract, as in
     * [[MinHashLsh.snapshotNearDupPairs]] — enforced by the commit
     * audit's doc-id check). `persistDocs` additionally writes the
-    * snapshot rows themselves (id column renamed `did`) as the `docs`
+    * snapshot rows themselves (`doc_id` renamed `did`) as the `docs`
     * component — the curated-corpus payload. Returns the append id. */
   private[graft] def stage(spark: SparkSession, dir: String,
-      snapshot: DataFrame, id: String = "doc_id", text: String = "text",
-      k: Int = 32, r: Int = 2, persistDocs: Boolean = false): String =
+      snapshot: DataFrame, persistDocs: Boolean = false): String =
     stageAs(spark, dir, s"append-${java.util.UUID.randomUUID()}",
-      snapshot, id, text, k, r, persistDocs)
+      snapshot, persistDocs)
 
   private[graft] def stageAs(spark: SparkSession, dir: String, aid: String,
-      snapshotDf: DataFrame, id: String = "doc_id", text: String = "text",
-      k: Int = 32, r: Int = 2, persistDocs: Boolean = false): String = {
+      snapshotDf: DataFrame, persistDocs: Boolean = false): String = {
     requireValidId(aid)
     val base = s"$dir/appends/$aid"
     // in-flight marker FIRST: from here until commit's publish, a
@@ -659,9 +659,7 @@ object SnapshotStore {
     // covers, so an earlier pin only widens the racer set, never
     // loses a conflict
     val pinned = snapshot(spark, dir)
-    val setsDf = snapshotDf
-      .select(col(id).as("did"), Text.shingleSet(col(text)).as("sset"))
-      .where(size(col("sset")) > 0)
+    val setsDf = MinHashLsh.setsOf(snapshotDf)
     // the component writes are INDEPENDENT Spark jobs — overlap them
     // (guide §2.6) instead of serializing 4 scheduling+commit floors; a
     // failed write leaves the staging as a crash would (its .INFLIGHT
@@ -680,15 +678,15 @@ object SnapshotStore {
         // no part files — still reads as the empty frame)
         val setsBack = spark.read.schema(setsDf.schema)
           .parquet(s"$base/sets")
-        MinHashLsh.banded(setsBack, k, r).write.mode("error")
+        MinHashLsh.banded(setsBack).write.mode("error")
           .parquet(s"$base/bands")
       },
-      () => snapshotDf.select(md5(col(text)).as("h")).distinct()
+      () => snapshotDf.select(md5(col("text")).as("h")).distinct()
         .write.mode("error").parquet(s"$base/digests"),
-      () => snapshotDf.select(Text.fingerprint(col(text)).as("fp"))
+      () => snapshotDf.select(Text.fingerprint(col("text")).as("fp"))
         .distinct().write.mode("error").parquet(s"$base/fps")) ++
       (if (persistDocs)
-        Seq(() => snapshotDf.withColumnRenamed(id, "did")
+        Seq(() => snapshotDf.withColumnRenamed("doc_id", "did")
           .write.mode("error").parquet(s"$base/docs"))
       else Seq.empty))
     // ONE aggregation pass over the staged BYTES (audit the bytes, not
@@ -928,9 +926,8 @@ object SnapshotStore {
     * `persistDocs` also stores the snapshot rows as the `docs`
     * component (the curated corpus itself). */
   def append(spark: SparkSession, dir: String, snapshot: DataFrame,
-      id: String = "doc_id", text: String = "text",
-      k: Int = 32, r: Int = 2, persistDocs: Boolean = false): String = {
-    val aid = stage(spark, dir, snapshot, id, text, k, r, persistDocs)
+      persistDocs: Boolean = false): String = {
+    val aid = stage(spark, dir, snapshot, persistDocs)
     commit(spark, dir, aid)
     aid
   }
@@ -950,8 +947,7 @@ object SnapshotStore {
     * gcOrphans). Returns true iff this call committed the append
     * (false = replay no-op). */
   def appendAs(spark: SparkSession, dir: String, aid: String,
-      snapshot: DataFrame, id: String = "doc_id", text: String = "text",
-      k: Int = 32, r: Int = 2, persistDocs: Boolean = false): Boolean = {
+      snapshot: DataFrame, persistDocs: Boolean = false): Boolean = {
     requireValidId(aid)
     val m = currentManifest(spark, dir)
     if (m.ids.contains(aid) || m.tombstones.contains(aid)) false
@@ -959,7 +955,7 @@ object SnapshotStore {
       val base = new HPath(s"$dir/appends/$aid")
       val fs = hfs(spark, base)
       if (fs.exists(base)) fs.delete(base, true)
-      stageAs(spark, dir, aid, snapshot, id, text, k, r, persistDocs)
+      stageAs(spark, dir, aid, snapshot, persistDocs)
       commit(spark, dir, aid)
       true
     }
@@ -1232,12 +1228,10 @@ object SnapshotStore {
     * the same corpora (SnapshotStoreSpec). bands+sets come from ONE
     * pinned [[Snapshot]], never two manifest resolutions. The same
     * plan serves batch and streaming `arriving` frames. */
-  def serveNearDup(spark: SparkSession, dir: String, arriving: DataFrame,
-      id: String = "doc_id", text: String = "text",
-      k: Int = 32, r: Int = 2, threshold: Double = 0.8): DataFrame = {
+  def serveNearDup(spark: SparkSession, dir: String,
+      arriving: DataFrame): DataFrame = {
     val s = snapshot(spark, dir)
-    MinHashLsh.probeIndex(s.bands(spark), s.sets(spark),
-      arriving, id, text, k, r, threshold)
+    MinHashLsh.probeIndex(s.bands(spark), s.sets(spark), arriving)
   }
 
   /** Snapshot-delta classification of `b` against the STORED digest

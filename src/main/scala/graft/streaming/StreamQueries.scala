@@ -690,16 +690,11 @@ object StreamQueries {
     * Jaccard (precision 1.0), so the drained result EQUALS the batch
     * n03 answer and shares its oracle. */
   def streamLshPairs(spark: SparkSession, docsStream: DataFrame,
-      docsBatch: DataFrame, k: Int = 32, r: Int = 2,
-      threshold: Double = 0.8): DataFrame = {
+      docsBatch: DataFrame): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import graft.operators.MinHashLsh
-    def sets(df: DataFrame): DataFrame = df
-      .select(col("doc_id").as("did"),
-        graft.functions.Shingles.shingleSet(col("text"), 3).as("sset"))
-      .where(size(col("sset")) > 0)
-    val keyed = MinHashLsh.banded(sets(docsStream), k, r)
+    val keyed = MinHashLsh.banded(MinHashLsh.setsOf(docsStream))
       .select(concat_ws("#", col("band"), col("key")).as("bucket"), col("did"))
       .as[(String, Long)]
     val cand = keyed.groupByKey(_._1)
@@ -714,7 +709,7 @@ object StreamQueries {
       }.toDF("a_id", "b_id")
     val candTable = runToTable(spark, cand, "append")
       .dropDuplicates("a_id", "b_id") // a pair may collide in >1 band
-    MinHashLsh.verify(candTable, sets(docsBatch), threshold)
+    MinHashLsh.verify(candTable, MinHashLsh.setsOf(docsBatch))
   }
 
   /** s19 per-bucket state: doc ids already seen in this (band, key). */
@@ -816,19 +811,12 @@ object StreamQueries {
     * bands are identical, so the candidate set is identical, and
     * verification is exact (same oracle). */
   def streamSnapshotNearDup(spark: SparkSession, oldDocs: DataFrame,
-      arrivingDocs: DataFrame, k: Int = 32, r: Int = 2,
-      threshold: Double = 0.8, mode: String = "complete"): DataFrame = {
+      arrivingDocs: DataFrame, mode: String = "complete"): DataFrame = {
     import graft.operators.MinHashLsh
-    import graft.functions.Text
-    val setsA = oldDocs
-      .select(col("doc_id").as("did"), Text.shingleSet(col("text")).as("sset"))
-      .where(size(col("sset")) > 0)
+    val setsA = MinHashLsh.setsOf(oldDocs)
       .localCheckpoint() // sever the fixture scan from every micro-batch
-    val bandsA = MinHashLsh.banded(setsA, k, r).localCheckpoint()
-    runToTable(spark,
-      MinHashLsh.probeIndex(bandsA, setsA, arrivingDocs,
-        k = k, r = r, threshold = threshold),
-      mode)
+    val bandsA = MinHashLsh.banded(setsA).localCheckpoint()
+    runToTable(spark, MinHashLsh.probeIndex(bandsA, setsA, arrivingDocs), mode)
   }
 
   /** Streaming near-dup delta served from the MATERIALIZED
@@ -841,11 +829,9 @@ object StreamQueries {
     * oracle). Only the confirmed-pair max-agg is stateful; the same
     * exactly-once-per-pair update emission as s41 applies (`mode`). */
   def streamSnapshotNearDupFromStore(spark: SparkSession, storeDir: String,
-      arrivingDocs: DataFrame, k: Int = 32, r: Int = 2,
-      threshold: Double = 0.8, mode: String = "complete"): DataFrame =
+      arrivingDocs: DataFrame, mode: String = "complete"): DataFrame =
     runToTable(spark,
-      graft.operators.SnapshotStore.serveNearDup(spark, storeDir,
-        arrivingDocs, k = k, r = r, threshold = threshold),
+      graft.operators.SnapshotStore.serveNearDup(spark, storeDir, arrivingDocs),
       mode)
 
   /** Streaming snapshot-delta classification served from the
@@ -1015,8 +1001,8 @@ object StreamQueries {
     *
     *   batch-side, once per increment (the s40 train/serve split):
     *   the store's digest components load as the cross-snapshot gate
-    *   (lineage-severed file-scan indexes), the increment's KEPT
-    *   survivors train the five curation gates
+    *   (file scans of the pinned pre-increment snapshot), the
+    *   increment's KEPT survivors train the five curation gates
     *   ([[graft.operators.Curation.trainGates]] on
     *   [[graft.operators.Dedup.applySnapshotPolicy]]'s output —
     *   per-increment training, the FineWeb policy pinned on
@@ -1088,13 +1074,12 @@ object StreamQueries {
       budgetEn: Long, budgetOther: Long,
       checkpoint: Option[String] = None): Unit = {
     import graft.operators.{Curation, Dedup, SnapshotStore}
-    // the PRE-increment gate state, severed from every micro-batch:
-    // the policy (and n91's batch twin) classifies against the store
-    // as of increment START — per-batch re-reads would let earlier
-    // micro-batches' own appends gate later ones, and a restart's
-    // manifest already lists them, so the pinned snapshot filters the
-    // increment's own keyed ids out; both components from that ONE
-    // pinned pre-increment version (SnapshotStore.Snapshot)
+    // the PRE-increment gate state: the policy (and n91's batch twin)
+    // classifies against the store as of increment START. Isolation
+    // comes from the pinned Snapshot: its id list is fixed here, so
+    // earlier micro-batches' own appends never gate later ones, and
+    // the increment's own keyed ids (already listed on a restart) are
+    // filtered out; both components resolve from that ONE version
     val store0 = SnapshotStore.snapshot(spark, storeDir)
     // EXACT-id match, not a prefix test: increment ids are free text,
     // and "append-2024-" is a prefix of increment 2024-01's keyed ids —
@@ -1107,12 +1092,12 @@ object StreamQueries {
     require(store.ids.nonEmpty,
       s"streamCrawlIncrement needs a non-empty pre-increment store at " +
         s"$storeDir (the first crawl is Curation.cycleAppend, batch)")
-    // two independent checkpoint jobs — overlapped (guide §2.6); at
-    // corpus scale these are two full store-component scans that no
-    // longer serialize
-    val (aMd5, aFp) = graft.operators.Par.par2(
-      store.digests(spark).withColumn("in_a", lit(1L)).localCheckpoint(),
-      store.fps(spark).withColumn("fp_in_a", lit(1L)).localCheckpoint())
+    // plain file scans of the pinned appends' immutable dirs, read with
+    // their static schemas (no inference job), re-read by each
+    // micro-batch's join; the no-compaction-while-live rule above is
+    // what keeps gcOrphans from reclaiming those dirs mid-increment
+    val aMd5 = store.digests(spark).withColumn("in_a", lit(1L))
+    val aFp = store.fps(spark).withColumn("fp_in_a", lit(1L))
     val kept = Dedup.applySnapshotPolicy(incrementBatch,
       aMd5.drop("in_a"), aFp.drop("fp_in_a"), col("text"))
       .localCheckpoint()

@@ -118,11 +118,19 @@ class ShinglesSpec extends AnyFunSuite {
       (3L, "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11 w12"), // exact dup of 1
       (4L, "v1 v2 v3 v4 v5 v6 v7 v8 v9 v10 v11 v12")
     ).toDF("doc_id", "text")
-    val got = MinHashLsh.nearDupPairs(docs, "doc_id", "text", threshold = 0.8)
+    val got = MinHashLsh.nearDupPairs(docs)
       .as[(Long, Long, Double)].collect().toMap1
     assert(got.contains((1L, 3L)))
     assert(got((1L, 3L)) == 1.0)
     assert(!got.keys.exists { case (a, b) => a == 4L || b == 4L })
+  }
+
+  test("the LSH operating point detects every pair at the verify threshold") {
+    // driver-only: the premise that makes LSH output EQUAL the exact
+    // answer — whole bands, and an S-curve that is 1 at the threshold
+    import MinHashLsh.{K, R, Threshold}
+    assert(K % R == 0)
+    assert(1 - math.pow(1 - math.pow(Threshold, R), K / R) >= 1 - 1e-7)
   }
 
   test("snapshot near-dup delta: cross-snapshot pairs only, within-snapshot dropped") {
@@ -136,7 +144,7 @@ class ShinglesSpec extends AnyFunSuite {
       (3L, "x1 x2 x3 x4 x5 x6 x7 x8 x9 x10 x11 x12"), // genuinely new
       (5L, "x1 x2 x3 x4 x5 x6 x7 x8 x9 x10 x11 x12") // dup WITHIN new
     ).toDF("doc_id", "text")
-    val got = MinHashLsh.snapshotNearDupPairs(old, nw, "doc_id", "text")
+    val got = MinHashLsh.snapshotNearDupPairs(old, nw)
       .as[(Long, Long, Double)].collect().toMap1
     // the new doc 1 matches BOTH old copies, each at jaccard 1.0 ...
     assert(got == Map((0L, 1L) -> 1.0, (2L, 1L) -> 1.0))
@@ -169,8 +177,7 @@ class ShinglesSpec extends AnyFunSuite {
         .option("maxFilesPerTrigger", 1).parquet(dir))
       .as[(Long, Long, Double)].collect().toMap1
     val want = MinHashLsh.snapshotNearDupPairs(old,
-      spark.read.parquet(dir).select(col("doc_id"), col("text")),
-      "doc_id", "text")
+      spark.read.parquet(dir).select(col("doc_id"), col("text")))
       .as[(Long, Long, Double)].collect().toMap1
     assert(got == want)
     assert(got == Map((0L, 1L) -> 1.0, (2L, 1L) -> 1.0,

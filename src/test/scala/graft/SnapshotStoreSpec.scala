@@ -301,7 +301,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
     val dir = TempDirs.create("snapstore-serve")
     SnapshotStore.append(spark, dir, a)
     val served = SnapshotStore.serveNearDup(spark, dir, b)
-    val inline = MinHashLsh.snapshotNearDupPairs(a, b, "doc_id", "text")
+    val inline = MinHashLsh.snapshotNearDupPairs(a, b)
     assert(rows(served) == rows(inline))
     assert(served.count() > 0, "no cross-snapshot near-dups in fixture — equality vacuous")
   }
