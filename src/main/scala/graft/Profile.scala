@@ -25,7 +25,8 @@ object Profile {
       var prevEnd = p.jobs.headOption.fold(0L)(_.startMs)
       p.jobs.foreach { j =>
         println(f"job ${j.id}%4d ${j.endMs - j.startMs}%6d ms  " +
-          f"gap ${math.max(j.startMs - prevEnd, 0L)}%5d ms  ${j.desc.take(90)}")
+          f"gap ${math.max(j.startMs - prevEnd, 0L)}%5d ms  " +
+          s"${j.executionDesc.take(50)} | ${j.desc.take(90)}")
         prevEnd = math.max(prevEnd, j.endMs)
       }
       val runs = p.streams.values

@@ -5,10 +5,11 @@ import java.util.UUID
 import scala.collection.mutable
 
 import org.apache.spark.{GraftListenerBus, SparkContext}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
 
@@ -29,10 +30,12 @@ final class QueryProfile private (sc: SparkContext)
   // the open window's totals (None between windows); every running job
   // so far (its end not yet known) and whether it started inside the
   // window; each listed stage's owner, the first running job that
-  // listed it (later jobs skip it)
+  // listed it (later jobs skip it); the window's SQL executions'
+  // descriptions by execution id
   private var acc: Option[Profile] = None
   private val running = mutable.HashMap.empty[Int, (Job, Boolean)]
   private val owner = mutable.HashMap.empty[Int, Int]
+  private val executions = mutable.HashMap.empty[Long, String]
 
   private def update(f: Profile => Profile): Unit = synchronized { acc = acc.map(f) }
 
@@ -41,10 +44,12 @@ final class QueryProfile private (sc: SparkContext)
       QueryProfile.this.synchronized {
         val props = Option(e.properties)
         def prop(key: String) = props.flatMap(p => Option(p.getProperty(key)))
+        val exec = prop("spark.sql.execution.id").map(_.toLong)
         running(e.jobId) = (Job(e.jobId, e.time, e.time,
           prop("spark.job.description")
             .orElse(e.stageInfos.headOption.map(_.name)).getOrElse(""),
-          0, prop("spark.job.tags").exists(_.contains(BroadcastTag))),
+          0, prop("spark.job.tags").exists(_.contains(BroadcastTag)),
+          exec, exec.flatMap(executions.get).getOrElse("")),
           acc.nonEmpty)
         e.stageIds.foreach(owner.getOrElseUpdate(_, e.jobId))
       }
@@ -64,6 +69,12 @@ final class QueryProfile private (sc: SparkContext)
         }
         update(p => p.copy(stages = p.stages + 1))
       }
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case x: SparkListenerSQLExecutionStart => QueryProfile.this.synchronized {
+        if (acc.nonEmpty) executions(x.executionId) = x.description
+      }
+      case _ =>
+    }
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
       val m = e.taskMetrics
       val i = e.taskInfo
@@ -139,7 +150,7 @@ final class QueryProfile private (sc: SparkContext)
         if (e > s) { covered += e - s; end = e }
       }
       (r, p.copy(wallMs = wallMs, jobs = jobs, jobMs = covered))
-    } finally synchronized { acc = None }
+    } finally synchronized { acc = None; executions.clear() }
   }
 }
 
@@ -147,10 +158,14 @@ object QueryProfile {
 
   /** One finished job: id, driver-clock start and end (epoch ms), its
     * description (the first stage's call site when none is set), the
-    * stages it completed (stages it skipped are another job's) and
-    * whether it is a broadcast exchange's build job. */
+    * stages it completed (stages it skipped are another job's), whether
+    * it is a broadcast exchange's build job, and the SQL execution that
+    * ran it with that execution's description — the action's call site,
+    * which adaptive shuffle-stage and broadcast jobs otherwise lack
+    * (their own description is a thread-pool frame). */
   final case class Job(id: Int, startMs: Long, endMs: Long, desc: String,
-      stages: Int, broadcast: Boolean)
+      stages: Int, broadcast: Boolean, execution: Option[Long],
+      executionDesc: String)
 
   /** The job tag Spark's broadcast exchanges put on their build jobs. */
   private val BroadcastTag = "broadcast exchange"

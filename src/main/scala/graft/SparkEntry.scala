@@ -589,19 +589,6 @@ object SparkEntry {
         AND len_sum >= n_tokens * 3 AND len_sum <= n_tokens * 10
         AND max_len <= 20 AND stop_hits >= 2"""
 
-  /** n80's oracle: the five stages' own CTE chain (gopher gate →
-    * fingerprint keep-min → brute-force Jaccard loser drop →
-    * segment-retention gate → per-lang budget thinning), each flag
-    * built with the SAME arithmetic as the standalone oracle it reuses
-    * (n66, n10, n03/n16, n73, n38), then one UNION ALL of per-stage
-    * aggregates. The corpus signature is bit_xor over the 60-bit
-    * md5-prefix doc-id hash — exact-integer and order-independent on
-    * both engines. The LSH stage's pair subquery is O(n²) over
-    * STAGE-2 survivors, so the query rides the pair-sample input like
-    * n03/n16. */
-  /** The curation CTE chain through the flagged frames f1..f5 and the
-    * report input h — shared prefix of the n80 report oracle and n81's
-    * pack oracle (the pack consumes f5's pass5 survivors). */
   /** The n80 CTE chain with a caller-supplied `d` definition (plus any
     * CTEs it needs before it) and stage-5 budgets — n80/n81 run it
     * over the (sampled) documents table with the shared budgets, n87
@@ -673,6 +660,9 @@ object SparkEntry {
             FROM f5$x)"""
   }
 
+  /** The curation CTE chain through the flagged frames f1..f5 and the
+    * report input h — shared prefix of the n80 report oracle and n81's
+    * pack oracle (the pack consumes f5's pass5 survivors). */
   private lazy val curationCtesSql: String = curationCtesFrom(
     s"d AS (SELECT doc_id, lang, text, $toksSql AS toks FROM $docsT)",
     CurBudgetEn, CurBudgetOther)
@@ -832,6 +822,16 @@ object SparkEntry {
         FROM s a JOIN s b ON a.doc_id % 3 < 2 AND b.doc_id % 3 = 2)
       SELECT * FROM pairs WHERE jaccard >= ${MinHashLsh.Threshold}"""
 
+  /** n80's oracle: the five stages' own CTE chain (gopher gate →
+    * fingerprint keep-min → brute-force Jaccard loser drop →
+    * segment-retention gate → per-lang budget thinning), each flag
+    * built with the SAME arithmetic as the standalone oracle it reuses
+    * (n66, n10, n03/n16, n73, n38), then one UNION ALL of per-stage
+    * aggregates. The corpus signature is bit_xor over the 60-bit
+    * md5-prefix doc-id hash — exact-integer and order-independent on
+    * both engines. The LSH stage's pair subquery is O(n²) over
+    * STAGE-2 survivors, so the query rides the pair-sample input like
+    * n03/n16. */
   private lazy val curationPipelineSql: String = {
     val stageRows = graft.operators.Curation.Stages.map { case (nm, f) =>
       s"""SELECT '$nm' AS stage, CAST(count(*) AS BIGINT) AS n_docs,
@@ -4136,10 +4136,11 @@ object SparkEntry {
 
     // n80's train/serve split: the four gate tables (fingerprint
     // firsts, LSH losers, segment retention, lang rates) train once
-    // batch-side, materialize as parquet (the pretrained curation
-    // model — Curation.parquetMat), and arriving documents flag-assign
-    // via the SAME per-row expressions + four stream-static equi-joins
-    // as the batch pipeline; append mode, no state store. The drained
+    // batch-side as parquet (the pretrained curation model —
+    // Curation.trainGates, the same call n80 makes), and arriving
+    // documents flag-assign via the SAME Curation.flags as the batch
+    // pipeline (four stream-static equi-joins); append mode, no state
+    // store. The drained
     // flag table aggregates to the identical 6-row report — s34 shares
     // n80's oracle VERBATIM (train in batch, serve at ingest: the
     // s14/s27/s30/s31 model-serving idiom applied to the whole
@@ -4255,8 +4256,9 @@ object SparkEntry {
     // corpus build runs on a new crawl: n86's cross-snapshot keep rule
     // FIRST (exact+fingerprint dups vs the previous snapshot dropped,
     // near-dups kept), then the full five-stage curation trained on
-    // the survivors; 7-row report (raw input + snapshot gate + the
-    // relabeled n80 cascade). Budgets halve with the parity-halved
+    // the survivors; 7-row report (raw input + snapshot gate + the n80
+    // cascade under shifted labels) over ONE flagged frame — s40's
+    // calls with a batch drain. Budgets halve with the parity-halved
     // corpus so the mixture stage stays live. Rides the pair sample
     // at sf0.1 (contains the LSH stage).
     "n87_snapshot_curation" -> (((s: SparkSession, d: String) => {
@@ -4268,11 +4270,11 @@ object SparkEntry {
     }, Some(snapshotCurationSql))),
 
     // n87's train/serve split (the s34 idiom + the cross-snapshot
-    // gate): digest indexes + gate tables build once batch-side
-    // (gates materialized as parquet — the pretrained model), arriving
-    // docs get passS from two stateless stream-static LEFT joins and
-    // flag through the same cascade, append mode, no state store;
-    // drained flags aggregate to n87's 7-row report. SAME oracle.
+    // gate): digest indexes + gate tables build once batch-side (the
+    // same trainGates n87 calls), arriving docs get passS from two
+    // stateless stream-static LEFT joins and flag through the same
+    // Curation.flags, append mode, no state store; drained flags
+    // aggregate to n87's 7-row report. SAME oracle.
     "s40_stream_snapshot_curation" -> (((s: SparkSession, d: String) => {
       val docs = pairDocs(s, d)
       val stream = sampled(

@@ -52,15 +52,16 @@ import graft.functions.{Text, TextStats}
   *
   * TRAIN/SERVE SPLIT: the stages decompose into corpus-derived GATE
   * TABLES ([[trainGates]]: fingerprint firsts, LSH loser set, segment
-  * retention, language rates) and a pure flag-assignment pass over
-  * docs joined against those tables ([[flagAgainst]]). The batch
-  * pipeline (n80) trains and flags in one query; the streaming twin
-  * (s34) trains the gates batch-side, MATERIALIZES them as parquet
-  * ([[parquetMat]] — the pretrained-curation-model artifact a
-  * deployment ships, the n79 store idiom), and assigns flags to
-  * arriving documents with stream-static equi-joins — same
+  * retention, language rates — each written to parquet as it is
+  * derived, the pretrained-curation-model artifact a deployment ships)
+  * and a pure flag-assignment pass over docs joined against those
+  * tables ([[flags]]). Every curation query is those two calls: the
+  * batch queries (n80, n81, n87, n91) and their streaming twins (s34,
+  * s40, s42) differ only in the drain — a stream flags arriving docs
+  * with stream-static equi-joins and drains to a sink first. Same
   * expressions, same joins, so the drained flag table equals the
-  * batch one row for row and s34 shares n80's oracle verbatim.
+  * batch one row for row and each twin shares its batch oracle
+  * verbatim.
   *
   * Output ([[report]]): ONE row per stage (stage, n_docs, n_tokens,
   * corpus_xor), where corpus_xor is an order-independent corpus
@@ -168,41 +169,64 @@ object Curation {
 
   /** Build the four gate tables from the training corpus — each over
     * the PREVIOUS stages' survivors only, exactly the standalone
-    * queries' bounded shapes.
+    * queries' bounded shapes. With `seen` (the previous snapshot's
+    * digest indexes, as in [[flags]]), the corpus is first narrowed to
+    * the docs that survive the cross-snapshot gate
+    * ([[Dedup.applySnapshotPolicy]] — the kept frame, lineage-cut
+    * because all four gate builds read it): training on docs the
+    * snapshot gate already killed would skew the mixture rates and
+    * waste the LSH pass on content that never reaches stage 1.
     *
-    * `mat` materializes each gate AS IT IS DERIVED, cutting the
-    * lineage between stages: stage N+1's plan then scans stage N's
-    * materialized gate instead of embedding its whole derivation
-    * subtree. Without the cut the gate subtrees nest (`b3` contains
-    * the loser derivation, `b4` contains both, …), so the most
-    * expensive op — the banded-LSH pair derivation — re-executes once
-    * per downstream gate job (3–4× at the rates/retention writes;
-    * measured A/B, fresh JVM min-of-3 at sf0.1: n80 task-time
-    * 11.97 → 2.49 s (wall 3.73 → 2.85), s34 wall 7.94 → 3.83 s).
-    * With it, every index derivation runs exactly once and
-    * each training job re-reads only the pruned corpus scan plus the
-    * prior gates — the shape a 100 TB build needs, where the LSH pass
-    * dominates and must not be multiplied by the stage count.
-    * Identity (the default) keeps the whole train lazy for callers
-    * that only execute one gate. */
+    * Each gate is written to parquet under one temp dir AS IT IS
+    * DERIVED and read back, cutting the lineage between stages: stage
+    * N+1's plan then scans stage N's written gate instead of embedding
+    * its whole derivation subtree. Without the cut the gate subtrees
+    * nest (`b3` contains the loser derivation, `b4` contains both, …),
+    * so the most expensive op — the banded-LSH pair derivation —
+    * re-executes once per downstream gate job (3–4× at the
+    * rates/retention writes; measured A/B, fresh JVM min-of-3 at
+    * sf0.1: n80 task-time 11.97 → 2.49 s (wall 3.73 → 2.85), s34 wall
+    * 7.94 → 3.83 s). With it, every index derivation runs exactly once
+    * and each training job re-reads only the pruned corpus scan plus
+    * the prior gates — the shape a 100 TB build needs, where the LSH
+    * pass dominates and must not be multiplied by the stage count.
+    *
+    * Parquet rather than `localCheckpoint` for the cut: a file scan
+    * carries its real size, so the flag joins against the small gates
+    * broadcast instead of adding adaptive shuffle-stage jobs — the
+    * fixed per-job cost that sets these queries' floor. `graft.Profile`
+    * at sf0.001, three cold runs each, per-gate `localCheckpoint` →
+    * parquet as the only change: n80 40 → 32 jobs, n81 40–41 → 32. */
   def trainGates(docs: DataFrame, budgetEn: Long, budgetOther: Long,
-      mat: (DataFrame, String) => DataFrame = (df, _) => df): Gates = {
-    val base = statsBase(docs)
-    val firsts = mat(base.where(col("pass1"))
+      seen: Option[(DataFrame, DataFrame)] = None): Gates = {
+    val dir = graft.TempDirs.create("graft-curation-gates")
+    def written(df: DataFrame, name: String): DataFrame = {
+      val p = s"$dir/$name"
+      df.write.mode("overwrite").parquet(p)
+      // explicit schema (known from the frame just written): the
+      // read-back launches no parquet schema-inference job — one such
+      // job per gate × 4 gates per training was pure scheduling floor
+      df.sparkSession.read.schema(df.schema).parquet(p)
+    }
+    val kept = seen.fold(docs) { case (aMd5, aFp) =>
+      Dedup.applySnapshotPolicy(docs, aMd5, aFp, col("text")).localCheckpoint()
+    }
+    val base = statsBase(kept)
+    val firsts = written(base.where(col("pass1"))
       .groupBy(Text.fingerprint(col("text")).as("fp"))
       .agg(min(col("doc_id")).as("keep_id")), "firsts")
     val b2 = withPass2(base, firsts)
     // n03's banded LSH pairs (S-curve ≈ 1 at t=0.8, so the pair set
     // equals brute force), n16's greedy drop-b policy
-    val losers = mat(MinHashLsh.nearDupPairs(
+    val losers = written(MinHashLsh.nearDupPairs(
         b2.where(col("pass2")).select(col("doc_id"), col("text")))
       .select(col("b_id").as("loser_id")).distinct(), "losers")
     val b3 = withPass3(b2, losers)
     val segs = Dedup.segmentsOf(b3.where(col("pass3")), k = 8)
-    val retention = mat(Dedup.applySegmentDedup(segs, Dedup.firstOccurrences(segs))
+    val retention = written(Dedup.applySegmentDedup(segs, Dedup.firstOccurrences(segs))
       .select(col("doc_id"), col("n_segs"), col("n_kept")), "retention")
     val b4 = withPass4(b3, retention)
-    val rates = mat(b4.where(col("pass4")).groupBy(col("lang"))
+    val rates = written(b4.where(col("pass4")).groupBy(col("lang"))
       .agg(sum(col("tok")).as("actual"))
       .select(col("lang"), least(lit(1000000L), expr(
         s"(CASE WHEN lang = 'en' THEN ${budgetEn}L ELSE ${budgetOther}L END)" +
@@ -210,35 +234,53 @@ object Curation {
     Gates(firsts, losers, retention, rates)
   }
 
-  /** A [[trainGates]] `mat` that writes each gate as parquet under
-    * `dir` and returns the read-back scan — the pretrained-curation-
-    * model artifact a deployment ships to its ingest tier (micro-batch
-    * plans then JOIN cheap file scans instead of re-deriving the
-    * LSH/segment lineage per trigger — the n79 store idiom applied to
-    * the gates). */
-  def parquetMat(spark: SparkSession, dir: String): (DataFrame, String) => DataFrame =
-    (df, name) => {
-      val p = s"$dir/$name"
-      df.write.mode("overwrite").parquet(p)
-      // explicit schema (known from the frame just written): the
-      // read-back launches no parquet schema-inference job — one such
-      // job per gate × 4 gates per training was pure scheduling floor
-      spark.read.schema(df.schema).parquet(p)
-    }
-
-  /** The full flagged frame (doc_id, lang, text, tok, pass1..5) — the
-    * shared core of [[flagAgainst]] and [[packPipeline]]. */
-  private def flagsFull(docs: DataFrame, g: Gates): DataFrame =
-    withPass5(withPass4(withPass3(withPass2(
-        statsBase(docs), g.firsts), g.losers), g.retention), g.rates)
-
   /** Assign every stage flag to `docs` by joining the gate tables —
     * per-row expressions plus four equi-joins (stream-static joins
-    * when `docs` is a stream). Output: (doc_id, tok, hv, pass0..5). */
-  def flagAgainst(docs: DataFrame, g: Gates): DataFrame =
-    flagsFull(docs, g)
-      .select(col("doc_id") +: col("tok") +: hash60(col("doc_id")).as("hv") +:
-        lit(true).as("pass0") +: Stages.tail.map { case (_, f) => col(f) }: _*)
+    * when `docs` is a stream). Output: (doc_id, lang, text, tok,
+    * pass1..5), plus `passS` when `seen` is given.
+    *
+    * `seen` is the previous snapshot's distinct-digest indexes: exact
+    * md5 in column `h`, fingerprint in column `fp`
+    * ([[Dedup.snapshotIndexes]], or a store's digests/fps components).
+    * `passS` comes from two stateless LEFT equi-joins against them —
+    * membership-equivalent to [[Dedup.applySnapshotPolicy]]'s
+    * anti-joins, shuffle-hash like them because the old snapshot is
+    * corpus-sized — and GUARDS the cascade by conjoining into pass1,
+    * so a snapshot-gated doc counts only in `0_input` and `pass5`
+    * implies the doc survived the snapshot gate. */
+  def flags(docs: DataFrame, g: Gates,
+      seen: Option[(DataFrame, DataFrame)] = None): DataFrame = {
+    val base = seen.fold(statsBase(docs)) { case (aMd5, aFp) =>
+      statsBase(docs)
+        .withColumn("h", md5(col("text")))
+        .withColumn("fp", Text.fingerprint(col("text")))
+        .join(aMd5.select(col("h"), lit(true).as("seen_h"))
+          .hint("shuffle_hash"), Seq("h"), "left")
+        .join(aFp.select(col("fp"), lit(true).as("seen_fp"))
+          .hint("shuffle_hash"), Seq("fp"), "left")
+        .withColumn("passS", col("seen_h").isNull && col("seen_fp").isNull)
+        .withColumn("pass1", col("passS") && col("pass1"))
+        .drop("h", "fp", "seen_h", "seen_fp")
+    }
+    withPass5(withPass4(withPass3(withPass2(
+        base, g.firsts), g.losers), g.retention), g.rates)
+  }
+
+  /** The stage-5 survivors of [[flags]] as (doc_id, lang, text) — the
+    * curated increment n91's batch cycle and s42's micro-batches append
+    * to the snapshot store. */
+  def survivors(docs: DataFrame, g: Gates,
+      seen: Option[(DataFrame, DataFrame)]): DataFrame =
+    flags(docs, g, seen).where(col("pass5"))
+      .select(col("doc_id"), col("lang"), col("text"))
+
+  /** The columns [[reportStages]] reads from a [[flags]] frame: doc_id,
+    * tok and the flags of `stages` after the raw-input row (the report
+    * derives that row's flag and the doc hash itself). A streaming twin
+    * drains only these, so its sink holds no text. */
+  def reportInput(flagged: DataFrame, stages: Seq[(String, String)]): DataFrame =
+    flagged.select(col("doc_id") +: col("tok") +:
+      stages.tail.map { case (_, f) => col(f) }: _*)
 
   /** The report: ONE aggregate over the flagged frame (3 conditional
     * aggregates per stage, map-side combined), explode to 6 rows. */
@@ -246,7 +288,8 @@ object Curation {
 
   /** [[report]] over a caller-supplied stage axis — n80's 6 stages or
     * n87/s40's 7 (with the snapshot-gate flag); still one aggregate +
-    * one explode, never a per-stage rescan. */
+    * one explode, never a per-stage rescan. `pass0` (every doc) and
+    * the corpus-signature hash `hv` derive here from doc_id. */
   def reportStages(flagged: DataFrame,
       stages: Seq[(String, String)]): DataFrame = {
     val aggs = stages.flatMap { case (nm, f) => Seq(
@@ -255,7 +298,10 @@ object Curation {
       coalesce(expr(s"bit_xor(CASE WHEN $f THEN hv END)"), lit(0L))
         .as(s"bx_$nm"))
     }
-    flagged.agg(aggs.head, aggs.tail: _*)
+    flagged
+      .withColumn("hv", hash60(col("doc_id")))
+      .withColumn("pass0", lit(true))
+      .agg(aggs.head, aggs.tail: _*)
       .select(explode(array(stages.map { case (nm, _) =>
         struct(lit(nm).as("stage"), col(s"nd_$nm").as("n_docs"),
           col(s"nt_$nm").as("n_tokens"), col(s"bx_$nm").as("corpus_xor"))
@@ -266,24 +312,16 @@ object Curation {
 
   /** docs(doc_id, lang, text) → (stage, n_docs, n_tokens, corpus_xor),
     * one row per [[Stages]] entry: train + flag + report in one
-    * declared query (n80). `budgetEn`/`budgetOther`: stage-5
-    * per-language token budgets.
-    *
-    * Gates are lineage-cut via `localCheckpoint` (the n75/s31 model
-    * idiom): each gate is a derived index table computed exactly once
-    * and held partitioned on the executors; without the cut the
-    * report's DAG re-executes the LSH pair derivation ~4× (see
-    * [[trainGates]]). A production build whose gate tables outgrow
-    * executor storage swaps in [[parquetMat]] — the s34 serving path —
-    * with byte-identical gate content. */
+    * declared query (n80) — s34 runs the same two calls with a stream
+    * drain between flag and report. `budgetEn`/`budgetOther`: stage-5
+    * per-language token budgets. */
   def pipeline(docs: DataFrame, budgetEn: Long, budgetOther: Long): DataFrame =
-    report(flagAgainst(docs, trainGates(docs, budgetEn, budgetOther,
-      (df, _) => df.localCheckpoint())))
+    report(flags(docs, trainGates(docs, budgetEn, budgetOther)))
 
   /** n87 stage labels: [[Stages]] shifted one slot to make room for
     * the cross-snapshot gate between raw input and the quality gate.
-    * Single shared constant — [[snapshotPipeline]]'s relabel AND
-    * SparkEntry's oracle stage rows interpolate THIS sequence. */
+    * Single shared constant — [[SnapshotStages]] AND SparkEntry's
+    * oracle stage rows interpolate THIS sequence. */
   val SnapshotStageRelabel: Seq[(String, String)] = Seq(
     "0_input" -> "1_snapshot",
     "1_quality" -> "2_quality",
@@ -300,100 +338,33 @@ object Curation {
       Stages.tail.map { case (nm, f) =>
         SnapshotStageRelabel.toMap.apply(nm) -> f }
 
-  /** n87's flag-assignment pass over arriving docs — batch or stream
-    * (s40): `passS` comes from two stateless LEFT equi-joins against
-    * the previous snapshot's distinct-digest indexes (stream-static
-    * when `docs` is a stream — membership-equivalent to the batch
-    * anti-joins) and GUARDS the cascade by conjoining into pass1, so a
-    * snapshot-gated doc counts only in `0_input` and never joins a
-    * later stage's gate. Output: (doc_id, tok, hv, pass0, passS,
-    * pass1..5) — [[reportStages]] with [[SnapshotStages]] aggregates
-    * it to the same 7-row report as [[snapshotPipeline]]. */
-  def snapshotFlagAgainst(docs: DataFrame, g: Gates, aMd5: DataFrame,
-      aFp: DataFrame): DataFrame =
-    snapshotFlagsFull(docs, g, aMd5, aFp)
-      .select(col("doc_id") +: col("tok") +: hash60(col("doc_id")).as("hv") +:
-        lit(true).as("pass0") +: col("passS") +:
-        Stages.tail.map { case (_, f) => col(f) }: _*)
-
-  /** [[snapshotFlagAgainst]]'s FULL flagged frame — keeps (lang, text)
-    * alongside passS and the cascade flags, so a serving tier can ACT
-    * on the survivors instead of just counting them: s42's streaming
-    * crawl increment appends each micro-batch's pass5 docs back into
-    * the snapshot store. passS conjoins into pass1 (as in
-    * [[snapshotFlagAgainst]]), so pass5 already implies the doc
-    * survived the cross-snapshot gate. Same stateless join shapes —
-    * stream-static when `docs` is a stream. */
-  def snapshotFlagsFull(docs: DataFrame, g: Gates, aMd5: DataFrame,
-      aFp: DataFrame): DataFrame = {
-    val gated = statsBase(docs)
-      .withColumn("h", md5(col("text")))
-      .withColumn("fp", Text.fingerprint(col("text")))
-      .join(aMd5.hint("shuffle_hash"), Seq("h"), "left")
-      .join(aFp.hint("shuffle_hash"), Seq("fp"), "left")
-      .withColumn("passS", col("in_a").isNull && col("fp_in_a").isNull)
-      .withColumn("pass1", col("passS") && col("pass1"))
-      .drop("h", "fp", "in_a", "fp_in_a")
-    withPass5(withPass4(withPass3(withPass2(
-        gated, g.firsts), g.losers), g.retention), g.rates)
-  }
-
   /** The SNAPSHOT-GATED curation pipeline (n87) — what an incremental
     * corpus build actually runs on a new crawl: FIRST drop docs whose
     * exact digest or fingerprint already exists in the accumulated
     * previous snapshot ([[Dedup.applySnapshotPolicy]] — near-dups
     * deliberately survive, the FineWeb cross-dump rule), THEN run the
     * full five-stage curation over the survivors, with every gate
-    * table trained on the post-snapshot corpus (training on docs the
-    * snapshot gate already killed would skew the mixture rates and
-    * waste the LSH pass on content that never reaches stage 1).
+    * table trained on the post-snapshot corpus ([[trainGates]] with
+    * `seen`).
     *
     * Output: [[report]]'s (stage, n_docs, n_tokens, corpus_xor) rows
-    * with a 7-row stage axis — `0_input` aggregates the RAW new
+    * over [[SnapshotStages]] — `0_input` aggregates the RAW new
     * snapshot, `1_snapshot` the gate's survivors, `2_quality` ..
-    * `6_mixture` the relabeled curation cascade. Order-independent
-    * union, same column contract as n80.
+    * `6_mixture` the curation cascade. Same column contract as n80,
+    * and the same calls as its streaming twin s40 up to the drain.
     *
-    * Scale shape: the snapshot gate is two shuffle-hash anti-joins
-    * against the previous snapshot's distinct-digest indexes (never
-    * broadcast — the old snapshot is corpus-sized), the curation part
-    * is [[pipeline]]'s (bounded gate tables over narrowing survivor
-    * sets, lineage-cut), and the extra `0_input` row is one map-side-
-    * combined aggregate over the new snapshot. */
+    * Scale shape: the snapshot gate is shuffle-hash joins against the
+    * previous snapshot's distinct-digest indexes (never broadcast —
+    * the old snapshot is corpus-sized), the curation part is
+    * [[pipeline]]'s (bounded gate tables over narrowing survivor
+    * sets, lineage-cut), and the report one map-side-combined
+    * aggregate over the flagged new snapshot. */
   def snapshotPipeline(oldDocs: DataFrame, newDocs: DataFrame,
       budgetEn: Long, budgetOther: Long): DataFrame = {
-    val (aMd5, aFp) = Dedup.snapshotIndexes(oldDocs, col("text"))
-    // lineage-cut like the gate tables: the kept frame feeds every
-    // gate build AND the flag pass — without the cut the anti-joins
-    // (and the old snapshot's index aggregates under them) re-derive
-    // per consumer. A production build writes this frame to storage
-    // outright: it IS the kept corpus.
-    val kept = Dedup.applySnapshotPolicy(newDocs, aMd5, aFp, col("text"))
-      .localCheckpoint()
-    val inner = pipeline(kept, budgetEn, budgetOther)
-      .withColumn("stage",
-        element_at(typedLit(SnapshotStageRelabel.toMap), col("stage")))
-    val input = statsBase(newDocs)
-      .select(col("tok"), hash60(col("doc_id")).as("hv"))
-      .agg(count(lit(1)).as("n_docs"),
-        coalesce(sum(col("tok")), lit(0L)).as("n_tokens"),
-        coalesce(expr("bit_xor(hv)"), lit(0L)).as("corpus_xor"))
-      .select(lit("0_input").as("stage"), col("n_docs"),
-        col("n_tokens"), col("corpus_xor"))
-    input.unionByName(inner)
+    val seen = Some(Dedup.snapshotIndexes(oldDocs, col("text")))
+    reportStages(flags(newDocs,
+      trainGates(newDocs, budgetEn, budgetOther, seen), seen), SnapshotStages)
   }
-
-  /** The curated corpus ITSELF — the stage-5 survivors as a
-    * (doc_id, lang, text) frame, i.e. the kept output a production
-    * build materializes (the report queries aggregate it; downstream
-    * consumers — the pack, the snapshot store — consume it). Gates are
-    * lineage-cut as in [[pipeline]]. */
-  def curatedCorpus(docs: DataFrame, budgetEn: Long,
-      budgetOther: Long): DataFrame =
-    flagsFull(docs, trainGates(docs, budgetEn, budgetOther,
-        (df, _) => df.localCheckpoint()))
-      .where(col("pass5"))
-      .select(col("doc_id"), col("lang"), col("text"))
 
   /** ONE production crawl increment, end to end (n91) — the state
     * transition a real incremental pipeline commits every dump, and
@@ -401,13 +372,14 @@ object Curation {
     * dedup loop (kafka_s.py:614-630 — every processed event
     * immediately becomes dedup state for the next):
     *
-    *   1. PROBE + POLICY: drop arriving docs whose exact digest or
-    *      fingerprint is already in the ACCUMULATED store
-    *      ([[Dedup.applySnapshotPolicy]] against the store's digest
-    *      components — the n86 FineWeb rule; a first crawl against an
+    *   1. PROBE + POLICY: the gates train on the arriving docs whose
+    *      exact digest and fingerprint are absent from the ACCUMULATED
+    *      store ([[trainGates]] with the store's digest components as
+    *      `seen` — the n86 FineWeb rule; a first crawl against an
     *      empty store keeps everything);
-    *   2. CURATE the survivors with the full five-stage cascade,
-    *      gates trained on them ([[curatedCorpus]] — the n87 shape);
+    *   2. CURATE: the arriving docs flag through the snapshot-gated
+    *      cascade ([[survivors]] — the n87 shape; passS guards pass1,
+    *      so the stage-5 survivors all passed the store gate);
     *   3. APPEND the CURATED survivors back into the store — their
     *      sets/bands/digests indexes AND the curated (doc_id, lang,
     *      text) rows themselves as the `docs` component
@@ -415,7 +387,9 @@ object Curation {
     *      audited, manifest-committed), so the NEXT crawl probes the
     *      accumulated, curated corpus and a training run reads it.
     *
-    * Returns the curated kept frame (what was appended). Cycle applied
+    * Steps 1–2 are s42's per-increment training and per-micro-batch
+    * survivor definition; the batch cycle differs only in the drain.
+    * Returns the curated frame (what was appended). Cycle applied
     * twice == rebuild from the curated union — CrawlCycleSpec proves
     * every store component row-equal, and the declared n91 query
     * hash-checks a post-cycle probe against the composed oracle.
@@ -441,32 +415,28 @@ object Curation {
     * instead of O(delta), so the measured-quality rule and the scale
     * rule agree here.
     *
-    * Scale shape: step 1 is two shuffle-hash anti-joins against the
+    * Scale shape: the store gate is shuffle-hash joins against the
     * store's file scans (never broadcast — the accumulated store is
-    * corpus-sized), step 2 is [[pipeline]]'s bounded gate cascade over
-    * the narrowed survivors, step 3 one scan of the curated frame plus
-    * the O(delta) append anti-joins/audit. The kept and curated frames
-    * are lineage-cut (localCheckpoint) because each feeds several
-    * downstream jobs (gate builds; the component writes) — and the
-    * curated frame IS the corpus increment a production run ships, so
-    * the append persists it as the store's `docs` component
-    * (`persistDocs` — the same staged/audited commit as the indexes):
-    * the store holds the shipped training corpus itself, not just its
-    * dedup indexes, and [[SnapshotStore.docs]] serves the accumulated
-    * curated corpus to downstream consumers (n94). */
+    * corpus-sized), step 2 is [[pipeline]]'s bounded gate cascade, step
+    * 3 one scan of the curated frame plus the O(delta) append
+    * anti-joins/audit. The curated frame is lineage-cut
+    * (localCheckpoint) because each component write reads it — and it
+    * IS the corpus increment a production run ships, so the append
+    * persists it as the store's `docs` component (`persistDocs` — the
+    * same staged/audited commit as the indexes): the store holds the
+    * shipped training corpus itself, not just its dedup indexes, and
+    * [[SnapshotStore.docs]] serves the accumulated curated corpus to
+    * downstream consumers (n94). */
   def cycleAppend(spark: SparkSession, storeDir: String, newDocs: DataFrame,
       budgetEn: Long, budgetOther: Long): DataFrame = {
     // both policy baselines from ONE pinned store version (reader
     // snapshot isolation — SnapshotStore.Snapshot scaladoc)
     val store = SnapshotStore.snapshot(spark, storeDir)
-    val kept =
-      if (store.ids.nonEmpty)
-        Dedup.applySnapshotPolicy(newDocs,
-          store.digests(spark), store.fps(spark), col("text"))
-          .localCheckpoint()
-      else newDocs
-    val curated = curatedCorpus(kept, budgetEn, budgetOther)
-      .localCheckpoint()
+    val seen =
+      if (store.ids.nonEmpty) Some((store.digests(spark), store.fps(spark)))
+      else None
+    val gates = trainGates(newDocs, budgetEn, budgetOther, seen)
+    val curated = survivors(newDocs, gates, seen).localCheckpoint()
     SnapshotStore.append(spark, storeDir, curated, persistDocs = true)
     curated
   }
@@ -493,12 +463,10 @@ object Curation {
     * one |shards|-row driver pass — when a single language outgrows
     * one task's sort; the arithmetic is unchanged). */
   def packPipeline(docs: DataFrame, budgetEn: Long, budgetOther: Long,
-      packTokens: Int = PackTokens): DataFrame = {
-    val flagged = flagsFull(docs, trainGates(docs, budgetEn, budgetOther,
-      (df, _) => df.localCheckpoint()))
-    packCorpus(flagged.where(col("pass5"))
+      packTokens: Int = PackTokens): DataFrame =
+    packCorpus(flags(docs, trainGates(docs, budgetEn, budgetOther))
+      .where(col("pass5"))
       .select(col("lang"), col("doc_id"), col("tok")), packTokens)
-  }
 
   /** The pack arithmetic alone, over an ALREADY-CURATED corpus frame
     * (lang, doc_id, tok) — n28's concat-then-chop in deterministic

@@ -948,47 +948,50 @@ object StreamQueries {
   /** Streaming curation serving (s34) — n80's train/serve split and
     * the ingest-time shape of a production corpus build: the four
     * corpus-derived gate tables (fingerprint firsts, LSH loser set,
-    * segment retention, language rates) train ONCE batch-side and are
-    * MATERIALIZED as parquet (`Curation.parquetMat` — the pretrained
+    * segment retention, language rates) train ONCE batch-side
+    * (`Curation.trainGates` writes them as parquet — the pretrained
     * curation model a deployment ships; micro-batch plans join cheap
     * file scans instead of re-deriving the LSH/segment lineage per
     * trigger). Every arriving document is then flag-assigned by the
     * SAME per-row expressions + four stream-static equi-joins as the
-    * batch pipeline (`Curation.flagAgainst`) — append mode, no state
-    * store — and the drained flag table aggregates to the identical
-    * 6-row report: s34 shares n80's oracle VERBATIM. `docsStream`
-    * must replay the same corpus `docsBatch` trained on for the
-    * equality to be the batch-rebuild statement (the s19/s29
-    * index/verify split — the caller applies any input sampling to
-    * BOTH frames, like s19). */
+    * batch pipeline (`Curation.flags`) — append mode, no state store —
+    * and the drained flag table aggregates to the identical 6-row
+    * report: s34 shares n80's oracle VERBATIM. `docsStream` must
+    * replay the same corpus `docsBatch` trained on for the equality to
+    * be the batch-rebuild statement (the s19/s29 index/verify split —
+    * the caller applies any input sampling to BOTH frames, like s19). */
+  def streamCurationServe(spark: SparkSession, docsStream: DataFrame,
+      docsBatch: DataFrame, budgetEn: Long, budgetOther: Long): DataFrame = {
+    import graft.operators.Curation
+    val gates = Curation.trainGates(docsBatch, budgetEn, budgetOther)
+    val flagged = Curation.reportInput(Curation.flags(docsStream, gates),
+      Curation.Stages)
+    Curation.report(runToTable(spark, flagged, "append"))
+  }
+
   /** Streaming SNAPSHOT-GATED curation serving (s40) — n87's
     * train/serve split, the s34 idiom extended by the cross-snapshot
     * gate: the previous snapshot's digest indexes and the gate tables
-    * (trained on the snapshot-KEPT corpus, materialized via
-    * `Curation.parquetMat`) build ONCE batch-side; every arriving doc
-    * gets `passS` from two stateless stream-static LEFT joins against
-    * the digest indexes (membership-equivalent to the batch
-    * anti-joins) conjoined into the same flag cascade — append mode,
-    * no state store — and the drained flag table aggregates to the
-    * identical 7-row report: s40 shares n87's oracle VERBATIM.
+    * (trained on the snapshot-KEPT corpus) build ONCE batch-side; every
+    * arriving doc gets `passS` from two stateless stream-static LEFT
+    * joins against the digest indexes (membership-equivalent to the
+    * batch anti-joins) conjoined into the same flag cascade — append
+    * mode, no state store — and the drained flag table aggregates to
+    * the identical 7-row report: s40 shares n87's oracle VERBATIM.
     * `docsStream` must replay `newDocsBatch` (the caller applies any
     * input sampling to both frames, like s34). */
   def streamSnapshotCurationServe(spark: SparkSession,
       docsStream: DataFrame, oldDocs: DataFrame, newDocsBatch: DataFrame,
       budgetEn: Long, budgetOther: Long): DataFrame = {
     import graft.operators.{Curation, Dedup, Par}
-    val (aMd5r, aFpr) = Dedup.snapshotIndexes(oldDocs, col("text"))
+    val (aMd5, aFp) = Dedup.snapshotIndexes(oldDocs, col("text"))
     // sever from every micro-batch; the two checkpoints are independent
     // jobs — overlap them (guide §2.6) instead of paying two serial
     // job-launch + checkpoint floors
-    val (aMd5, aFp) = Par.par2(aMd5r.localCheckpoint(),
-      aFpr.localCheckpoint())
-    val kept = Dedup.applySnapshotPolicy(newDocsBatch, aMd5, aFp,
-      col("text")).localCheckpoint()
-    val gates = Curation.trainGates(kept, budgetEn, budgetOther,
-      Curation.parquetMat(spark,
-        graft.TempDirs.create("graft-snapshot-curation-gates")))
-    val flagged = Curation.snapshotFlagAgainst(docsStream, gates, aMd5, aFp)
+    val seen = Some(Par.par2(aMd5.localCheckpoint(), aFp.localCheckpoint()))
+    val gates = Curation.trainGates(newDocsBatch, budgetEn, budgetOther, seen)
+    val flagged = Curation.reportInput(Curation.flags(docsStream, gates, seen),
+      Curation.SnapshotStages)
     Curation.reportStages(runToTable(spark, flagged, "append"),
       Curation.SnapshotStages)
   }
@@ -1001,17 +1004,16 @@ object StreamQueries {
     *
     *   batch-side, once per increment (the s40 train/serve split):
     *   the store's digest components load as the cross-snapshot gate
-    *   (file scans of the pinned pre-increment snapshot), the
+    *   (file scans of the pinned pre-increment snapshot), and the
     *   increment's KEPT survivors train the five curation gates
-    *   ([[graft.operators.Curation.trainGates]] on
-    *   [[graft.operators.Dedup.applySnapshotPolicy]]'s output —
-    *   per-increment training, the FineWeb policy pinned on
-    *   [[graft.operators.Curation.cycleAppend]]), materialized as
-    *   parquet (the pretrained model);
+    *   ([[graft.operators.Curation.trainGates]] with the store as
+    *   `seen` — per-increment training, the FineWeb policy pinned on
+    *   [[graft.operators.Curation.cycleAppend]]), written as parquet
+    *   (the pretrained model);
     *
     *   per micro-batch: arriving docs flag through the stateless
     *   snapshot-gated cascade
-    *   ([[graft.operators.Curation.snapshotFlagsFull]] — stream-static
+    *   ([[graft.operators.Curation.survivors]] — stream-static
     *   equi-joins, no state store), and `foreachBatch` APPENDS the
     *   batch's pass5 survivors back into the store — index rows AND
     *   the curated docs themselves (persistDocs, matching the batch
@@ -1056,9 +1058,9 @@ object StreamQueries {
     * state: the pinned snapshot EXCLUDES this increment's own keyed
     * appends (exact `append-$incrementId-b<N>` ids — never a prefix
     * test, which would also swallow an increment whose id extends this
-    * one's) before building
-    * aMd5/aFp/kept, so every session of the increment trains identical
-    * gates. (A compaction folding the increment's own appends into a
+    * one's) before building the digest gate and the kept frame, so
+    * every session of the increment trains identical gates. (A
+    * compaction folding the increment's own appends into a
     * `compact-*` id would defeat the exact keyed-id filter — one more
     * reason the no-compaction-while-live rule stands for gate state,
     * even though the tombstone protocol already makes replays
@@ -1073,7 +1075,7 @@ object StreamQueries {
       incrementBatch: DataFrame,
       budgetEn: Long, budgetOther: Long,
       checkpoint: Option[String] = None): Unit = {
-    import graft.operators.{Curation, Dedup, SnapshotStore}
+    import graft.operators.{Curation, SnapshotStore}
     // the PRE-increment gate state: the policy (and n91's batch twin)
     // classifies against the store as of increment START. Isolation
     // comes from the pinned Snapshot: its id list is fixed here, so
@@ -1096,18 +1098,9 @@ object StreamQueries {
     // their static schemas (no inference job), re-read by each
     // micro-batch's join; the no-compaction-while-live rule above is
     // what keeps gcOrphans from reclaiming those dirs mid-increment
-    val aMd5 = store.digests(spark).withColumn("in_a", lit(1L))
-    val aFp = store.fps(spark).withColumn("fp_in_a", lit(1L))
-    val kept = Dedup.applySnapshotPolicy(incrementBatch,
-      aMd5.drop("in_a"), aFp.drop("fp_in_a"), col("text"))
-      .localCheckpoint()
-    val gates = Curation.trainGates(kept, budgetEn, budgetOther,
-      Curation.parquetMat(spark,
-        graft.TempDirs.create("graft-crawl-inc-gates")))
-    val survivors = Curation
-      .snapshotFlagsFull(incrementStream, gates, aMd5, aFp)
-      .where(col("pass5"))
-      .select(col("doc_id"), col("lang"), col("text"))
+    val seen = Some((store.digests(spark), store.fps(spark)))
+    val gates = Curation.trainGates(incrementBatch, budgetEn, budgetOther, seen)
+    val survivors = Curation.survivors(incrementStream, gates, seen)
     def appendBatch(batch: DataFrame, batchId: Long): Unit = {
       val aid = s"append-$incrementId-b$batchId"
       // computed once: the append stages the component writes plus the
@@ -1121,20 +1114,6 @@ object StreamQueries {
       ()
     }
     drain(survivors, checkpoint = checkpoint)(_.foreachBatch(appendBatch _))
-  }
-
-  def streamCurationServe(spark: SparkSession, docsStream: DataFrame,
-      docsBatch: DataFrame, budgetEn: Long, budgetOther: Long): DataFrame = {
-    import graft.operators.Curation
-    // parquetMat INSIDE trainGates: each gate is written as derived,
-    // so stage N+1's training job scans stage N's parquet instead of
-    // re-running its whole derivation (the LSH pass runs once, not
-    // once per downstream gate — see trainGates)
-    val gates = Curation.trainGates(docsBatch, budgetEn, budgetOther,
-      Curation.parquetMat(spark,
-        graft.TempDirs.create("graft-curation-gates")))
-    val flagged = Curation.flagAgainst(docsStream, gates)
-    Curation.report(runToTable(spark, flagged, "append"))
   }
 
   /** Streaming Bloom decontamination (s26) — n44's streaming twin and

@@ -42,8 +42,14 @@ class CrawlCycleSpec extends AnyFunSuite {
 
     // the parts composed BY HAND: curate snapshot 0 standalone, apply
     // the policy to snapshot 1 against cycle 1's curated digests,
-    // curate the survivors, rebuild a store from the curated union
-    val cur1 = Curation.curatedCorpus(snap(0), bEn, bOther).localCheckpoint()
+    // curate the survivors, rebuild a store from the curated union.
+    // Curating = gates trained on the kept frame, that frame flagged
+    // against them, stage-5 survivors — no snapshot gate in the cascade
+    def curated(kept: DataFrame): DataFrame =
+      Curation.flags(kept, Curation.trainGates(kept, bEn, bOther))
+        .where(col("pass5"))
+        .select(col("doc_id"), col("lang"), col("text")).localCheckpoint()
+    val cur1 = curated(snap(0))
     val kept2 = Dedup.applySnapshotPolicy(snap(1),
       cur1.select(md5(col("text")).as("h")).distinct(),
       cur1.select(Text.fingerprint(col("text")).as("fp")).distinct(),
@@ -52,8 +58,7 @@ class CrawlCycleSpec extends AnyFunSuite {
     // snapshot-1 doc duplicates a curated snapshot-0 survivor
     assert(kept2.count() < snap(1).count(),
       "policy dropped nothing — cross-chunk dup coverage is vacuous")
-    val cur2 = Curation.curatedCorpus(kept2.localCheckpoint(), bEn, bOther)
-      .localCheckpoint()
+    val cur2 = curated(kept2.localCheckpoint())
     assert(rows(c1) == rows(cur1) && rows(c2) == rows(cur2))
 
     val dir2 = TempDirs.create("crawl-cycle-rebuild")

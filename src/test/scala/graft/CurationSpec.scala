@@ -121,13 +121,34 @@ class CurationSpec extends AnyFunSuite {
     assert(manifest(docs.orderBy(org.apache.spark.sql.functions.col("text"))) == base)
   }
 
+  test("every trained gate is one parquet scan: the lineage is cut") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val a = uniqToks('a')
+    val g = Curation.trainGates(docsOf((0L, "en", a), (1L, "en", a.reverse),
+      (2L, "fr", uniqToks('c'))), 1000000L, 1000000L)
+    // a gate left lazy would embed its derivation (and every earlier
+    // gate's) in each consumer's plan and re-run the LSH pass per job
+    for ((nm, df) <- Seq("firsts" -> g.firsts, "losers" -> g.losers,
+        "retention" -> g.retention, "rates" -> g.rates)) {
+      val plan = df.queryExecution.executedPlan
+      val leaves = plan.collectLeaves()
+      assert(leaves.size == 1, s"$nm: $plan")
+      assert(leaves.head.collectFirst { case s: FileSourceScanExec =>
+        s.relation.fileFormat.isInstanceOf[ParquetFileFormat] }.contains(true),
+        s"$nm: $plan")
+      assert(plan.collect { case e: Exchange => e }.isEmpty, s"$nm: $plan")
+    }
+  }
+
   test("streamed serving from materialized gates == the batch pipeline (s34)") {
     import spark.implicits._
     val sf = "/root/testdata/sf0.001"
     val docs = graft.sources.Tables.documents(spark, sf)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(String, Long, Long, Long)].collect().toSet
-    // gates train batch-side, materialize as parquet, and flag the
+    // gates train batch-side, are written as parquet, and flag the
     // SAME corpus arriving as a stream — the drained report must equal
     // the one-query batch pipeline row for row
     val streamed = rows(graft.streaming.StreamQueries.streamCurationServe(

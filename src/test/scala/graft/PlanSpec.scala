@@ -13,6 +13,24 @@ class PlanSpec extends AnyFunSuite {
   private def plan(q: String): String =
     SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan.toString
 
+  /** The query executions that complete while `body` runs. */
+  private def executedBy(body: => Unit): Seq[org.apache.spark.sql.execution.QueryExecution] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val executed = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = executed.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    executed.asScala.toSeq
+  }
+
   test("dim lookup join broadcasts (no shuffle of the stream side)") {
     assert(plan("p03_lookup_join").contains("BroadcastHashJoin"))
   }
@@ -98,8 +116,8 @@ class PlanSpec extends AnyFunSuite {
   test("snapshot-gated curation: no stage introduces a corpus×corpus join") {
     // the snapshot gate's own anti-join shape (shuffle-hash, no
     // broadcast of the old snapshot) is pinned by the n86 contract
-    // above; here the gate runs inside the lineage-cut kept frame, so
-    // the report plan shows the checkpoint scan + the curation cascade
+    // above; here the report plan flags the new snapshot against the
+    // digest indexes and the written gates' parquet scans
     val p = plan("n87_snapshot_curation")
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
@@ -119,25 +137,29 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("curation gate subtrees keep their standalone join contracts") {
-    // n80/n81's executed plans lineage-cut the gates (localCheckpoint →
-    // ExistingRDD scans), so the two tests above cannot see inside the
-    // gate derivations. Build the gates with the identity mat here and
-    // assert each gate's OWN plan: no cartesian anywhere, and the LSH
-    // loser derivation is the banded equi-join, never an NLJ fan-out.
+    // trainGates writes each gate to parquet as it is derived, so the
+    // n80/n81 plans above see only the gates' file scans. The contracts
+    // are asserted on the four gate-write plans trainGates executes:
+    // no cartesian anywhere, and the LSH loser derivation is the
+    // banded equi-join (hash-agg'd band buckets), never an NLJ fan-out.
     import org.apache.spark.sql.functions.col
     val docs = graft.sources.Tables.documents(spark, sf)
       .select(col("doc_id"), col("lang"), col("text"))
-    val g = graft.operators.Curation.trainGates(docs, 100000L, 100000L)
-    for ((df, nm) <- Seq(g.firsts -> "firsts", g.losers -> "losers",
-        g.retention -> "retention", g.rates -> "rates")) {
-      val p = df.queryExecution.executedPlan.toString
+    val plans = executedBy(
+      graft.operators.Curation.trainGates(docs, 100000L, 100000L))
+      .map(_.executedPlan.toString)
+    // a gate's write plan names the gate's dir as its output path
+    val gates = Seq("firsts", "losers", "retention", "rates")
+    val byGate = gates.map { nm =>
+      nm -> plans.filter(_.matches(
+        s"(?s).*InsertIntoHadoopFsRelationCommand \\S*graft-curation-gates[^/]*/$nm,.*"))
+    }.toMap
+    assert(gates.forall(byGate(_).size == 1), plans.mkString("\n"))
+    for ((nm, Seq(p)) <- byGate) {
       assert(!p.contains("CartesianProduct"), s"$nm: $p")
       assert(!p.contains("BroadcastNestedLoopJoin"), s"$nm: $p")
     }
-    // the loser set must come from the banded equi-join (hash-agg'd
-    // band buckets), not any corpus×corpus shape
-    assert(g.losers.queryExecution.executedPlan.toString
-      .contains("HashAggregate"))
+    assert(byGate("losers").head.contains("HashAggregate"), byGate("losers").head)
   }
 
   test("curate-then-pack keeps n80's join contract and packs via one window") {
@@ -494,33 +516,19 @@ class PlanSpec extends AnyFunSuite {
     // vectors with probes (its output carries vec_id and probe_id).
     // Auto-broadcast is off, so only the query's own broadcast hint can
     // make the fan-out a BroadcastNestedLoopJoin.
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
-    import org.apache.spark.sql.util.QueryExecutionListener
-    val executed = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = executed.add(qe)
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val prior = spark.conf.getOption(key)
-    spark.listenerManager.register(listener)
     spark.conf.set(key, "-1")
-    val p = try {
-      val p = plan("n76_ivfpq_ann")
-      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
-      p
-    } finally {
-      spark.listenerManager.unregister(listener)
-      prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-    }
+    var p = ""
+    val executed = try executedBy { p = plan("n76_ivfpq_ann") }
+      finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     assert(p.contains("WindowGroupLimit"), p)
     assert(!p.contains("CartesianProduct"), p)
-    val fanOut = executed.asScala.toSeq
+    val fanOut = executed
       .flatMap(qe => QueryProfile.planNodes(qe.executedPlan))
       .filter(n => Set("vec_id", "probe_id").subsetOf(n.output.map(_.name).toSet))
-    val shown = executed.asScala.map(_.executedPlan.toString).mkString("\n")
+    val shown = executed.map(_.executedPlan.toString).mkString("\n")
     assert(fanOut.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]), shown)
     assert(!fanOut.exists(_.isInstanceOf[CartesianProductExec]), shown)
   }

@@ -29,6 +29,26 @@ class QueryProfileSpec extends AnyFunSuite {
     assert(idle.jobs.isEmpty && idle.tasks == 0)
   }
 
+  test("a join's shuffle-stage and broadcast jobs carry their action's description") {
+    import org.apache.spark.sql.functions.broadcast
+    // an aggregate (one adaptive shuffle-stage job) joined to a
+    // broadcast dimension (one broadcast build job), then the result job
+    val counts = spark.range(0, 10000, 1, 4).selectExpr("id % 100 AS k")
+      .groupBy("k").count()
+    val dim = spark.range(0, 100).selectExpr("id AS k", "id * 2 AS w")
+    val (rows, p) = QueryProfile.of(spark).measure(
+      counts.join(broadcast(dim), "k").collect())
+    assert(rows.length == 100)
+    val shown = p.jobs.map(j => s"${j.execution} ${j.executionDesc} | ${j.desc}")
+      .mkString("\n")
+    assert(p.jobs.exists(_.broadcast) && p.jobs.size >= 3, shown)
+    // every job, whatever thread submitted it, names the one collect
+    assert(p.jobs.map(_.execution).distinct.size == 1 &&
+      p.jobs.head.execution.nonEmpty, shown)
+    assert(p.jobs.forall(_.executionDesc.startsWith("collect at QueryProfileSpec.scala")),
+      shown)
+  }
+
   test("a drained stream reports its micro-batches") {
     val (_, p) = QueryProfile.of(spark).measure(
       graft.streaming.StreamQueries.eventCounts(spark, sf).collect())
