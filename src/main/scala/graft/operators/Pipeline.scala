@@ -8,15 +8,18 @@ import graft.sources.Kafka
 
 /** The full reference pipeline as one declarative plan (SURVEY §3):
   *
-  *   source → cdc filter → normalize → join(broadcast nameDim)
-  *     → join(broadcast industryPivot) → crossJoin(broadcast rules)
-  *     → ruleMatch → labels/ids/constants → wide output row
+  *   source → cdc filter → normalize → lookup(nameMap) → lookup(industryMap)
+  *     → crossJoin(broadcast rules) → ruleMatch → labels/ids/constants
+  *     → wide output row
   *
-  * Mirrors kafka_s.py end-to-end (E1/E3) but columnar and shuffle-free:
-  * every dimension is broadcast, so at 100 TB the fact side streams
+  * Mirrors kafka_s.py end-to-end (E1/E3) but columnar and shuffle-free.
+  * The two dimensions are what the reference holds them as, in-memory
+  * maps (kafka_s.py:120-148): `element_at` over a literal map in the
+  * plan, so a micro-batch runs no job to build or broadcast them. The
+  * rules are the one broadcast, so at 100 TB the fact side streams
   * through one whole-stage-codegen pipeline with zero exchanges before
-  * the sink. Left joins yield null on miss (NOT the reference's
-  * stale-state quirk Q1).
+  * the sink. A lookup miss yields null (NOT the reference's stale-state
+  * quirk Q1).
   *
   * The `documents` fixture plays the announcement stream: `text` = title,
   * `source` = company short name (SURVEY/FIXTURES §B mapping).
@@ -39,16 +42,6 @@ object Pipeline {
       ccs.map(cc => (s"Company $i Ltd", s"IC$cc$i", cc, s"Industry L$cc-$i"))
     }
 
-  def nameDim(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    nameDimRows.toDF("short_name", "all_name")
-  }
-
-  def industryDim(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    industryDimRows.toDF("compName", "categoryCode", "constCode", "constValueDesc")
-  }
-
   /** SQL VALUES literal twins for the DuckDB oracle. */
   def nameDimSql: String =
     nameDimRows.map { case (s, a) => s"('$s','$a')" }
@@ -60,18 +53,23 @@ object Pipeline {
 
   // ---- operators ----
 
-  /** O8: industry rows → columns keyed by constCode 3/4/5; code value is
-    * `concat(categoryCode, '##', constCode)` (kafka_s.py:298-310).
-    * max(when) instead of pivot(): one aggregate pass, no pivot re-shuffle. */
-  def industryPivot(ind: DataFrame): DataFrame = {
-    def cc(n: Int) = when(col("constCode") === n,
-      concat(col("categoryCode"), lit("##"), col("constCode").cast("string")))
-    def cd(n: Int) = when(col("constCode") === n, col("constValueDesc"))
-    ind.groupBy(col("compName")).agg(
-      max(cd(3)).as("firstIndustry"), max(cc(3)).as("firstIndustryCode"),
-      max(cd(4)).as("secondIndustry"), max(cc(4)).as("secondIndustryCode"),
-      max(cd(5)).as("threeIndustry"), max(cc(5)).as("threeIndustryCode"))
-  }
+  /** One company's industry levels: the O8 pivot's output row. */
+  private final case class Industry(
+      firstIndustry: String, firstIndustryCode: String,
+      secondIndustry: String, secondIndustryCode: String,
+      threeIndustry: String, threeIndustryCode: String)
+
+  /** O8 on the driver: industry rows → one [[Industry]] per company,
+    * levels keyed by constCode 3/4/5, the code being
+    * `categoryCode##constCode` (kafka_s.py:298-310). Each field is the
+    * max over the company's rows of that constCode, null if it has none. */
+  private def industryLevels: Map[String, Industry] =
+    industryDimRows.groupBy(_._1).map { case (comp, rows) =>
+      def at(cc: Int) = rows.filter(_._3 == cc)
+      def desc(cc: Int) = at(cc).map(_._4).maxOption.orNull
+      def code(cc: Int) = at(cc).map(r => s"${r._2}##$cc").maxOption.orNull
+      comp -> Industry(desc(3), code(3), desc(4), code(4), desc(5), code(5))
+    }
 
   /** documents → canonical announcement-event schema (O4 normalize;
     * FIXTURES §A1), as `topic`'s events (quirk Q7: one pipeline, one
@@ -101,23 +99,22 @@ object Pipeline {
     * label.
     * [[announcements]] is normalize∘enrich over the documents fixture;
     * IntegrationSmoke is Kafka.source∘enrich over a live topic — same
-    * plan either way. */
+    * plan either way. The name and industry maps are built here, once
+    * per call, and ride in the plan as literals; the rules are its one
+    * broadcast. */
   def enrich(spark: SparkSession, events: DataFrame,
       rules: DataFrame): DataFrame = {
-    val names = nameDim(spark)
-    val indPivot = industryPivot(industryDim(spark))
+    val names = typedLit(nameDimRows.toMap)
+    val industry = typedLit(industryLevels)
 
     val enriched = events
-      .join(broadcast(names), events("cmpShortName") === names("short_name"), "left")
-      .withColumn("companyName", col("all_name"))
-      .drop("short_name", "all_name")
-      .join(broadcast(indPivot), col("companyName") === indPivot("compName"), "left")
-      .drop("compName")
+      .withColumn("companyName", element_at(names, col("cmpShortName")))
+      .withColumn("industry", element_at(industry, col("companyName")))
 
     val classified = RuleClassifier.classify(enriched, rules, col("title"))
 
     // industry columns default to '' on miss (.get(k, '') kafka_s.py:362-367)
-    def blank(c: String) = coalesce(col(c), lit("")).as(c)
+    def blank(c: String) = coalesce(col(s"industry.$c"), lit("")).as(c)
 
     classified
       .withColumn("yqid", Ids.deterministicId(

@@ -6,15 +6,15 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   * keyed on onlyId, duplicate-key error swallowed → effective upsert)
   * as real Spark-Mongo connector wiring.
   *
-  * Same sandbox honesty contract as [[JdbcSink]]: no Mongo connector
-  * jar or server here, so the oracle-verified harness queries exercise
-  * the identical foreachBatch shape against parquet (s09's third sink,
-  * s10's replay-idempotent upsert); `MongoSpec` proves this code path
-  * reaches Spark's data-source resolution rather than silently
-  * no-opping. With `idFieldList = onlyId` the connector performs a
-  * replace-on-_id write, making batch replays idempotent — the
-  * exactly-once argument of JdbcSink.keyedAppendWriter, delegated to
-  * the store's native upsert. */
+  * No Mongo connector jar or server here, so the oracle-verified
+  * harness queries exercise the identical foreachBatch shape against
+  * parquet (s09's third sink, s10's replay-idempotent upsert);
+  * `MongoSpec` proves this code path reaches Spark's data-source
+  * resolution rather than silently no-opping. With `idFieldList =
+  * onlyId` the connector performs a replace-on-_id write, making batch
+  * replays idempotent — the exactly-once argument of
+  * JdbcSink.keyedAppendWriter (which skips the rows the table's key
+  * refuses), delegated to the store's native upsert. */
 object MongoSink {
 
   final case class Config(

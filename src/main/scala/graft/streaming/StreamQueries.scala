@@ -362,14 +362,14 @@ object StreamQueries {
   }
 
   /** THE reference pipeline (E1) as a true stream: the same
-    * `Pipeline.announcements` plan — normalize → broadcast name/industry
-    * dims (stream-static left joins) → broadcast rule cross-join +
+    * `Pipeline.announcements` plan — normalize → name/industry map
+    * lookups (literals in the plan) → broadcast rule cross-join +
     * predicate → labels/uuids → 34-col record — fed by `readStream`
     * instead of `read`, drained micro-batch by micro-batch into the
     * sink. Batch/stream duality is the whole design (SURVEY §7.1): the
     * oracle for this query is literally p09's SQL. No aggregation, so
-    * append mode with no watermark; every dim is broadcast per batch
-    * (the reference's poll-refresh, O10). */
+    * append mode with no watermark; the rules are re-broadcast per batch
+    * (the reference's poll-refresh, O10), the dims cost a batch no job. */
   def streamPipeline(spark: SparkSession, dir: String): DataFrame =
     runToTable(spark,
       graft.operators.Pipeline.announcements(spark,

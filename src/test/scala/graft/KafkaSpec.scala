@@ -60,7 +60,7 @@ class KafkaSpec extends AnyFunSuite {
 
   test("Kafka.source reaches connector resolution (fails finding kafka, not before)") {
     // no spark-sql-kafka jar in the sandbox; resolution failure proves
-    // the builder wiring is live (same proof shape as JdbcSpec/MongoSpec)
+    // the builder wiring is live (same proof shape as MongoSpec)
     val e = intercept[Throwable] {
       Kafka.source(spark, "localhost:9092", Kafka.Neeq)
     }

@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sinks.MongoSink
 
 /** No Mongo connector in the sandbox — assert the writer reaches
-  * Spark's data-source resolution (fails looking for "mongodb"), the
-  * same live-path proof JdbcSpec uses for the MySQL sink. */
+  * Spark's data-source resolution (fails looking for "mongodb"), a
+  * live-path proof rather than a stub that would no-op. */
 class MongoSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._

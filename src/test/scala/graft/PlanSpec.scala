@@ -39,6 +39,21 @@ class PlanSpec extends AnyFunSuite {
     assert(plan("p05_rule_match").contains("BroadcastNestedLoopJoin"))
   }
 
+  test("reference pipeline: dims are in-plan lookups, the rules its one broadcast, no shuffle") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val p = SparkEntry.queries("p09_pipeline_e2e")(spark, sf).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    assert(p.collect { case b: BroadcastExchangeExec => b }.size == 1, p)
+    assert(p.collect { case s: ShuffleExchangeExec => s }.isEmpty, p)
+    val dimKeys = p.collect { case j: BaseJoinExec => j.references.map(_.name) }.flatten
+      .filter(Set("short_name", "compName"))
+    assert(dimKeys.isEmpty, p)
+  }
+
   test("similarity join is an equi-join on the shingle, never cartesian") {
     val p = plan("n02_dedup_jaccard")
     assert(!p.contains("CartesianProduct"))

@@ -23,7 +23,11 @@ class ProfileBudgetSpec extends AnyFunSuite {
     "s39_store_snapshot_delta" -> (12, 13),
     "n76_ivfpq_ann" -> (55, 55),
     "n90_snapshot_chain_delta" -> (21, 21),
-    "s09_stream_fanout" -> (16, 16),
+    // the reference pipeline: its two dims are literal maps in the plan,
+    // so the rules are its one broadcast job (three cold runs each)
+    "p09_pipeline_e2e" -> (3, 3),
+    "s08_stream_pipeline" -> (4, 4),
+    "s09_stream_fanout" -> (13, 13),
     "s10_stream_upsert" -> (15, 15),
     // the events reader (batch with ts pushdown, and stream) and the two
     // shingle-join shapes: maxima over three cold runs
