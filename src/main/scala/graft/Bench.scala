@@ -135,14 +135,17 @@ object Bench {
     // batch attribution of the min-time iteration: task_ms = executor
     // compute (≤ cores × wall), sched_ms = task time outside compute —
     // a wall spike with historical task_ms is a stall, from the
-    // artifact alone; jobs/stages/bytes are the deterministic counters
+    // artifact alone; jobs/stages/bytes are the deterministic counters;
+    // compiles > 0 on a warm iteration means the query's generated
+    // classes did not all fit Spark's codegen cache
     val taskJson = obj(profByQuery.map { case (k, p) =>
       k -> obj(Seq("tasks" -> p.tasks, "task_ms" -> p.taskMs,
         "gc_task_ms" -> p.gcMs, "sched_ms" -> p.schedMs,
         "jobs" -> p.jobs.size, "stages" -> p.stages,
         "outside_ms" -> p.outsideMs, "cpu_ms" -> p.cpuMs,
         "input_mb" -> mb(p.inputBytes, 100),
-        "shuffle_mb" -> mb(p.shuffleBytes, 100)))
+        "shuffle_mb" -> mb(p.shuffleBytes, 100),
+        "compiles" -> p.compiles))
     })
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "BENCH_DETAIL.json")
     val histPath = detailPath.stripSuffix(".json") + "_HISTORY.jsonl"

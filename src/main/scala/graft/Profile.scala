@@ -4,7 +4,9 @@ package graft
   * (fixed per-query cost dominates; ProfileBudgetSpec pins job counts).
   * Per declared query: the formatted physical plan, each Spark job's wall
   * and the driver gap before it, and the [[QueryProfile]] of one
-  * cold-cache run of construction plus a noop write (Bench's unit). */
+  * cold-cache run of construction plus a noop write (Bench's unit).
+  * A query named twice runs twice in the one JVM: `compiles` then shows
+  * what the second run found missing from Spark's codegen cache. */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfAt = args.indexOf("--sf")
@@ -33,7 +35,7 @@ object Profile {
       println(f"[profile] $name wall=${p.wallMs}ms jobs=${p.jobs.size} " +
         f"stages=${p.stages} tasks=${p.tasks} in_jobs=${p.jobMs}ms " +
         f"outside_jobs=${p.outsideMs}ms task=${p.taskMs}ms cpu=${p.cpuMs}ms " +
-        f"gc=${p.gcMs}ms sched=${p.schedMs}ms " +
+        f"gc=${p.gcMs}ms sched=${p.schedMs}ms compiles=${p.compiles} " +
         f"input=${p.inputBytes / 1048576.0}%.2fMB " +
         f"shuffle=${p.shuffleBytes / 1048576.0}%.2fMB streams=${runs.size} " +
         f"batches=${runs.map(_.batches).sum} " +

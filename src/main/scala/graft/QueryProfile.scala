@@ -5,6 +5,7 @@ import java.util.UUID
 import scala.collection.mutable
 
 import org.apache.spark.{GraftListenerBus, SparkContext}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
@@ -22,7 +23,10 @@ import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryProgressEvent
   * [[QueryProfile.Profile]]. Events outside a window are ignored, and
   * windows do not nest. Counts (jobs, stages, tasks, bytes) repeat run to
   * run, up to the odd job adaptive execution adds when concurrent stages
-  * finish in another order; walls compare only against same-box runs. */
+  * finish in another order; walls compare only against same-box runs.
+  * The window's Janino compiles come from Spark's JVM-wide codegen
+  * counter, so they are exact only while no other session of the JVM
+  * runs. */
 final class QueryProfile private (sc: SparkContext)
     extends StreamingQueryListener {
   import QueryProfile._
@@ -131,14 +135,17 @@ final class QueryProfile private (sc: SparkContext)
     quiesce()
     synchronized {
       require(acc.isEmpty, "QueryProfile windows do not nest")
-      acc = Some(Profile(0, Vector.empty, 0, 0, 0, 0, 0, 0, 0, 0, 0, Map.empty))
+      acc = Some(Profile(0, Vector.empty, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0,
+        Map.empty))
     }
     try {
+      val c0 = compileCount()
       val n0 = System.nanoTime()
       val r = body
       val wallMs = math.round((System.nanoTime() - n0) / 1e6)
       val t1 = System.currentTimeMillis()
       quiesce()
+      val compiles = compileCount() - c0
       val p = synchronized(acc.get)
       // union of job intervals to the body's end (Par.par2 jobs overlap)
       val jobs = p.jobs.sortBy(_.startMs)
@@ -149,7 +156,8 @@ final class QueryProfile private (sc: SparkContext)
         val e = math.min(j.endMs, t1)
         if (e > s) { covered += e - s; end = e }
       }
-      (r, p.copy(wallMs = wallMs, jobs = jobs, jobMs = covered))
+      (r, p.copy(wallMs = wallMs, jobs = jobs, jobMs = covered,
+        compiles = compiles))
     } finally synchronized { acc = None; executions.clear() }
   }
 }
@@ -167,6 +175,11 @@ object QueryProfile {
       stages: Int, broadcast: Boolean, execution: Option[Long],
       executionDesc: String)
 
+  /** Janino compiles so far in this JVM: Spark times each one into this
+    * histogram, so its count is the number of compiles. */
+  private def compileCount(): Long =
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** The job tag Spark's broadcast exchanges put on their build jobs. */
   private val BroadcastTag = "broadcast exchange"
 
@@ -181,10 +194,14 @@ object QueryProfile {
     * @param taskMs  summed executor run time
     * @param schedMs summed task time outside run, deserialize and result
     *                serialization — scheduler delay and fetch wait
+    * @param compiles generated classes Janino compiled in this JVM (the
+    *                driver's, and a local master's executors'): each is
+    *                a miss of Spark's codegen cache, so 0 means every
+    *                plan's classes were cached
     * @param streams the window's streams by run id */
   final case class Profile(wallMs: Long, jobs: Seq[Job], jobMs: Long,
       stages: Int, tasks: Long, taskMs: Long, cpuNs: Long, gcMs: Long,
-      schedMs: Long, inputBytes: Long, shuffleBytes: Long,
+      schedMs: Long, inputBytes: Long, shuffleBytes: Long, compiles: Long,
       streams: Map[UUID, StreamRun]) {
     def cpuMs: Long = cpuNs / 1000000L
     /** Driver time outside every job: planning, eager driver work,

@@ -196,7 +196,10 @@ object Curation {
     * broadcast instead of adding adaptive shuffle-stage jobs — the
     * fixed per-job cost that sets these queries' floor. `graft.Profile`
     * at sf0.001, three cold runs each, per-gate `localCheckpoint` →
-    * parquet as the only change: n80 40 → 32 jobs, n81 40–41 → 32. */
+    * parquet as the only change: n80 40 → 32 jobs, n81 40–41 → 32.
+    * The LSH pass's shingle sets are written the same way, as a fifth
+    * file beside the gates, not cached: n80 runs 28 jobs, not 32, and
+    * no cached relation stays pinned for the session. */
   def trainGates(docs: DataFrame, budgetEn: Long, budgetOther: Long,
       seen: Option[(DataFrame, DataFrame)] = None): Gates = {
     val dir = graft.TempDirs.create("graft-curation-gates")
@@ -217,9 +220,12 @@ object Curation {
       .agg(min(col("doc_id")).as("keep_id")), "firsts")
     val b2 = withPass2(base, firsts)
     // n03's banded LSH pairs (S-curve ≈ 1 at t=0.8, so the pair set
-    // equals brute force), n16's greedy drop-b policy
-    val losers = written(MinHashLsh.nearDupPairs(
-        b2.where(col("pass2")).select(col("doc_id"), col("text")))
+    // equals brute force), n16's greedy drop-b policy. The pair pass
+    // reads the stage-2 survivors' shingle sets three times, so they
+    // are written too
+    val sets = written(MinHashLsh.setsOf(
+      b2.where(col("pass2")).select(col("doc_id"), col("text"))), "sets")
+    val losers = written(MinHashLsh.setPairs(sets)
       .select(col("b_id").as("loser_id")).distinct(), "losers")
     val b3 = withPass3(b2, losers)
     val segs = Dedup.segmentsOf(b3.where(col("pass3")), k = 8)

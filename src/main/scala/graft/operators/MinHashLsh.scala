@@ -98,8 +98,13 @@ object MinHashLsh {
     // at harness scale (the cache lives until session end); a 100 TB
     // deployment would persist to disk with an explicit unpersist, or
     // accept recompute.
-    val sets = setsOf(docs).persist()
+    setPairs(setsOf(docs).persist())
+  }
 
+  /** [[nearDupPairs]] over a [[setsOf]] frame. It is read three times
+    * (the banding pass and both candidate back-joins), so pass a cached
+    * or written relation, not a derivation that would run three times. */
+  private[graft] def setPairs(sets: DataFrame): DataFrame = {
     val bd = banded(sets)
     val a = bd.as("a")
     val bb = bd.as("b")

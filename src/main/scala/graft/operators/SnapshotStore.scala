@@ -306,10 +306,7 @@ object SnapshotStore {
       // serves every later read — skipping the parquet
       // schema-inference job each probe/serve used to launch per
       // component (s42 pays it per micro-batch)
-      if (comp == "digests") spark.read.schema(DigestSchema).parquet(paths: _*)
-      else if (comp == "fps") spark.read.schema(FpSchema).parquet(paths: _*)
-      else spark.read
-        .schema(SnapshotStore.cachedComponentSchema(spark, dir, comp, paths))
+      spark.read.schema(componentSchema(spark, dir, comp, paths))
         .parquet(paths: _*)
     }
     def sets(spark: SparkSession): DataFrame = component(spark, "sets")
@@ -355,6 +352,17 @@ object SnapshotStore {
       schema
     }
   }
+
+  /** The schema every read of component `comp` at `dir` passes: static
+    * for digests and fps, the store's cached one otherwise. */
+  private def componentSchema(spark: SparkSession, dir: String,
+      comp: String,
+      paths: => Seq[String]): org.apache.spark.sql.types.StructType =
+    comp match {
+      case "digests" => DigestSchema
+      case "fps" => FpSchema
+      case _ => cachedComponentSchema(spark, dir, comp, paths)
+    }
 
   /** Resolve the CURRENT manifest once into an immutable [[Snapshot]]
     * view — the version every component read of one logical query
@@ -999,23 +1007,19 @@ object SnapshotStore {
     val srcPaths = Components.map { c =>
       c -> componentPaths(spark, dir, ids0, c)
     }.toMap
+    // every source read passes its component's schema, so neither the
+    // rewrites nor the audit and sidecar reads below run a parquet
+    // schema-inference job
+    val srcSchemas = srcPaths.collect { case (c, ps) if ps.nonEmpty =>
+      c -> componentSchema(spark, dir, c, ps)
+    }
     // the component rewrites are independent jobs — overlap them
-    // (guide §2.6), like the staging writes; each source schema is
-    // captured once so the audit and sidecar reads below skip their
-    // own inference jobs
-    val srcSchemas = new java.util.concurrent.ConcurrentHashMap[
-      String, org.apache.spark.sql.types.StructType]()
-    Par.all(Components.flatMap { c =>
-      val ps = srcPaths(c)
-      if (ps.isEmpty) None
-      else Some(() => {
-        val df = spark.read.parquet(ps: _*)
-        srcSchemas.put(c, df.schema)
-        df.write.mode("error").parquet(s"$base/$c")
-      })
+    // (guide §2.6), like the staging writes
+    Par.all(srcSchemas.toSeq.map { case (c, schema) => () =>
+      spark.read.schema(schema).parquet(srcPaths(c): _*)
+        .write.mode("error").parquet(s"$base/$c")
     })
-    def compSchema(c: String) = Option(srcSchemas.get(c))
-    def didField(c: String) = compSchema(c).map(s =>
+    def didField(c: String) = srcSchemas.get(c).map(s =>
       org.apache.spark.sql.types.StructType(Seq(s("did"))))
     // the compacted append carries its own did/digest/fp sketches (one
     // aggregation pass over the rewritten bytes — same order as the
@@ -1034,8 +1038,7 @@ object SnapshotStore {
       Map.empty, buildSketch = true)
     writeSketches(spark, base, skRes.sketches)
     touchInflight(spark, base) // audit may outlast the staging writes
-    auditCompactEquality(spark, base, srcPaths,
-      c => compSchema(c)).foreach { comp =>
+    auditCompactEquality(spark, base, srcPaths, srcSchemas.get).foreach { comp =>
       fs.delete(new HPath(base), true)
       throw new IllegalStateException(
         s"SnapshotStore.compact audit failed on $comp at $dir: staged " +

@@ -3,7 +3,7 @@ package graft.streaming
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types._
@@ -1106,9 +1106,12 @@ object StreamQueries {
       // computed once: the append stages the component writes plus the
       // audit over this frame; appendAs itself is the replay guard
       // (committed OR tombstoned id ⇒ no-op — one manifest read, not a
-      // second per-batch fast-path read on top, the r18 micro note)
-      val b = batch.localCheckpoint()
-      if (b.limit(1).count() > 0)
+      // second per-batch fast-path read on top, the r18 micro note).
+      // The emptiness probe is a row count observed on the checkpoint's
+      // own job, not a job of its own
+      val rows = new Observation()
+      val b = batch.observe(rows, count(lit(1)).as("rows")).localCheckpoint()
+      if (rows.get("rows").asInstanceOf[Long] > 0)
         SnapshotStore.appendAs(batch.sparkSession, storeDir, aid, b,
           persistDocs = true)
       ()

@@ -17,8 +17,10 @@ class ProfileBudgetSpec extends AnyFunSuite {
 
   /** query -> (max jobs, max completed stages). */
   private val budgets = Seq(
-    "n95_compacted_replay_serve" -> (34, 34),
-    "n93_compacted_store_serve" -> (34, 34),
+    // compact reads its sources with their component schemas: 32 in
+    // eight cold runs of this spec
+    "n95_compacted_replay_serve" -> (32, 32),
+    "n93_compacted_store_serve" -> (32, 32),
     "s38_store_snapshot_neardup" -> (14, 15),
     "s39_store_snapshot_delta" -> (12, 13),
     "n76_ivfpq_ann" -> (55, 55),
@@ -43,20 +45,28 @@ class ProfileBudgetSpec extends AnyFunSuite {
     * re-plans while concurrent stages finish, and the order they finish
     * in decides whether one more shuffle-stage job runs. Their broadcast
     * build jobs, with the stages those complete, hold still and are
-    * pinned exactly. The other jobs and their stages are bounded: s40's
-    * by their maximum over 12 cold standalone runs of this spec, the
-    * rest by their maximum over 10 (s42 61–63 jobs, n80 18–19). n81
-    * measured 18 in all 10 but 33 jobs in all, one more than those
-    * runs, inside a 204-query `graft.Profile` run, so its bound is 19.
+    * pinned exactly. The other jobs and their stages are bounded by
+    * their maximum over 8 cold standalone runs of this spec, all equal
+    * since curation writes its LSH sets instead of caching them (s42
+    * 53, n80 15; they were 61–63 and 18–19). n81 measured one job more
+    * inside a 204-query `graft.Profile` run than in its standalone runs
+    * before, so its bound keeps that one job above its measured 15.
     * n91 has no budget: it serves from the per-JVM two-cycle store, so
     * its count depends on whether n94 or n96 built that store first.
     * query -> ((jobs, stages) broadcast, (max jobs, max stages) other) */
   private val racing = Seq(
-    "s42_stream_crawl_increment" -> ((30, 30), (63, 64)),
-    "s40_stream_snapshot_curation" -> ((14, 14), (33, 33)),
-    "n80_curation_pipeline" -> ((14, 14), (19, 19)),
-    "n81_curation_pack" -> ((14, 14), (19, 19)),
-    "n87_snapshot_curation" -> ((14, 14), (27, 27)))
+    "s42_stream_crawl_increment" -> ((28, 28), (53, 54)),
+    "s40_stream_snapshot_curation" -> ((13, 13), (29, 29)),
+    "n80_curation_pipeline" -> ((13, 13), (15, 15)),
+    "n81_curation_pack" -> ((13, 13), (16, 16)),
+    "n87_snapshot_curation" -> ((13, 13), (24, 24)))
+
+  /** Classes a second s42 build in the same session may compile: an
+    * adaptive re-plan that finishes its stages in another order
+    * renumbers the plan's codegen stages, and a renumbered stage is new
+    * source. Measured 0 in 8 cold runs of this spec and 0–6 in
+    * `graft.Profile` runs. */
+  private val s42Recompiles = 10
 
   private def profile(q: String): QueryProfile.Profile = {
     graft.sources.Tables.clearCaches()
@@ -91,5 +101,16 @@ class ProfileBudgetSpec extends AnyFunSuite {
       assert(p.stages <= bcStages + maxStages,
         s"$q completed ${p.stages} stages")
     }
+  }
+
+  test("a second s42 build in one session finds its classes compiled") {
+    // GraftSession sizes Spark's codegen cache to the engine's plan
+    // working set; at Spark's default 100 entries this build recompiles
+    // 265–289 classes
+    val q = "s42_stream_crawl_increment"
+    val first = profile(q)
+    val second = profile(q)
+    assert(second.compiles <= s42Recompiles,
+      s"$q compiled ${first.compiles} classes, then ${second.compiles} again")
   }
 }

@@ -58,6 +58,27 @@ class QueryProfileSpec extends AnyFunSuite {
     assert(s.maxTriggerMs <= s.triggerMs)
   }
 
+  test("a window counts the generated classes compiled inside it") {
+    // Spark inlines a long literal into the generated source, so no
+    // earlier plan of this JVM generated this one
+    val k = System.nanoTime()
+    def run() = QueryProfile.of(spark).measure(
+      spark.range(0, 100, 1, 2).selectExpr(s"id * ${k}L AS v").collect())._2
+    assert(run().compiles >= 1)
+    // the same plan again: every class is in Spark's codegen cache
+    assert(run().compiles == 0)
+  }
+
+  test("a stream drained again compiles nothing: its executor classes are cached") {
+    // each drain runs in a fresh clone of the session; the clone's tasks
+    // must share the executor's class loader, or every class they
+    // compiled is missed under a new cache key
+    def drain() = QueryProfile.of(spark).measure(
+      graft.streaming.StreamQueries.eventCounts(spark, sf).collect())._2
+    drain()
+    assert(drain().compiles == 0)
+  }
+
   test("windows do not nest") {
     val prof = QueryProfile.of(spark)
     intercept[IllegalArgumentException](prof.measure(prof.measure(())))
