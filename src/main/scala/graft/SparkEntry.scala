@@ -971,55 +971,30 @@ object SparkEntry {
   /** n39 source-node id offset (doc_ids stay far below this). */
   private val SrcNodeBase = 2000000000L
 
-  /** The TWO-CYCLE CRAWL STORE n91/n94/n96 all serve from, built ONCE
-    * per (JVM, sf dir) and shared (VERDICT r19 #4: each of the three
-    * queries used to rebuild the same two-cycle bootstrap in-query,
-    * ~9 s apiece at every SF). Sound to share because the store
-    * CONTENT is a deterministic function of the fixture: the two
-    * [[graft.operators.Curation.cycleAppend]] calls curate fixed
-    * doc_id-mod chunks under fixed budgets, and all three consumers
-    * only READ the committed components (serveDelta / docs) — nothing
-    * mutates the cached dir. The sample setting is JVM-frozen
-    * ([[pairSampleKeep]]), so the sf-dir key is complete. The dir is a
-    * PURGE-EXEMPT temp ([[graft.TempDirs.createPersistent]]): the
-    * bench's between-query `TempDirs.purge()` must not delete it while
-    * this cache still points at it (it is reclaimed by the JVM exit
-    * hook); `compute` revalidates the manifest anyway and rebuilds a
-    * vanished dir instead of serving a dangling path. `compute`
-    * serializes a racing first build; later callers reuse the dir. */
-  private val twoCycleStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val twoCycleBuildLock = new Object
-  private def twoCycleStore(s: SparkSession, d: String): String = {
-    // double-checked: the multi-second Spark build runs under its OWN
-    // lock, never inside ConcurrentHashMap.compute's bin lock (ADVICE
-    // r20 — a concurrent reader of another key must not block on a
-    // store build); revalidation rebuilds a vanished dir and deletes
-    // the superseded one instead of leaking it until JVM exit
-    def valid(dir: String): Boolean =
-      dir != null && graft.operators.SnapshotStore.nonEmpty(s, dir)
-    val cached = twoCycleStoreCache.get(d)
-    if (valid(cached)) cached
-    else twoCycleBuildLock.synchronized {
-      val again = twoCycleStoreCache.get(d)
-      if (valid(again)) again
-      else {
-        if (again != null)
-          try graft.TempDirs.deleteNow(again)
-          catch { case _: Throwable => () }
-        val docs = pairDocs(s, d)
-        val dir = graft.TempDirs.createPersistent("graft-two-cycle-store")
-        graft.operators.Curation.cycleAppend(s, dir,
-          docs.where(col("doc_id") % 3 === 0),
-          CurBudgetEn / 3, CurBudgetOther / 3)
-        graft.operators.Curation.cycleAppend(s, dir,
-          docs.where(col("doc_id") % 3 === 1),
-          CurBudgetEn / 3, CurBudgetOther / 3)
-        twoCycleStoreCache.put(d, dir)
-        dir
-      }
+  /** A fresh crawl store holding TWO curated cycles, the store n91,
+    * n94 and n96 each build during their own construction: the two
+    * [[graft.operators.Curation.cycleAppend]] calls curate the doc_id
+    * mod-3 chunks 0 and 1 under a third of n80's budgets. The store's
+    * content is a deterministic function of the fixture, so each query
+    * rebuilds it rather than sharing one across queries or runs. */
+  private def twoCycles(s: SparkSession, d: String): String = {
+    val docs = pairDocs(s, d)
+    val dir = graft.TempDirs.create("graft-two-cycle-store")
+    Seq(0, 1).foreach { chunk =>
+      graft.operators.Curation.cycleAppend(s, dir,
+        docs.where(col("doc_id") % 3 === chunk),
+        CurBudgetEn / 3, CurBudgetOther / 3)
     }
+    dir
   }
+
+  /** s37's (and s41's) plan: the even doc ids are the old snapshot,
+    * the sampled odd ids arrive as a stream. */
+  private def streamSnapshotNearDup(s: SparkSession, d: String): DataFrame =
+    graft.streaming.StreamQueries.streamSnapshotNearDup(s,
+      pairDocs(s, d).where(col("doc_id") % 2 === 0),
+      sampled(graft.streaming.StreamQueries.documentsStream(s, d), "doc_id")
+        .where(col("doc_id") % 2 === 1))
 
   /** DuckDB twin of the n34/s14 k-means plans. Long-format centroid
     * sums (exact BIGINT), unrolled 64-term dot-product folds in the
@@ -2932,15 +2907,12 @@ object SparkEntry {
     // snapshot's banding index + shingle sets build once batch-side
     // (the precomputed artifact), arriving docs band per-row with the
     // SAME shared kernel and probe/verify via two stateless
-    // stream-static equi-joins; the only state is the confirmed-pair
-    // table. Same oracle as n85
+    // stream-static equi-joins; each pair is kept at its lowest
+    // colliding band, so the probe holds no state and drains in
+    // append mode. Same oracle as n85
     // (StreamQueries.streamSnapshotNearDup).
-    "s37_stream_snapshot_neardup" -> (((s: SparkSession, d: String) => {
-      graft.streaming.StreamQueries.streamSnapshotNearDup(s,
-        pairDocs(s, d).where(col("doc_id") % 2 === 0),
-        sampled(graft.streaming.StreamQueries.documentsStream(s, d), "doc_id")
-          .where(col("doc_id") % 2 === 1))
-    }, Some(snapshotNearDupOracleSql))),
+    "s37_stream_snapshot_neardup" -> ((streamSnapshotNearDup _,
+      Some(snapshotNearDupOracleSql))),
 
     // s37 served from the MATERIALIZED SnapshotStore: the old
     // snapshot's banding index + shingle sets WRITE as parquet once
@@ -2959,22 +2931,13 @@ object SparkEntry {
           .where(col("doc_id") % 2 === 1))
     }, Some(snapshotNearDupOracleSql))),
 
-    // s37's confirmed-pair state in UPDATE mode — the production
-    // emission: each micro-batch writes ONLY its delta, and for this
-    // plan the delta is exactly-once per pair (every band of an
-    // arriving doc derives per-row from that doc's own batch, so all
-    // candidates for a pair land in the one batch that carries its new
-    // doc and the pair's max-agg group changes exactly once) — the
-    // drained update emissions ARE the final pair table, proven by
-    // sharing n85/s37's oracle verbatim: a double emission would
-    // duplicate a key and fail the row/hash compare.
-    "s41_stream_snapshot_neardup_update" -> (((s: SparkSession, d: String) => {
-      graft.streaming.StreamQueries.streamSnapshotNearDup(s,
-        pairDocs(s, d).where(col("doc_id") % 2 === 0),
-        sampled(graft.streaming.StreamQueries.documentsStream(s, d), "doc_id")
-          .where(col("doc_id") % 2 === 1),
-        mode = "update")
-    }, Some(snapshotNearDupOracleSql))),
+    // s37's plan under its own declared name: the
+    // stateless append probe emits each pair once, in the micro-batch
+    // that carries its new doc, so the drained rows ARE the pair table
+    // — a double emission would duplicate a key and fail n85/s37's
+    // oracle.
+    "s41_stream_snapshot_neardup_update" -> ((streamSnapshotNearDup _,
+      Some(snapshotNearDupOracleSql))),
 
     // n91's cycle as a STREAMING serving path (the r17 top composition
     // ask): cycle 1 bootstraps the store batch-side, then increment 2
@@ -5030,13 +4993,11 @@ object SparkEntry {
     // (c1/c2 suffixes) + the store-union CTEs + n84's rollup; the
     // corpus-scale generalization of the reference's sink-side dedup
     // loop (kafka_s.py:614-630). Rides the pair sample at sf0.1 (two
-    // LSH stages). Budgets third with the mod-3 chunks. The two
-    // increments build ONCE per JVM in [[twoCycleStore]] and are
-    // shared read-only with n94/n96 (r19 ask #4 — the three queries
-    // used to rebuild the same ~9 s bootstrap each).
+    // LSH stages). Budgets third with the mod-3 chunks; the two
+    // increments build in [[twoCycles]].
     "n91_crawl_cycle" -> (((s: SparkSession, d: String) => {
       val docs = pairDocs(s, d)
-      val dir = twoCycleStore(s, d) // shared with n94/n96 (read-only)
+      val dir = twoCycles(s, d)
       graft.operators.SnapshotStore.serveDelta(s, dir,
         docs.where(col("doc_id") % 3 === 2), col("text"), col("source"))
     }, Some(crawlCycleSql))),
@@ -5122,7 +5083,7 @@ object SparkEntry {
     // text-mangling docs write would also shift n_tokens. Rides the
     // pair sample at sf0.1 (two LSH train stages, like n91).
     "n94_store_docs_corpus" -> (((s: SparkSession, d: String) => {
-      val dir = twoCycleStore(s, d) // shared with n91/n96 (read-only)
+      val dir = twoCycles(s, d)
       graft.operators.SnapshotStore.docs(s, dir)
         .select(col("lang"),
           graft.functions.TextStats.textStats(col("text"))
@@ -5145,7 +5106,7 @@ object SparkEntry {
     // n28's pack CTEs over the survivor union; rides the pair sample
     // at sf0.1.
     "n96_store_pack" -> (((s: SparkSession, d: String) => {
-      val dir = twoCycleStore(s, d) // shared with n91/n94 (read-only)
+      val dir = twoCycles(s, d)
       graft.operators.Curation.packCorpus(
         graft.operators.SnapshotStore.docs(s, dir)
           .select(col("lang"), col("did").as("doc_id"),

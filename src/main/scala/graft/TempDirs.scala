@@ -10,32 +10,15 @@ import java.util.concurrent.ConcurrentLinkedQueue
   * at iters=2 ran each such query twice). */
 object TempDirs {
   private val registered = new ConcurrentLinkedQueue[Path]()
-  private val persistent = new ConcurrentLinkedQueue[Path]()
 
   private lazy val hookInstalled: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      var p = registered.poll()
-      while (p != null) { deleteRecursively(p); p = registered.poll() }
-      var q = persistent.poll()
-      while (q != null) { deleteRecursively(q); q = persistent.poll() }
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() => purge()))
 
   /** Create a temp dir cleaned up at JVM exit; returns its path. */
   def create(prefix: String): String = {
     hookInstalled
     val d = Files.createTempDirectory(prefix)
     registered.add(d)
-    d.toString
-  }
-
-  /** Like [[create]], but EXEMPT from [[purge]]: for JVM-lifetime
-    * memoized fixtures (SparkEntry's shared two-cycle store) that the
-    * bench's between-query purge must not delete while a cache still
-    * points at them. Still reclaimed by the exit hook. */
-  def createPersistent(prefix: String): String = {
-    hookInstalled
-    val d = Files.createTempDirectory(prefix)
-    persistent.add(d)
     d.toString
   }
 
@@ -49,16 +32,6 @@ object TempDirs {
   def purge(): Unit = {
     var p = registered.poll()
     while (p != null) { deleteRecursively(p); p = registered.poll() }
-  }
-
-  /** Delete one persistent dir NOW and drop it from the exit-hook queue
-    * — for a memoizing cache replacing a superseded entry (ADVICE r20:
-    * the replaced dir used to linger until JVM exit). */
-  def deleteNow(dir: String): Unit = {
-    val p = java.nio.file.Paths.get(dir)
-    persistent.remove(p)
-    registered.remove(p)
-    deleteRecursively(p)
   }
 
   /** Best-effort recursive delete (shared with StreamQueries.drain — a

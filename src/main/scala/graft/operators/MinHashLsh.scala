@@ -62,12 +62,14 @@ object MinHashLsh {
 
   /** The (band, key) array of a materialized signature column — ONE
     * shared kernel for every banding consumer (batch join, s19 bucket
-    * state, s37's per-row stream banding), so the paths cannot drift. */
+    * state, s37's per-row stream banding, [[probeIndex]]'s lowest-band
+    * rule), so the paths cannot drift. Every band reads `sig`: pass a
+    * column or a lambda variable, not an expression to recompute. */
   private[graft] def bandKeysFromSig(sig: Column): Column =
-    array((0 until K / R).map(bi => struct(
-      lit(bi).as("band"),
-      concat_ws("|", transform(slice(sig, bi * R + 1, R),
-        _.cast("string"))).as("key"))): _*)
+    transform(sequence(lit(0), lit(K / R - 1)), band => struct(
+      band.as("band"),
+      concat_ws("|", transform(slice(sig, band * R + 1, lit(R)),
+        _.cast("string"))).as("key")))
 
   /** Exact Jaccard of two shingle-set columns — the one formula every
     * verifier (batch, s19, s37) applies. */
@@ -148,20 +150,28 @@ object MinHashLsh {
   }
 
   /** Probe a previous snapshot's (bands, sets) index with arriving
-    * docs — the ONE serving kernel behind s37 (index derived inline),
-    * s38 (index read from the [[SnapshotStore]] parquet layout) and
-    * any batch probe: each arriving doc bands per-row with the shared
-    * [[bandKeysFromSig]] kernel, candidates come from a stateless
-    * equi-join on (band, key), the old set is fetched by a second
-    * equi-join, and exact Jaccard verifies (precision 1.0). The
-    * closing groupBy(a_id, b_id) max-agg dedups multi-band hits of
-    * the same pair — a plain aggregate batch-side, the complete-mode
-    * state when `arriving` is a stream. Row-equal to
-    * [[snapshotNearDupPairs]] on the same corpora: the bands are the
+    * docs — the ONE serving kernel behind s37/s41 (index derived
+    * inline), s38 (index read from the [[SnapshotStore]] parquet
+    * layout) and any batch probe: each arriving doc bands per-row with
+    * the shared [[bandKeysFromSig]] kernel, candidates come from a
+    * stateless equi-join on (band, key), the old set is fetched by a
+    * second equi-join, and exact Jaccard verifies (precision 1.0).
+    * A pair colliding in several bands is kept only at the LOWEST band
+    * where the two docs collide: after the Jaccard filter both
+    * signatures recompute from their sets, band through the same
+    * kernel, and the row survives iff no lower band's keys are equal —
+    * so each pair is emitted once with no aggregate, and a streaming
+    * `arriving` drains in append mode with no state store. Row-equal
+    * to [[snapshotNearDupPairs]] on the same corpora: the bands are the
     * same kernel, so the candidate set matches, and both verify
     * exactly. */
   def probeIndex(bandsA: DataFrame, setsA: DataFrame,
       arriving: DataFrame): DataFrame = {
+    // a set's band keys from ONE signature evaluation: the lambda binds
+    // the signature, where a plain expression inlined into the verify
+    // filter would recompute it in every band
+    def keys(set: Column) = transform(array(signature(set, K)),
+      sig => bandKeysFromSig(sig).getField("key")).getItem(0)
     val banded = setsOf(arriving)
       .select(col("did").as("b_id"), col("sset").as("b_set"))
       .withColumn("sig", signature(col("b_set"), K))
@@ -171,13 +181,14 @@ object MinHashLsh {
         col("bk.band").as("band"), col("bk.key").as("key"))
     banded
       .join(bandsA, Seq("band", "key"))
-      .select(col("did").as("a_id"), col("b_id"), col("b_set"))
+      .select(col("did").as("a_id"), col("b_id"), col("b_set"), col("band"))
       .join(setsA.select(col("did").as("a_id"), col("sset").as("a_set")),
         Seq("a_id"))
-      .select(col("a_id"), col("b_id"),
-        jaccard(col("a_set"), col("b_set")).as("jaccard"))
+      .select(col("a_id"), col("b_id"), col("band"), col("a_set"),
+        col("b_set"), jaccard(col("a_set"), col("b_set")).as("jaccard"))
       .where(col("jaccard") >= Threshold)
-      .groupBy(col("a_id"), col("b_id"))
-      .agg(max(col("jaccard")).as("jaccard"))
+      .where(array_position(zip_with(keys(col("a_set")), keys(col("b_set")),
+        _ === _), true) === col("band") + 1)
+      .select(col("a_id"), col("b_id"), col("jaccard"))
   }
 }

@@ -2,8 +2,12 @@ package graft.operators
 
 import org.apache.hadoop.fs.{FileContext, Path => HPath}
 
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 
 import graft.ManifestLog
 import graft.ManifestLog.{readLines, writeLines}
@@ -298,16 +302,7 @@ object SnapshotStore {
       val paths = componentPaths(spark, dir, ids, comp)
       require(paths.nonEmpty,
         s"SnapshotStore at $dir has no committed $comp rows (version $version)")
-      // digests/fps schemas are static; for the did-typed components a
-      // per-(store, component) schema cache applies: append==rebuild
-      // already requires every append's component to be
-      // union-compatible (a plain multi-path read picks ONE file's
-      // footer schema anyway), so the first read's inferred schema
-      // serves every later read — skipping the parquet
-      // schema-inference job each probe/serve used to launch per
-      // component (s42 pays it per micro-batch)
-      spark.read.schema(componentSchema(spark, dir, comp, paths))
-        .parquet(paths: _*)
+      read(spark, comp, paths)
     }
     def sets(spark: SparkSession): DataFrame = component(spark, "sets")
     def bands(spark: SparkSession): DataFrame = component(spark, "bands")
@@ -316,53 +311,49 @@ object SnapshotStore {
     def docs(spark: SparkSession): DataFrame = component(spark, "docs")
   }
 
-  /** Backing cache for [[Snapshot.component]]'s schema reuse — keyed
-    * (dir, comp); a store's component schema is fixed by the append ==
-    * rebuild union-compatibility contract. LRU-bounded (a long-lived
-    * JVM cycling many temp stores must not grow it without bound —
-    * VERDICT r21 #4), and [[gcOrphans]] invalidates a dir's entries so
-    * deleting a store and recreating one at the same path with a
-    * different docs schema cannot be served the stale cached schema
-    * (ADVICE r21). */
-  private val SchemaCacheCap = 1024
-  private val componentSchemaCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, String),
-        org.apache.spark.sql.types.StructType](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String),
-            org.apache.spark.sql.types.StructType]): Boolean =
-        size > SchemaCacheCap
-    })
-  private def invalidateSchemas(dir: String): Unit =
-    componentSchemaCache.synchronized {
-      componentSchemaCache.keySet.removeIf(_._1 == dir)
-    }
-  /** The (dir, comp) schema, inferred once from `paths` and cached —
-    * sound because append == rebuild requires every append's component
-    * to be union-compatible. */
-  private def cachedComponentSchema(spark: SparkSession, dir: String,
-      comp: String,
-      paths: => Seq[String]): org.apache.spark.sql.types.StructType = {
-    val key = (dir, comp)
-    val cached = componentSchemaCache.get(key)
-    if (cached != null) cached
-    else {
-      val schema = spark.read.parquet(paths: _*).schema
-      componentSchemaCache.put(key, schema)
-      schema
-    }
+  /** The key under which every Spark parquet write stores the written
+    * frame's schema (as JSON) in the file footer's key-value metadata. */
+  private val RowMetadataKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The schema of the parquet dir `path`, read on the driver from the
+    * footer of one of its data files — no Spark job. append == rebuild
+    * requires every append's component to be union-compatible (a plain
+    * multi-path read picks ONE file's footer schema too), so one file
+    * speaks for the component. A file without Spark's row metadata was
+    * not written by this store and throws, naming the file. */
+  private def footerSchema(spark: SparkSession, path: String): StructType = {
+    val hp = new HPath(path)
+    val file = hfs(spark, hp).listStatus(hp).map(_.getPath)
+      .find(_.getName.endsWith(".parquet"))
+      .getOrElse(throw new IllegalStateException(
+        s"SnapshotStore component $path holds no parquet data file"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file,
+      spark.sparkContext.hadoopConfiguration))
+    val json =
+      try reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get(RowMetadataKey)
+      finally reader.close()
+    if (json == null) throw new IllegalStateException(
+      s"SnapshotStore component file $file carries no Spark row metadata " +
+        s"($RowMetadataKey): it was not written by this store")
+    DataType.fromJson(json).asInstanceOf[StructType]
   }
 
-  /** The schema every read of component `comp` at `dir` passes: static
-    * for digests and fps, the store's cached one otherwise. */
-  private def componentSchema(spark: SparkSession, dir: String,
-      comp: String,
-      paths: => Seq[String]): org.apache.spark.sql.types.StructType =
+  /** The schema every read of component `comp` over `paths` passes:
+    * static for digests and fps, the footer's otherwise — so no store
+    * read runs a parquet schema-inference job. */
+  private def componentSchema(spark: SparkSession, comp: String,
+      paths: Seq[String]): StructType =
     comp match {
       case "digests" => DigestSchema
       case "fps" => FpSchema
-      case _ => cachedComponentSchema(spark, dir, comp, paths)
+      case _ => footerSchema(spark, paths.head)
     }
+
+  /** Component `comp`'s rows under `paths`, read with its schema. */
+  private def read(spark: SparkSession, comp: String,
+      paths: Seq[String]): DataFrame =
+    spark.read.schema(componentSchema(spark, comp, paths)).parquet(paths: _*)
 
   /** Resolve the CURRENT manifest once into an immutable [[Snapshot]]
     * view — the version every component read of one logical query
@@ -412,14 +403,9 @@ object SnapshotStore {
     "did" -> "did.bloom", "dig" -> "digest.bloom", "fp" -> "fp.bloom")
 
   /** The single-column digest/fp component schemas — known statically,
-    * so their reads always pass an explicit schema (skips the parquet
-    * schema-inference job and its driver gap on every hot-path read). */
-  private val DigestSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("h",
-      org.apache.spark.sql.types.StringType)))
-  private val FpSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("fp",
-      org.apache.spark.sql.types.StringType)))
+    * so their reads need no footer. */
+  private val DigestSchema = StructType(Seq(StructField("h", StringType)))
+  private val FpSchema = StructType(Seq(StructField("fp", StringType)))
 
   /** A staging's `.summary` line files: `baseline` (line 1 the pinned
     * manifest version, then its ids) and `did.hits` (an EMPTY file is
@@ -517,14 +503,10 @@ object SnapshotStore {
       val flags: Array[Boolean], var count: Long,
       var remaining: Int) extends Serializable
 
-  /** One [[sketchJob]] input: a family, the parquet paths carrying its
-    * keys, the key column, and (when the caller knows it) the read
-    * schema — an explicit schema prunes the scan to the key columns
-    * AND skips the parquet schema-inference job a plain
-    * `spark.read.parquet` launches (measured: 3 × ~60 ms + driver gaps
-    * per stage at fixture scale). */
-  private final case class SketchPart(fam: String, paths: Seq[String],
-      key: Column, keySchema: Option[org.apache.spark.sql.types.StructType])
+  /** The sketch family and key column of each component a
+    * [[sketchJob]] scans (sets and docs both carry dids). */
+  private val SketchKey = Map("sets" -> ("did", "did"),
+    "docs" -> ("did", "did"), "digests" -> ("dig", "h"), "fps" -> ("fp", "fp"))
 
   /** ONE pass over staged parquet bytes that both BUILDS the sidecar
     * sketches (at cap width, folded later) and TESTS every key against
@@ -533,26 +515,24 @@ object SnapshotStore {
     * treeAggregate (depth 2 past 64 partitions, so corpus-scale
     * increments merge partials in a tree, not on the driver).
     *
-    * Several parts may share a family (sets and docs both carry dids).
-    * `fams` maps a family to the committed (appendId, sketch) pairs to
-    * test; null keys are skipped (SQL join semantics: null never
-    * equals — ADVICE r20's NPE on null doc ids). Families with nothing
-    * to do (no sketch wanted, nothing to test) are excluded from the
-    * scan; if nothing remains, NO job runs. */
-  private def sketchJob(spark: SparkSession,
-      parts: Seq[SketchPart],
+    * The pass scans every [[SketchKey]] component staged under `base`
+    * that holds a part file. `fams` maps a family to the committed
+    * (appendId, sketch) pairs to test; null keys are skipped (SQL join
+    * semantics: null never equals — ADVICE r20's NPE on null doc ids).
+    * Families with nothing to do (no sketch wanted, nothing to test)
+    * are excluded from the scan; if nothing remains, NO job runs. */
+  private def sketchJob(spark: SparkSession, base: String,
       fams: Map[String, Seq[(String, StoreSketch)]],
       buildSketch: Boolean): SketchResult = {
-    val live = parts.filter(_.paths.nonEmpty)
-    val needed = live.filter(p =>
-      buildSketch || fams.getOrElse(p.fam, Nil).nonEmpty)
+    val needed = SketchKey.toSeq.filter { case (c, (fam, _)) =>
+      (buildSketch || fams.getOrElse(fam, Nil).nonEmpty) &&
+        hasParquet(spark, s"$base/$c")
+    }
     if (needed.isEmpty) return SketchResult(Map.empty, Map.empty)
     import spark.implicits._
-    val ds = needed.map { p =>
-      val reader = spark.read
-      p.keySchema.foreach(reader.schema)
-      reader.parquet(p.paths: _*)
-        .select(lit(p.fam).as("fam"), p.key.cast("string").as("k"))
+    val ds = needed.map { case (c, (fam, key)) =>
+      read(spark, c, Seq(s"$base/$c"))
+        .select(lit(fam).as("fam"), col(key).cast("string").as("k"))
         .as[(String, String)]
     }.reduce(_ union _)
     sketchAgg(spark, ds, fams, buildSketch)
@@ -700,19 +680,7 @@ object SnapshotStore {
     // ONE aggregation pass over the staged BYTES (audit the bytes, not
     // the producing plan): builds did/digest/fp sidecar sketches AND
     // tests every staged key against the pinned appends' sketches
-    val didSchema = Some(org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("did",
-        setsDf.schema("did").dataType))))
-    val parts = Seq(
-      SketchPart("did", Seq(s"$base/sets").filter(hasParquet(spark, _)),
-        col("did"), didSchema),
-      SketchPart("did", Seq(s"$base/docs").filter(hasParquet(spark, _)),
-        col("did"), didSchema),
-      SketchPart("dig", Seq(s"$base/digests").filter(hasParquet(spark, _)),
-        col("h"), Some(DigestSchema)),
-      SketchPart("fp", Seq(s"$base/fps").filter(hasParquet(spark, _)),
-        col("fp"), Some(FpSchema)))
-    val res = sketchJob(spark, parts, famSketches(spark, dir, pinned.ids),
+    val res = sketchJob(spark, base, famSketches(spark, dir, pinned.ids),
       buildSketch = true)
     // digest/fp delta: anti-join ONLY the bloom-hit appends — a
     // committed row equal to a staged row always hits its append's
@@ -748,9 +716,8 @@ object SnapshotStore {
       val ordered = pinned.ids.filter(scanIds)
       val paths = componentPaths(spark, pinned.dir, ordered, comp)
       if (paths.nonEmpty) {
-        val schema = if (comp == "digests") DigestSchema else FpSchema
-        val cur = spark.read.schema(schema).parquet(s"$base/$comp")
-        val delta = cur.join(spark.read.schema(schema).parquet(paths: _*),
+        val cur = read(spark, comp, Seq(s"$base/$comp"))
+        val delta = cur.join(read(spark, comp, paths),
           cur.columns.toSeq, "left_anti")
         val tmp = s"$base/.$comp.delta"
         delta.write.mode("overwrite").parquet(tmp)
@@ -851,18 +818,9 @@ object SnapshotStore {
       // no-race case: the common commit runs ZERO jobs). False
       // positives cost a confirming scan, never a verdict.
       val racerIds = m.ids.filterNot(baseline.drop(1).toSet)
-      val stagedDidComps = Seq("sets", "docs")
-        .filter(c => hasParquet(spark, s"$base/$c"))
       // a family with no staged part runs no test (sketchJob skips it)
-      val res = sketchJob(spark,
-        Seq(
-          SketchPart("dig", Seq(s"$base/digests").filter(hasParquet(spark, _)),
-            col("h"), Some(DigestSchema)),
-          SketchPart("fp", Seq(s"$base/fps").filter(hasParquet(spark, _)),
-            col("fp"), Some(FpSchema))) ++
-          stagedDidComps.map(c =>
-            SketchPart("did", Seq(s"$base/$c"), col("did"), None)),
-        famSketches(spark, dir, racerIds), buildSketch = false)
+      val res = sketchJob(spark, base, famSketches(spark, dir, racerIds),
+        buildSketch = false)
       val didScanIds = m.ids.filter(res.hitIds("did") ++ didHits)
       // full-row components: key = component-tagged whole row,
       // committed side restricted to sketch-hit racers
@@ -878,28 +836,27 @@ object SnapshotStore {
               def key(df: DataFrame) = df.select(
                 concat(lit(comp), lit(":"),
                   col(df.columns.head).cast("string")).as("k"))
-              Some((key(spark.read.parquet(s"$base/$comp"))
+              Some((key(read(spark, comp, Seq(s"$base/$comp")))
                   .withColumn("comp", lit(comp)),
-                key(spark.read.parquet(committed: _*))))
+                key(read(spark, comp, committed))))
             }
           }
         }
       def dids(comp: String, paths: Seq[String]): Option[DataFrame] =
         if (paths.isEmpty) None
-        else Some(spark.read.parquet(paths: _*).select(
+        else Some(read(spark, comp, paths).select(
           concat(lit("did:"), col("did").cast("string")).as("k"))
           .withColumn("comp", lit(comp)))
-      // resolve the COMMITTED side's paths first: constructing a
-      // parquet DataFrame launches its schema-inference job, so the
-      // staged side must not be built when there is nothing to audit
-      // against (the no-hit commit — the common case — stays jobless)
+      // resolve the COMMITTED side's paths first: the staged side is
+      // built only when there is something to audit against (the no-hit
+      // commit — the common case — reads no footer and runs no job)
       val committedDidPaths = Seq("sets", "docs")
         .map(c => c -> componentPaths(spark, dir, didScanIds, c))
       val didPart =
         if (committedDidPaths.forall(_._2.isEmpty)) None
         else {
-          val stagedDids = stagedDidComps
-            .flatMap(c => dids(c, Seq(s"$base/$c")))
+          val stagedDids = Seq("sets", "docs").flatMap(c =>
+            dids(c, Seq(s"$base/$c").filter(hasParquet(spark, _))))
           val committedDids = committedDidPaths
             .flatMap { case (c, ps) => dids(c, ps) }
           if (stagedDids.isEmpty || committedDids.isEmpty) None
@@ -1007,38 +964,20 @@ object SnapshotStore {
     val srcPaths = Components.map { c =>
       c -> componentPaths(spark, dir, ids0, c)
     }.toMap
-    // every source read passes its component's schema, so neither the
-    // rewrites nor the audit and sidecar reads below run a parquet
-    // schema-inference job
-    val srcSchemas = srcPaths.collect { case (c, ps) if ps.nonEmpty =>
-      c -> componentSchema(spark, dir, c, ps)
-    }
     // the component rewrites are independent jobs — overlap them
     // (guide §2.6), like the staging writes
-    Par.all(srcSchemas.toSeq.map { case (c, schema) => () =>
-      spark.read.schema(schema).parquet(srcPaths(c): _*)
-        .write.mode("error").parquet(s"$base/$c")
+    Par.all(srcPaths.toSeq.collect { case (c, ps) if ps.nonEmpty => () =>
+      read(spark, c, ps).write.mode("error").parquet(s"$base/$c")
     })
-    def didField(c: String) = srcSchemas.get(c).map(s =>
-      org.apache.spark.sql.types.StructType(Seq(s("did"))))
     // the compacted append carries its own did/digest/fp sketches (one
     // aggregation pass over the rewritten bytes — same order as the
     // rewrite itself): without them, every future commit's did audit
     // and every future staging's anti-join would read them as all-hit
     // and scan the corpus-sized compacted components
-    val skRes = sketchJob(spark, Seq(
-      SketchPart("did", Seq(s"$base/sets").filter(hasParquet(spark, _)),
-        col("did"), didField("sets")),
-      SketchPart("did", Seq(s"$base/docs").filter(hasParquet(spark, _)),
-        col("did"), didField("docs")),
-      SketchPart("dig", Seq(s"$base/digests").filter(hasParquet(spark, _)),
-        col("h"), Some(DigestSchema)),
-      SketchPart("fp", Seq(s"$base/fps").filter(hasParquet(spark, _)),
-        col("fp"), Some(FpSchema))),
-      Map.empty, buildSketch = true)
-    writeSketches(spark, base, skRes.sketches)
+    writeSketches(spark, base,
+      sketchJob(spark, base, Map.empty, buildSketch = true).sketches)
     touchInflight(spark, base) // audit may outlast the staging writes
-    auditCompactEquality(spark, base, srcPaths, srcSchemas.get).foreach { comp =>
+    auditCompactEquality(spark, base, srcPaths).foreach { comp =>
       fs.delete(new HPath(base), true)
       throw new IllegalStateException(
         s"SnapshotStore.compact audit failed on $comp at $dir: staged " +
@@ -1076,13 +1015,7 @@ object SnapshotStore {
     * same impossibility the store's digest identity already rests on).
     * Returns the first mismatching component, None when equal. */
   private[graft] def auditCompactEquality(spark: SparkSession,
-      base: String, srcPaths: Map[String, Seq[String]],
-      schemaOf: String => Option[org.apache.spark.sql.types.StructType] =
-        _ => None): Option[String] = {
-    def readAll(c: String, ps: Seq[String]) = schemaOf(c) match {
-      case Some(s) => spark.read.schema(s).parquet(ps: _*)
-      case None => spark.read.parquet(ps: _*)
-    }
+      base: String, srcPaths: Map[String, Seq[String]]): Option[String] = {
     val sides = srcPaths.toSeq.sortBy(_._1).flatMap { case (c, ps) =>
       if (ps.isEmpty) None
       else {
@@ -1090,10 +1023,13 @@ object SnapshotStore {
           lit(c).as("comp"),
           md5(to_json(struct(df.columns.toIndexedSeq.map(col): _*))).as("k"),
           lit(side).as("side"))
+        // the rewrite reads under its SOURCE schema
+        val src = read(spark, c, ps)
         val neu =
-          if (hasParquet(spark, s"$base/$c")) readAll(c, Seq(s"$base/$c"))
-          else readAll(c, ps).limit(0)
-        Some(keyed(readAll(c, ps), "src").unionByName(keyed(neu, "neu")))
+          if (hasParquet(spark, s"$base/$c"))
+            spark.read.schema(src.schema).parquet(s"$base/$c")
+          else src.limit(0)
+        Some(keyed(src, "src").unionByName(keyed(neu, "neu")))
       }
     }
     if (sides.isEmpty) None
@@ -1172,11 +1108,6 @@ object SnapshotStore {
       }
     }
     ManifestLog.trim(spark, dir, keepManifests, graceMs)
-    // the dir's cached component schemas die on every sweep — cheap
-    // (one re-inference later), and it covers the store-deleted-and-
-    // recreated-at-the-same-path case even when `appends/` itself is
-    // gone (ADVICE r21's stale-schema hazard)
-    invalidateSchemas(dir)
     if (!fs.exists(root)) Seq.empty
     else {
       val live0 = committedIds(spark, dir).toSet
@@ -1201,7 +1132,6 @@ object SnapshotStore {
         .map { p => fs.delete(p, true); p.getName }
       // a reclaimed id may be recycled (tombstone-retention trim +
       // appendAs replay) — its cached sketches must die with its dir
-      // (schemas were invalidated above)
       invalidateSketches(dir, deleted)
       deleted
     }

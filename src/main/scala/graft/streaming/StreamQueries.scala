@@ -785,54 +785,45 @@ object StreamQueries {
       Dedup.segmentsOf(graft.sources.Tables.documents(spark, dir), k), dfIdx)
   }
 
-  /** Streaming cross-snapshot NEAR-dup delta (s37) — n85's streaming
-    * twin and the production ingest shape n85's scaladoc names: the
-    * OLD snapshot's banding index and shingle sets build ONCE
-    * batch-side (lineage-severed — the precomputed artifact; exactly
-    * the bucket table s19 maintains as state), and every ARRIVING doc
-    * bands per-row with the SAME shared kernel
-    * (MinHashLsh.bandKeysFromSig — batch and stream cannot drift),
-    * probes the index by a stateless stream-static equi-join on
-    * (band, key), and exact-verifies candidates against the old sets
-    * by a second stream-static join + the shared jaccard formula.
-    * The ONLY state is the confirmed-pair table (a max-agg that dedups
-    * multi-band hits of the same pair) — bounded by true near-dups,
-    * not by candidates. `mode` picks the emission: "complete" re-emits
-    * the whole pair table every micro-batch (the harness's original
-    * drain-to-memory shape, s37); "update" writes ONLY each batch's
-    * delta (s41) — and for THIS plan the delta is exactly-once per
-    * pair, because every band of an arriving doc derives per-row from
-    * that doc's own batch, so all candidates for a pair (a, b) arrive
-    * in the single micro-batch that carries b and the pair's max-agg
-    * group changes exactly once: the drained update-mode emissions ARE
-    * the final pair table, no upsert reconciliation needed (the
-    * production near-dup sink shape — resolves the r16 complete-mode
-    * note). Drained pairs equal batch n85 row for row either way: the
-    * bands are identical, so the candidate set is identical, and
-    * verification is exact (same oracle). */
+  /** Streaming cross-snapshot NEAR-dup delta (s37, and s41 under its
+    * own name) — n85's streaming twin and the production ingest shape
+    * n85's scaladoc names: the OLD snapshot's banding index and
+    * shingle sets build ONCE batch-side (lineage-severed — the
+    * precomputed artifact; exactly the bucket table s19 maintains as
+    * state), and every ARRIVING doc bands per-row with the SAME shared
+    * kernel (MinHashLsh.bandKeysFromSig — batch and stream cannot
+    * drift), probes the index by a stateless stream-static equi-join
+    * on (band, key), and exact-verifies candidates against the old
+    * sets by a second stream-static join + the shared jaccard formula.
+    * A pair is emitted only at the lowest band its two docs collide
+    * in ([[graft.operators.MinHashLsh.probeIndex]]), so the probe keeps
+    * NO state: it drains in append mode, each micro-batch writing
+    * exactly its own confirmed pairs once. Drained pairs equal batch
+    * n85 row for row: the bands are identical, so the candidate set is
+    * identical, and verification is exact (same oracle). */
   def streamSnapshotNearDup(spark: SparkSession, oldDocs: DataFrame,
-      arrivingDocs: DataFrame, mode: String = "complete"): DataFrame = {
+      arrivingDocs: DataFrame): DataFrame = {
     import graft.operators.MinHashLsh
     val setsA = MinHashLsh.setsOf(oldDocs)
       .localCheckpoint() // sever the fixture scan from every micro-batch
     val bandsA = MinHashLsh.banded(setsA).localCheckpoint()
-    runToTable(spark, MinHashLsh.probeIndex(bandsA, setsA, arrivingDocs), mode)
+    runToTable(spark, MinHashLsh.probeIndex(bandsA, setsA, arrivingDocs),
+      "append")
   }
 
   /** Streaming near-dup delta served from the MATERIALIZED
     * [[graft.operators.SnapshotStore]] (s38) — s37 with the inline
     * localCheckpoint index replaced by the parquet store a production
     * pipeline writes once per snapshot: arriving docs probe the
-    * store's bands/sets file scans via the SAME
-    * [[graft.operators.MinHashLsh.probeIndex]] kernel, so the drained
-    * pair table equals s37's and batch n85's row for row (same
-    * oracle). Only the confirmed-pair max-agg is stateful; the same
-    * exactly-once-per-pair update emission as s41 applies (`mode`). */
+    * store's bands/sets file scans via the SAME stateless
+    * [[graft.operators.MinHashLsh.probeIndex]] append probe, so the
+    * drained pair table equals s37's and batch n85's row for row (same
+    * oracle). */
   def streamSnapshotNearDupFromStore(spark: SparkSession, storeDir: String,
-      arrivingDocs: DataFrame, mode: String = "complete"): DataFrame =
+      arrivingDocs: DataFrame): DataFrame =
     runToTable(spark,
       graft.operators.SnapshotStore.serveNearDup(spark, storeDir, arrivingDocs),
-      mode)
+      "append")
 
   /** Streaming snapshot-delta classification served from the
     * MATERIALIZED [[graft.operators.SnapshotStore]] digest components

@@ -34,16 +34,17 @@ class DimRefreshSpec extends AnyFunSuite {
     // stream file 1 (batch 0): events 10,20; file 2 (batch 1): 11,21 —
     // flattened to single parquet files in the source dir; distinct
     // mtimes pin the file→batch order (source sorts oldest-first)
-    def writeStreamFile(name: String, rows: Seq[(Long, Long)]): Unit = {
+    def writeStreamFile(name: String, rows: Seq[(Long, Long)], order: Int): Unit = {
       val tmp = TempDirs.create("dimref-tmp")
       rows.toDF("event_id", "user_id").coalesce(1).write.parquet(s"$tmp/d")
       val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp, "d"))
         .filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
-      java.nio.file.Files.copy(part, java.nio.file.Paths.get(streamDir, name))
+      val target = java.nio.file.Files.copy(part, java.nio.file.Paths.get(streamDir, name))
+      java.nio.file.Files.setLastModifiedTime(target,
+        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + order * 1000L))
     }
-    writeStreamFile("f1.parquet", Seq((10L, 1L), (20L, 2L)))
-    Thread.sleep(300)
-    writeStreamFile("f2.parquet", Seq((11L, 1L), (21L, 2L)))
+    writeStreamFile("f1.parquet", Seq((10L, 1L), (20L, 2L)), 0)
+    writeStreamFile("f2.parquet", Seq((11L, 1L), (21L, 2L)), 1)
 
     def writeDim(version: String): Unit =
       Seq((1L, s"$version-a"), (2L, s"$version-b")).toDF("user_id", "segment")

@@ -139,12 +139,16 @@ class HllSpec extends AnyFunSuite {
     val spark = SparkTestSession.spark
     import spark.implicits._
     val dir = TempDirs.create("hll-stream")
-    def writeFile(name: String, docs: Seq[(String, String)]): Unit = {
+    def writeFile(name: String, docs: Seq[(String, String)], order: Int): Unit = {
       val tmp = TempDirs.create("hll-tmp")
       docs.toDF("lang", "text").coalesce(1).write.parquet(s"$tmp/d")
       val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp, "d"))
         .filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
-      java.nio.file.Files.copy(part, java.nio.file.Paths.get(dir, name))
+      val target = java.nio.file.Files.copy(part, java.nio.file.Paths.get(dir, name))
+      // distinct mtimes pin the file -> micro-batch order (the source
+      // takes files oldest first)
+      java.nio.file.Files.setLastModifiedTime(target,
+        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + order * 1000L))
     }
     val rng = new Random(7)
     val vocab = Vector("alpha", "beta", "gamma", "delta", "eps", "zeta", "eta")
@@ -154,7 +158,7 @@ class HllSpec extends AnyFunSuite {
     Seq.tabulate(3)(i =>
       Seq.tabulate(6)(j => (if (j % 2 == 0) "en" else "de", doc())))
       .zipWithIndex.foreach { case (b, i) =>
-        writeFile(s"f$i.parquet", b); Thread.sleep(200)
+        writeFile(s"f$i.parquet", b, i)
       }
     val streamed = Hll.assemble(StreamQueries.runToTable(spark,
       Hll.registersPlan(

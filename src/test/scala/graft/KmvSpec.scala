@@ -60,12 +60,16 @@ class KmvSpec extends AnyFunSuite {
     val dir = TempDirs.create("kmv-stream")
     // three stream files with overlapping shingle sets across batches
     // (cross-batch duplicate hashes are what the state merge must drop)
-    def writeFile(name: String, docs: Seq[(String, String)]): Unit = {
+    def writeFile(name: String, docs: Seq[(String, String)], order: Int): Unit = {
       val tmp = TempDirs.create("kmv-tmp")
       docs.toDF("lang", "text").coalesce(1).write.parquet(s"$tmp/d")
       val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp, "d"))
         .filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
-      java.nio.file.Files.copy(part, java.nio.file.Paths.get(dir, name))
+      val target = java.nio.file.Files.copy(part, java.nio.file.Paths.get(dir, name))
+      // distinct mtimes pin the file -> micro-batch order (the source
+      // takes files oldest first)
+      java.nio.file.Files.setLastModifiedTime(target,
+        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + order * 1000L))
     }
     val rng = new Random(7)
     val vocab = Vector("alpha", "beta", "gamma", "delta", "eps", "zeta", "eta")
@@ -73,7 +77,7 @@ class KmvSpec extends AnyFunSuite {
     val batches = Seq.tabulate(3)(i =>
       Seq.tabulate(6)(j => (if (j % 2 == 0) "en" else "de", doc())))
     batches.zipWithIndex.foreach { case (b, i) =>
-      writeFile(s"f$i.parquet", b); Thread.sleep(200)
+      writeFile(s"f$i.parquet", b, i)
     }
 
     val streamed = StreamQueries.kmvFinish(StreamQueries.runToTable(spark,

@@ -52,12 +52,16 @@ class SampleQuantileSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.functions.PriorityAgg
     val dir = TempDirs.create("pri-stream")
-    def writeFile(name: String, docs: Seq[(Long, String, String)]): Unit = {
+    def writeFile(name: String, docs: Seq[(Long, String, String)], order: Int): Unit = {
       val tmp = TempDirs.create("pri-tmp")
       docs.toDF("doc_id", "lang", "text").coalesce(1).write.parquet(s"$tmp/d")
       val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp, "d"))
         .filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
-      java.nio.file.Files.copy(part, java.nio.file.Paths.get(dir, name))
+      val target = java.nio.file.Files.copy(part, java.nio.file.Paths.get(dir, name))
+      // distinct mtimes pin the file -> micro-batch order (the source
+      // takes files oldest first)
+      java.nio.file.Files.setLastModifiedTime(target,
+        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + order * 1000L))
     }
     // 3 files × 8 docs, ids interleaved so the global bottom-K of each
     // lang straddles batches (the merge has to actually do work)
@@ -65,8 +69,7 @@ class SampleQuantileSpec extends AnyFunSuite {
       writeFile(s"f$i.parquet", Seq.tabulate(8) { j =>
         val id = (j * 3 + i).toLong
         (id, if (j % 2 == 0) "en" else "de", Seq.fill(1 + (id % 7).toInt)("w").mkString(" "))
-      })
-      Thread.sleep(200)
+      }, i)
     }
 
     def plan(docs: org.apache.spark.sql.DataFrame) = docs

@@ -156,7 +156,7 @@ class ShinglesSpec extends AnyFunSuite {
   test("streamed snapshot near-dup delta drains to the batch pair table") {
     // arriving docs in 3 forced micro-batches probe the old snapshot's
     // precomputed index; a doc matching TWO old copies and a multi-band
-    // hit must still emit one row per pair (the complete-mode max-agg)
+    // hit must still emit one row per pair (the lowest-band rule)
     val dir = TempDirs.create("snapnd-stream")
     def writeFile(name: String, docs: Seq[(Long, String)]): Unit = {
       val tmp = TempDirs.create("snapnd-tmp")
@@ -182,6 +182,66 @@ class ShinglesSpec extends AnyFunSuite {
     assert(got == want)
     assert(got == Map((0L, 1L) -> 1.0, (2L, 1L) -> 1.0,
       (0L, 5L) -> 1.0, (2L, 5L) -> 1.0))
+  }
+
+  test("the near-dup probe keeps each pair once, at its lowest band, and holds no state") {
+    val stored = (1 to 30).map(i => s"w$i").mkString(" ")
+    def keys(texts: Seq[String]): Seq[Seq[String]] = texts.toDF("text")
+      .select(MinHashLsh.bandKeysFromSig(MinHashLsh.signature(
+        Text.shingleSet(col("text")), MinHashLsh.K)).getField("key"))
+      .as[Seq[String]].collect().toSeq
+    // variants with half their words replaced collide with the stored
+    // doc in a few bands or none: pick one colliding in exactly one band
+    // and one colliding in none
+    val rnd = new scala.util.Random(11)
+    val variants = Seq.fill(300) {
+      stored.split(" ").map(w => if (rnd.nextBoolean()) s"v${rnd.nextInt(99)}" else w)
+        .mkString(" ")
+    }
+    val storedKeys = keys(Seq(stored)).head
+    val bandsHit = keys(variants).map(_.zip(storedKeys).count { case (x, y) => x == y })
+    assert(bandsHit.contains(1) && bandsHit.contains(0))
+    val oneBand = variants(bandsHit.indexOf(1))
+    val noBand = variants(bandsHit.indexOf(0))
+    val near = stored.replace("w30", "x30") // Jaccard 27/29, most bands
+    assert(keys(Seq(near)).head.zip(storedKeys).count { case (x, y) => x == y } > 1)
+    val old = Seq((0L, stored)).toDF("doc_id", "text")
+    val arriving = Seq((1L, stored), (2L, near), (3L, oneBand), (4L, noBand))
+      .toDF("doc_id", "text")
+    val setsA = MinHashLsh.setsOf(old)
+    val bandsA = MinHashLsh.banded(setsA)
+    val got = MinHashLsh.probeIndex(bandsA, setsA, arriving)
+      .as[(Long, Long, Double)].collect().toSeq.sorted
+    // reference: one verified row per colliding band, deduped by groupBy
+    val setsB = MinHashLsh.setsOf(arriving)
+    val perBand = bandsA.select(col("did").as("a_id"), col("band"), col("key"))
+      .join(MinHashLsh.banded(setsB).select(col("did").as("b_id"), col("band"),
+        col("key")), Seq("band", "key"))
+      .join(setsA.select(col("did").as("a_id"), col("sset").as("a_set")), "a_id")
+      .join(setsB.select(col("did").as("b_id"), col("sset").as("b_set")), "b_id")
+      .select(col("a_id"), col("b_id"),
+        MinHashLsh.jaccard(col("a_set"), col("b_set")).as("jaccard"))
+      .where(col("jaccard") >= MinHashLsh.Threshold)
+    // the identical doc collides in all 16 bands: the dedup bites
+    assert(perBand.where(col("b_id") === 1L).count() == MinHashLsh.K / MinHashLsh.R)
+    val want = perBand.groupBy(col("a_id"), col("b_id"))
+      .agg(max(col("jaccard")).as("jaccard"))
+      .as[(Long, Long, Double)].collect().toSeq.sorted
+    assert(got == want)
+    assert(got.map(p => (p._1, p._2)) == Seq((0L, 1L), (0L, 2L)))
+    // streamed: the same probe drains in append mode with no state store
+    val dir = TempDirs.create("probe-lowest-band")
+    arriving.coalesce(1).write.parquet(s"$dir/in")
+    val q = MinHashLsh.probeIndex(bandsA, setsA,
+        spark.readStream.schema("doc_id LONG, text STRING").parquet(s"$dir/in"))
+      .writeStream.format("memory").queryName("probe_lowest_band")
+      .outputMode("append").option("checkpointLocation", s"$dir/ckpt")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    assert(q.recentProgress.nonEmpty &&
+      q.recentProgress.forall(_.stateOperators.isEmpty))
+    assert(spark.table("probe_lowest_band").as[(Long, Long, Double)]
+      .collect().toSeq.sorted == got)
   }
 
   test("MinHashAgg: group sketch == componentwise min of member sigs (union property)") {

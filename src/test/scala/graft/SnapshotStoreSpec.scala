@@ -363,7 +363,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
     assert(e.getMessage.contains("rejected"))
   }
 
-  test("gcOrphans invalidates the dir's cached component schemas (ADVICE r21)") {
+  test("a store recreated at one path reads its own docs schema (ADVICE r21)") {
     import spark.implicits._
     val dir = TempDirs.create("serveprune-schema")
     val a = Seq((0L, "en", "aa bb cc dd ee", 7))
@@ -371,8 +371,9 @@ class SnapshotStoreSpec extends AnyFunSuite {
     SnapshotStore.append(spark, dir, a, persistDocs = true)
     assert(SnapshotStore.docs(spark, dir).columns.contains("extra"))
     // destroy the store and recreate one at the SAME path with a
-    // DIFFERENT docs schema; the gc between them must drop the cached
-    // StructType so the new store is re-inferred, not served stale
+    // DIFFERENT docs schema: each read takes its schema from the
+    // component's own footer, so the new store is never served the old
+    // store's StructType
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm)
       f.delete(); ()
@@ -384,6 +385,43 @@ class SnapshotStoreSpec extends AnyFunSuite {
     SnapshotStore.append(spark, dir, b, persistDocs = true)
     val cols = SnapshotStore.docs(spark, dir).columns.toSeq
     assert(!cols.contains("extra") && cols.contains("text"))
+  }
+
+  test("no store read, compact or audited commit runs a schema-inference job") {
+    import spark.implicits._
+    // a schema-inference job is the footer-read RDD job `spark.read
+    // .parquet` launches without a schema: call site "parquet at ...",
+    // outside any SQL execution
+    def inferenceJobs(body: => Unit): Seq[QueryProfile.Job] =
+      QueryProfile.of(spark).measure(body)._2.jobs
+        .filter(j => j.desc.startsWith("parquet at") && j.execution.isEmpty)
+    val dir = TempDirs.create("snapstore-no-inference")
+    val a = Seq((0L, "en", "aa bb cc dd ee ff"), (1L, "de", "gg hh ii jj kk"))
+      .toDF("doc_id", "lang", "text")
+    val b = Seq((2L, "en", "ll mm nn oo pp qq")).toDF("doc_id", "lang", "text")
+    SnapshotStore.append(spark, dir, a, persistDocs = true)
+    SnapshotStore.append(spark, dir, b, persistDocs = true)
+    // the detector bites: an unschema'd read of a store component infers
+    val aid = SnapshotStore.committedIds(spark, dir).head
+    assert(inferenceJobs(
+      spark.read.parquet(s"$dir/appends/$aid/sets").collect()).nonEmpty)
+    val reads = inferenceJobs {
+      SnapshotStore.gcOrphans(spark, dir)
+      Seq(SnapshotStore.sets(spark, dir), SnapshotStore.bands(spark, dir),
+        SnapshotStore.docs(spark, dir)).foreach(_.collect())
+      SnapshotStore.compact(spark, dir)
+      SnapshotStore.gcOrphans(spark, dir)
+      Seq(SnapshotStore.sets(spark, dir), SnapshotStore.bands(spark, dir),
+        SnapshotStore.docs(spark, dir)).foreach(_.collect())
+      // a committed did hits the staged one: the commit scan-confirms it
+      // against the compacted sets and docs, and rejects
+      val dup = Seq((2L, "en", "rr ss tt uu vv ww")).toDF("doc_id", "lang", "text")
+      val e = intercept[IllegalStateException] {
+        SnapshotStore.append(spark, dir, dup, persistDocs = true)
+      }
+      assert(e.getMessage.contains("rejected"))
+    }
+    assert(reads.isEmpty, reads.map(_.desc).mkString("\n"))
   }
 
   private def allComponents(dir: String): Seq[Seq[String]] =
