@@ -417,10 +417,9 @@ object SparkEntry {
       FROM ov JOIN sz ON sz.doc_id = ov.a_id
       WHERE sz.n >= 5 AND inter * 10 >= sz.n * 9"""
 
-  /** Shared oracle for DSIR importance weighting: n60 (batch bucket
-    * join) and s27 (the trained model served over the stream as a
-    * literal map — pure per-row HOF scoring) emit identical per-doc
-    * mean importance ratios. */
+  /** Shared oracle for DSIR importance weighting: n60 and s27 run one
+    * `Dsir.score` plan (the trained model as a literal map, pure
+    * per-row HOF scoring) over the batch and the stream reader. */
   private lazy val dsirOracleSql = s"""
       WITH t AS (SELECT doc_id, lang, unnest($toksSql) AS tok FROM documents),
       tb AS (SELECT doc_id, lang, tok,
@@ -440,10 +439,10 @@ object SparkEntry {
                AS mean_ratio_ppm
       FROM tb JOIN r USING (b) GROUP BY 1"""
 
-  /** Shared oracle for Bloom decontamination: n44 (batch packed-bitset
-    * probe + per-doc groupBy) and s26 (stateless streaming HOF probe)
-    * emit the identical contaminated-doc table, false positives
-    * included — the filter is bit-reproducible by construction. */
+  /** Shared oracle for Bloom decontamination: n44 and s26 run one
+    * `Bloom.decontaminate` plan over the batch and the stream reader,
+    * false positives included — the filter is bit-reproducible by
+    * construction. */
   private lazy val bloomOracleSql = s"""
       WITH sh AS (
         SELECT doc_id, unnest($ssetSql) AS s
@@ -573,9 +572,9 @@ object SparkEntry {
         FROM s a JOIN s b ON a.doc_id % 2 = 0 AND b.doc_id % 2 = 1)
       SELECT * FROM pairs WHERE jaccard >= ${MinHashLsh.Threshold}"""
 
-  /** Shared oracle for the Gopher composite quality gate: n66 (batch
-    * explode+agg form) and s24 (stateless streaming HOF form) emit the
-    * identical survivor table. */
+  /** Shared oracle for the Gopher composite quality gate: n66 and s24
+    * run one `DocStats.gopherGate` plan over the batch and the stream
+    * reader. */
   private lazy val gopherOracleSql = s"""
       SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
              CAST(len_sum AS BIGINT) AS len_sum,
@@ -894,11 +893,11 @@ object SparkEntry {
   private[graft] def md5Bucket100(id: Column): Column =
     conv(substring(md5(id.cast("string")), 1, 4), 16, 10).cast("int") % 100
 
-  private def sampled(df: DataFrame, idCol: String): DataFrame =
+  private[graft] def sampled(df: DataFrame, idCol: String): DataFrame =
     pairSampleKeep.fold(df)(k => df.where(md5Bucket100(col(idCol)) < k))
 
   /** Pair-query input tables (full unless GRAFT_PAIR_SAMPLE is set). */
-  private def pairDocs(s: SparkSession, d: String): DataFrame =
+  private[graft] def pairDocs(s: SparkSession, d: String): DataFrame =
     sampled(Tables.documents(s, d), "doc_id")
   private def pairEmb(s: SparkSession, d: String): DataFrame =
     sampled(Tables.embeddings(s, d), "vec_id")
@@ -965,8 +964,8 @@ object SparkEntry {
     * budget/actual) cap live on the gated corpus at sf0.01 and at the
     * sampled sf0.1 (en ≈ 9k → rate < 1, small langs bracket the 2.5k
     * budget), so the composed stage is verified non-vacuously. */
-  private val CurBudgetEn = 5000L
-  private val CurBudgetOther = 2500L
+  private[graft] val CurBudgetEn = 5000L
+  private[graft] val CurBudgetOther = 2500L
 
   /** n39 source-node id offset (doc_ids stay far below this). */
   private val SrcNodeBase = 2000000000L
@@ -1893,18 +1892,8 @@ object SparkEntry {
     // map-side combined (token counts have ~10³ distinct values at any
     // corpus size), so the per-group sort is over the histogram.
     "a29_exact_quantiles" -> (((s: SparkSession, d: String) => {
-      val docs = Tables.documents(s, d).select(col("lang"),
-        Text.tokenCountWs(col("text")).cast("long").as("v"))
-      val hist = docs.groupBy(col("lang"), col("v")).agg(count(lit(1)).as("c"))
-      val cum = hist
-        .withColumn("cum",
-          sum(col("c")).over(Window.partitionBy(col("lang")).orderBy(col("v"))))
-        .withColumn("n", sum(col("c")).over(Window.partitionBy(col("lang"))))
-      cum.groupBy(col("lang")).agg(
-        min(when(col("cum") >= expr("(n + 1) div 2"), col("v"))).as("p50"),
-        min(when(col("cum") >= expr("(n * 9 + 9) div 10"), col("v"))).as("p90"),
-        min(when(col("cum") >= expr("(n * 99 + 99) div 100"), col("v"))).as("p99"),
-        max(col("n")).as("n_rows"))
+      graft.operators.DocStats.quantiles(
+        graft.operators.DocStats.tokenHistogram(Tables.documents(s, d)))
     }, Some(exactQuantilesSql))),
 
     "a10_percentile" -> (((s: SparkSession, d: String) => {
@@ -2837,9 +2826,10 @@ object SparkEntry {
       SELECT o_orderkey, o_custkey, o_totalprice FROM orders
       ORDER BY o_totalprice DESC, o_orderkey LIMIT 10"""))),
 
-    // O27: running event counter → per-type counts.
+    // O27: running event counter → per-type counts (s01 drains the
+    // same plan as a stream).
     "p12_event_counts" -> (((s: SparkSession, d: String) => {
-      Tables.events(s, d).groupBy(col("event_type")).agg(count(lit(1)).as("n"))
+      graft.streaming.StreamQueries.typeCounts(Tables.events(s, d))
     }, Some("SELECT event_type, count(*) AS n FROM events GROUP BY event_type"))),
 
     // ---------------------------------------------------------------- n*
@@ -3350,27 +3340,13 @@ object SparkEntry {
     // at any corpus size, vs count_distinct's shuffle of every
     // distinct shingle. The rollup's ALL row is produced by MERGING
     // the lang sketches (sketch unionability, the property that lets
-    // sketches be maintained per-shard and combined at read time).
+    // sketches be maintained per-shard and combined at read time); s15
+    // drains the same rollup as streaming state.
     // est_distinct = (K-1)/U(K): one exact double multiply + divide,
     // identical IEEE ops on both engines.
     "n40_kmv_distinct" -> (((s: SparkSession, d: String) => {
       import graft.functions.KmvAgg
-      Tables.documents(s, d)
-        .select(col("lang"), KmvAgg.partialSketch(col("text")).as("psk"))
-        .rollup(col("lang"))
-        // grouping(), not nullness: a genuine NULL-lang group must stay
-        // NULL (as the oracle's GROUP BY emits it), only the rollup
-        // total row becomes 'ALL'. Empty sketches (a group whose docs
-        // all have < w tokens) are dropped on both sides — the SQL
-        // twin's unnest never produces such groups.
-        .agg(KmvAgg.union(col("psk")).as("sk"),
-          grouping(col("lang")).as("g"))
-        .where(size(col("sk")) > 0)
-        .select(
-          when(col("g") === 1, lit("ALL")).otherwise(col("lang")).as("lang"),
-          KmvAgg.sketchSize(col("sk")).as("sketch_size"),
-          KmvAgg.kthMin(col("sk")).as("kth_min"),
-          KmvAgg.estDistinct(col("sk")).as("est_distinct"))
+      KmvAgg.sketchMetrics(KmvAgg.rollupPlan(Tables.documents(s, d)))
     }, Some(s"""
       WITH d AS (SELECT lang, $toksSql AS toks FROM documents),
       sh AS (SELECT lang, unnest($ssetSql) AS s FROM d),
@@ -3402,13 +3378,12 @@ object SparkEntry {
     // work, and est = count/K is one exact double division, so the
     // oracle reproduces it bit-for-bit from the same bottom-K sets.
     "n42_kmv_resemblance" -> (((s: SparkSession, d: String) => {
-      // sketch build and pair arithmetic live in StreamQueries
-      // (kmvAggPlan / kmvResemblance) — ONE definition shared with s15
-      // and KmvSpec, so the engine-identical-hash contract with the
-      // SQL below has a single Spark counterpart to drift from
-      graft.streaming.StreamQueries.kmvResemblance(
-        graft.streaming.StreamQueries
-          .kmvAggPlan(Tables.documents(s, d))
+      // sketch build and pair arithmetic are KmvAgg's (aggPlan /
+      // resemblance) — ONE definition shared with s15 and KmvSpec, so
+      // the engine-identical-hash contract with the SQL below has a
+      // single Spark counterpart to drift from
+      graft.functions.KmvAgg.resemblance(
+        graft.functions.KmvAgg.aggPlan(Tables.documents(s, d))
           .where(size(col("sk")) > 0))
     }, Some(s"""
       WITH d AS (SELECT lang, $toksSql AS toks FROM documents),
@@ -3580,9 +3555,11 @@ object SparkEntry {
     // table collapses to a (word, n_sym) vocabulary, and encoding the
     // corpus is ONE exploded equi-join against it — per-doc BPE token
     // count, char count, exact ppm compression. The corpus is never
-    // re-walked per merge; the vocab absorbs all rewrites.
+    // re-walked per merge; the vocab absorbs all rewrites. s30 drains
+    // the same Bpe.encode plan against the same model.
     "n58_bpe_encode" -> (((s: SparkSession, d: String) => {
-      graft.operators.Bpe.encodeStats(Tables.documents(s, d), iters = 3)
+      val docs = Tables.documents(s, d)
+      graft.operators.Bpe.encode(docs, graft.operators.Bpe.encodedVocab(docs, iters = 3))
     }, Some(s"""${bpeEncodeCtesSql(3)}
       SELECT doc_id, CAST(sum(n_sym) AS BIGINT) AS n_bpe,
              CAST(sum(length(word)) AS BIGINT) AS n_chars,
@@ -3714,20 +3691,14 @@ object SparkEntry {
     // to exact integer ppb FIRST and scores with the mean per-token
     // probability RATIO (ppm) — monotone-equivalent for ranking and
     // integer-exact end-to-end, so no float log ever crosses the
-    // engine boundary. Scale shape: the bucket table is 64 rows
-    // (broadcast); the only row-volume shuffle is the per-doc groupBy —
-    // the token explode joins against a broadcast literal table.
+    // engine boundary. Scale shape: the bucket table is 64 rows,
+    // shipped as a literal map, and each doc scores by a per-row HOF
+    // chain — no explode, no join, no row-volume shuffle; s27 drains
+    // the same Dsir.score plan.
     "n60_dsir_weight" -> (((s: SparkSession, d: String) => {
       import graft.operators.Dsir
       val docs = Tables.documents(s, d)
-      val tok = docs
-        .select(col("doc_id"), explode(Text.tokens(col("text"))).as("tok"))
-        .withColumn("b", Dsir.bucket(col("tok")))
-      tok.join(broadcast(Dsir.ratioModel(docs)), "b")
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_toks"), sum(col("ratio_ppm")).as("sum_ppm"))
-        .select(col("doc_id"), col("n_toks"),
-          expr("cast(sum_ppm as bigint) div n_toks").as("mean_ratio_ppm"))
+      Dsir.score(docs, Dsir.ratioModel(docs))
     }, Some(dsirOracleSql))),
 
     // Keep-BEST dedup policy: n25 keeps each component's min id; real
@@ -3874,20 +3845,10 @@ object SparkEntry {
     // compose, exact to the last row on both engines. All four stats
     // come from ONE pass over the text bytes (native TextStats kernel
     // — no token array, no explode, no row inflation; TextStatsSpec
-    // pins equality with the explode+agg form this replaced).
+    // pins equality with the HOF form this replaced). s24 drains the
+    // same DocStats.gopherGate plan.
     "n66_gopher_quality" -> (((s: SparkSession, d: String) => {
-      Tables.documents(s, d)
-        .select(col("doc_id"),
-          graft.functions.TextStats.textStats(col("text")).as("st"))
-        .select(col("doc_id"), col("st.n_tokens").as("n_tokens"),
-          col("st.len_sum").as("len_sum"), col("st.max_len").as("max_len"),
-          col("st.stop_hits").as("stop_hits"))
-        .where(col("n_tokens").between(20, 1000) &&
-          col("len_sum") >= col("n_tokens") * 3 &&
-          col("len_sum") <= col("n_tokens") * 10 &&
-          col("max_len") <= 20 && col("stop_hits") >= 2)
-        .select(col("doc_id"), col("n_tokens"), col("len_sum"),
-          col("stop_hits"))
+      graft.operators.DocStats.gopherGate(Tables.documents(s, d))
     }, Some(gopherOracleSql))),
 
     // Temperature-scaled mixture weights (the multilingual/domain
@@ -3927,18 +3888,7 @@ object SparkEntry {
     // which packs greedily instead of padding). One explode-free
     // per-row map + one |buckets|-group aggregate; integer-exact.
     "n68_length_buckets" -> (((s: SparkSession, d: String) => {
-      Tables.documents(s, d)
-        .select(Text.tokenCountWs(col("text")).cast("long").as("n_toks"))
-        .where(col("n_toks") > 0)
-        .withColumn("bucket", expr("((n_toks + 31) div 32) * 32"))
-        .groupBy(col("bucket"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_toks")).as("sum_tokens"),
-          sum(col("bucket") - col("n_toks")).as("padding_tokens"))
-        .select(col("bucket"), col("n_docs"), col("sum_tokens"),
-          col("padding_tokens"),
-          expr("padding_tokens * 1000000 div (n_docs * bucket)")
-            .as("waste_ppm"))
+      graft.operators.DocStats.lengthBuckets(Tables.documents(s, d))
     }, Some(lengthBucketsOracleSql))),
 
     // Score stratification: exact per-lang DECILES of the n65 Simpson
@@ -4530,25 +4480,15 @@ object SparkEntry {
       FROM hits GROUP BY doc"""))),
 
     // Bloom-filter decontamination — n31's bounded-memory twin: the
-    // benchmark shingle set becomes a ≤1024-row broadcast position set
-    // (Bloom.scala scaladoc for the scale contract) instead of a
-    // shingle equi-join side. One row per corpus doc with ≥1 distinct
-    // shingle the filter may-contain; no false negatives, and the
-    // deterministic md5 hash rows make the false positives themselves
-    // bit-reproducible in the DuckDB oracle.
+    // benchmark shingle set becomes a ≤1024-bit filter (Bloom.scala
+    // scaladoc for the scale contract) instead of a shingle equi-join
+    // side, probed by one native per-row hit counter — no explode, no
+    // join, no shuffle; s26 drains the same plan. One row per corpus
+    // doc with ≥1 distinct shingle the filter may-contain; no false
+    // negatives, and the deterministic md5 hash rows make the false
+    // positives themselves bit-reproducible in the DuckDB oracle.
     "n44_bloom_decontaminate" -> (((s: SparkSession, d: String) => {
-      import graft.functions.Bloom
-      val sh = Tables.documents(s, d)
-        .select(col("doc_id"), explode(Text.shingleSet(col("text"))).as("item"))
-      val bench = sh.where(col("doc_id") <= 20).select(col("item")).distinct()
-      val pos = Bloom.build(bench, k = 3, m = 1024)
-      // packed-bitset probe (mayContainExpr scaladoc): the corpus side
-      // pays one codegen'd predicate per shingle — no ×k explode, no
-      // join; the only shuffle left is the per-doc count
-      Tables.documents(s, d).where(col("doc_id") > 20)
-        .select(col("doc_id"), explode(Text.shingleSet(col("text"))).as("item"))
-        .where(Bloom.mayContainExpr(pos, k = 3, m = 1024, col("item")))
-        .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hits"))
+      graft.functions.Bloom.decontaminate(Tables.documents(s, d), Tables.documents(s, d))
     }, Some(bloomOracleSql))),
 
     // Text cleaning / PII-style redaction — the scrub step every
@@ -5553,10 +5493,10 @@ object SparkEntry {
       $kmeansA1Sql
       SELECT cluster, count(*) AS n_vecs FROM a1 GROUP BY cluster"""))),
 
-    // n40's streaming twin: per-lang KMV sketch state merged across
-    // micro-batches — bounded O(groups·K) state, no watermark; any
-    // micro-batching yields the batch sketch (merge associativity,
-    // KmvSpec). Oracle = n40's per-lang branch.
+    // n40's streaming twin: n40's KMV sketch rollup as state merged
+    // across micro-batches — bounded O(groups·K) state, no watermark;
+    // any micro-batching yields the batch sketches (merge
+    // associativity, KmvSpec). Oracle = n40's per-lang branch.
     "s15_stream_kmv" -> (((s: SparkSession, d: String) => {
       graft.streaming.StreamQueries.streamKmvSketch(s, d)
     }, Some(s"""
@@ -5667,8 +5607,8 @@ object SparkEntry {
       graft.streaming.StreamQueries.streamQuantiles(s, d)
     }, Some(exactQuantilesSql))),
 
-    // n66's streaming twin: the Gopher composite gate as a STATELESS
-    // per-row HOF map+filter — append mode, zero state store, the
+    // n66's streaming twin: n66's Gopher composite gate, a STATELESS
+    // per-row map+filter — append mode, zero state store, the
     // ingest-time filter shape (StreamQueries.streamQualityGate).
     "s24_stream_quality_gate" -> (((s: SparkSession, d: String) => {
       graft.streaming.StreamQueries.streamQualityGate(s, d)
@@ -5681,16 +5621,15 @@ object SparkEntry {
       graft.streaming.StreamQueries.streamLengthBuckets(s, d)
     }, Some(lengthBucketsOracleSql))),
 
-    // n44's streaming twin: ingest-time Bloom decontamination with the
-    // membership predicate inside a filter HOF — per-doc hit counts as
-    // a pure per-row expression, zero state store
+    // n44's streaming twin: ingest-time Bloom decontamination, n44's
+    // per-doc hit counts as a pure per-row expression, zero state store
     // (StreamQueries.streamBloomDecontam; same oracle as n44).
     "s26_stream_bloom_decontam" -> (((s: SparkSession, d: String) => {
       graft.streaming.StreamQueries.streamBloomDecontam(s, d)
     }, Some(bloomOracleSql))),
 
-    // n60's model-serving twin: the trained 64-bucket DSIR model as a
-    // literal map, scored per arriving doc with pure HOFs — no join,
+    // n60's model-serving twin: n60's trained 64-bucket DSIR model as
+    // a literal map, scored per arriving doc with pure HOFs — no join,
     // no state (StreamQueries.streamDsirScore; same oracle as n60).
     "s27_stream_dsir_score" -> (((s: SparkSession, d: String) => {
       graft.streaming.StreamQueries.streamDsirScore(s, d)

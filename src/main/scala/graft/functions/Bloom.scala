@@ -92,8 +92,23 @@ object Bloom {
     words
   }
 
+  /** Decontamination (n44 over the batch reader, s26 over the stream):
+    * the benchmark — the distinct shingles of `bench`'s docs 1..20 —
+    * builds a k=3, m=1024 filter once, and every doc of `docs` past
+    * id 20 with ≥1 distinct shingle the filter may contain keeps its
+    * hit count. One per-row expression ([[hitCountExpr]]): no explode,
+    * no join, no shuffle, no state store. */
+  def decontaminate(bench: DataFrame, docs: DataFrame): DataFrame = {
+    val pos = build(bench.where(col("doc_id") <= 20)
+      .select(explode(Text.shingleSet(col("text"))).as("item")).distinct(), 3, 1024)
+    docs.where(col("doc_id") > 20)
+      .select(col("doc_id"),
+        hitCountExpr(pos, 3, 1024, Text.shingleSet(col("text"))).as("n_hits"))
+      .where(col("n_hits") > 0)
+  }
+
   /** Per-document hit COUNT over a whole shingle-set array in one
-    * native pass ([[BloomHits]]): the s26 ingest-gate hot path. The
+    * native pass ([[BloomHits]]): the n44/s26 hot path. The
     * HOF form (`size(filter(sset, mayContainExpr))`) runs the k-hash
     * predicate through interpreted lambda eval per element; this
     * kernel walks the array once inside whole-stage codegen with a

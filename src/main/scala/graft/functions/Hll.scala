@@ -83,7 +83,7 @@ object Hll {
 
   /** Per-(lang, bucket) register table of the documents' 3-shingle
     * space — the ONE plan shared by batch n77 and streaming s32 (the
-    * kmvAggPlan idiom: identical plan both modes, state = the ≤64
+    * KmvAgg.aggPlan idiom: identical plan both modes, state = the ≤64
     * registers per lang). */
   def registersPlan(docs: DataFrame): DataFrame =
     docs

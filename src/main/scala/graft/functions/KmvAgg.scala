@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder}
+import org.apache.spark.sql.{Column, DataFrame, Encoder}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -98,6 +98,55 @@ object KmvAgg extends Aggregator[Seq[Long], Array[Long], Seq[Long]] {
     when(size(sk) < K, size(sk).cast("double"))
       .otherwise(lit(K - 1).cast("double") * lit(1152921504606846976L).cast("double")
         / element_at(sk, size(sk)).cast("double"))
+
+  /** Per-lang KMV sketch of a documents frame (n42's input). */
+  def aggPlan(docs: DataFrame): DataFrame =
+    docs.select(col("lang"), partialSketch(col("text")).as("psk"))
+      .groupBy(col("lang"))
+      .agg(union(col("psk")).as("sk"))
+
+  /** [[aggPlan]] plus the rollup's total row, produced by MERGING the
+    * same partials (sketch unionability) — n40 aggregates it over the
+    * batch reader, s15 drains it as complete-mode state. `g` is
+    * grouping(lang), 1 on the total row only, so a genuine NULL-lang
+    * group stays NULL as the oracle's GROUP BY emits it. */
+  def rollupPlan(docs: DataFrame): DataFrame =
+    docs.select(col("lang"), partialSketch(col("text")).as("psk"))
+      .rollup(col("lang"))
+      .agg(union(col("psk")).as("sk"), grouping(col("lang")).as("g"))
+
+  /** Finishing projection of a [[rollupPlan]]: sketch → (size, kth
+    * smallest, estimate), the total row named 'ALL'. Drops empty-sketch
+    * groups (all-short-doc langs) — the SQL twin's `unnest` never
+    * produces them, and kthMin on [] would throw. */
+  def sketchMetrics(sk: DataFrame): DataFrame =
+    sk.where(size(col("sk")) > 0)
+      .select(when(col("g") === 1, lit("ALL")).otherwise(col("lang")).as("lang"),
+        sketchSize(col("sk")).as("sketch_size"),
+        kthMin(col("sk")).as("kth_min"),
+        estDistinct(col("sk")).as("est_distinct"))
+
+  /** Pairwise resemblance of finished sketches (n42's core, shared
+    * with KmvSpec's small-union exactness test): for each unordered
+    * group pair, J ≈ |bottomK(skA ∪ skB) ∩ skA ∩ skB| / |bottomK(...)|.
+    * The divisor is the MERGED sketch's size, not the fixed K: when the
+    * union holds fewer than K distinct hashes the sketches are complete
+    * and the estimate equals the exact Jaccard. */
+  def resemblance(sk: DataFrame): DataFrame = {
+    val a = sk.select(col("lang").as("lang_a"), col("sk").as("ska"))
+    val b = sk.select(col("lang").as("lang_b"), col("sk").as("skb"))
+    a.join(b, col("lang_a") < col("lang_b"))
+      .select(col("lang_a"), col("lang_b"),
+        slice(array_sort(array_union(col("ska"), col("skb"))), 1, K).as("mk"),
+        col("ska"), col("skb"))
+      .select(col("lang_a"), col("lang_b"),
+        size(filter(col("mk"), x =>
+          array_contains(col("ska"), x) && array_contains(col("skb"), x)))
+          .cast("long").as("n_shared"),
+        (size(filter(col("mk"), x =>
+          array_contains(col("ska"), x) && array_contains(col("skb"), x)))
+          .cast("double") / size(col("mk")).cast("double")).as("est_jaccard"))
+  }
 
   /** The KMV estimate for a finished sketch (driver-side twin of the
     * in-plan expression; used by specs). */

@@ -120,19 +120,7 @@ object Bpe {
     out.result().toDF("it", "a", "b", "n")
   }
 
-  /** ENCODE with the learned merges: after `iters` training steps the
-    * symbol table IS the encoded vocabulary — (word, n_sym) is each
-    * word's BPE token count. Encoding a corpus is then one exploded
-    * equi-join against this vocabulary-sized table (broadcast while it
-    * fits): per doc, the BPE token count, the character count, and the
-    * exact compression in ppm. The corpus is never re-tokenized
-    * per-merge — the vocab table absorbs all `iters` rewrites. */
-  def encodeStats(docs: DataFrame, iters: Int): DataFrame =
-    encodeAgainst(
-      docs.select(col("doc_id"), explode(Text.tokens(col("text"))).as("word")),
-      encodedVocab(docs, iters))
-
-  /** The trained MODEL of [[encodeStats]] as a standalone table:
+  /** The trained MODEL of [[encode]] as a standalone table:
     * (word, n_sym) after `iters` merge steps — each word's BPE token
     * count under the learned merges. Vocabulary-sized (broadcastable),
     * so a stream can serve it per micro-batch the way s14 serves
@@ -152,11 +140,17 @@ object Bpe {
     syms.groupBy(col("word")).agg(count(lit(1)).as("n_sym"))
   }
 
-  /** Per-doc encode stats from a (doc_id, word) token stream and a
-    * trained (word, n_sym) vocabulary — one equi-join + one groupBy,
-    * shared verbatim by the batch (n58) and streaming (s30) paths. */
-  def encodeAgainst(tokens: DataFrame, nSym: DataFrame): DataFrame =
-    tokens.join(nSym, "word")
+  /** ENCODE with the learned merges: after `iters` training steps the
+    * symbol table IS the encoded vocabulary ([[encodedVocab]]), so
+    * encoding `docs` is one exploded equi-join against that
+    * vocabulary-sized model (the planner broadcasts it while it fits)
+    * + one groupBy: per doc, the BPE token count, the character count
+    * and the exact compression in ppm. The corpus is never re-tokenized
+    * per merge. n58 runs it over the batch reader, s30 drains it over
+    * the stream. */
+  def encode(docs: DataFrame, model: DataFrame): DataFrame =
+    docs.select(col("doc_id"), explode(Text.tokens(col("text"))).as("word"))
+      .join(model, "word")
       .groupBy(col("doc_id"))
       .agg(sum(col("n_sym")).as("n_bpe"),
         sum(length(col("word")).cast("long")).as("n_chars"))

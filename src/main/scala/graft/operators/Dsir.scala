@@ -10,8 +10,8 @@ import graft.functions.Text
   * hashed 64-bucket token features, Laplace-smoothed target (the
   * English slice) vs raw-corpus distributions, probabilities quantized
   * to integer ppb BEFORE scoring so no float log/div crosses an engine
-  * boundary. Shared by n60 (batch scoring) and s27 (the model served
-  * over a stream). */
+  * boundary. n60 and s27 run the one [[Dsir.score]] plan over the
+  * batch and the stream reader. */
 object Dsir {
 
   val Buckets = 64
@@ -41,13 +41,24 @@ object Dsir {
         expr("pt_ppb * 1000000 div greatest(pr_ppb, 1)").as("ratio_ppm"))
   }
 
-  /** The trained model as a LITERAL map column (≤64 entries — the
-    * model-serving broadcast idiom, like the s14 centroid table and
-    * the n44 packed bitset): lets a stream score each document with a
-    * pure per-row HOF expression, no join, no explode, no state. */
-  def ratioMapLiteral(model: DataFrame): Column = {
-    val rows = model.collect()
-    map(rows.toSeq.flatMap(r =>
+  /** Per-doc score of `docs` against a [[ratioModel]] (n60 over the
+    * batch reader, s27 over the stream): the ≤64-row model ships as a
+    * LITERAL map (the broadcast-model idiom of s14's centroids and
+    * n44's bitset) and each doc scores with a pure per-row HOF chain
+    * (transform → lookup → filter → aggregate) — no join, no explode,
+    * no shuffle, no state store. Tokens whose bucket is absent from the
+    * model drop from both the count and the sum; docs with no scored
+    * token drop. mean_ratio_ppm is the integer mean of the ratios. */
+  def score(docs: DataFrame, model: DataFrame): DataFrame = {
+    val m = map(model.collect().toSeq.flatMap(r =>
       Seq(lit(r.getInt(0)), lit(r.getLong(1)))): _*)
+    docs.select(col("doc_id"),
+        filter(transform(Text.tokens(col("text")), t => element_at(m, bucket(t))),
+          r => r.isNotNull).as("rs"))
+      .select(col("doc_id"), size(col("rs")).cast("long").as("n_toks"),
+        aggregate(col("rs"), lit(0L), (acc, x) => acc + x).as("sum_ppm"))
+      .where(col("n_toks") > 0)
+      .select(col("doc_id"), col("n_toks"),
+        expr("sum_ppm div n_toks").as("mean_ratio_ppm"))
   }
 }

@@ -27,9 +27,18 @@ object Tables {
     * disagree — a directory accumulated across producer generations —
     * fails at plan time naming the files, never an order-dependent
     * mid-scan failure or a silent narrow. */
-  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    spark.read.schema(schemaOf(spark, path)).parquet(path)
+  def table(spark: SparkSession, dir: String, name: String): DataFrame =
+    read(spark, dir, name)(spark.read.schema(_).parquet(s"$dir/$name.parquet"))
+
+  /** The one read plan of fixture table `name`, shared by [[table]]
+    * (batch) and `StreamQueries.documentsStream`/`embeddingsStream`:
+    * `load` opens the path under its [[schemaOf]] footer schema, and the
+    * table's [[Canonical]] casts follow, so an operator sees the same
+    * columns and types from either reader. */
+  private[graft] def read(s: SparkSession, d: String, name: String)(
+      load: StructType => DataFrame): DataFrame = {
+    val df = load(schemaOf(s, s"$d/$name.parquet"))
+    Canonical.get(name).fold(df)(canonical(df, _: _*))
   }
 
   /** Pin the named columns to their canonical engine types regardless of
@@ -50,28 +59,31 @@ object Tables {
       want.get(c).map(t => col(c).cast(t).as(c)).getOrElse(col(c))): _*)
   }
 
-  def lineitem(s: SparkSession, d: String): DataFrame =
-    canonical(table(s, d, "lineitem"),
+  /** Each table's [[canonical]] casts. */
+  private val Canonical: Map[String, Seq[(String, String)]] = Map(
+    "lineitem" -> Seq(
       "l_orderkey" -> "long", "l_partkey" -> "long", "l_suppkey" -> "long",
       "l_quantity" -> "double", "l_extendedprice" -> "double",
       "l_discount" -> "double", "l_tax" -> "double",
       // timestamp→timestamp is a removed no-op today; a generation that
       // flips these to DATE keeps today's midnight-UTC semantics (and
       // DuckDB's DATE→TIMESTAMP coercion matches)
-      "l_shipdate" -> "timestamp")
-  def orders(s: SparkSession, d: String): DataFrame =
-    canonical(table(s, d, "orders"),
+      "l_shipdate" -> "timestamp"),
+    "orders" -> Seq(
       "o_orderkey" -> "long", "o_custkey" -> "long", "o_totalprice" -> "double",
-      "o_orderdate" -> "timestamp")
-  def customer(s: SparkSession, d: String): DataFrame =
-    canonical(table(s, d, "customer"),
-      "c_custkey" -> "long", "c_acctbal" -> "double")
-  def supplier(s: SparkSession, d: String): DataFrame =
-    canonical(table(s, d, "supplier"),
-      "s_suppkey" -> "long", "s_acctbal" -> "double")
-  def part(s: SparkSession, d: String): DataFrame =
-    canonical(table(s, d, "part"),
-      "p_partkey" -> "long", "p_retailprice" -> "double")
+      "o_orderdate" -> "timestamp"),
+    "customer" -> Seq("c_custkey" -> "long", "c_acctbal" -> "double"),
+    "supplier" -> Seq("s_suppkey" -> "long", "s_acctbal" -> "double"),
+    "part" -> Seq("p_partkey" -> "long", "p_retailprice" -> "double"),
+    "documents" -> Seq("doc_id" -> "long", "n_chars" -> "long",
+      "text" -> "string", "lang" -> "string", "source" -> "string"),
+    "embeddings" -> Seq("vec_id" -> "long", "embedding" -> "array<float>"))
+
+  def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
+  def orders(s: SparkSession, d: String): DataFrame = table(s, d, "orders")
+  def customer(s: SparkSession, d: String): DataFrame = table(s, d, "customer")
+  def supplier(s: SparkSession, d: String): DataFrame = table(s, d, "supplier")
+  def part(s: SparkSession, d: String): DataFrame = table(s, d, "part")
   def nation(s: SparkSession, d: String): DataFrame = table(s, d, "nation")
   def region(s: SparkSession, d: String): DataFrame = table(s, d, "region")
   /** events.ts has shipped under more than one parquet encoding across
@@ -352,11 +364,6 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame =
     eventsRead(s, d)(schema => s.read.schema(schema).parquet(s"$d/events.parquet"))
 
-  def documents(s: SparkSession, d: String): DataFrame =
-    canonical(table(s, d, "documents"),
-      "doc_id" -> "long", "n_chars" -> "long",
-      "text" -> "string", "lang" -> "string", "source" -> "string")
-  def embeddings(s: SparkSession, d: String): DataFrame =
-    canonical(table(s, d, "embeddings"),
-      "vec_id" -> "long", "embedding" -> "array<float>")
+  def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
+  def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 }

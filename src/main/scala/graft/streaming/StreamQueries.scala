@@ -11,12 +11,46 @@ import org.apache.spark.sql.types._
 /** Structured Streaming queries over the fixture tables (SURVEY §2 O1-O3,
   * O25, O27; streaming shell of the reference's Kafka consumer loop).
   *
-  * The batch/stream duality is deliberate: every transform is a plain
-  * `DataFrame => DataFrame`, so the identical plan runs under
-  * `spark.read` (Verify oracle) and `spark.readStream` (here). For the
-  * driver's oracle gate these run the REAL streaming engine — file
-  * source → micro-batches → memory sink — with `Trigger.AvailableNow`
-  * so the query drains and terminates deterministically.
+  * The batch/stream duality is deliberate and checked: an s-query with
+  * a batch twin calls ONE operator, a plain `DataFrame => DataFrame`
+  * that the batch query applies to the `Tables` reader and the s-query
+  * applies to [[eventsStream]]/[[documentsStream]]/[[embeddingsStream]]
+  * (the same read plans), then drains through [[runToTable]] or
+  * `foreachBatch`. The drain is the only difference: TwinSpec asserts
+  * the two analyzed plans are equal once the leaf relations are masked,
+  * that the s-query drains that plan and that the batch query contains
+  * it. Every s-query outside that shared list is in the table below,
+  * with the reason (TwinSpec reads the table from this header). Where a
+  * pair ran two algorithms (n44's explode + groupBy, n60's bucket
+  * join), the batch twin runs the streamable form; where the batch form
+  * streams (n40's rollup), the stream runs it; the hashes are
+  * unchanged. Two pairs keep two forms because the one form was
+  * measured slower (`graft.Bench`, sf0.1, median of three runs, 4
+  * cores), not because Spark refuses it: s19 and s22 below.
+  *
+  * {{{
+  * s-query                | why it shares no operator with a batch query
+  * s02_stream_window      | no batch twin: watermarked tumbling-window counts
+  * s03_stream_dedup       | no batch twin: p08 keeps each key's first event and its count
+  * s04_stream_stateful    | no batch twin: the flatMapGroupsWithState surface
+  * s05_stream_enrich      | no batch twin of its broadcast stream-static join: p16 answers the same SQL with a salted shuffle join
+  * s06_stream_sink        | no batch twin: s03's dedup through a foreachBatch sink
+  * s07_stream_session     | no batch twin: a34 sessionizes with lag windows, which a stream rejects ("Non-time-based windows are not supported on streaming DataFrames/Datasets")
+  * s10_stream_upsert      | no batch twin: a keyed-upsert sink under a forced replay
+  * s11_stream_stream_join | no batch twin: the stream-stream interval join
+  * s12_stream_doc_dedup   | no batch twin: n01 reports per-digest groups, s12 per-lang counts of a streaming dropDuplicates
+  * s14_stream_kmeans      | no batch twin: n34 iterates the centroids, s14 serves its initial ones through the same Clustering.assign
+  * s16_stream_dedup_wm    | no batch twin: dropDuplicatesWithinWatermark
+  * s17_stream_type_census | no batch twin: the transformWithState surface
+  * s18_stream_topk        | no batch twin: p11 ranks orders, s18 users by events
+  * s19_stream_lsh         | n03's (band, key) self-join drains as a stream-stream join, but that s19 took 1.56x the fold's wall and 4.5x its state memory (both join sides keep the banded stream, which each side reads and bands itself); s19 keeps its per-bucket fold
+  * s22_stream_priority_sample | n53's row_number window is rejected in a stream ("Non-time-based windows are not supported on streaming DataFrames/Datasets"), and n53 run as s22's PriorityAgg merge took 1.5x the window's wall; n53 keeps the window
+  * }}}
+  *
+  * For the driver's oracle gate these run the REAL streaming engine —
+  * file source → micro-batches → memory sink — with
+  * `Trigger.AvailableNow` so the query drains and terminates
+  * deterministically.
   *
   * In production the source is Kafka (`format("kafka")`, earliest
   * offsets — kafka_s.py:68) with `foreachBatch` JDBC/Mongo sinks; file
@@ -90,11 +124,13 @@ object StreamQueries {
     spark.table(name)
   }
 
-  /** O27 as a streaming aggregation: running per-type counts. */
+  /** O27 per-type event counts: p12 over the batch reader, s01 as a
+    * running complete-mode aggregation. */
+  def typeCounts(events: DataFrame): DataFrame =
+    events.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
+
   def eventCounts(spark: SparkSession, dir: String): DataFrame =
-    runToTable(spark,
-      eventsStream(spark, dir).groupBy(col("event_type")).agg(count(lit(1)).as("n")),
-      "complete")
+    runToTable(spark, typeCounts(eventsStream(spark, dir)), "complete")
 
   /** Event-time tumbling window aggregation (the windowing surface the
     * reference lacks — SURVEY §2 coverage note). */
@@ -159,44 +195,24 @@ object StreamQueries {
   }
 
   /** Streaming documents source (file stand-in for the announcements
-    * topic; same glob trick as eventsStream). Stream schema is the
-    * path's one footer schema (`Tables.schemaOf`) — a static user
-    * schema over parquet bypasses logical-type checks and is one fixture
-    * regeneration away from silent misreads (the r9 events lesson);
-    * the explicit casts then pin the canonical downstream types, so
-    * an int32/int64 width drift in the fixture cannot change oracle
-    * aggregate types. */
+    * topic; same glob trick as eventsStream) through the batch reader's
+    * own read plan (`Tables.read`), so a shared operator sees the same
+    * columns and types from either reader. */
   def documentsStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .schema(graft.sources.Tables.schemaOf(spark, s"$dir/documents.parquet"))
-      .parquet(s"$dir/[d]ocuments.parquet")
-      .select(col("doc_id").cast("long"), col("text").cast("string"),
-        col("lang").cast("string"), col("source").cast("string"),
-        col("n_chars").cast("long"))
+    graft.sources.Tables.read(spark, dir, "documents")(
+      spark.readStream.schema(_).parquet(s"$dir/[d]ocuments.parquet"))
 
-  /** Streaming embeddings source (file stand-in, like the others;
-    * footer schema per documentsStream). */
+  /** Streaming embeddings source (`Tables.read`, as [[documentsStream]]). */
   def embeddingsStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .schema(graft.sources.Tables.schemaOf(spark, s"$dir/embeddings.parquet"))
-      .parquet(s"$dir/[e]mbeddings.parquet")
-      .select(col("vec_id").cast("long"), col("embedding").cast("array<float>"))
+    graft.sources.Tables.read(spark, dir, "embeddings")(
+      spark.readStream.schema(_).parquet(s"$dir/[e]mbeddings.parquet"))
 
-  /** ANN threshold filter as a STREAM (n05's streaming twin): each
-    * arriving vector is scored against the probe with the native dot
-    * kernel and passed through when above threshold — stateless
-    * map+filter, so the micro-batch plan is byte-identical to the batch
-    * plan and there is no state store at all: the shape of continuous
-    * embedding-ingest filtering at scale. */
-  def streamAnnThreshold(spark: SparkSession, dir: String, t: Double): DataFrame = {
-    import graft.operators.Similarity
-    val emb = embeddingsStream(spark, dir)
-    val v = col("embedding").cast("array<double>")
-    val scored = emb.select(col("vec_id"),
-      Similarity.cosine(v, Similarity.queryVecLit).as("cos"))
-      .where(col("cos") > t)
-    runToTable(spark, scored, "append")
-  }
+  /** ANN threshold filter as a STREAM: n05's `Similarity.aboveThreshold`
+    * over each arriving vector — stateless, append mode, no state store. */
+  def streamAnnThreshold(spark: SparkSession, dir: String, t: Double): DataFrame =
+    runToTable(spark,
+      graft.operators.Similarity.aboveThreshold(embeddingsStream(spark, dir), t),
+      "append")
 
   /** K-means assignment as a STREAM (n34's streaming twin — the
     * model-serving shape): arriving vectors are classified against a
@@ -216,18 +232,18 @@ object StreamQueries {
       "complete")
   }
 
-  /** KMV distinct sketch maintenance as a STREAM (n40's streaming
-    * twin): per-lang sketch state merged across micro-batches by
-    * KmvAgg's sorted-merge — the continuous-ingest form of cardinality
-    * tracking, where the state store holds one ≤K-long sketch per
-    * group (bounded state by construction, no watermark needed) and
-    * each micro-batch folds its rows' partial sketches in. Because merge
-    * is associative+commutative and every global bottom-K hash is in
-    * its row's bottom-K, ANY micro-batching yields the same final
-    * sketch as the batch aggregate (KmvSpec proves a forced 3-batch
-    * split; the oracle pins the single-drain result). */
-  def streamKmvSketch(spark: SparkSession, dir: String): DataFrame =
-    kmvFinish(runToTable(spark, kmvAggPlan(documentsStream(spark, dir)), "complete"))
+  /** KMV distinct sketch maintenance as a STREAM: n40's
+    * `KmvAgg.rollupPlan` as complete-mode state, one ≤K-long sketch per
+    * group plus the total (no watermark needed). The merge is
+    * associative and commutative, so ANY micro-batching yields the
+    * batch sketches (KmvSpec forces a 3-batch split). s15 reports the
+    * per-lang rows (n40's oracle without its ALL row). */
+  def streamKmvSketch(spark: SparkSession, dir: String): DataFrame = {
+    import graft.functions.KmvAgg
+    KmvAgg.sketchMetrics(runToTable(spark,
+      KmvAgg.rollupPlan(documentsStream(spark, dir)), "complete")
+      .where(col("g") === 0))
+  }
 
   /** HLL register maintenance as a STREAM (n77's streaming twin — the
     * s15 KMV idiom with registers instead of bottom-K hashes): the
@@ -246,30 +262,13 @@ object StreamQueries {
       runToTable(spark, Hll.registersPlan(documentsStream(spark, dir)), "complete"))
   }
 
-  /** a29's streaming twin (s23): the per-(lang, value) COUNT HISTOGRAM
-    * is the streaming state — counts merge across micro-batches by
-    * plain addition, so the drained histogram equals the batch one and
-    * the post-drain cumulative pick computes the exact quantiles. The
-    * state is bounded by distinct (lang, token-count) pairs (~10³ at
-    * any corpus size) — the same reason a29's shuffle is bounded makes
-    * the streaming state bounded; no watermark needed. */
+  /** a29's streaming twin (s23): a29's `DocStats.tokenHistogram` is the
+    * complete-mode state, and a29's exact pick (`DocStats.quantiles`)
+    * runs after the drain (its windows cannot stream). */
   def streamQuantiles(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.Text
-    import org.apache.spark.sql.expressions.Window
-    val hist = runToTable(spark,
-      documentsStream(spark, dir)
-        .select(col("lang"), Text.tokenCountWs(col("text")).cast("long").as("v"))
-        .groupBy(col("lang"), col("v")).agg(count(lit(1)).as("c")),
-      "complete")
-    val cum = hist
-      .withColumn("cum",
-        sum(col("c")).over(Window.partitionBy(col("lang")).orderBy(col("v"))))
-      .withColumn("n", sum(col("c")).over(Window.partitionBy(col("lang"))))
-    cum.groupBy(col("lang")).agg(
-      min(when(col("cum") >= expr("(n + 1) div 2"), col("v"))).as("p50"),
-      min(when(col("cum") >= expr("(n * 9 + 9) div 10"), col("v"))).as("p90"),
-      min(when(col("cum") >= expr("(n * 99 + 99) div 100"), col("v"))).as("p99"),
-      max(col("n")).as("n_rows"))
+    import graft.operators.DocStats
+    DocStats.quantiles(runToTable(spark,
+      DocStats.tokenHistogram(documentsStream(spark, dir)), "complete"))
   }
 
   /** n53's streaming twin (s22): the per-lang bottom-K priority sample
@@ -864,25 +863,17 @@ object StreamQueries {
   /** Streaming BPE encode (s30) — n58's model-serving twin and the
     * tokenize-at-ingest shape: the merge table is trained ONCE
     * batch-side (graft.operators.Bpe.encodedVocab — deterministic, the
-    * n57-learned merges), collapses to a vocabulary-sized (word,
-    * n_sym) model, and every arriving document is encoded by one
-    * broadcast equi-join against it per micro-batch — the same
-    * broadcast-model idiom as s14's centroids and s27's DSIR buckets.
-    * Per-doc aggregation state is one row per doc in the drained
-    * window; the model itself carries no state and re-broadcasts per
-    * batch (a production run would pin it). Drained result equals the
-    * batch n58 table row for row (same oracle). */
+    * n57-learned merges) into a vocabulary-sized (word, n_sym) model,
+    * and every arriving document runs n58's `Bpe.encode` against it.
+    * Per-doc aggregation state is one row per doc; the model's plan
+    * re-runs in each micro-batch (a long-running stream would pin it).
+    * Drained result equals the batch n58 table row for row (same
+    * oracle). */
   def streamBpeEncode(spark: SparkSession, dir: String, iters: Int = 3): DataFrame = {
     import graft.operators.Bpe
-    val model = Bpe.encodedVocab(
-      graft.sources.Tables.documents(spark, dir), iters)
-      .localCheckpoint() // sever the training lineage from every batch
     runToTable(spark,
-      Bpe.encodeAgainst(
-        documentsStream(spark, dir)
-          .select(col("doc_id"),
-            explode(graft.functions.Text.tokens(col("text"))).as("word")),
-        broadcast(model)),
+      Bpe.encode(documentsStream(spark, dir),
+        Bpe.encodedVocab(graft.sources.Tables.documents(spark, dir), iters)),
       "complete")
   }
 
@@ -1111,111 +1102,44 @@ object StreamQueries {
   }
 
   /** Streaming Bloom decontamination (s26) — n44's streaming twin and
-    * the ingest-time contamination gate: the benchmark's packed-bitset
-    * Bloom filter (built ONCE from the static eval set, a ≤m-position
-    * design constant — the broadcast-model idiom, like s14's
-    * centroids) is probed per document with the membership predicate
-    * INSIDE a `filter` HOF over the doc's shingle set, so the per-doc
-    * hit count is a pure per-row expression: NO explode row inflation,
-    * NO per-doc aggregation state — append mode, zero state store.
-    * Any doc with ≥1 filter hit drains with its exact hit count,
-    * which equals the batch n44 groupBy row for row (same oracle). */
-  def streamBloomDecontam(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.{Bloom, Text}
-    val bench = graft.sources.Tables.documents(spark, dir)
-      .where(col("doc_id") <= 20)
-      .select(explode(Text.shingleSet(col("text"))).as("item"))
-      .distinct()
-    val pos = Bloom.build(bench, k = 3, m = 1024)
-    // native one-pass hit counter (Bloom.hitCountExpr) — the HOF form
-    // size(filter(sset, mayContainExpr)) is value-identical (BloomSpec)
-    // but interprets the k-hash lambda per element; measured 2.64 s →
-    // see the round-9 bench note
-    val hits = documentsStream(spark, dir)
-      .where(col("doc_id") > 20)
-      .select(col("doc_id"),
-        Bloom.hitCountExpr(pos, k = 3, m = 1024,
-          Text.shingleSet(col("text"))).as("n_hits"))
-      .where(col("n_hits") > 0)
-    runToTable(spark, hits, "append")
-  }
+    * the ingest-time contamination gate: n44's `Bloom.decontaminate`
+    * (filter built once from the static eval set) over each arriving
+    * doc — append mode, zero state store. */
+  def streamBloomDecontam(spark: SparkSession, dir: String): DataFrame =
+    runToTable(spark,
+      graft.functions.Bloom.decontaminate(graft.sources.Tables.documents(spark, dir),
+        documentsStream(spark, dir)),
+      "append")
 
   /** Streaming DSIR scoring (s27) — n60's model-serving twin: the
     * 64-bucket importance-ratio model trains ONCE on the static corpus
-    * (`Dsir.ratioModel`, the corpus-sized work), then ships to the
-    * stream as a LITERAL map (`Dsir.ratioMapLiteral` — the same
-    * broadcast-model idiom as s14's centroids and s26's bitset). Each
-    * arriving document scores with a pure per-row HOF chain
-    * (transform → lookup → filter → aggregate): no join, no explode,
-    * no state store — append mode. Drained rows equal batch n60's
-    * bucket-join scoring row for row (same oracle): tokens whose
-    * bucket is absent from the model drop from BOTH the count and the
-    * sum, exactly like the batch inner join. */
+    * (`Dsir.ratioModel`, the corpus-sized work), and each arriving
+    * document scores by n60's `Dsir.score` — append mode, no state
+    * store. */
   def streamDsirScore(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Dsir
-    val m = Dsir.ratioMapLiteral(
-      Dsir.ratioModel(graft.sources.Tables.documents(spark, dir)))
-    val scored = documentsStream(spark, dir)
-      .select(col("doc_id"),
-        filter(
-          transform(graft.functions.Text.tokens(col("text")),
-            t => element_at(m, Dsir.bucket(t))),
-          r => r.isNotNull).as("rs"))
-      .select(col("doc_id"),
-        size(col("rs")).cast("long").as("n_toks"),
-        aggregate(col("rs"), lit(0L), (acc, x) => acc + x).as("sum_ppm"))
-      .where(col("n_toks") > 0)
-      .select(col("doc_id"), col("n_toks"),
-        expr("sum_ppm div n_toks").as("mean_ratio_ppm"))
-    runToTable(spark, scored, "append")
+    runToTable(spark,
+      Dsir.score(documentsStream(spark, dir),
+        Dsir.ratioModel(graft.sources.Tables.documents(spark, dir))),
+      "append")
   }
 
-  /** Streaming length-bucket accounting (s25) — n68's streaming twin:
-    * per-bucket padding-waste totals as a complete-mode aggregation
-    * whose state is bounded by the BUCKET COUNT (≤ max doc length / 32
+  /** Streaming length-bucket accounting (s25) — n68's
+    * `DocStats.lengthBuckets` as a complete-mode aggregation whose
+    * state is bounded by the BUCKET COUNT (≤ max doc length / 32
     * groups at any stream length — the same bounded-state argument as
     * s21's counter table). Sums and counts merge by addition, so any
     * micro-batching drains to exactly the batch answer. */
-  def streamLengthBuckets(spark: SparkSession, dir: String): DataFrame = {
-    val binned = documentsStream(spark, dir)
-      .select(graft.functions.Text.tokenCountWs(col("text")).cast("long")
-        .as("n_toks"))
-      .where(col("n_toks") > 0)
-      .withColumn("bucket", expr("((n_toks + 31) div 32) * 32"))
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_toks")).as("sum_tokens"),
-        sum(col("bucket") - col("n_toks")).as("padding_tokens"))
-    runToTable(spark, binned, "complete")
-      .select(col("bucket"), col("n_docs"), col("sum_tokens"),
-        col("padding_tokens"),
-        expr("padding_tokens * 1000000 div (n_docs * bucket)")
-          .as("waste_ppm"))
-  }
+  def streamLengthBuckets(spark: SparkSession, dir: String): DataFrame =
+    runToTable(spark,
+      graft.operators.DocStats.lengthBuckets(documentsStream(spark, dir)), "complete")
 
-  /** Streaming quality gate (s24) — n66's streaming twin: the Gopher
-    * composite rule list as a pure STATELESS per-row map + filter. The
-    * batch form aggregates an explode; here the same integer stats
-    * come from codegen'd array HOFs (aggregate/transform/filter) so
-    * the streaming plan carries NO state store at all — the shape an
-    * ingest-time quality gate wants at 100 TB: each micro-batch is
-    * embarrassingly parallel, append mode, nothing to checkpoint but
-    * source offsets. Shares n66's oracle: HOF stats ≡ explode+agg
-    * stats row for row. */
-  def streamQualityGate(spark: SparkSession, dir: String): DataFrame = {
-    val gated = documentsStream(spark, dir)
-      .select(col("doc_id"),
-        graft.functions.TextStats.textStats(col("text")).as("st"))
-      .select(col("doc_id"), col("st.n_tokens").as("n_tokens"),
-        col("st.len_sum").as("len_sum"), col("st.max_len").as("max_len"),
-        col("st.stop_hits").as("stop_hits"))
-      .where(col("n_tokens").between(20, 1000) &&
-        col("len_sum") >= col("n_tokens") * 3 &&
-        col("len_sum") <= col("n_tokens") * 10 &&
-        col("max_len") <= 20 && col("stop_hits") >= 2)
-      .select(col("doc_id"), col("n_tokens"), col("len_sum"), col("stop_hits"))
-    runToTable(spark, gated, "append")
-  }
+  /** Streaming quality gate (s24) — n66's `DocStats.gopherGate`, a
+    * stateless per-row filter: each micro-batch is embarrassingly
+    * parallel, append mode, nothing to checkpoint but source offsets. */
+  def streamQualityGate(spark: SparkSession, dir: String): DataFrame =
+    runToTable(spark,
+      graft.operators.DocStats.gopherGate(documentsStream(spark, dir)), "append")
 
   /** Streaming count-min maintenance (s21) — the CMS twin of s15's KMV
     * sketch: the d×w counter table IS the streaming aggregation state
@@ -1232,17 +1156,12 @@ object StreamQueries {
     runToTable(spark, CountMin.sketch(occ, depth, width), "complete")
   }
 
-  /** Streaming multimodal decode (s20): the real GIF container kernels
-    * (Multimodal.gifMedia → frameSampleGif) running inside micro-
-    * batches — mapPartitions media kernels are stateless, so the
-    * streaming plan is the batch plan verbatim; only the final
-    * per-frame-index census is stateful (complete mode, ≤5 groups).
-    * The point at scale: media decode needs no special streaming path
-    * — the same executor-side batch kernels serve both engines. */
+  /** Streaming multimodal decode (s20): n50's `Multimodal.gifFrames`
+    * (stateless mapPartitions GIF kernels) inside micro-batches; only
+    * the final per-frame-index census is stateful (complete mode, ≤5
+    * groups). Media decode needs no special streaming path. */
   def streamGifFrameCensus(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.Multimodal
-    val frames = Multimodal.frameSampleGif(
-      Multimodal.gifMedia(documentsStream(spark, dir))).toDF()
+    val frames = graft.operators.Multimodal.gifFrames(documentsStream(spark, dir))
     runToTable(spark,
       frames.groupBy(col("frame_idx"))
         .agg(count(lit(1)).as("n"),
@@ -1252,20 +1171,13 @@ object StreamQueries {
   }
 
   /** Streaming audio decode at ingest (s28) — the audio member of the
-    * media-under-streaming family: the real WAV kernels
-    * (Multimodal.wavMedia → audioStats) are stateless mapPartitions
-    * maps, so unlike s20's census this runs APPEND mode with ZERO
-    * state store — the ingest-time shape (decode-and-annotate media as
-    * it arrives, the s24/s26/s27 pattern for audio). The streaming
-    * plan is the batch plan verbatim, so the drained table shares
-    * n71's closed-form oracle unchanged. */
-  def streamAudioStats(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.Multimodal
+    * media-under-streaming family: n71's `Multimodal.audioPcmStats`
+    * (stateless WAV kernels), so unlike s20's census it runs append
+    * mode with zero state store. */
+  def streamAudioStats(spark: SparkSession, dir: String): DataFrame =
     runToTable(spark,
-      Multimodal.audioStats(
-        Multimodal.wavMedia(documentsStream(spark, dir))).toDF(),
+      graft.operators.Multimodal.audioPcmStats(documentsStream(spark, dir)),
       "append")
-  }
 
   /** Streaming global top-k (s18): running top-5 users by event count.
     * Complete-mode aggregation + sort + limit — the one output shape

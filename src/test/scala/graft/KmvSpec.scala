@@ -80,13 +80,13 @@ class KmvSpec extends AnyFunSuite {
       writeFile(s"f$i.parquet", b, i)
     }
 
-    val streamed = StreamQueries.kmvFinish(StreamQueries.runToTable(spark,
-      StreamQueries.kmvAggPlan(
+    val streamed = KmvAgg.sketchMetrics(StreamQueries.runToTable(spark,
+      KmvAgg.rollupPlan(
         spark.readStream.schema("lang STRING, text STRING")
           .option("maxFilesPerTrigger", 1).parquet(dir)),
       "complete"))
-    val batch = StreamQueries.kmvFinish(
-      StreamQueries.kmvAggPlan(spark.read.parquet(dir)))
+    val batch = KmvAgg.sketchMetrics(
+      KmvAgg.rollupPlan(spark.read.parquet(dir)))
 
     val s = streamed.collect().map(_.toSeq).toSeq.sortBy(_.head.toString)
     val b = batch.collect().map(_.toSeq).toSeq.sortBy(_.head.toString)
@@ -133,7 +133,7 @@ class KmvSpec extends AnyFunSuite {
       ("a", Seq(1L, 2L, 3L, 4L, 5L)),
       ("b", Seq(3L, 4L, 5L, 6L)),
       ("c", Seq(10L, 11L))).toDF("lang", "sk")
-    val got = StreamQueries.kmvResemblance(sk).collect()
+    val got = KmvAgg.resemblance(sk).collect()
       .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getDouble(3))).toMap
     assert(got(("a", "b")) == ((3L, 3.0 / 6.0)))  // {3,4,5} / {1..6}
     assert(got(("a", "c")) == ((0L, 0.0)))
@@ -151,7 +151,7 @@ class KmvSpec extends AnyFunSuite {
       ("short", "one two"),            // < w tokens -> empty sketch
       ("short", "a b"),
       ("full", "alpha beta gamma delta eps")).toDF("lang", "text")
-    val out = StreamQueries.kmvFinish(StreamQueries.kmvAggPlan(docs))
+    val out = KmvAgg.sketchMetrics(KmvAgg.rollupPlan(docs).where(col("g") === 0))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(out.keySet == Set("full"), s"expected only 'full', got $out")
     assert(out("full") == 3L) // 5 tokens -> 3 distinct shingles

@@ -428,11 +428,13 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("bloom probe is a pure predicate: no join, no explode before the count") {
-    // packed-bitset form (Bloom.mayContainExpr): the ONLY exchange is
-    // the final per-doc count's; the probe itself is a codegen'd filter
+    // packed-bitset hit counter (Bloom.decontaminate): each doc's hit
+    // count is one codegen'd per-row expression over its shingle set,
+    // so the plan is a scan, a projection and a filter
     val p = plan("n44_bloom_decontaminate")
     assert(!p.contains("Join"), p)
-    assert("Exchange hashpartitioning".r.findAllIn(p).size == 1, p)
+    assert(!p.contains("Generate"), p)
+    assert(!p.contains("Exchange"), p)
   }
 
   test("containment join is an equi-join on the shingle, never cartesian") {

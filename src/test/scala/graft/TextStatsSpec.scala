@@ -8,10 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{Text, TextStats}
 
 /** TextStats kernel contract: the single-pass native expression equals
-  * the HOF/explode composition it replaced (n66/s24/n70) on arbitrary
-  * inputs — multi-space runs, leading/trailing spaces, empty strings,
-  * multibyte and astral unicode, nulls — and stays inside whole-stage
-  * codegen. */
+  * the HOF composition it replaced — in n70 and in the one
+  * `DocStats.gopherGate` plan n66 and s24 run — on arbitrary inputs:
+  * multi-space runs, leading/trailing spaces, empty strings, multibyte
+  * and astral unicode, nulls. It stays inside whole-stage codegen. */
 class TextStatsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
